@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Plan auditor: prints `explain("formatted")` for selected queries so
-  * pushdown / broadcast / codegen properties can be inspected.
+/** Plan auditor: prints `explain("formatted")` for the named queries,
+  * or for every registered query when none are named, so pushdown /
+  * broadcast / codegen properties can be inspected on the session
+  * Bench times. PlanSpec's locks are the authority on plan shape.
   * Usage: runMain graft.ExplainAudit [sfDir] [queryName ...]
   */
 object ExplainAudit {
@@ -11,69 +11,8 @@ object ExplainAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names =
       if (args.length > 1) args.drop(1).toSeq
-      else Seq("q1_agg_rollup", "q2_filter_project", "q3_join_broadcast_left",
-        "q4_join_multi", "q5_window_rolling", "q7_topk", "q25_rank",
-        "q38_curate_topk", "q39_vocab_topk", "q41_ngram_jaccard",
-        "q44_embed_neardup", "q46_doc_pack", "q50_ann_brute",
-        "q57_winnow", "q58_bloom_decontam", "q67_bigram_novelty",
-        "q73_salted_agg", "q75_pagerank", "q77_funnel",
-        // round-8 shapes: grouped two-phase ranks, constant-size gram
-        // exchange, sketch aggregate, joinless two-SCD merge
-        "q132_funnel_latency", "q134_gini", "q144_gram_matrix",
-        "q149_source_sketch_sim", "q152_interval_align",
-        // round-9 shapes: layout ranks + zone maps, mergeable bloom
-        // index, grouped-prefix conformal rank, one-pass moment
-        // algebra, sketch-algebra overlap
-        "q169_zorder_layout", "q174_bloom_index",
-        "q176_conformal_interval", "q172_cuped", "q171_hll_overlap",
-        // round-10 shapes: sampled holdout metric + cohort serving
-        // (the sf100 escape hatches), water-fill token budgeting, KLL
-        // sketch calibration
-        "q193_reco_holdout_sampled", "q198_recommend_sampled",
-        "q194_token_budget", "q196_kll_quantiles",
-        // round-11 shapes: joint-cell rank correlations, pairwise
-        // cell-replicated tests, dense-frame divergences, cached-edge
-        // iterative HITS, one-pass split-cell LM audits
-        "q200_spearman", "q201_wasserstein", "q204_kendall_tau",
-        "q205_mann_whitney", "q208_hits", "q209_perplexity",
-        // round-11 tranche-four shapes: one-pass Poisson bootstrap
-        // (explode ×32 into a replicate-keyed aggregate), Heaps
-        // first-occurrence prefix, truncation-recall fan-out over one
-        // cached cohort pass, split finding on the cell prefix
-        "q217_poisson_bootstrap", "q219_heaps_law",
-        "q225_dim_truncation_recall", "q229_split_finding",
-        // round-11 tranche-five shapes: pooled-rank cell walk, vocab
-        // keyness margin join, bitmask vocabulary rollup, order-stat
-        // threshold walk
-        "q232_kruskal_wallis", "q233_llr_keyness",
-        "q239_vocab_jaccard", "q241_hill_tail",
-        // round-12 shapes: densified-CDF pair sweep, two-phase DeLong
-        // components, broadcast-centroid silhouette, day-cell BH sweep,
-        // cached-feature Mahalanobis double pass, limit-then-rank RBO
-        "q248_cliffs_delta", "q249_rbo", "q251_delong_auc",
-        "q253_silhouette", "q254_bh_fdr", "q256_mahalanobis",
-        // round-12 tranche-three shapes: one-prefix dual CDFs, dense
-        // month-grid pair sweep, two-phase pooled AD walk
-        "q258_cvm_drift", "q259_jonckheere", "q264_k_sample_ad",
-        // round-12 tranche-four shapes: vocab-keyed LM pair sweep,
-        // gram-cell covariance traces, degree-attach edge moments
-        "q265_cross_entropy_matrix", "q266_participation_ratio",
-        "q269_assortativity",
-        // round-12 tranche six-eleven shapes: pooled-LM cell scoring,
-        // 25-window offset explode, per-label gram-cell CKA, bin-index
-        // kernel pair sweep, histogram-vs-truth audit, capped pair join
-        // into min-degree cells, prefix-moment breakpoint sweep
-        "q281_kneser_ney", "q282_mattr", "q283_cka_halves",
-        "q284_mmd_drift", "q285_selectivity_audit", "q280_rich_club",
-        "q299_segmented_fit")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      else SparkEntry.queries.keys.toSeq.sorted
+    val spark = GraftSession.create()
     names.foreach { n =>
       println(s"\n===== $n =====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

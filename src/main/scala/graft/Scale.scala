@@ -33,9 +33,10 @@ import org.apache.spark.sql.functions._
   * Orders/lineitem shift (orderkey, custkey, suppkey, partkey)
   * consistently so referential joins stay intact per copy.
   *
-  * `sweep` mirrors Bench's protocol (same session config, untimed
-  * footer warmup, median of 3 timed runs, post-query cache sweep)
-  * and prints one JSON line.
+  * `sweep` times the named queries with Bench's session and timing
+  * protocol ([[GraftSession]], [[Timing]]) and prints one JSON line:
+  * the dev-loop timer for measuring a few queries without paying the
+  * full 328-query Bench sweep.
   */
 object Scale {
 
@@ -50,17 +51,7 @@ object Scale {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create()
     args(0) match {
       case "gen"   => gen(spark, args(1), args(2), args(3).toInt)
       case "skew"  => gen(spark, args(1), args(2), args(3).toInt, skew = true)
@@ -220,35 +211,13 @@ object Scale {
   }
 
   def sweep(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings")
-    tables.foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").limit(5).collect()
-      catch { case _: Throwable => () }
-    }
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    def medianOf(ts: Seq[Double]): Double = {
-      val s = ts.sorted
-      s((s.length - 1) / 2)
-    }
-    val results = names.map { name =>
+    Timing.warmUp(spark, sfDir)
+    val q = names.map { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query $name"))
-      val times = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        try { val _ = fn(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[sweep] $name FAILED: ${e.getMessage}")
-          Double.NaN
-        }
-      }
-      CacheHygiene.sweep(spark)
-      name -> (if (times.exists(_.isNaN)) -1.0 else medianOf(times))
+      val t = Timing.time(spark, name) { val _ = fn(spark, sfDir).count() }
+      "\"" + name + "\":" + Timing.fmt(t.median)
     }
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val q = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
     println(s"""{"sweep":"$sfDir","queries":${q.mkString("{", ",", "}")}}""")
   }
 
@@ -260,32 +229,20 @@ object Scale {
     * whatever SF dir it's pointed at. Same timing protocol as sweep
     * (SPARK_GRAFT_BENCH_RUNS, median). */
   def bucketAb(spark: SparkSession, sfDir: String): Unit = {
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    def medianOf(ts: Seq[Double]): Double = {
-      val s = ts.sorted; s((s.length - 1) / 2)
-    }
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val plain = medianOf((1 to runs).map { _ =>
-      val t = timed { val _ = operators.CurationOps.reconciliationOn(
-        Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir))
-        .count() }
-      CacheHygiene.sweep(spark); t
-    })
-    val build = timed(etl.Lake.writeBucketedFacts(spark, sfDir))
-    val bucketed = medianOf((1 to runs).map { _ =>
-      val (li, o) = etl.Lake.readBucketedFacts(spark)
-      val t = timed { val _ = operators.CurationOps
-        .reconciliationOn(o, li).count() }
-      CacheHygiene.sweep(spark); t
-    })
+    import Timing.fmt
+    val plain = Timing.time(spark, "q191_plain") {
+      val _ = operators.CurationOps.reconciliationOn(
+        Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir)).count()
+    }.median
+    val build = Timing.seconds(etl.Lake.writeBucketedFacts(spark, sfDir))
+    val (li, o) = etl.Lake.readBucketedFacts(spark)
+    val bucketed = Timing.time(spark, "q191_bucketed") {
+      val _ = operators.CurationOps.reconciliationOn(o, li).count()
+    }.median
     val _ = spark.sql("DROP TABLE IF EXISTS lineitem_bucketed")
     val _ = spark.sql("DROP TABLE IF EXISTS orders_bucketed")
     println(s"""{"bucket_ab":"$sfDir","q191_plain_sec":${fmt(plain)},""" +
       s""""bucket_write_sec":${fmt(build)},""" +
-      s""""q191_bucketed_sec":${fmt(bucketed)},"runs":$runs}""")
+      s""""q191_bucketed_sec":${fmt(bucketed)},"runs":${Timing.runs}}""")
   }
 }

@@ -2,8 +2,6 @@ package graft.etl
 
 import java.time.Instant
 
-import org.apache.spark.sql.SparkSession
-
 /** Batch orchestration entry point — the run_etl.py equivalent
   * (scripts/run_etl.py:123-143, SURVEY §2.9 ST7 / §7.2 M6).
   *
@@ -53,16 +51,7 @@ object EtlRunner {
         .orElse(if (args.contains("--fixtures"))
           Some(Fixtures.DefaultStart.plusSeconds(2 * 3600)) else None))
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create()
 
     if (opts.contains("--fixtures")) {
       val nDevices = opts.getOrElse("--devices", "10").toInt

@@ -4,6 +4,7 @@ import java.time.Instant
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Lake layout: partitioned parquet sinks and pruned scans
   * (SURVEY §2.1 S4-S10).
@@ -66,6 +67,20 @@ object Lake {
       .parquet(s"$root/gold/daily_business_summary")
   }
 
+  private[graft] def bronzePath(root: String): String =
+    s"$root/bronze/telemetry"
+
+  /** Bronze on disk: the telemetry columns plus the `date` partition
+    * column written by [[writeBronze]]. */
+  private[graft] val BronzeSchema: StructType =
+    Schemas.bronzeTelemetry.add("date", "date")
+
+  /** Every Bronze row, `date` included. */
+  private[graft] def bronzeScan(spark: SparkSession, root: String): DataFrame =
+    spark.read.schema(BronzeSchema)
+      .option("ignoreCorruptFiles", "true") // S6 corrupt-file skip
+      .parquet(bronzePath(root))
+
   /** S5-analog Bronze scan: event-date partition pruning via
     * predicate (replaces the reference's hand-built YYYY/MM/DD paths
     * + mtime windows; incremental tailing belongs to the streaming
@@ -73,9 +88,7 @@ object Lake {
   def readBronze(spark: SparkSession, root: String, hoursBack: Int = 24,
       cfg: EtlConfig = EtlConfig()): DataFrame = {
     val cutoff: Instant = cfg.now.minusSeconds(hoursBack * 3600L)
-    spark.read.schema(Schemas.bronzeTelemetry.add("date", "date"))
-      .option("ignoreCorruptFiles", "true") // S6 corrupt-file skip
-      .parquet(s"$root/bronze/telemetry")
+    bronzeScan(spark, root)
       .filter(col("date") >= lit(java.sql.Date.valueOf(
         cutoff.atZone(java.time.ZoneOffset.UTC).toLocalDate)))
       .filter(try_to_timestamp(col("timestamp")) >=
@@ -346,5 +359,5 @@ object Lake {
       .partitionBy("date")
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
-      .parquet(s"$root/bronze/telemetry")
+      .parquet(bronzePath(root))
 }

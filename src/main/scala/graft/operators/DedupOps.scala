@@ -74,9 +74,7 @@ object DedupOps {
       d: String): Seq[(String, Double)] =
     Seq("minhash" -> q49DedupClusters, "semantic" -> q133SemanticClusters)
       .map { case (kind, q) =>
-        val t0 = System.nanoTime()
-        val _ = q.fn(s, d).count()
-        kind -> (System.nanoTime() - t0) / 1e9
+        kind -> graft.Timing.seconds { val _ = q.fn(s, d).count() }
       }
 
   /** Bench failure hook: drop this session's memo entries so a

@@ -95,7 +95,8 @@ object GoldRefinery {
       .parquet(s"$lakeRoot/gold/daily_business_summary")
   }
 
-  private def source(spark: SparkSession, lakeRoot: String): DataFrame = {
+  private def refine(spark: SparkSession, lakeRoot: String, cfg: EtlConfig,
+      trigger: Trigger): StreamingQuery = {
     val path = s"$lakeRoot/silver/energy_usage"
     // silver's schema is derived (BronzeToSilver output); a streaming
     // source needs it declared, so lift it from the lake's footers once
@@ -103,18 +104,19 @@ object GoldRefinery {
     spark.readStream.schema(schema)
       .option("ignoreCorruptFiles", "true")
       .parquet(path)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        refineBatch(spark, lakeRoot, cfg)(batch)
+      }
+      .option("checkpointLocation", s"$lakeRoot/_checkpoints/gold_refinery")
+      .trigger(trigger)
+      .start()
   }
 
   def start(spark: SparkSession, lakeRoot: String,
       cfg: EtlConfig = EtlConfig(),
       triggerInterval: String = "2 minutes"): StreamingQuery =
-    source(spark, lakeRoot).writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        refineBatch(spark, lakeRoot, cfg)(batch)
-      }
-      .option("checkpointLocation", s"$lakeRoot/_checkpoints/gold_refinery")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .start()
+    refine(spark, lakeRoot, cfg, Trigger.ProcessingTime(triggerInterval))
 
   /** One-shot drain (Trigger.AvailableNow) for tests/backfill. Blocks
     * until the drain completes — a large backfill takes as long as it
@@ -122,13 +124,7 @@ object GoldRefinery {
     * partitions would hand the caller torn tables. */
   def runOnce(spark: SparkSession, lakeRoot: String,
       cfg: EtlConfig = EtlConfig()): Unit = {
-    val q = source(spark, lakeRoot).writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        refineBatch(spark, lakeRoot, cfg)(batch)
-      }
-      .option("checkpointLocation", s"$lakeRoot/_checkpoints/gold_refinery")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val q = refine(spark, lakeRoot, cfg, Trigger.AvailableNow())
     try q.awaitTermination()
     catch { case e: Throwable => q.stop(); throw e }
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.etl.{BronzeToSilver, EtlConfig, Lake, Schemas}
+import graft.etl.{BronzeToSilver, EtlConfig, Lake}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -56,10 +56,7 @@ object SilverRefinery {
         .distinct.diff(batchDates)
       val existingForward =
         if (forward.isEmpty) Seq.empty
-        else spark.read
-          .schema(Schemas.bronzeTelemetry.add("date", "date"))
-          .option("ignoreCorruptFiles", "true")
-          .parquet(s"$lakeRoot/bronze/telemetry")
+        else Lake.bronzeScan(spark, lakeRoot)
           .filter(col("date").isin(forward.map(java.sql.Date.valueOf): _*))
           .select("date").distinct()
           .collect().map(_.getDate(0).toLocalDate).toSeq
@@ -67,10 +64,7 @@ object SilverRefinery {
       val ctx = dates
         .flatMap(d => (0 to contextDays).map(b => d.minusDays(b)))
         .distinct.map(d => java.sql.Date.valueOf(d))
-      val bronze = spark.read
-        .schema(Schemas.bronzeTelemetry.add("date", "date"))
-        .option("ignoreCorruptFiles", "true")
-        .parquet(s"$lakeRoot/bronze/telemetry")
+      val bronze = Lake.bronzeScan(spark, lakeRoot)
         .filter(col("date").isin(ctx: _*)) // partition pruning
         .drop("date")
       val silver = BronzeToSilver.run(bronze, catalog, cfg)
@@ -82,37 +76,37 @@ object SilverRefinery {
     }
   }
 
+  private def refine(spark: SparkSession, lakeRoot: String,
+      catalog: DataFrame, cfg: EtlConfig, contextDays: Int,
+      trigger: Trigger): StreamingQuery =
+    spark.readStream
+      .schema(Lake.BronzeSchema)
+      .option("ignoreCorruptFiles", "true")
+      .parquet(Lake.bronzePath(lakeRoot))
+      .drop("date")
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        refineBatch(spark, lakeRoot, catalog, cfg, contextDays)(batch)
+      }
+      .option("checkpointLocation", s"$lakeRoot/_checkpoints/silver_refinery")
+      .trigger(trigger)
+      .start()
+
   def start(spark: SparkSession, lakeRoot: String, catalog: DataFrame,
       cfg: EtlConfig = EtlConfig(), triggerInterval: String = "2 minutes",
       contextDays: Int = 1): StreamingQuery =
-    spark.readStream
-      .schema(Schemas.bronzeTelemetry.add("date", "date"))
-      .option("ignoreCorruptFiles", "true")
-      .parquet(s"$lakeRoot/bronze/telemetry")
-      .drop("date")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        refineBatch(spark, lakeRoot, catalog, cfg, contextDays)(batch)
-      }
-      .option("checkpointLocation", s"$lakeRoot/_checkpoints/silver_refinery")
-      .trigger(Trigger.ProcessingTime(triggerInterval))
-      .start()
+    refine(spark, lakeRoot, catalog, cfg, contextDays,
+      Trigger.ProcessingTime(triggerInterval))
 
-  /** One-shot drain (Trigger.AvailableNow) for tests/backfill. */
+  /** One-shot drain (Trigger.AvailableNow) for tests/backfill. Blocks
+    * until the drain completes, as [[GoldRefinery.runOnce]] does:
+    * returning early would leave the query still overwriting silver
+    * partitions under the caller. */
   def runOnce(spark: SparkSession, lakeRoot: String, catalog: DataFrame,
       cfg: EtlConfig = EtlConfig(), contextDays: Int = 1): Unit = {
-    val q = spark.readStream
-      .schema(Schemas.bronzeTelemetry.add("date", "date"))
-      .option("ignoreCorruptFiles", "true")
-      .parquet(s"$lakeRoot/bronze/telemetry")
-      .drop("date")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        refineBatch(spark, lakeRoot, catalog, cfg, contextDays)(batch)
-      }
-      .option("checkpointLocation", s"$lakeRoot/_checkpoints/silver_refinery")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    val _ = q.awaitTermination(300000)
+    val q = refine(spark, lakeRoot, catalog, cfg, contextDays,
+      Trigger.AvailableNow())
+    try q.awaitTermination()
+    catch { case e: Throwable => q.stop(); throw e }
   }
 }

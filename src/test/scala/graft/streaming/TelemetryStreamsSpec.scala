@@ -111,12 +111,22 @@ class TelemetryStreamsSpec extends SparkSpec {
     // burned a flat 120 s of suite budget — thousands of checkpoint
     // deltas of nothing), and processAllAvailable never returns for
     // the same reason. The assertions depend only on data-driven
-    // output, so poll the sink for the expected single row and stop.
+    // output, so poll the sink until its first row appears and then
+    // until the row count holds across two checks with at least one
+    // micro-batch between them — a spurious later row (a duplicate
+    // fire, a d2 streak) still lands before the stop.
     val q = streaks.writeStream.format("memory").queryName("streaks")
       .outputMode("append").start()
     val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    while (spark.table("streaks").isEmpty && System.nanoTime() < deadline)
-      Thread.sleep(100)
+    def rows = spark.table("streaks").count()
+    def batchId = Option(q.lastProgress).fold(-1L)(_.batchId)
+    while (rows == 0 && System.nanoTime() < deadline) Thread.sleep(100)
+    var settled = false
+    while (!settled && System.nanoTime() < deadline) {
+      val (n, b) = (rows, batchId)
+      while (batchId == b && System.nanoTime() < deadline) Thread.sleep(100)
+      settled = rows == n
+    }
     q.stop()
     val out = spark.table("streaks").as[TelemetryStreams.AlertStreak].collect()
     // d1: one streak reaches 3 (fires once, at the 3rd consecutive);
