@@ -9,12 +9,16 @@ import org.apache.spark.sql.functions._
   * Re-expresses /root/reference/consumer/bronze_to_silver.py:112-275
   * as pure DataFrame transforms. Each stage is a standalone function
   * (unit-testable without files); `run` composes them in reference
-  * order. Catalyst fuses the filter/projection stages into one
-  * whole-stage-codegen region; the only exchange is the shuffle by
-  * device_id for the rolling windows — at 100 TB that one shuffle is
-  * keyed on device_id (high cardinality in a real fleet, so it
-  * parallelizes; per-device data streams through the 60-row frame
-  * without materializing the partition).
+  * order. The plan has one shuffle, by device_id, and one
+  * (device_id, timestamp) sort: the F3 dedup is a `lag(timestamp)`
+  * window over that sort, and the 60-row rolling windows reuse it.
+  * Catalyst fuses the filter/projection stages between them into
+  * whole-stage-codegen regions; no aggregate runs. At 100 TB the
+  * shuffle is keyed on device_id (high cardinality in a real fleet, so
+  * it parallelizes; per-device data streams through the 60-row frame
+  * without materializing the partition). Rows leave unique per
+  * (device_id, timestamp), which is what lets `Lake.writeSilver` write
+  * them without a second dedup.
   *
   * Rounding note: pandas `.round()` is numpy half-even on the binary
   * double; Spark's `bround` matches that mode, so derived formulas
@@ -31,12 +35,35 @@ object BronzeToSilver {
     // try_to_timestamp / try_cast ≡ pandas errors='coerce' (null on
     // malformed), regardless of spark.sql.ansi.enabled.
     val parsed = df.withColumn("timestamp", try_to_timestamp(col("timestamp")))
-    val deduped = parsed
-      .dropDuplicates("device_id", "timestamp")
-      .na.drop(Seq("device_id", "device_type", "user_id", "timestamp"))
+    screen(dedupByKey(parsed), cfg)
+  }
+
+  /** F3: one row per (device_id, timestamp), the first of each run of
+    * equal timestamps in a device's sorted rows. Rows with a null key
+    * are dropped up front, as F4 would drop them anyway. The window's
+    * (device_id, timestamp) sort is the one [[derivedMetrics]] needs,
+    * so the two share it; `dropDuplicates` would add a shuffle by the
+    * full key, a sort and a sort-based aggregate over every column.
+    * The shuffle count is the session's `spark.sql.shuffle.partitions`:
+    * an explicit count keeps AQE from coalescing the device shuffle
+    * into one task. */
+  private[etl] def dedupByKey(parsed: DataFrame): DataFrame = {
+    val n = parsed.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val prev = lag(col("timestamp"), 1)
+      .over(Window.partitionBy(col("device_id")).orderBy(col("timestamp")))
+    parsed
+      .filter(col("device_id").isNotNull && col("timestamp").isNotNull)
+      .repartition(n, col("device_id"))
+      .withColumn("__prev_ts", prev)
+      .filter(col("__prev_ts").isNull || col("__prev_ts") =!= col("timestamp"))
+      .drop("__prev_ts")
+  }
+
+  /** F4-F7 and the quality score over key-unique rows. */
+  private[etl] def screen(deduped: DataFrame, cfg: EtlConfig): DataFrame = {
     val coerced = Seq("temperature", "power_usage", "energy_consumption_wh")
-      .foldLeft(deduped)((d, f) =>
-        d.withColumn(f, expr(s"try_cast($f AS DOUBLE)")))
+      .foldLeft(deduped.na.drop(Seq("device_id", "device_type", "user_id", "timestamp")))(
+        (d, f) => d.withColumn(f, expr(s"try_cast($f AS DOUBLE)")))
     val ranged = coerced
       .filter(col("temperature").between(cfg.tempRangeMin, cfg.tempRangeMax))
       .filter(col("power_usage").between(0, cfg.powerRangeMax))
@@ -67,12 +94,19 @@ object BronzeToSilver {
     * Here both sides are proper date/timestamp types and `datediff`
     * is well-defined. */
   def enrichWithCatalog(df: DataFrame, catalog: DataFrame): DataFrame = {
-    val cat = catalog.select(
-      col("device_id"),
-      col("location").as("location_catalog"),
-      col("installation_date"),
-      col("manufacturer").as("manufacturer_catalog"),
-      col("model").as("model_catalog"))
+    // One catalog row per device_id: a duplicated catalog row would fan
+    // out into duplicate Silver rows. The least whole row wins, so the
+    // pick is deterministic. collect_list plans as a hash aggregate
+    // (no sort), and over one partition it needs no shuffle either;
+    // the catalog is broadcast-sized, so one task holds it anyway.
+    val cat = catalog.coalesce(1)
+      .groupBy(col("device_id"))
+      .agg(array_min(collect_list(struct(
+        col("location").as("location_catalog"),
+        col("installation_date"),
+        col("manufacturer").as("manufacturer_catalog"),
+        col("model").as("model_catalog")))).as("c"))
+      .select(col("device_id"), col("c.*"))
     df.join(broadcast(cat), Seq("device_id"), "left")
       .withColumn("location", coalesce(col("location"), col("location_catalog")))
       .withColumn("manufacturer",

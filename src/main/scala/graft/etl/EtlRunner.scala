@@ -2,6 +2,9 @@ package graft.etl
 
 import java.time.Instant
 
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+
 /** Batch orchestration entry point — the run_etl.py equivalent
   * (scripts/run_etl.py:123-143, SURVEY §2.9 ST7 / §7.2 M6).
   *
@@ -68,24 +71,7 @@ object EtlRunner {
       .getOrElse(Fixtures.deviceCatalog(spark))
 
     def onePass(): Unit = {
-      val bronze = Lake.readBronze(spark, lake, hoursBack, cfg)
-        .drop("date") // re-derived on write
-      val silver = BronzeToSilver.run(bronze, catalog, cfg)
-      Lake.writeSilver(silver, lake)
-
-      val silverBack = Lake.readSilver(spark, lake, daysBack, cfg).cache()
-      val daily = SilverToGold.dailyEnergyConsumption(silverBack, cfg)
-      val health = SilverToGold.deviceHealthMetrics(silverBack, cfg)
-      val summary = SilverToGold.dailyBusinessSummary(daily, health, cfg)
-      Lake.writeGold(daily, health, summary, lake)
-
-      val counts = Map(
-        "bronze" -> bronze.count(),
-        "silver" -> silverBack.count(),
-        "gold_daily_energy" -> daily.count(),
-        "gold_device_health" -> health.count(),
-        "gold_business_summary" -> summary.count())
-      val _ = silverBack.unpersist()
+      val counts = pass(spark, lake, catalog, cfg, hoursBack, daysBack)
       println("[etl] " + counts.map { case (k, v) => s"$k=$v" }.mkString(" "))
     }
 
@@ -110,5 +96,40 @@ object EtlRunner {
       println(s"[etl] compacted partitioned sinks (target ${target >> 20} MB)")
     }
     spark.stop()
+  }
+
+  /** One bronze→silver→gold pass; returns each layer's row count. The
+    * counts come out of the writes themselves: Bronze rows in and the
+    * Gold rows written are observed as the writes run, and Silver is
+    * counted from the cached read-back that Gold is computed from.
+    * Nothing is scanned or recomputed after the writes. */
+  private[etl] def pass(spark: SparkSession, lake: String, catalog: DataFrame,
+      cfg: EtlConfig, hoursBack: Int, daysBack: Int): Seq[(String, Long)] = {
+    def counted(df: DataFrame): (DataFrame, Observation) = {
+      val o = Observation()
+      (df.observe(o, count(lit(1)).as("rows")), o)
+    }
+    def rows(o: Observation): Long = o.get("rows").asInstanceOf[Long]
+
+    val (bronze, bronzeRows) = counted(
+      Lake.readBronze(spark, lake, hoursBack, cfg).drop("date")) // re-derived on write
+    Lake.writeSilver(BronzeToSilver.run(bronze, catalog, cfg), lake)
+
+    val silverBack = Lake.readSilver(spark, lake, daysBack, cfg).cache()
+    val daily = SilverToGold.dailyEnergyConsumption(silverBack, cfg)
+    val health = SilverToGold.deviceHealthMetrics(silverBack, cfg)
+    val (dailyOut, dailyRows) = counted(daily)
+    val (healthOut, healthRows) = counted(health)
+    val (summaryOut, summaryRows) =
+      counted(SilverToGold.dailyBusinessSummary(daily, health, cfg))
+    Lake.writeGold(dailyOut, healthOut, summaryOut, lake)
+    val counts = Seq(
+      "bronze" -> rows(bronzeRows),
+      "silver" -> silverBack.count(), // served by the cache Gold filled
+      "gold_daily_energy" -> rows(dailyRows),
+      "gold_device_health" -> rows(healthRows),
+      "gold_business_summary" -> rows(summaryRows))
+    val _ = silverBack.unpersist()
+    counts
   }
 }

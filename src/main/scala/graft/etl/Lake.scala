@@ -18,25 +18,31 @@ import org.apache.spark.sql.types.StructType
   * lake size.
   *
   * Idempotence (ST8): the reference appends overlapping windows and
-  * dedups at read; we dedup before write and use dynamic partition
+  * dedups at read; we write rows already unique per key (Silver's
+  * uniqueness comes from `BronzeToSilver`) and use dynamic partition
   * overwrite (`replaceWhere` semantics) so reprocessing a window
   * rewrites its partitions instead of duplicating them — documented
   * intentional deviation, oracle comparisons are on deduped sets.
   */
 object Lake {
 
-  /** S7: Silver sink — date-partitioned, dedup-on-write, dynamic
-    * partition overwrite for idempotent reprocessing. */
+  /** S7: Silver sink — date-partitioned, dynamic partition overwrite
+    * for idempotent reprocessing. No dedup here: `BronzeToSilver`
+    * already emits one row per (device_id, timestamp). */
   def writeSilver(silver: DataFrame, root: String): Unit =
-    silver
-      .withColumn("date", to_date(col("timestamp")))
-      .dropDuplicates("device_id", "timestamp")
-      .repartition(col("date")) // one writer set per partition → no small files
+    silverByDate(silver)
       .write
       .partitionBy("date")
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
       .parquet(s"$root/silver/energy_usage")
+
+  /** Silver as [[writeSilver]] hands it to the writer: the `date`
+    * column, and one writer set per date partition (no small files). */
+  private[graft] def silverByDate(silver: DataFrame): DataFrame =
+    silver
+      .withColumn("date", to_date(col("timestamp")))
+      .repartition(col("date"))
 
   /** S8: Silver scan with lookback pruning (days_back, anchored at
     * cfg.now — wall-clock-free under a pinned referenceInstant). */

@@ -32,37 +32,54 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Idempotence matches the batch sinks: reprocessing a batch rewrites
   * the same partitions/rows to the same values (cfg.now pins
-  * created_at).
+  * created_at). That is also what lets [[start]] run beside
+  * `SilverRefinery.start`: a slice read while Silver rewrote it is
+  * recomputed by a later micro-batch (see `refineBatch`), and
+  * RefineryStreamsSpec asserts the converged tables.
   */
 object GoldRefinery {
 
   /** Recompute the gold slices affected by one micro-batch of silver
     * rows. The batch rows are already in the silver lake (the stream
-    * source IS the lake), so the pruned re-reads cover them. */
+    * source IS the lake), so the pruned re-reads cover them.
+    *
+    * No read here infers a schema: the silver re-reads take the
+    * stream's (the batch's own schema), and each gold table is read
+    * back with the schema of the frame that wrote it.
+    *
+    * Concurrent with [[SilverRefinery.start]], a silver file listed
+    * here can vanish before it is read: Silver's dynamic partition
+    * overwrite is rewriting its partition. The stream source and the
+    * re-reads skip such files (`ignoreMissingFiles`). The rewrite's
+    * new files reach a later micro-batch, which recomputes their
+    * dates and devices, so gold converges once silver is idle. */
   private[streaming] def refineBatch(spark: SparkSession, lakeRoot: String,
       cfg: EtlConfig)(batch: DataFrame): Unit = {
-    // affected partition METADATA — bounded by the batch's date span /
-    // device fleet, not its row count
-    val dates = batch
-      .select(to_date(col("timestamp")).as("d"))
-      .filter(col("d").isNotNull).distinct()
-      .collect().map(_.getDate(0))
+    // affected partition METADATA — bounded by the batch's date span ×
+    // device fleet, not its row count; one collect serves both sets
+    val pairs = batch
+      .select(to_date(col("timestamp")), col("device_id")).distinct()
+      .collect()
+    val dates = pairs.filterNot(_.isNullAt(0)).map(_.getDate(0)).distinct
     if (dates.isEmpty) return
-    val devices = batch.select(col("device_id")).distinct()
-      .collect().map(_.getString(0)).toSeq
+    val devices = pairs.map(_.getString(1)).distinct.toSeq
 
-    def silver = spark.read.parquet(s"$lakeRoot/silver/energy_usage")
+    def silver = spark.read.schema(batch.schema)
+      .option("ignoreMissingFiles", "true")
+      .parquet(s"$lakeRoot/silver/energy_usage")
 
     // 1. daily energy: recompute ONLY the affected dates (pruned scan),
     // dynamic-overwrite their partitions
-    SilverToGold.dailyEnergyConsumption(
-        silver.filter(col("date").isin(dates.toSeq: _*)).drop("date"), cfg)
+    val dailyPath = s"$lakeRoot/gold/daily_energy_consumption"
+    val daily = SilverToGold.dailyEnergyConsumption(
+      silver.filter(col("date").isin(dates.toSeq: _*)).drop("date"), cfg)
+    daily
       .repartition(col("date"))
       .write
       .partitionBy("date")
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
-      .parquet(s"$lakeRoot/gold/daily_energy_consumption")
+      .parquet(dailyPath)
 
     // 2. device health: recompute the affected devices over their FULL
     // history, merge over the previous snapshot. localCheckpoint
@@ -74,7 +91,7 @@ object GoldRefinery {
       new java.net.URI(healthPath), spark.sparkContext.hadoopConfiguration)
     val merged =
       if (!fs.exists(new org.apache.hadoop.fs.Path(healthPath))) fresh
-      else spark.read.parquet(healthPath)
+      else spark.read.schema(fresh.schema).parquet(healthPath)
         .filter(!col("device_id").isin(devices: _*))
         .unionByName(fresh)
     merged.localCheckpoint(true)
@@ -85,8 +102,8 @@ object GoldRefinery {
     // every date's row, so recompute from the (aggregate-sized) gold
     // tables and dynamically overwrite every date present
     SilverToGold.dailyBusinessSummary(
-        spark.read.parquet(s"$lakeRoot/gold/daily_energy_consumption"),
-        spark.read.parquet(healthPath), cfg)
+        spark.read.schema(daily.schema).parquet(dailyPath),
+        spark.read.schema(fresh.schema).parquet(healthPath), cfg)
       .repartition(col("date"))
       .write
       .partitionBy("date")
@@ -103,6 +120,9 @@ object GoldRefinery {
     val schema = spark.read.parquet(path).schema
     spark.readStream.schema(schema)
       .option("ignoreCorruptFiles", "true")
+      // a file Silver's partition overwrite deleted after the listing
+      // (see refineBatch)
+      .option("ignoreMissingFiles", "true")
       .parquet(path)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -27,6 +27,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * ≥60 rows/day (any cadence of 1/min or faster); raise `contextDays`
   * for sparser fleets. At 100 TB the recompute stays proportional to
   * the batch's affected dates (partition-pruned scan), not lake size.
+  * `GoldRefinery.start` may tail this sink while it runs.
   */
 object SilverRefinery {
 
@@ -51,15 +52,15 @@ object SilverRefinery {
       // whose frames reach back into D, so the rewrite set extends
       // FORWARD to those dates — but only where the lake already holds
       // them (a forward date with no bronze yet has nothing to fix).
+      // The Bronze listing's date= directories answer that without a
+      // job; a directory without rows only widens the recompute, which
+      // then writes nothing for it.
       val forward = batchDates
         .flatMap(d => (1 to contextDays).map(d.plusDays(_)))
         .distinct.diff(batchDates)
       val existingForward =
         if (forward.isEmpty) Seq.empty
-        else Lake.bronzeScan(spark, lakeRoot)
-          .filter(col("date").isin(forward.map(java.sql.Date.valueOf): _*))
-          .select("date").distinct()
-          .collect().map(_.getDate(0).toLocalDate).toSeq
+        else forward.intersect(bronzeDates(spark, lakeRoot)).toSeq
       val dates = batchDates ++ existingForward
       val ctx = dates
         .flatMap(d => (0 to contextDays).map(b => d.minusDays(b)))
@@ -74,6 +75,17 @@ object SilverRefinery {
       Lake.writeSilver(
         silver.filter(to_date(col("timestamp")).isin(affected: _*)), lakeRoot)
     }
+  }
+
+  /** Event dates with a `date=` directory under the Bronze root. */
+  private def bronzeDates(spark: SparkSession,
+      lakeRoot: String): Seq[java.time.LocalDate] = {
+    val root = new org.apache.hadoop.fs.Path(Lake.bronzePath(lakeRoot))
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(root).toSeq
+      .filter(_.isDirectory).map(_.getPath.getName)
+      .collect { case s"date=$d" => scala.util.Try(java.time.LocalDate.parse(d)) }
+      .flatMap(_.toOption)
   }
 
   private def refine(spark: SparkSession, lakeRoot: String,

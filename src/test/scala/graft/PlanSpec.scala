@@ -1520,4 +1520,34 @@ class PlanSpec extends SparkSpec {
     assert(ps.contains("date") && ps.contains(">="),
       s"silver scan must prune on date: <$ps>")
   }
+
+  test("Bronze→Silver→sink plan: one sort, no SortAggregate, shuffles on device_id and date") {
+    import graft.etl.{BronzeToSilver, EtlConfig, Fixtures, Lake}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // the F3 dedup and the rolling windows share one (device_id,
+    // timestamp) sort; the sink adds only the date shuffle. A second
+    // dedup (or dropDuplicates) would bring back a key shuffle, sorts
+    // and sort-based First() aggregates over every column.
+    val bronze = Fixtures.bronzeTelemetry(spark, nDevices = 2, rowsPerDevice = 30,
+      dirty = true)
+    val df = Lake.silverByDate(
+      BronzeToSilver.run(bronze, Fixtures.deviceCatalog(spark, 2), EtlConfig()))
+    val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    val nodes = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case n => n
+    }
+    assert(nodes.count(_.isInstanceOf[SortExec]) == 1, p)
+    assert(!nodes.exists(_.isInstanceOf[SortAggregateExec]), p)
+    val shuffleKeys = nodes.collect { case e: ShuffleExchangeExec =>
+      e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+        case other => Seq(other.toString)
+      }
+    }
+    assert(shuffleKeys.sortBy(_.mkString) == Seq(Seq("date"), Seq("device_id")), p)
+  }
 }

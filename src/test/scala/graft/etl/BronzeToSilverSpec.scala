@@ -31,6 +31,61 @@ class BronzeToSilverSpec extends SparkSpec {
     assert(dupes.count() == 0)
   }
 
+  // the dirty fixture plus one key's edge cases: an exact duplicate, a
+  // same-key row with other values, and the row with a null timestamp
+  // and with a null device_id
+  private lazy val keyRow = bronzeDirty.filter(col("device_id") === "device_001" &&
+    col("timestamp") === Fixtures.DefaultStart.plusSeconds(10).toString)
+  private lazy val nullKeys = keyRow.withColumn("timestamp", lit(null).cast("string"))
+    .union(keyRow.withColumn("device_id", lit(null).cast("string")))
+  private lazy val exactDups = bronzeDirty.union(keyRow).union(nullKeys)
+  private lazy val keyEdges =
+    exactDups.union(keyRow.withColumn("temperature", col("temperature") + 1))
+
+  private def multiset(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+
+  test("F3/F4: one row per (device_id, timestamp), none with a null key") {
+    val out = BronzeToSilver.validateAndClean(keyEdges, cfg)
+    assert(out.groupBy("device_id", "timestamp").count()
+      .filter(col("count") > 1).count() == 0)
+    assert(out.filter(col("device_id").isNull || col("timestamp").isNull)
+      .count() == 0)
+    // the edge rows add no row: same survivors as the dirty fixture
+    assert(out.count() == cleaned.count())
+    // the same-key pair keeps one of its two rows, whole
+    val base = keyRow.head().getAs[Double]("temperature")
+    val kept = out.filter(col("device_id") === "device_001" &&
+      col("timestamp") === lit(Fixtures.DefaultStart.plusSeconds(10)))
+      .select("temperature").collect().map(_.getDouble(0))
+    assert(kept.length == 1 && Set(base, base + 1).contains(kept.head),
+      kept.mkString(","))
+  }
+
+  test("F3: on exact duplicates Silver equals the dropDuplicates formulation") {
+    // the dedup this stage had before the lag window: dropDuplicates
+    // on the key, ahead of the same null drop and filters
+    def oldValidateAndClean(df: org.apache.spark.sql.DataFrame) =
+      BronzeToSilver.screen(
+        df.withColumn("timestamp", try_to_timestamp(col("timestamp")))
+          .dropDuplicates("device_id", "timestamp"), cfg)
+    def silverVia(validated: org.apache.spark.sql.DataFrame) =
+      BronzeToSilver.derivedMetrics(BronzeToSilver.detectLateEvents(
+        BronzeToSilver.enrichWithCatalog(validated, catalog), cfg), cfg)
+    val got = BronzeToSilver.run(exactDups, catalog, cfg)
+    val want = silverVia(oldValidateAndClean(exactDups))
+    assert(got.count() == 5 * 100 + 3)
+    assert(multiset(got) == multiset(want))
+  }
+
+  test("J1: a duplicated catalog row does not duplicate Silver rows") {
+    val dupCatalog = catalog.union(catalog.filter(col("device_id") === "device_002"))
+    val got = BronzeToSilver.run(bronzeDirty, dupCatalog, cfg)
+    assert(got.groupBy("device_id", "timestamp").count()
+      .filter(col("count") > 1).count() == 0)
+    assert(multiset(got) == multiset(silver))
+  }
+
   test("quality score: null optionals −0.1 each, extremes −0.2 each") {
     // dirty row device_003: 3 null optionals + temp 60 (>50) + power
     // 6000 (>5000) → 1.0 − 0.3 − 0.2 − 0.2 = 0.3
