@@ -128,23 +128,12 @@ object BronzeToSilver {
 
   /** bronze_to_silver.py:239-275 (W1-W3) — per-device 60-row rolling
     * mean/sum (min_periods=1 ≡ rowsBetween(-59, 0)), energy
-    * efficiency, alert flags.
-    *
-    * `cfg.timeBasedWindows` switches the frame to a true trailing
-    * hour by event time (rangeBetween over epoch seconds) — the
-    * semantics the reference's "_1h_" names promise; its 60-ROW frame
-    * only matches at exactly 1 msg/min (SURVEY §7.5.3). */
+    * efficiency, alert flags. The "_1h_" names are the reference's; its
+    * 60-ROW frame only spans an hour at exactly 1 msg/min (SURVEY
+    * §7.5.3). */
   def derivedMetrics(df: DataFrame, cfg: EtlConfig = EtlConfig()): DataFrame = {
-    val w =
-      if (cfg.timeBasedWindows)
-        // microsecond resolution: unix_timestamp would truncate to
-        // whole seconds and misplace sub-second events at the frame edge
-        Window.partitionBy(col("device_id"))
-          .orderBy(unix_micros(col("timestamp")))
-          .rangeBetween(-(cfg.rollingWindowSeconds * 1000000L - 1), 0)
-      else
-        Window.partitionBy(col("device_id")).orderBy(col("timestamp"))
-          .rowsBetween(-(cfg.rollingWindowRows - 1), 0)
+    val w = Window.partitionBy(col("device_id")).orderBy(col("timestamp"))
+      .rowsBetween(-(cfg.rollingWindowRows - 1), 0)
     df.withColumn("temp_1h_avg", avg(col("temperature")).over(w))
       .withColumn("power_1h_avg", avg(col("power_usage")).over(w))
       .withColumn("energy_efficiency",

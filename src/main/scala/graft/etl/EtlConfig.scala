@@ -11,11 +11,8 @@ import java.time.Instant
   */
 final case class EtlConfig(
     energyRatePerKwh: Double = 0.12, // config.py:46 ENERGY_RATE_PER_KWH
-    baseCharge: Double = 15.00, // config.py:47
     watermarkHours: Int = 48, // bronze_to_silver.py:213 detect_late_events
     rollingWindowRows: Int = 60, // bronze_to_silver.py:249 rolling(window=60)
-    timeBasedWindows: Boolean = false, // true → real trailing-hour frames
-    rollingWindowSeconds: Long = 3600, // frame span when timeBasedWindows
     tempRangeMin: Double = -50, // bronze_to_silver.py:140 validation ranges
     tempRangeMax: Double = 100,
     powerRangeMax: Double = 10000,

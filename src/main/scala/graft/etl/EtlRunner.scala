@@ -86,8 +86,8 @@ object EtlRunner {
     // it; the scheduler would run this on a slower cadence)
     if (opts.contains("--compact")) {
       val target = opts.getOrElse("--compact-target-mb", "128").toLong << 20
-      Seq(s"$lake/bronze/telemetry", s"$lake/silver/energy_usage",
-        s"$lake/gold/daily_business_summary")
+      Seq(Lake.bronzePath(lake), Lake.silverPath(lake),
+        Lake.businessSummaryPath(lake))
         // skipHotPartitions = 1: micro-batch ingest actively appends
         // to the newest date partition; compacting it here would race
         // the writer (see Lake.compact's concurrency contract)

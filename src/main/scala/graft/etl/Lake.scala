@@ -7,15 +7,29 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Lake layout: partitioned parquet sinks and pruned scans
-  * (SURVEY §2.1 S4-S10).
+  * (SURVEY §2.1 S4-S10). This object is the one place that knows a
+  * medallion table's path, partitioning and write mode; the batch pass
+  * (`EtlRunner`) and the streaming refineries (`graft.streaming`) both
+  * write through it, so the two paths cannot disagree on a layout.
+  *
+  * Layouts: Bronze, Silver, Gold daily energy and Gold business
+  * summary are `partitionBy("date")` with dynamic partition overwrite
+  * (the Bronze ingest stream appends instead); Gold device health is
+  * flat and overwritten whole.
   *
   * The reference hand-rolls partition pruning by constructing
   * YYYY/MM/DD paths and filtering files by mtime
-  * (bronze_to_silver.py:38-80); here every table is written
+  * (bronze_to_silver.py:38-80); here every dated table is written
   * `partitionBy("date")` and read with a date predicate, which
   * Catalyst turns into partition pruning — the 100 TB path: a
   * lookback query touches only its date directories regardless of
   * lake size.
+  *
+  * Deviation: the reference writes daily energy consumption flat
+  * (silver_to_gold.py:277-312). Here it is date-partitioned, because
+  * the Gold refinery rewrites only the dates a micro-batch touched. A
+  * flat batch write beside those `date=` directories would be hidden
+  * by partition discovery, and Gold would lose every other date.
   *
   * Idempotence (ST8): the reference appends overlapping windows and
   * dedups at read; we write rows already unique per key (Silver's
@@ -26,23 +40,34 @@ import org.apache.spark.sql.types.StructType
   */
 object Lake {
 
-  /** S7: Silver sink — date-partitioned, dynamic partition overwrite
-    * for idempotent reprocessing. No dedup here: `BronzeToSilver`
-    * already emits one row per (device_id, timestamp). */
-  def writeSilver(silver: DataFrame, root: String): Unit =
-    silverByDate(silver)
-      .write
+  private[graft] def bronzePath(root: String): String = s"$root/bronze/telemetry"
+  private[graft] def silverPath(root: String): String = s"$root/silver/energy_usage"
+  private[graft] def dailyEnergyPath(root: String): String =
+    s"$root/gold/daily_energy_consumption"
+  private[graft] def deviceHealthPath(root: String): String =
+    s"$root/gold/device_health_metrics"
+  private[graft] def businessSummaryPath(root: String): String =
+    s"$root/gold/daily_business_summary"
+  private[graft] def checkpointPath(root: String, name: String): String =
+    s"$root/_checkpoints/$name"
+
+  /** Every date-partitioned sink: dynamic partition overwrite, so a
+    * write replaces exactly the dates it holds. `df` carries `date`. */
+  private def writeByDate(df: DataFrame, path: String): Unit =
+    byDate(df).write
       .partitionBy("date")
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
-      .parquet(s"$root/silver/energy_usage")
+      .parquet(path)
 
-  /** Silver as [[writeSilver]] hands it to the writer: the `date`
-    * column, and one writer set per date partition (no small files). */
-  private[graft] def silverByDate(silver: DataFrame): DataFrame =
-    silver
-      .withColumn("date", to_date(col("timestamp")))
-      .repartition(col("date"))
+  /** [[writeByDate]]'s transform: one writer set per date partition
+    * (no small files). */
+  private[graft] def byDate(df: DataFrame): DataFrame = df.repartition(col("date"))
+
+  /** S7: Silver sink. No dedup here: `BronzeToSilver` already emits
+    * one row per (device_id, timestamp). */
+  def writeSilver(silver: DataFrame, root: String): Unit =
+    writeByDate(silver.withColumn("date", to_date(col("timestamp"))), silverPath(root))
 
   /** S8: Silver scan with lookback pruning (days_back, anchored at
     * cfg.now — wall-clock-free under a pinned referenceInstant). */
@@ -54,27 +79,26 @@ object Lake {
       // S6 semantics: skip corrupt files with a warning instead of
       // failing the job (bronze_to_silver.py:96-101)
       .option("ignoreCorruptFiles", "true")
-      .parquet(s"$root/silver/energy_usage")
+      .parquet(silverPath(root))
       .filter(col("date") >= lit(cutoff)) // partition pruning
   }
 
-  /** S9: Gold sinks — daily_energy + device_health flat snapshots,
-    * business summary date-partitioned. */
+  /** S9: the three Gold sinks, as one pass writes them. */
   def writeGold(dailyEnergy: DataFrame, deviceHealth: DataFrame,
       businessSummary: DataFrame, root: String): Unit = {
-    dailyEnergy.write.mode("overwrite")
-      .parquet(s"$root/gold/daily_energy_consumption")
-    deviceHealth.write.mode("overwrite")
-      .parquet(s"$root/gold/device_health_metrics")
-    businessSummary.write
-      .partitionBy("date")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(s"$root/gold/daily_business_summary")
+    writeDailyEnergy(dailyEnergy, root)
+    writeDeviceHealth(deviceHealth, root)
+    writeBusinessSummary(businessSummary, root)
   }
 
-  private[graft] def bronzePath(root: String): String =
-    s"$root/bronze/telemetry"
+  private[graft] def writeDailyEnergy(daily: DataFrame, root: String): Unit =
+    writeByDate(daily, dailyEnergyPath(root))
+
+  private[graft] def writeDeviceHealth(health: DataFrame, root: String): Unit =
+    health.write.mode("overwrite").parquet(deviceHealthPath(root))
+
+  private[graft] def writeBusinessSummary(summary: DataFrame, root: String): Unit =
+    writeByDate(summary, businessSummaryPath(root))
 
   /** Bronze on disk: the telemetry columns plus the `date` partition
     * column written by [[writeBronze]]. */
@@ -352,18 +376,12 @@ object Lake {
       oTable: String = "orders_bucketed"): (DataFrame, DataFrame) =
     (spark.table(liTable), spark.table(oTable))
 
-  /** S4-as-batch: Bronze sink partitioned by event date. */
+  /** S4-as-batch: Bronze sink partitioned by event date. try_: raw
+    * bronze may carry unparseable timestamps; they land in the null
+    * date partition, which readBronze's date >= cutoff predicate
+    * excludes — such rows are retained for audit but never reach
+    * Silver (they would fail timestamp validation regardless). */
   def writeBronze(bronze: DataFrame, root: String): Unit =
-    bronze
-      // try_: raw bronze may carry unparseable timestamps; they land in
-      // the null date partition, which readBronze's date >= cutoff
-      // predicate excludes — such rows are retained for audit but never
-      // reach Silver (they would fail timestamp validation regardless)
-      .withColumn("date", to_date(try_to_timestamp(col("timestamp"))))
-      .repartition(col("date"))
-      .write
-      .partitionBy("date")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(bronzePath(root))
+    writeByDate(bronze.withColumn("date", to_date(try_to_timestamp(col("timestamp")))),
+      bronzePath(root))
 }

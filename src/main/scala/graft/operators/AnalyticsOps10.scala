@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.dec
 
 /** Round-11 tranche four: the resampling-inference and corpus-law
   * operators — Poisson bootstrap (THE single-pass bootstrap for
@@ -29,8 +30,6 @@ import org.apache.spark.sql.functions._
   * both engines.
   */
 object AnalyticsOps10 {
-
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
 
   /** The 60-bit md5 hash shared with q91/q193/q198 (DuckDB:
     * ('0x' || substring(md5(x), 1, 15))::BIGINT) — non-negative, so

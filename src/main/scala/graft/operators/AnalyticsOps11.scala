@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.dec
 
 /** Round-11 tranche five: the nonparametric-inference and corpus-
   * composition block that rounds out the stats family — Kruskal-Wallis
@@ -27,8 +28,6 @@ import org.apache.spark.sql.functions._
   * quantized to a fixed-point grid BEFORE any order-dependent sum.
   */
 object AnalyticsOps11 {
-
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
 
   /** Pre/post split instant shared with q172/q187 (AnalyticsOps6) so
     * the drift family reads the same two periods. */

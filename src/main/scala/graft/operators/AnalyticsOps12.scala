@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.dec
 
 /** Round-11 tranche six: the model-evaluation operating-point block —
   * expected/maximum calibration error (THE reported LLM-calibration
@@ -22,8 +23,6 @@ import org.apache.spark.sql.functions._
   * IEEE op order.
   */
 object AnalyticsOps12 {
-
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
 
   /** Expected and maximum calibration error of the normalized
     * purchase-propensity score, 20 equal-width bins — q221's binning

@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.dec
 
 /** Round-12 tranche one: effect sizes, ranking stability, change-point
   * detection, and uncertainty quantification for the evaluation suite —
@@ -29,8 +30,6 @@ import org.apache.spark.sql.functions._
   * sum.
   */
 object AnalyticsOps13 {
-
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
 
   /** z for two-sided 95% intervals — the same literal in engine and
     * oracle (the ln-19 convention of q243). */

@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.{dec, ErfA1, ErfA2, ErfA3, ErfA4, ErfA5, ErfT, Sqrt2}
 
 /** Round-12 tranche two: multiple-testing control, hierarchical
   * shrinkage, multivariate outliers, and extreme-value analysis —
@@ -27,19 +28,6 @@ import org.apache.spark.sql.functions._
   * shared literals, never cross-engine libm calls (the ln-19 device).
   */
 object AnalyticsOps14 {
-
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
-
-  /** Abramowitz-Stegun 7.1.26 erfc constants — the SAME literals in
-    * engine and oracle; |error| ≤ 1.5e-7, far above the 1e-9 report
-    * grid's needs and identical in both engines by construction. */
-  private val ErfT = 0.3275911
-  private val ErfA1 = 0.254829592
-  private val ErfA2 = -0.284496736
-  private val ErfA3 = 1.421413741
-  private val ErfA4 = -1.453152027
-  private val ErfA5 = 1.061405429
-  private val Sqrt2 = 1.4142135623730951
 
   /** Benjamini-Hochberg FDR over per-day purchase-rate drift tests —
     * each day's two-proportion z against the pooled rest, p-values via

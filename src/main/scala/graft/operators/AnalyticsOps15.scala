@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.dec
 
 /** Round-12 tranche three: the remaining distributional tests and
   * design-of-experiments panels — Cramér–von Mises (the WHOLE-CDF
@@ -29,8 +30,6 @@ import org.apache.spark.sql.functions._
   * order-dependent sum; irrational constants are shared literals.
   */
 object AnalyticsOps15 {
-
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
 
   private val Z975 = 1.959963984540054
   /** z for 80% power (Φ⁻¹(0.8)) — shared literal. */

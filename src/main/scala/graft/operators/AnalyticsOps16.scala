@@ -5,6 +5,7 @@ import graft.functions.VectorExpressions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.dec
 
 /** Round-12 tranche four: corpus-geometry and sampling-design
   * diagnostics — the cross-source unigram cross-entropy matrix (which
@@ -26,8 +27,6 @@ import org.apache.spark.sql.functions._
   * engines, quantized before any order-dependent sum.
   */
 object AnalyticsOps16 {
-
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
 
   /** Cross-source unigram cross-entropy matrix: train an add-1-
     * smoothed unigram LM on source A (over the corpus vocabulary),

@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.dec
 
 /** Round-12 tranche five: the remaining text-curation metrics a
   * training-data pipeline reports per source — leave-one-out 4-gram
@@ -26,8 +27,6 @@ import org.apache.spark.sql.functions._
   * both engines, quantized before order-dependent sums.
   */
 object AnalyticsOps17 {
-
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
 
   /** The q170/q37/q209 split convention (shared md5 bucket). */
   private val bucketCol = expr(

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Exact.{dec, cents, q6}
 
 /** Round-12 tranche six: the time-series health statistics a
   * telemetry-backed training pipeline reports per stream, plus two
@@ -31,14 +32,6 @@ import org.apache.spark.sql.functions._
   * partitioned by the stream key.
   */
 object AnalyticsOps18 {
-
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
-
-  /** The q201 cents-grid convention for events.value. */
-  private val cents = floor(col("value") * 100 + 0.5).cast("long").as("v")
-
-  private def q6(c: Column): Column =
-    floor(c * 1000000L + 0.5) / 1000000L
 
   /** Yule's characteristic K per source — the classic vocabulary-
     * concentration constant K = 10^4 * (sum_f V(f) * f^2 - N) / N^2

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Exact.{dec, q6, epochDay}
 
 /** Round-12 tranche seven: the model-side statistics that sit one
   * level above tranche six's stream health — a real smoothed language
@@ -28,17 +29,12 @@ import org.apache.spark.sql.functions._
   */
 object AnalyticsOps19 {
 
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
-
   /** The q170/q37/q209 split convention (shared md5 bucket). */
   private val bucketCol = expr(
     "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) " +
       "AS BIGINT) % 100")
   private val bucketSql =
     "('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 100"
-
-  private def q6(c: Column): Column =
-    floor(c * 1000000L + 0.5) / 1000000L
 
   /** Interpolated Kneser-Ney bigram cross-entropy per source — a real
     * smoothed LM scored on the held-out 20% split (q209's bucket
@@ -448,7 +444,7 @@ object AnalyticsOps19 {
       |FROM ag JOIN nn ON nn.t = ag.t""".stripMargin
   ) { (s, d) =>
     val ev = Tables.events(s, d).select(col("event_type").as("t"),
-      AnalyticsOps2.epochDay(unix_micros(col("ts"))).as("day"),
+      epochDay(unix_micros(col("ts"))).as("day"),
       floor(col("value") * 100 + 0.5).cast("long").as("v"))
       .cache() // one pass: split scalar, ranges, and bins reuse it
     val sp = ev.agg(call_function("div",

@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.epochDay
 
 /** Second analytics batch: spatial radius join, exponential
   * smoothing, RFM segmentation, Benford first-digit audit, and
@@ -215,21 +216,6 @@ object AnalyticsOps2 {
     * the InMemoryRelation; a partition rebuilt after executor loss
     * reuses the same plan instance (same RangePartitioner
     * boundaries), so the assignment stays stable. */
-  /** Sign-safe epoch-µs → epoch-day floordiv, THE shared day-math
-    * primitive (q143 convention): the oracle's `//` floors while
-    * Spark's `div` truncates toward zero — subtracting the pmod first
-    * makes the dividend an exact multiple, so truncation == floor for
-    * all epochs including pre-1970. One definition, many consumers
-    * (q117's dow, q143's streak days, AnalyticsOps5/6's daily
-    * rollups, LayoutOps' day tile) — a convention change lands
-    * everywhere at once. Built with Column operators (not a
-    * toString-interpolated expr), so aliased/qualified/backtick-needing
-    * input columns compose safely; `div` is the builtin IntegralDivide
-    * reached via call_function. */
-  private[operators] def epochDay(tsMicros: Column): Column =
-    call_function("div", tsMicros - pmod(tsMicros, lit(86400000000L)),
-      lit(86400000000L))
-
   private[operators] def globalRowNumber(df: DataFrame, sortCols: Seq[Column],
       out: String): DataFrame = {
     val parts = df

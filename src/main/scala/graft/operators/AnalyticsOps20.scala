@@ -3,6 +3,8 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Exact.{cents, dec, epochDay, q6}
+import Exact.{ErfA1, ErfA2, ErfA3, ErfA4, ErfA5, ErfT, Sqrt2}
 
 /** Round-12 tranche eight: the time-series diagnosis panel on top of
   * tranche six's health gates — Grubbs' extreme-outlier test (WHICH
@@ -27,21 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object AnalyticsOps20 {
 
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
-
-  private val cents = floor(col("value") * 100 + 0.5).cast("long").as("v")
-
-  private def q6(c: Column): Column =
-    floor(c * 1000000L + 0.5) / 1000000L
-
-  /** q254's A&S 7.1.26 erfc literals (shared, never libm). */
-  private val ErfT = 0.3275911
-  private val ErfA1 = 0.254829592
-  private val ErfA2 = -0.284496736
-  private val ErfA3 = 1.421413741
-  private val ErfA4 = -1.453152027
-  private val ErfA5 = 1.061405429
-  private val Sqrt2 = 1.4142135623730951
   private val Ln2 = 0.6931471805599453
 
   /** Acklam inverse-normal coefficients, tail branch only (q287's
@@ -310,7 +297,7 @@ object AnalyticsOps20 {
   ) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
     val ev = Tables.events(s, d).select(col("event_type").as("t"),
-      AnalyticsOps2.epochDay(unix_micros(col("ts"))).as("day"), cents)
+      epochDay(unix_micros(col("ts"))).as("day"), cents)
     val sp = ev.agg(call_function("div",
       min(col("day")) + max(col("day"))
         - pmod(min(col("day")) + max(col("day")), lit(2L)),

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Exact.{dec, q6}
 
 /** Round-12 tranche nine: the clustering-validity panel the label
   * column has been waiting for — Davies-Bouldin (per-cluster
@@ -24,11 +25,6 @@ import org.apache.spark.sql.functions._
   * double chains, outputs on the 1e-6 grid.
   */
 object AnalyticsOps21 {
-
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
-
-  private def q6(c: Column): Column =
-    floor(c * 1000000L + 0.5) / 1000000L
 
   /** Davies-Bouldin per-label row — intra-cluster mean distance s_i
     * (Euclidean, to the 1e-6-quantized label centroid) and R_i =

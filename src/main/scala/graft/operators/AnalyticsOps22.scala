@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Exact.{dec, epochDay}
 
 /** Round-12 tranche ten: the operational data-health trio — count
   * overdispersion (are daily event counts Poisson-stable or bursty:
@@ -20,8 +21,6 @@ import org.apache.spark.sql.functions._
   * (hour cells per type), keyed aggregations for the user-level pass.
   */
 object AnalyticsOps22 {
-
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
 
   /** Index-of-dispersion test on daily event counts per type — VMR =
     * s^2/mean over the observed days and the chi-square form D =
@@ -63,7 +62,7 @@ object AnalyticsOps22 {
       |FROM m""".stripMargin
   ) { (s, d) =>
     val dc = Tables.events(s, d).select(col("event_type").as("t"),
-        AnalyticsOps2.epochDay(unix_micros(col("ts"))).as("day"))
+        epochDay(unix_micros(col("ts"))).as("day"))
       .groupBy(col("t"), col("day")).agg(count(lit(1)).as("c"))
     val m = dc.groupBy(col("t")).agg(count(lit(1)).as("n"),
       sum(col("c")).cast("long").as("s1"),

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Exact.{dec, q6, epochDay}
 
 /** Round-12 tranche eleven: the forecast-and-changepoint closers of
   * the time-series panel — segmented (broken-stick) regression on the
@@ -25,11 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object AnalyticsOps23 {
 
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
-
-  private def q6(c: Column): Column =
-    floor(c * 1000000L + 0.5) / 1000000L
-
   /** q299's per-candidate breakpoint frame — (day, i, n, slope_l,
     * slope_r, sse3): every admissible split of the daily-revenue
     * series priced from ONE prefix-moment walk (suffix = total −
@@ -41,7 +37,7 @@ object AnalyticsOps23 {
       s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val daily = Tables.orders(s, d)
-      .select(AnalyticsOps2.epochDay(unix_micros(col("o_orderdate")))
+      .select(epochDay(unix_micros(col("o_orderdate")))
         .as("day"),
         floor(col("o_totalprice") * 100 + 0.5).cast("long").as("rc"))
       .groupBy(col("day")).agg(sum(col("rc")).cast("long").as("rev"))

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Exact.{dec, cents, q6, epochDay}
 
 /** Round-12 tranche twelve: the readability layer over the
   * time-series panel — the correlogram WITH its significance bands
@@ -22,13 +23,6 @@ import org.apache.spark.sql.functions._
   * .sseCandidates), so the two can never disagree about the curve.
   */
 object AnalyticsOps24 {
-
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
-
-  private val cents = floor(col("value") * 100 + 0.5).cast("long").as("v")
-
-  private def q6(c: Column): Column =
-    floor(c * 1000000L + 0.5) / 1000000L
 
   /** Correlogram with Bartlett bands (lags 1-14) per event type —
     * r_k with the cumulative Bartlett standard error se_k =
@@ -220,7 +214,7 @@ object AnalyticsOps24 {
   ) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
     val ev = Tables.events(s, d).select(col("event_type").as("t"),
-      AnalyticsOps2.epochDay(unix_micros(col("ts"))).as("day"), cents)
+      epochDay(unix_micros(col("ts"))).as("day"), cents)
     val c = ev.groupBy(col("t"), col("day"), col("v"))
       .agg(count(lit(1)).as("cnt"))
     val w = c.select(col("t"), col("day"), col("v"), col("cnt"),

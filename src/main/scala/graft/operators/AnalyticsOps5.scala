@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.epochDay
 
 /** Round-9 analytics tranche: mergeable-sketch distinct counting,
   * behavioral transition/debounce/retention reports, distribution
@@ -19,11 +20,6 @@ import org.apache.spark.sql.functions._
   * parses bare decimals as DECIMAL, not DOUBLE).
   */
 object AnalyticsOps5 {
-
-  /** Sign-safe epoch-µs → day floordiv over a TIMESTAMP column —
-    * delegates to the shared [[AnalyticsOps2.epochDay]] primitive. */
-  private def epochDay(ts: Column): Column =
-    AnalyticsOps2.epochDay(unix_micros(ts))
 
   /** Per-source distinct-document estimate from the mergeable
     * HyperLogLog register sketch (`SketchAggregates.HllRegisters`,
@@ -210,7 +206,7 @@ object AnalyticsOps5 {
       |GROUP BY 1, 2""".stripMargin
   ) { (s, d) =>
     val du = Tables.events(s, d)
-      .select(col("user_id"), epochDay(col("ts")).as("day"))
+      .select(col("user_id"), epochDay(unix_micros(col("ts"))).as("day"))
       .distinct()
       .cache() // one events scan + dedup exchange feeds BOTH the
                // cohort margin and the join's probe side
@@ -633,7 +629,7 @@ object AnalyticsOps5 {
       |FROM ex JOIN f USING (day)""".stripMargin
   ) { (s, d) =>
     val du = Tables.events(s, d)
-      .select(epochDay(col("ts")).as("day"), col("user_id"))
+      .select(epochDay(unix_micros(col("ts"))).as("day"), col("user_id"))
       .distinct()
       .cache() // one event pass feeds both the exact and sketch paths
     val offs = explode(expr("sequence(0, 6)")).as("o")

@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.{dec, epochDay}
 
 /** Round-9 analytics tranche, part two: experiment readouts and
   * monitoring statistics whose 100 TB shape is "one user-keyed or
@@ -97,7 +98,6 @@ object AnalyticsOps6 {
       .agg(
         sum(when(col("t") < PreEnd, col("cents")).otherwise(0L)).as("x"),
         sum(when(col("t") >= PreEnd, col("cents")).otherwise(0L)).as("y"))
-    val dec = (c: Column) => c.cast("decimal(38,0)")
     // moment sums accumulate in decimal(38,0) (DuckDB: HUGEINT) — the
     // per-user cents products are ~1e12-1e14 and their SUM crosses 2^63
     // at sf100-class user counts; int64 accumulation would ANSI-throw
@@ -188,7 +188,7 @@ object AnalyticsOps6 {
   ) { (s, d) =>
     val daily = Tables.events(s, d)
       .select(col("event_type"), unix_micros(col("ts")).as("t"))
-      .withColumn("day", AnalyticsOps2.epochDay(col("t")))
+      .withColumn("day", epochDay(col("t")))
       .groupBy(col("event_type"), col("day"))
       .agg(count(lit(1)).as("c"))
       .cache() // metadata-sized: ≤ |types| · |days| rows
@@ -482,7 +482,7 @@ object AnalyticsOps6 {
   ) { (s, d) =>
     val ev = Tables.events(s, d).select(col("user_id"),
       col("event_type"), unix_micros(col("ts")).as("t"))
-    val day = (c: Column) => AnalyticsOps2.epochDay(c)
+    val day = (c: Column) => epochDay(c)
     val u = ev.groupBy(col("user_id"))
       .agg(min(when(col("event_type") === "signup", col("t"))).as("s"))
       .filter(col("s").isNotNull)
@@ -641,7 +641,7 @@ object AnalyticsOps6 {
   ) { (s, d) =>
     val daily = Tables.events(s, d)
       .select(col("event_type"), unix_micros(col("ts")).as("t"))
-      .withColumn("day", AnalyticsOps2.epochDay(col("t")))
+      .withColumn("day", epochDay(col("t")))
       .groupBy(col("event_type"), col("day"))
       .agg(count(lit(1)).as("c"))
       .cache() // metadata: ≤ |types| · |days| rows
@@ -985,7 +985,7 @@ object AnalyticsOps6 {
   ) { (s, d) =>
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"),
-        AnalyticsOps2.epochDay(unix_micros(col("ts"))).as("day"))
+        epochDay(unix_micros(col("ts"))).as("day"))
       .agg(count(lit(1)).as("c"))
       .cache() // ≤ |types| · |days| — the pair join runs on THIS
     val b = daily.select(col("event_type"), col("day").as("d2"),
@@ -1063,7 +1063,7 @@ object AnalyticsOps6 {
   ) { (s, d) =>
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"),
-        AnalyticsOps2.epochDay(unix_micros(col("ts"))).as("day"))
+        epochDay(unix_micros(col("ts"))).as("day"))
       .agg(count(lit(1)).as("c"))
       .cache() // ≤ |types| · |days| — pairs and ties both read THIS
     val b = daily.select(col("event_type"), col("day").as("d2"),

@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.dec
 
 /** Round-11 analytics tranche: tie-aware rank correlation, exact 1-D
   * Wasserstein drift distance, cross-source quantile normalization,
@@ -18,8 +19,6 @@ import org.apache.spark.sql.functions._
   * identical IEEE op order on both engines.
   */
 object AnalyticsOps7 {
-
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
 
   /** Spearman rank correlation between document length in characters
     * and in tokens, per source — the tie-aware monotone-association

@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.dec
 
 /** Round-11 tranche two: the rank-statistics / divergence / privacy /
   * graph operators that complete the families round 10–11 opened —
@@ -24,8 +25,6 @@ import org.apache.spark.sql.functions._
   * truncates toward zero, DuckDB `//` floors; they agree on ≥ 0).
   */
 object AnalyticsOps8 {
-
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
 
   /** The q170/q37 split convention: a 60-bit md5 prefix of doc_id,
     * mod 100 — pure function of the key, replayable in any engine. */

@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.epochDay
 
 /** Corpus-curation operators beyond TextOps' per-doc statistics: the
   * cross-document / cross-split machinery a pretraining pipeline runs
@@ -1114,7 +1115,7 @@ object CurationOps {
   ) { (s, d) =>
     val daily = Tables.events(s, d)
       .select(col("event_type"),
-        graft.operators.AnalyticsOps2.epochDay(unix_micros(col("ts")))
+        epochDay(unix_micros(col("ts")))
           .as("day"))
       .groupBy(col("event_type"), col("day"))
       .agg(count(lit(1)).as("n_true"))

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import Exact.{dec, epochDay}
 
 /** Round-13 tranche one: the model-evaluation split machinery a
   * training-data pipeline runs before it trusts any metric — k-fold
@@ -26,8 +27,6 @@ import org.apache.spark.sql.functions._
   * grid. The q170/q37/q209 md5-bucket split convention.
   */
 object EvalOps {
-
-  private val dec = (c: Column) => c.cast("decimal(38,0)")
 
   /** Sign-safe integral floor-div (positive operands here; the pmod
     * pairing is the house convention for DuckDB `//` parity). */
@@ -158,7 +157,7 @@ object EvalOps {
       |FROM ev GROUP BY 1, 2""".stripMargin
   ) { (s, d) =>
     val ev = Tables.events(s, d).select(
-      AnalyticsOps2.epochDay(unix_micros(col("ts"))).as("day"),
+      epochDay(unix_micros(col("ts"))).as("day"),
       col("event_type"),
       floor(col("value") * 100 + 0.5).cast("long").as("v"),
       pmod(col("event_id"), lit(10L)).as("b"))

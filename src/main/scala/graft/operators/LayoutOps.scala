@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import Exact.epochDay
 
 /** Physical data-layout operators: the audits that decide HOW a
   * 100 TB table should be clustered on disk, not what a query over
@@ -19,11 +20,6 @@ import org.apache.spark.sql.functions._
   * extension tranche (SURVEY §2.11).
   */
 object LayoutOps {
-
-  /** Sign-safe epoch-µs → epoch-day floordiv — the shared
-    * [[AnalyticsOps2.epochDay]] primitive (q143 convention). */
-  private def epochDay(tsMicros: Column): Column =
-    AnalyticsOps2.epochDay(tsMicros)
 
   /** Z-order vs time-linear layout audit: lay the events table out in
     * 64 equal row-count files two ways — `linear` (the default

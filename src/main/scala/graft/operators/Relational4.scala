@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.functions._
+import Exact.epochDay
 
 /** Fourth relational tranche (SURVEY §2.11): the remaining reshaping /
   * sequence surface a standalone engine owes — UNPIVOT (melt),
@@ -94,8 +95,8 @@ object Relational4 {
     val du = Tables.events(s, d)
       .select(col("user_id"),
         // the shared sign-safe floordiv (q143 convention, one
-        // definition in AnalyticsOps2.epochDay)
-        AnalyticsOps2.epochDay(unix_micros(col("ts"))).as("day"))
+        // definition in Exact.epochDay)
+        epochDay(unix_micros(col("ts"))).as("day"))
       .distinct()
     val isl = du.withColumn("island", col("day") - row_number().over(
       Window.partitionBy(col("user_id")).orderBy(col("day"))))

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Exact.{cents, epochDay}
 
 /** THE shared event-series cell frames — one definition of "the daily
   * (hourly) mean series on the 1e-6 grid", many consumers, so the
@@ -10,7 +11,7 @@ import org.apache.spark.sql.functions._
   * against each other (q277 Ljung-Box, q278 runs, q286 CCF, q289 DF,
   * q290 STL strength, q300 MASE, q301 STL outliers, q302 PACF on the
   * daily frame; q279 Allan, q291 Hurst on the hourly frame). The same
-  * promote-the-idiom move as AnalyticsOps2.epochDay and the two-phase
+  * promote-the-idiom move as Exact.epochDay and the two-phase
   * prefix: a convention change lands everywhere at once.
   *
   * Grid: value -> cents via floor(v*100 + 0.5) (the q201 convention),
@@ -22,14 +23,11 @@ import org.apache.spark.sql.functions._
   */
 private[operators] object SeriesFrames {
 
-  private val cents =
-    floor(col("value") * 100 + 0.5).cast("long").as("v")
-
   /** (t, day, m6): per-type daily mean on the 1e-6 grid —
     * time-range-bounded metadata (days x |types| rows). */
   def dailyMean6(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d).select(col("event_type").as("t"),
-        AnalyticsOps2.epochDay(unix_micros(col("ts"))).as("day"), cents)
+        epochDay(unix_micros(col("ts"))).as("day"), cents)
       .groupBy(col("t"), col("day"))
       .agg(sum(col("v")).cast("long").as("sc"), count(lit(1)).as("c"))
       .select(col("t"), col("day"),

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import Exact.dec
 
 /** Text-analysis operators for the training-data pipeline surface
   * (builder prompt: language-ID, quality scoring, token counting,
@@ -1017,7 +1018,6 @@ object TextOps {
       |      + 0.5) / 1000000 END AS kappa
       |FROM tot CROSS JOIN rc""".stripMargin
   ) { (s, d) =>
-    val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val toks = split(col("text"), " ", -1)
     val cells = Tables.documents(s, d)
       .select(col("lang").as("labeled"), LangId.scEn(toks).as("sc_en"),

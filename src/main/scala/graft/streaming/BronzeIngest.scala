@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.etl.Schemas
+import graft.etl.{Lake, Schemas}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -77,7 +77,7 @@ object BronzeIngest {
       triggerInterval: String = "30 seconds"): StreamingQuery =
     validated.writeStream
       .format("parquet")
-      .option("path", s"$outRoot/bronze/telemetry")
+      .option("path", Lake.bronzePath(outRoot))
       .option("checkpointLocation", checkpoint)
       .partitionBy("date")
       .trigger(Trigger.ProcessingTime(triggerInterval))

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import graft.etl.{EtlConfig, SilverToGold}
+import graft.etl.{EtlConfig, Lake, SilverToGold}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous Silver→Gold refinement: the SilverRefinery pattern one
   * hop downstream, replacing the reference's full gold recompute every
@@ -18,20 +18,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *     partition-pruned silver read, and dynamically overwritten —
   *     cost tracks the batch's date span, not lake size.
   *   - device_health_metrics is a whole-history per-DEVICE metric
-  *     (min/max timestamp, lifetime means): rows for the batch's
-  *     devices are recomputed from those devices' full silver history
-  *     and merged over the previous snapshot. The history scan is the
-  *     metric's inherent cost (date partitions can't prune a lifetime
-  *     aggregate; parquet row-group stats on device_id still skip);
-  *     untouched devices keep their rows byte-identically.
+  *     (min/max timestamp, lifetime means): it is recomputed from all
+  *     of silver and overwritten, as the batch pass does. Silver is
+  *     rewritten a whole date partition at a time, so a micro-batch
+  *     already holds every device active on its dates; recomputing
+  *     only those devices would scan the same rows.
   *   - daily_business_summary consumes the OTHER TWO GOLD TABLES (a
   *     per-date rollup of daily energy plus the global health means —
   *     which shift whenever ANY device's health does), so it is
   *     recomputed from gold, which is already aggregate-sized:
   *     reading it back is cheap at any lake size.
   *
-  * Idempotence matches the batch sinks: reprocessing a batch rewrites
-  * the same partitions/rows to the same values (cfg.now pins
+  * Every table is written through `Lake`'s sinks, the same ones the
+  * batch pass uses. Idempotence matches them: reprocessing a batch
+  * rewrites the same partitions/rows to the same values (cfg.now pins
   * created_at). That is also what lets [[start]] run beside
   * `SilverRefinery.start`: a slice read while Silver rewrote it is
   * recomputed by a later micro-batch (see `refineBatch`), and
@@ -52,100 +52,53 @@ object GoldRefinery {
     * overwrite is rewriting its partition. The stream source and the
     * re-reads skip such files (`ignoreMissingFiles`). The rewrite's
     * new files reach a later micro-batch, which recomputes their
-    * dates and devices, so gold converges once silver is idle. */
+    * dates and every device, so gold converges once silver is idle. */
   private[streaming] def refineBatch(spark: SparkSession, lakeRoot: String,
       cfg: EtlConfig)(batch: DataFrame): Unit = {
-    // affected partition METADATA — bounded by the batch's date span ×
-    // device fleet, not its row count; one collect serves both sets
-    val pairs = batch
-      .select(to_date(col("timestamp")), col("device_id")).distinct()
-      .collect()
-    val dates = pairs.filterNot(_.isNullAt(0)).map(_.getDate(0)).distinct
+    // affected partition METADATA — bounded by the batch's date span,
+    // not its row count
+    val dates = batch.select(to_date(col("timestamp"))).distinct().collect()
+      .filterNot(_.isNullAt(0)).map(_.getDate(0)).toSeq
     if (dates.isEmpty) return
-    val devices = pairs.map(_.getString(1)).distinct.toSeq
 
-    def silver = spark.read.schema(batch.schema)
+    val silver = spark.read.schema(batch.schema)
       .option("ignoreMissingFiles", "true")
-      .parquet(s"$lakeRoot/silver/energy_usage")
-
-    // 1. daily energy: recompute ONLY the affected dates (pruned scan),
-    // dynamic-overwrite their partitions
-    val dailyPath = s"$lakeRoot/gold/daily_energy_consumption"
+      .parquet(Lake.silverPath(lakeRoot))
     val daily = SilverToGold.dailyEnergyConsumption(
-      silver.filter(col("date").isin(dates.toSeq: _*)).drop("date"), cfg)
-    daily
-      .repartition(col("date"))
-      .write
-      .partitionBy("date")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(dailyPath)
-
-    // 2. device health: recompute the affected devices over their FULL
-    // history, merge over the previous snapshot. localCheckpoint
-    // materializes the merge before the overwrite truncates the input.
-    val healthPath = s"$lakeRoot/gold/device_health_metrics"
-    val fresh = SilverToGold.deviceHealthMetrics(
-      silver.filter(col("device_id").isin(devices: _*)).drop("date"), cfg)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(healthPath), spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(healthPath))) fresh
-      else spark.read.schema(fresh.schema).parquet(healthPath)
-        .filter(!col("device_id").isin(devices: _*))
-        .unionByName(fresh)
-    merged.localCheckpoint(true)
-      .write.mode("overwrite").parquet(healthPath)
-
-    // 3. business summary: per-date rollup of gold daily energy plus
-    // the GLOBAL health means — any device change staleness-taints
-    // every date's row, so recompute from the (aggregate-sized) gold
-    // tables and dynamically overwrite every date present
-    SilverToGold.dailyBusinessSummary(
-        spark.read.schema(daily.schema).parquet(dailyPath),
-        spark.read.schema(fresh.schema).parquet(healthPath), cfg)
-      .repartition(col("date"))
-      .write
-      .partitionBy("date")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(s"$lakeRoot/gold/daily_business_summary")
+      silver.filter(col("date").isin(dates: _*)).drop("date"), cfg)
+    Lake.writeDailyEnergy(daily, lakeRoot)
+    val health = SilverToGold.deviceHealthMetrics(silver.drop("date"), cfg)
+    Lake.writeDeviceHealth(health, lakeRoot)
+    // the summary's GLOBAL health means taint every date's row, so it
+    // is recomputed from the (aggregate-sized) gold tables
+    Lake.writeBusinessSummary(SilverToGold.dailyBusinessSummary(
+      spark.read.schema(daily.schema).parquet(Lake.dailyEnergyPath(lakeRoot)),
+      spark.read.schema(health.schema).parquet(Lake.deviceHealthPath(lakeRoot)),
+      cfg), lakeRoot)
   }
 
-  private def refine(spark: SparkSession, lakeRoot: String, cfg: EtlConfig,
-      trigger: Trigger): StreamingQuery = {
-    val path = s"$lakeRoot/silver/energy_usage"
-    // silver's schema is derived (BronzeToSilver output); a streaming
-    // source needs it declared, so lift it from the lake's footers once
-    val schema = spark.read.parquet(path).schema
-    spark.readStream.schema(schema)
+  /** The Silver file stream. Silver's schema is derived (BronzeToSilver
+    * output); a streaming source needs it declared, so it is lifted
+    * from the lake's footers once. */
+  private def silverStream(spark: SparkSession, lakeRoot: String): DataFrame = {
+    val path = Lake.silverPath(lakeRoot)
+    spark.readStream.schema(spark.read.parquet(path).schema)
       .option("ignoreCorruptFiles", "true")
       // a file Silver's partition overwrite deleted after the listing
       // (see refineBatch)
       .option("ignoreMissingFiles", "true")
       .parquet(path)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        refineBatch(spark, lakeRoot, cfg)(batch)
-      }
-      .option("checkpointLocation", s"$lakeRoot/_checkpoints/gold_refinery")
-      .trigger(trigger)
-      .start()
   }
 
   def start(spark: SparkSession, lakeRoot: String,
       cfg: EtlConfig = EtlConfig(),
       triggerInterval: String = "2 minutes"): StreamingQuery =
-    refine(spark, lakeRoot, cfg, Trigger.ProcessingTime(triggerInterval))
+    LakeTail.start(silverStream(spark, lakeRoot), lakeRoot, "gold_refinery",
+      triggerInterval)(refineBatch(spark, lakeRoot, cfg))
 
-  /** One-shot drain (Trigger.AvailableNow) for tests/backfill. Blocks
-    * until the drain completes — a large backfill takes as long as it
-    * takes; returning early with the query still overwriting gold
-    * partitions would hand the caller torn tables. */
+  /** One-shot drain; blocks until done (see `LakeTail.runOnce`). */
   def runOnce(spark: SparkSession, lakeRoot: String,
-      cfg: EtlConfig = EtlConfig()): Unit = {
-    val q = refine(spark, lakeRoot, cfg, Trigger.AvailableNow())
-    try q.awaitTermination()
-    catch { case e: Throwable => q.stop(); throw e }
-  }
+      cfg: EtlConfig = EtlConfig()): Unit =
+    LakeTail.runOnce(silverStream(spark, lakeRoot), lakeRoot, "gold_refinery")(
+      refineBatch(spark, lakeRoot, cfg))
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.etl.{BronzeToSilver, EtlConfig, Lake}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous Bronze→Silver refinement: the streaming replacement for
   * the reference's 2-minute batch rerun loop (run_etl.py:45,77, SURVEY
@@ -88,37 +88,23 @@ object SilverRefinery {
       .flatMap(_.toOption)
   }
 
-  private def refine(spark: SparkSession, lakeRoot: String,
-      catalog: DataFrame, cfg: EtlConfig, contextDays: Int,
-      trigger: Trigger): StreamingQuery =
+  /** The Bronze file stream; `date` is re-derived by the Silver sink. */
+  private def bronzeStream(spark: SparkSession, lakeRoot: String): DataFrame =
     spark.readStream
       .schema(Lake.BronzeSchema)
       .option("ignoreCorruptFiles", "true")
       .parquet(Lake.bronzePath(lakeRoot))
       .drop("date")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        refineBatch(spark, lakeRoot, catalog, cfg, contextDays)(batch)
-      }
-      .option("checkpointLocation", s"$lakeRoot/_checkpoints/silver_refinery")
-      .trigger(trigger)
-      .start()
 
   def start(spark: SparkSession, lakeRoot: String, catalog: DataFrame,
       cfg: EtlConfig = EtlConfig(), triggerInterval: String = "2 minutes",
       contextDays: Int = 1): StreamingQuery =
-    refine(spark, lakeRoot, catalog, cfg, contextDays,
-      Trigger.ProcessingTime(triggerInterval))
+    LakeTail.start(bronzeStream(spark, lakeRoot), lakeRoot, "silver_refinery",
+      triggerInterval)(refineBatch(spark, lakeRoot, catalog, cfg, contextDays))
 
-  /** One-shot drain (Trigger.AvailableNow) for tests/backfill. Blocks
-    * until the drain completes, as [[GoldRefinery.runOnce]] does:
-    * returning early would leave the query still overwriting silver
-    * partitions under the caller. */
+  /** One-shot drain; blocks until done (see `LakeTail.runOnce`). */
   def runOnce(spark: SparkSession, lakeRoot: String, catalog: DataFrame,
-      cfg: EtlConfig = EtlConfig(), contextDays: Int = 1): Unit = {
-    val q = refine(spark, lakeRoot, catalog, cfg, contextDays,
-      Trigger.AvailableNow())
-    try q.awaitTermination()
-    catch { case e: Throwable => q.stop(); throw e }
-  }
+      cfg: EtlConfig = EtlConfig(), contextDays: Int = 1): Unit =
+    LakeTail.runOnce(bronzeStream(spark, lakeRoot), lakeRoot, "silver_refinery")(
+      refineBatch(spark, lakeRoot, catalog, cfg, contextDays))
 }

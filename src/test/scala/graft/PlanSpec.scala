@@ -1528,14 +1528,16 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.aggregate.SortAggregateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.{col, to_date}
     // the F3 dedup and the rolling windows share one (device_id,
     // timestamp) sort; the sink adds only the date shuffle. A second
     // dedup (or dropDuplicates) would bring back a key shuffle, sorts
     // and sort-based First() aggregates over every column.
     val bronze = Fixtures.bronzeTelemetry(spark, nDevices = 2, rowsPerDevice = 30,
       dirty = true)
-    val df = Lake.silverByDate(
-      BronzeToSilver.run(bronze, Fixtures.deviceCatalog(spark, 2), EtlConfig()))
+    val df = Lake.byDate(
+      BronzeToSilver.run(bronze, Fixtures.deviceCatalog(spark, 2), EtlConfig())
+        .withColumn("date", to_date(col("timestamp"))))
     val p = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     val nodes = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
       case n => n

@@ -140,22 +140,6 @@ class BronzeToSilverSpec extends SparkSpec {
     }
   }
 
-  test("time-based window variant: trailing hour by event time") {
-    val cfgT = EtlConfig(timeBasedWindows = true)
-    val silverT = BronzeToSilver.derivedMetrics(cleaned, cfgT)
-    // fixture emits 1 msg/s for 100 s — every row's trailing hour
-    // covers the whole prefix, so temp_1h_avg = running mean
-    import scala.jdk.CollectionConverters._
-    val rows = silverT.filter(col("device_id") === "device_001")
-      .orderBy("timestamp").select("temperature", "temp_1h_avg")
-      .collectAsList().asScala
-    val temps = rows.map(_.getDouble(0)).toArray
-    rows.zipWithIndex.foreach { case (r, i) =>
-      val expected = temps.take(i + 1).sum / (i + 1)
-      assert(math.abs(r.getDouble(1) - expected) < 1e-9, s"row $i")
-    }
-  }
-
   test("energy_efficiency: energy/power when power>0 else 0") {
     val bad = silver.filter(
       (col("power_usage") > 0 && abs(col("energy_efficiency") -

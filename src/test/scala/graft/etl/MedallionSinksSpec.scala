@@ -1,0 +1,68 @@
+package graft.etl
+
+import java.nio.file.{Files, Paths}
+import java.time.Instant
+
+import scala.jdk.CollectionConverters._
+
+import graft.SparkSpec
+import graft.streaming.{GoldRefinery, SilverRefinery}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** Batch and streaming write each medallion table through the same
+  * `Lake` sink, so mixing the two paths keeps every table readable. */
+class MedallionSinksSpec extends SparkSpec {
+
+  private def multiset(df: DataFrame) =
+    df.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+
+  test("a batch pass between refinery drains keeps every Gold date") {
+    val lake = Files.createTempDirectory("graft-sinks").toString
+    val cfg = EtlConfig(referenceInstant = Some(Instant.parse("2025-07-15T14:00:00Z")))
+    val catalog = Fixtures.deviceCatalog(spark, 3)
+    // one delivery = 3 devices × 60 rows from `start`, appended as the
+    // ingest sink appends
+    def deliver(start: String): Unit =
+      Fixtures.bronzeTelemetry(spark, nDevices = 3, rowsPerDevice = 60,
+          start = Instant.parse(start))
+        .withColumn("date", to_date(try_to_timestamp(col("timestamp"))))
+        .write.partitionBy("date").mode("append")
+        .parquet(Lake.bronzePath(lake))
+
+    Seq("2025-07-13T12:00:00Z", "2025-07-14T12:00:00Z", "2025-07-15T12:00:00Z")
+      .foreach(deliver)
+    SilverRefinery.runOnce(spark, lake, catalog, cfg)
+    GoldRefinery.runOnce(spark, lake, cfg)
+    // the batch pass with EtlRunner's default lookbacks
+    EtlRunner.pass(spark, lake, catalog, cfg, hoursBack = 24, daysBack = 7)
+    deliver("2025-07-15T12:01:00Z")
+    SilverRefinery.runOnce(spark, lake, catalog, cfg)
+    GoldRefinery.runOnce(spark, lake, cfg)
+
+    val silver = spark.read.parquet(Lake.silverPath(lake)).drop("date").cache()
+    val de = SilverToGold.dailyEnergyConsumption(silver, cfg)
+    val dh = SilverToGold.deviceHealthMetrics(silver, cfg)
+    val bs = SilverToGold.dailyBusinessSummary(de, dh, cfg)
+    assert(de.count() == 9, "3 devices × 3 dates")
+    def back(path: String, like: DataFrame) =
+      spark.read.parquet(path).select(like.columns.map(col): _*)
+    assert(multiset(back(Lake.dailyEnergyPath(lake), de)) == multiset(de))
+    assert(multiset(back(Lake.deviceHealthPath(lake), dh)) == multiset(dh))
+    assert(multiset(back(Lake.businessSummaryPath(lake), bs)) == multiset(bs))
+    val _ = silver.unpersist()
+  }
+
+  test("only Lake spells a medallion table's path or a partition overwrite mode") {
+    val sources = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .map(_.toString).filter(_.endsWith(".scala"))
+      .map(f => f -> new String(Files.readAllBytes(Paths.get(f)), "UTF-8"))
+      .toSeq
+    def spelledIn(needle: String) =
+      sources.collect { case (f, t) if t.contains(needle) => f }.sorted
+    val lake = Seq("src/main/scala/graft/etl/Lake.scala")
+    assert(spelledIn("/silver/energy_usage") == lake)
+    assert(spelledIn("/gold/") == lake)
+    assert(spelledIn("partitionOverwriteMode") == lake)
+  }
+}

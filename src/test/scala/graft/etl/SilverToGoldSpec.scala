@@ -80,6 +80,13 @@ class SilverToGoldSpec extends SparkSpec {
     Lake.writeGold(daily, health, summary, root)
     assert(spark.read.parquet(s"$root/gold/daily_energy_consumption")
       .count() == 5)
+    // daily energy is date-partitioned like the refinery writes it:
+    // one date= directory per date, no flat files beside them
+    val dailyDir = new java.io.File(s"$root/gold/daily_energy_consumption")
+    val dateDirs = dailyDir.listFiles().filter(_.isDirectory).map(_.getName).sorted.toSeq
+    assert(dateDirs == daily.select("date").distinct().collect()
+      .map(r => s"date=${r.getDate(0)}").sorted.toSeq)
+    assert(!dailyDir.listFiles().exists(_.getName.endsWith(".parquet")))
   }
 
   test("A8 KPI fallback chain: gold-today, silver-24h, business-summary branches") {
