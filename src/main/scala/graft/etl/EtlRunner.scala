@@ -1,6 +1,6 @@
 package graft.etl
 
-import java.time.Instant
+import java.time.{Instant, LocalDate, ZoneOffset}
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
@@ -10,10 +10,12 @@ import org.apache.spark.sql.functions.{count, lit}
   *
   * Usage:
   *   runMain graft.etl.EtlRunner --lake <dir> [--fixtures]
-  *     [--devices 10] [--rows-per-device 3600]
+  *     [--devices 10] [--rows-per-device 3600] [--catalog-csv <file>]
   *     [--hours-back 24] [--days-back 7] [--at 2025-07-15T06:00:00Z]
+  *     [--interval-seconds 0] [--iterations 1]
   *     [--compact] [--compact-target-mb 128]
   *
+  * Any other argument exits with status 2 and the usage line.
   * `--fixtures` seeds the lake's Bronze layer from the deterministic
   * generator first (demo/CI mode; production Bronze comes from the
   * streaming ingest). One invocation = one full bronze→silver→gold
@@ -22,26 +24,46 @@ import org.apache.spark.sql.functions.{count, lit}
   * scheduler loop, ST7) — every write is idempotent (partition
   * overwrite), so any rerun cadence is safe and reprocessing never
   * duplicates rows (the ST8 fix).
+  *
+  * A pass refreshes through the same `Lake` calls as the refineries.
+  * `--hours-back` selects Silver event dates, from the date that many
+  * hours before the reference instant (`--at`, else now) to the
+  * instant's own date, and each is recomputed whole (a write replaces
+  * whole date partitions). `--days-back` selects the Gold daily-energy
+  * dates (the reference's S8 window). Deviation: the
+  * reference computes device health over the last 7 days of Silver;
+  * here it comes from all of Silver, as in the refineries, and the
+  * business summary from the Gold tables read back.
   */
 object EtlRunner {
+
+  /** Every flag, with its value's name ("" for a bare switch). */
+  private val Flags = Seq("--lake" -> "DIR", "--fixtures" -> "",
+    "--devices" -> "N", "--rows-per-device" -> "N", "--catalog-csv" -> "FILE",
+    "--hours-back" -> "H", "--days-back" -> "D", "--at" -> "INSTANT",
+    "--interval-seconds" -> "S", "--iterations" -> "K",
+    "--compact" -> "", "--compact-target-mb" -> "MB")
+
+  private[etl] val Usage = "usage: runMain graft.etl.EtlRunner " + Flags.map {
+    case (f, "") => s"[$f]"
+    case (f, v) => s"[$f $v]"
+  }.mkString(" ")
+
+  /** Bare switches map to "true", every other flag to the argument
+    * after it; None on an unknown flag, a stray value or a flag
+    * missing its value. */
+  private[etl] def parse(args: Seq[String]): Option[Map[String, String]] =
+    args match {
+      case Seq() => Some(Map.empty)
+      case f +: rest if Flags.contains(f -> "") => parse(rest).map(_ + (f -> "true"))
+      case f +: v +: rest if Flags.exists(_._1 == f) => parse(rest).map(_ + (f -> v))
+      case _ => None
+    }
+
   def main(args: Array[String]): Unit = {
-    // flag-aware parsing: --fixtures takes no value, everything else
-    // is --key value (sliding(2,2) would misalign after a bare flag)
-    val opts = {
-      val m = scala.collection.mutable.Map[String, String]()
-      var i = 0
-      while (i < args.length) {
-        args(i) match {
-          case "--fixtures" => m += "--fixtures" -> "true"; i += 1
-          case "--compact" => m += "--compact" -> "true"; i += 1
-          case k if k.startsWith("--") && i + 1 < args.length =>
-            m += k -> args(i + 1); i += 2
-          case other =>
-            System.err.println(s"[etl] ignoring unrecognized argument: $other")
-            i += 1
-        }
-      }
-      m.toMap
+    val opts = parse(args.toSeq).getOrElse {
+      System.err.println(Usage)
+      sys.exit(2)
     }
     val lake = opts.getOrElse("--lake",
       sys.env.getOrElse("GRAFT_LAKE", "/tmp/graft-lake"))
@@ -51,7 +73,7 @@ object EtlRunner {
     // --at overrides (wall-clock-free by default in demo mode)
     val cfg = EtlConfig(referenceInstant =
       opts.get("--at").map(Instant.parse)
-        .orElse(if (args.contains("--fixtures"))
+        .orElse(if (opts.contains("--fixtures"))
           Some(Fixtures.DefaultStart.plusSeconds(2 * 3600)) else None))
 
     val spark = graft.GraftSession.create()
@@ -98,38 +120,31 @@ object EtlRunner {
     spark.stop()
   }
 
-  /** One bronze→silver→gold pass; returns each layer's row count. The
-    * counts come out of the writes themselves: Bronze rows in and the
-    * Gold rows written are observed as the writes run, and Silver is
-    * counted from the cached read-back that Gold is computed from.
-    * Nothing is scanned or recomputed after the writes. */
+  /** One bronze→silver→gold pass: `Lake.refreshSilver` over the
+    * `hoursBack` dates, then `Lake.refreshGold` over the `daysBack`
+    * dates. Returns each layer's row count, observed as the refreshes
+    * run: the Bronze rows the Silver refresh read (its context day
+    * included) and the rows written to each table. Nothing is scanned
+    * or recomputed after the writes. */
   private[etl] def pass(spark: SparkSession, lake: String, catalog: DataFrame,
       cfg: EtlConfig, hoursBack: Int, daysBack: Int): Seq[(String, Long)] = {
-    def counted(df: DataFrame): (DataFrame, Observation) = {
+    val observed = scala.collection.mutable.Map.empty[String, Observation]
+    val tap: Lake.Tap = (name, df) => {
       val o = Observation()
-      (df.observe(o, count(lit(1)).as("rows")), o)
+      observed(name) = o
+      df.observe(o, count(lit(1)).as("rows"))
     }
-    def rows(o: Observation): Long = o.get("rows").asInstanceOf[Long]
+    def dateOf(t: Instant) = t.atZone(ZoneOffset.UTC).toLocalDate
+    val today = dateOf(cfg.now)
+    def through(from: LocalDate) =
+      Iterator.iterate(from)(_.plusDays(1)).takeWhile(!_.isAfter(today)).toSeq
 
-    val (bronze, bronzeRows) = counted(
-      Lake.readBronze(spark, lake, hoursBack, cfg).drop("date")) // re-derived on write
-    Lake.writeSilver(BronzeToSilver.run(bronze, catalog, cfg), lake)
-
-    val silverBack = Lake.readSilver(spark, lake, daysBack, cfg).cache()
-    val daily = SilverToGold.dailyEnergyConsumption(silverBack, cfg)
-    val health = SilverToGold.deviceHealthMetrics(silverBack, cfg)
-    val (dailyOut, dailyRows) = counted(daily)
-    val (healthOut, healthRows) = counted(health)
-    val (summaryOut, summaryRows) =
-      counted(SilverToGold.dailyBusinessSummary(daily, health, cfg))
-    Lake.writeGold(dailyOut, healthOut, summaryOut, lake)
-    val counts = Seq(
-      "bronze" -> rows(bronzeRows),
-      "silver" -> silverBack.count(), // served by the cache Gold filled
-      "gold_daily_energy" -> rows(dailyRows),
-      "gold_device_health" -> rows(healthRows),
-      "gold_business_summary" -> rows(summaryRows))
-    val _ = silverBack.unpersist()
-    counts
+    val _ = Lake.refreshSilver(spark, lake, catalog, cfg,
+      through(dateOf(cfg.now.minusSeconds(hoursBack * 3600L))), tap)
+    Lake.refreshGold(spark, lake, cfg, through(today.minusDays(daysBack)),
+      Lake.readSilver(spark, lake, daysBack, cfg).schema, tap)
+    Seq("bronze", "silver", "gold_daily_energy", "gold_device_health",
+      "gold_business_summary")
+      .map(k => k -> observed(k).get("rows").asInstanceOf[Long])
   }
 }

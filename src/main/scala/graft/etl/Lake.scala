@@ -1,6 +1,6 @@
 package graft.etl
 
-import java.time.Instant
+import java.time.{Instant, LocalDate}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,6 +16,15 @@ import org.apache.spark.sql.types.StructType
   * summary are `partitionBy("date")` with dynamic partition overwrite
   * (the Bronze ingest stream appends instead); Gold device health is
   * flat and overwritten whole.
+  *
+  * Refresh scope: the batch pass and the refineries recompute Silver
+  * and Gold through [[refreshSilver]] and [[refreshGold]] only, so they
+  * share one policy. The unit of a recompute is a whole event date:
+  * the dynamic overwrite replaces every date a write holds, so a write
+  * must hold all of each date's rows. Silver reads [[ContextDays]] of
+  * Bronze before its dates for frame context; Gold recomputes daily
+  * energy for its dates, device health from all of Silver, and the
+  * business summary from the Gold tables read back.
   *
   * The reference hand-rolls partition pruning by constructing
   * YYYY/MM/DD paths and filtering files by mtime
@@ -91,14 +100,96 @@ object Lake {
     writeBusinessSummary(businessSummary, root)
   }
 
-  private[graft] def writeDailyEnergy(daily: DataFrame, root: String): Unit =
+  private def writeDailyEnergy(daily: DataFrame, root: String): Unit =
     writeByDate(daily, dailyEnergyPath(root))
 
-  private[graft] def writeDeviceHealth(health: DataFrame, root: String): Unit =
+  private def writeDeviceHealth(health: DataFrame, root: String): Unit =
     health.write.mode("overwrite").parquet(deviceHealthPath(root))
 
-  private[graft] def writeBusinessSummary(summary: DataFrame, root: String): Unit =
+  private def writeBusinessSummary(summary: DataFrame, root: String): Unit =
     writeByDate(summary, businessSummaryPath(root))
+
+  /** Days of Bronze a Silver refresh reads before its dates, so that
+    * each rolling window sees its whole frame. Exactness bound: a frame
+    * reaches at most this far back. With the default 60-row frame that
+    * holds whenever a device emits at least 60 rows a day (one a minute
+    * or faster); a sparser device's frames are cut at the context edge.
+    * Past the bound a frame also depends on what else the refresh reads:
+    * a date refreshed together with an older date takes that date's
+    * rows as context, and a later refresh of it alone does not. */
+  private val ContextDays = 1
+
+  /** A refresh hands each frame it reads from Bronze or writes to a
+    * table through a tap, under the batch pass's count names (`bronze`,
+    * `silver`, `gold_daily_energy`, `gold_device_health`,
+    * `gold_business_summary`); the pass counts rows with it. */
+  type Tap = (String, DataFrame) => DataFrame
+  private val untapped: Tap = (_, df) => df
+
+  private def sqlDates(dates: Seq[LocalDate]): Seq[java.sql.Date] =
+    dates.map(java.sql.Date.valueOf)
+
+  /** Recomputes whole Silver event dates from Bronze and returns the
+    * dates it rewrote. A Bronze row for day D also changes the frames of
+    * day D+1..D+[[ContextDays]], so the rewrite set extends forward to
+    * those dates where Bronze already holds them (the `date=` listing
+    * answers that without a job; a directory without rows only widens
+    * the read). The Bronze read adds [[ContextDays]] before each date;
+    * those context rows shape frames only and are not written back. */
+  def refreshSilver(spark: SparkSession, root: String, catalog: DataFrame,
+      cfg: EtlConfig, dates: Seq[LocalDate], tap: Tap = untapped): Seq[LocalDate] = {
+    if (dates.isEmpty) return Seq.empty
+    val forward = dates.flatMap(d => (1 to ContextDays).map(d.plusDays(_))).distinct
+      .diff(dates).intersect(bronzeDates(spark, root))
+    val refreshed = dates ++ forward
+    val context = refreshed.flatMap(d => (0 to ContextDays).map(d.minusDays(_))).distinct
+    val bronze = bronzeScan(spark, root)
+      .filter(col("date").isin(sqlDates(context): _*)) // partition pruning
+      .drop("date")
+    val silver = BronzeToSilver.run(tap("bronze", bronze), catalog, cfg)
+    writeSilver(tap("silver",
+      silver.filter(to_date(col("timestamp")).isin(sqlDates(refreshed): _*))), root)
+    refreshed
+  }
+
+  /** Event dates with a `date=` directory under the Bronze root. */
+  private def bronzeDates(spark: SparkSession, root: String): Seq[LocalDate] = {
+    val dir = new org.apache.hadoop.fs.Path(bronzePath(root))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(dir).toSeq
+      .filter(_.isDirectory).map(_.getPath.getName)
+      .collect { case s"date=$d" => scala.util.Try(LocalDate.parse(d)) }
+      .flatMap(_.toOption)
+  }
+
+  /** Recomputes Gold for Silver event dates: daily energy for `dates`,
+    * device health (a whole-history, per-device metric) from all of
+    * Silver, and the business summary, whose global health means touch
+    * every date's row, from the two Gold tables read back (they are
+    * aggregate-sized). `silverSchema` is Silver's on-disk schema, `date`
+    * included, so no read here infers one; each Gold table is read back
+    * with the schema of the frame that wrote it.
+    *
+    * A Silver file listed here can vanish before it is read while a
+    * concurrent Silver refresh overwrites its date; the reads skip it
+    * (`ignoreMissingFiles`), and the rewrite's new files reach a later
+    * refresh of that date. */
+  def refreshGold(spark: SparkSession, root: String, cfg: EtlConfig,
+      dates: Seq[LocalDate], silverSchema: StructType, tap: Tap = untapped): Unit = {
+    if (dates.isEmpty) return
+    val silver = spark.read.schema(silverSchema)
+      .option("ignoreMissingFiles", "true")
+      .parquet(silverPath(root))
+    val daily = SilverToGold.dailyEnergyConsumption(
+      silver.filter(col("date").isin(sqlDates(dates): _*)).drop("date"), cfg)
+    writeDailyEnergy(tap("gold_daily_energy", daily), root)
+    val health = SilverToGold.deviceHealthMetrics(silver.drop("date"), cfg)
+    writeDeviceHealth(tap("gold_device_health", health), root)
+    writeBusinessSummary(tap("gold_business_summary", SilverToGold.dailyBusinessSummary(
+      spark.read.schema(daily.schema).parquet(dailyEnergyPath(root)),
+      spark.read.schema(health.schema).parquet(deviceHealthPath(root)),
+      cfg)), root)
+  }
 
   /** Bronze on disk: the telemetry columns plus the `date` partition
     * column written by [[writeBronze]]. */

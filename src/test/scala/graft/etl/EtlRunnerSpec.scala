@@ -28,4 +28,15 @@ class EtlRunnerSpec extends SparkSpec {
     assert(byLayer("silver") == 4 * 60 + 3)
     assert(byLayer("gold_device_health") == 5)
   }
+
+  test("the flag parser rejects what it does not know") {
+    assert(EtlRunner.parse(Seq("--fixtures", "--hours-back", "2", "--compact")) ==
+      Some(Map("--fixtures" -> "true", "--hours-back" -> "2", "--compact" -> "true")))
+    assert(EtlRunner.parse(Seq("--hours-bak", "2")).isEmpty, "a misspelt flag")
+    assert(EtlRunner.parse(Seq("--days-back")).isEmpty, "a flag without its value")
+    assert(EtlRunner.parse(Seq("--lake", "/tmp/x", "stray")).isEmpty, "a stray value")
+    Seq("--lake", "--fixtures", "--devices", "--rows-per-device", "--catalog-csv",
+      "--hours-back", "--days-back", "--at", "--interval-seconds", "--iterations",
+      "--compact", "--compact-target-mb").foreach(f => assert(EtlRunner.Usage.contains(f), f))
+  }
 }

@@ -53,6 +53,56 @@ class MedallionSinksSpec extends SparkSpec {
     val _ = silver.unpersist()
   }
 
+  test("a batch pass after refinery drains leaves Silver and Gold as the drains left them") {
+    val lake = Files.createTempDirectory("graft-refresh").toString
+    val cfg = EtlConfig(referenceInstant = Some(Instant.parse("2025-07-15T14:00:00Z")))
+    val catalog = Fixtures.deviceCatalog(spark, 3)
+    // 3 devices × 60 one-second rows per delivery, appended as the
+    // ingest sink appends; the 24 h lookback's cutoff (07-14T14:00)
+    // falls between the 07-14 deliveries
+    def deliverAndDrain(starts: String*): Unit = {
+      starts.foreach { start =>
+        Fixtures.bronzeTelemetry(spark, nDevices = 3, rowsPerDevice = 60,
+            start = Instant.parse(start))
+          .withColumn("date", to_date(try_to_timestamp(col("timestamp"))))
+          .write.partitionBy("date").mode("append")
+          .parquet(Lake.bronzePath(lake))
+      }
+      SilverRefinery.runOnce(spark, lake, catalog, cfg)
+      GoldRefinery.runOnce(spark, lake, cfg)
+    }
+    // 07-05 is drained on its own: drained together with 07-14, it would
+    // be read as frame context of 07-14's first rows, nine days back,
+    // past the one context day a refresh of 07-14 reads (Lake.ContextDays)
+    deliverAndDrain("2025-07-05T12:00:00Z")
+    deliverAndDrain("2025-07-14T12:00:00Z", "2025-07-14T12:01:00Z",
+      "2025-07-14T15:00:00Z")
+
+    // snapshots are collected: a cached frame is re-read once the pass
+    // overwrites its files, and would compare the new data with itself
+    val tables = Seq(Lake.silverPath(lake), Lake.dailyEnergyPath(lake),
+      Lake.deviceHealthPath(lake), Lake.businessSummaryPath(lake))
+    def byName(path: String) = {
+      val df = spark.read.parquet(path)
+      df.select(df.columns.sorted.map(col): _*)
+    }
+    val drained = tables.map(t => t -> multiset(byName(t))).toMap
+    assert(drained(Lake.silverPath(lake)).values.sum == 4 * 3 * 60)
+    EtlRunner.pass(spark, lake, catalog, cfg, hoursBack = 24, daysBack = 7)
+    tables.foreach(t => assert(multiset(byName(t)) == drained(t), t))
+
+    val silver = spark.read.parquet(Lake.silverPath(lake)).drop("date").cache()
+    val de = SilverToGold.dailyEnergyConsumption(silver, cfg)
+    val dh = SilverToGold.deviceHealthMetrics(silver, cfg)
+    val bs = SilverToGold.dailyBusinessSummary(de, dh, cfg)
+    def back(path: String, like: DataFrame) =
+      spark.read.parquet(path).select(like.columns.map(col): _*)
+    assert(multiset(back(Lake.dailyEnergyPath(lake), de)) == multiset(de))
+    assert(multiset(back(Lake.deviceHealthPath(lake), dh)) == multiset(dh))
+    assert(multiset(back(Lake.businessSummaryPath(lake), bs)) == multiset(bs))
+    val _ = silver.unpersist()
+  }
+
   test("only Lake spells a medallion table's path or a partition overwrite mode") {
     val sources = Files.walk(Paths.get("src/main/scala")).iterator().asScala
       .map(_.toString).filter(_.endsWith(".scala"))
@@ -64,5 +114,10 @@ class MedallionSinksSpec extends SparkSpec {
     assert(spelledIn("/silver/energy_usage") == lake)
     assert(spelledIn("/gold/") == lake)
     assert(spelledIn("partitionOverwriteMode") == lake)
+    // and only Lake writes Silver or Gold
+    val sink = ("\\b(writeSilver|writeGold|writeDailyEnergy|writeDeviceHealth|" +
+      "writeBusinessSummary)\\s*\\(").r
+    assert(sources.collect {
+      case (f, t) if sink.findFirstIn(t).isDefined => f }.sorted == lake)
   }
 }
