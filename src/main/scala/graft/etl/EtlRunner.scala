@@ -125,7 +125,7 @@ object EtlRunner {
     * dates. Returns each layer's row count, observed as the refreshes
     * run: the Bronze rows the Silver refresh read (its context day
     * included) and the rows written to each table. Nothing is scanned
-    * or recomputed after the writes. */
+    * or recomputed after the writes. An empty lake gives zero counts. */
   private[etl] def pass(spark: SparkSession, lake: String, catalog: DataFrame,
       cfg: EtlConfig, hoursBack: Int, daysBack: Int): Seq[(String, Long)] = {
     val observed = scala.collection.mutable.Map.empty[String, Observation]
@@ -141,10 +141,11 @@ object EtlRunner {
 
     val _ = Lake.refreshSilver(spark, lake, catalog, cfg,
       through(dateOf(cfg.now.minusSeconds(hoursBack * 3600L))), tap)
-    Lake.refreshGold(spark, lake, cfg, through(today.minusDays(daysBack)),
-      Lake.readSilver(spark, lake, daysBack, cfg).schema, tap)
+    Lake.refreshGold(spark, lake, cfg, through(today.minusDays(daysBack)), tap)
     Seq("bronze", "silver", "gold_daily_energy", "gold_device_health",
       "gold_business_summary")
-      .map(k => k -> observed(k).get("rows").asInstanceOf[Long])
+      // an observation without a value was dropped with the plan part
+      // that AQE proved empty at run time (an empty Bronze read): 0 rows
+      .map(k => k -> observed(k).get.getOrElse("rows", 0L).asInstanceOf[Long])
   }
 }

@@ -1,8 +1,12 @@
 package graft.etl
 
 import java.time.{Instant, LocalDate}
+import java.util.concurrent.{CompletionException, ExecutorService, Executors}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Try
+
+import org.apache.spark.sql.{classic, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -17,14 +21,23 @@ import org.apache.spark.sql.types.StructType
   * (the Bronze ingest stream appends instead); Gold device health is
   * flat and overwritten whole.
   *
+  * Schemas: the refreshes and the refinery streams read Bronze and
+  * Silver with declared schemas ([[BronzeSchema]], [[SilverSchema]]:
+  * the table's columns plus the `date` partition column), so none of
+  * them infers one from file footers. A table nothing has written yet
+  * reads as empty: [[tail]] and [[refreshSilver]] make its directory
+  * first, so a refinery or a pass over an empty lake reads no rows
+  * instead of failing.
+  *
   * Refresh scope: the batch pass and the refineries recompute Silver
   * and Gold through [[refreshSilver]] and [[refreshGold]] only, so they
   * share one policy. The unit of a recompute is a whole event date:
   * the dynamic overwrite replaces every date a write holds, so a write
   * must hold all of each date's rows. Silver reads [[ContextDays]] of
-  * Bronze before its dates for frame context; Gold recomputes daily
-  * energy for its dates, device health from all of Silver, and the
-  * business summary from the Gold tables read back.
+  * Bronze before its dates for frame context. Gold recomputes daily
+  * energy for its dates and device health from all of Silver side by
+  * side (the two writes are independent), then the business summary
+  * from those two tables read back.
   *
   * The reference hand-rolls partition pruning by constructing
   * YYYY/MM/DD paths and filtering files by mtime
@@ -139,6 +152,7 @@ object Lake {
   def refreshSilver(spark: SparkSession, root: String, catalog: DataFrame,
       cfg: EtlConfig, dates: Seq[LocalDate], tap: Tap = untapped): Seq[LocalDate] = {
     if (dates.isEmpty) return Seq.empty
+    makeTableDir(spark, bronzePath(root)) // a lake without Bronze has no rows
     val forward = dates.flatMap(d => (1 to ContextDays).map(d.plusDays(_))).distinct
       .diff(dates).intersect(bronzeDates(spark, root))
     val refreshed = dates ++ forward
@@ -162,39 +176,88 @@ object Lake {
       .flatMap(_.toOption)
   }
 
-  /** Recomputes Gold for Silver event dates: daily energy for `dates`,
-    * device health (a whole-history, per-device metric) from all of
-    * Silver, and the business summary, whose global health means touch
-    * every date's row, from the two Gold tables read back (they are
-    * aggregate-sized). `silverSchema` is Silver's on-disk schema, `date`
-    * included, so no read here infers one; each Gold table is read back
-    * with the schema of the frame that wrote it.
+  /** Recomputes Gold for Silver event dates: daily energy for `dates`
+    * and device health (a whole-history, per-device metric) from all of
+    * Silver, written side by side (see [[sideBySide]]); then the
+    * business summary, whose global health means touch every date's
+    * row, from those two Gold tables read back (they are
+    * aggregate-sized). Each Gold table is read back with the schema of
+    * the frame that wrote it.
     *
     * A Silver file listed here can vanish before it is read while a
     * concurrent Silver refresh overwrites its date; the reads skip it
     * (`ignoreMissingFiles`), and the rewrite's new files reach a later
     * refresh of that date. */
   def refreshGold(spark: SparkSession, root: String, cfg: EtlConfig,
-      dates: Seq[LocalDate], silverSchema: StructType, tap: Tap = untapped): Unit = {
+      dates: Seq[LocalDate], tap: Tap = untapped): Unit = {
     if (dates.isEmpty) return
-    val silver = spark.read.schema(silverSchema)
+    val silver = spark.read.schema(SilverSchema)
       .option("ignoreMissingFiles", "true")
       .parquet(silverPath(root))
-    val daily = SilverToGold.dailyEnergyConsumption(
-      silver.filter(col("date").isin(sqlDates(dates): _*)).drop("date"), cfg)
-    writeDailyEnergy(tap("gold_daily_energy", daily), root)
-    val health = SilverToGold.deviceHealthMetrics(silver.drop("date"), cfg)
-    writeDeviceHealth(tap("gold_device_health", health), root)
+    val daily = tap("gold_daily_energy", SilverToGold.dailyEnergyConsumption(
+      silver.filter(col("date").isin(sqlDates(dates): _*)).drop("date"), cfg))
+    val health = tap("gold_device_health",
+      SilverToGold.deviceHealthMetrics(silver.drop("date"), cfg))
+    sideBySide(spark)(writeDailyEnergy(daily, root), writeDeviceHealth(health, root))
     writeBusinessSummary(tap("gold_business_summary", SilverToGold.dailyBusinessSummary(
       spark.read.schema(daily.schema).parquet(dailyEnergyPath(root)),
       spark.read.schema(health.schema).parquet(deviceHealthPath(root)),
       cfg)), root)
   }
 
+  /** Daemon threads for [[sideBySide]]: they must not keep a JVM alive
+    * after its `main` returns. */
+  private lazy val sideThreads: ExecutorService = Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "lake-side-write")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Runs `here` on this thread and `beside` on a daemon thread at the
+    * same time, and returns or throws only once both have finished;
+    * `here`'s failure wins, with `beside`'s suppressed in it. The
+    * daemon thread carries this thread's Spark thread-locals (local
+    * properties such as the job group and a streaming query's id, the
+    * active session and the artifact state), so its jobs are
+    * attributed, and cancelled with a stopped stream, as this
+    * thread's are. */
+  private def sideBySide(spark: SparkSession)(here: => Unit, beside: => Unit): Unit = {
+    val side = SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[classic.SparkSession], sideThreads)(beside)
+    try here
+    catch { case e: Throwable => Try(side.join()).failed.foreach(e.addSuppressed); throw e }
+    try side.join() catch { case e: CompletionException => throw e.getCause }
+  }
+
   /** Bronze on disk: the telemetry columns plus the `date` partition
     * column written by [[writeBronze]]. */
   private[graft] val BronzeSchema: StructType =
     Schemas.bronzeTelemetry.add("date", "date")
+
+  /** Silver on disk: `BronzeToSilver`'s columns plus the `date`
+    * partition column written by [[writeSilver]]. */
+  private[graft] val SilverSchema: StructType =
+    Schemas.silverEnergyUsage.add("date", "date")
+
+  /** Makes a table's directory if it is missing, so that a scan or a
+    * file stream over a table nothing has written yet sees no rows:
+    * both fail on a missing directory, even with a declared schema. */
+  private def makeTableDir(spark: SparkSession, path: String): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val _ = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(dir)
+  }
+
+  /** The file stream a refinery tails over a table, `date` included:
+    * Bronze's for the Silver refinery, Silver's for the Gold refinery. */
+  private[graft] def tail(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    makeTableDir(spark, path)
+    spark.readStream.schema(schema)
+      .option("ignoreCorruptFiles", "true")
+      // a file a concurrent overwrite (a refresh, a compaction)
+      // deleted after the listing
+      .option("ignoreMissingFiles", "true")
+      .parquet(path)
+  }
 
   /** Every Bronze row, `date` included. */
   private[graft] def bronzeScan(spark: SparkSession, root: String): DataFrame =

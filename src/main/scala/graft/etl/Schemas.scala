@@ -30,6 +30,38 @@ object Schemas {
     StructField("ingestion_time", StringType)
   ))
 
+  /** Silver energy usage: what `BronzeToSilver.run` emits, in its
+    * order — Bronze's columns with a parsed timestamp, then the quality
+    * score, the catalog enrichment, the late-event flag and the rolling
+    * metrics. MedallionSinksSpec checks it against a Silver table read
+    * back. */
+  val silverEnergyUsage: StructType = StructType(Seq(
+    StructField("device_id", StringType),
+    StructField("device_type", StringType),
+    StructField("user_id", StringType),
+    StructField("timestamp", TimestampType),
+    StructField("temperature", DoubleType),
+    StructField("power_usage", DoubleType),
+    StructField("energy_consumption_wh", DoubleType),
+    StructField("status", StringType),
+    StructField("alert", StringType),
+    StructField("location", StringType),
+    StructField("manufacturer", StringType),
+    StructField("model", StringType),
+    StructField("ingestion_time", StringType),
+    StructField("quality_score", DoubleType),
+    StructField("is_valid", BooleanType),
+    StructField("installation_date", DateType),
+    StructField("device_age_days", IntegerType),
+    StructField("processing_delay_hours", DoubleType),
+    StructField("is_late_event", BooleanType),
+    StructField("temp_1h_avg", DoubleType),
+    StructField("power_1h_avg", DoubleType),
+    StructField("energy_efficiency", DoubleType),
+    StructField("has_alert", BooleanType),
+    StructField("alert_frequency_1h", DoubleType)
+  ))
+
   /** Device catalog dimension (config/device_catalog.csv:1-11). */
   val deviceCatalog: StructType = StructType(Seq(
     StructField("device_id", StringType),

@@ -10,32 +10,24 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * scheduler tick (run_etl.py:54,80). Each micro-batch of Silver rows
   * hands the event dates it touched to `Lake.refreshGold`.
   * GoldRefinerySpec asserts the result equals `SilverToGold` over the
-  * same Silver across a micro-batch split, and RefineryStreamsSpec that
-  * [[start]] converges beside `SilverRefinery.start`.
+  * same Silver across a micro-batch split and when the stream starts
+  * before Silver exists, and RefineryStreamsSpec that [[start]]
+  * converges beside `SilverRefinery.start`.
   */
 object GoldRefinery {
 
-  /** The micro-batch's event dates → `Lake.refreshGold`, with the
-    * stream's schema as Silver's. The dates are partition metadata,
-    * bounded by the batch's date span. */
+  /** The micro-batch's event dates, from Silver's `date` partition
+    * column, → `Lake.refreshGold`. The date step is one small job over
+    * the batch (see `LakeTail.dates`: the job is what counts the
+    * stream's input rows, and stays small because it compiles anew
+    * every cycle). */
   private def refineBatch(spark: SparkSession, lakeRoot: String,
-      cfg: EtlConfig)(batch: DataFrame): Unit = {
-    val dates = batch.select(to_date(col("timestamp"))).distinct().collect()
-      .filterNot(_.isNullAt(0)).map(_.getDate(0).toLocalDate).toSeq
-    Lake.refreshGold(spark, lakeRoot, cfg, dates, batch.schema)
-  }
+      cfg: EtlConfig)(batch: DataFrame): Unit =
+    Lake.refreshGold(spark, lakeRoot, cfg, LakeTail.dates(batch, col("date")))
 
-  /** The Silver file stream. Silver's schema is derived (BronzeToSilver
-    * output); a streaming source needs it declared, so it is lifted
-    * from the lake's footers once. */
-  private def silverStream(spark: SparkSession, lakeRoot: String): DataFrame = {
-    val path = Lake.silverPath(lakeRoot)
-    spark.readStream.schema(spark.read.parquet(path).schema)
-      .option("ignoreCorruptFiles", "true")
-      // a file a concurrent Silver refresh deleted after the listing
-      .option("ignoreMissingFiles", "true")
-      .parquet(path)
-  }
+  /** The Silver file stream, with Silver's declared schema. */
+  private def silverStream(spark: SparkSession, lakeRoot: String): DataFrame =
+    Lake.tail(spark, Lake.silverPath(lakeRoot), Lake.SilverSchema)
 
   def start(spark: SparkSession, lakeRoot: String,
       cfg: EtlConfig = EtlConfig(),

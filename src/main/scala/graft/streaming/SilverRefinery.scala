@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.time.LocalDate
+
 import graft.etl.{EtlConfig, Lake}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,29 +14,26 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * micro-batch hands the event dates it touched to `Lake.refreshSilver`.
   * SilverRefinerySpec asserts the result equals `BronzeToSilver` over
   * the same Bronze across batch and midnight boundaries.
-  * `GoldRefinery.start` may tail this sink while it runs.
+  * `GoldRefinery.start` may tail this sink while it runs. The stream
+  * may start before Bronze exists (it sees no files until then).
   */
 object SilverRefinery {
 
-  /** The micro-batch's event dates → `Lake.refreshSilver`. The dates
-    * are partition metadata, bounded by the batch's date span; an
+  /** The micro-batch's event dates, in one small job over the batch
+    * (see `LakeTail.dates`: the job is what counts the stream's input
+    * rows, and stays small because it compiles anew every cycle). An
     * unparseable timestamp has no date and refreshes none. */
+  private[streaming] def batchDates(batch: DataFrame): Seq[LocalDate] =
+    LakeTail.dates(batch, to_date(try_to_timestamp(col("timestamp"))))
+
   private def refineBatch(spark: SparkSession, lakeRoot: String,
       catalog: DataFrame, cfg: EtlConfig)(batch: DataFrame): Unit = {
-    val dates = batch
-      .select(to_date(try_to_timestamp(col("timestamp"))).as("d"))
-      .filter(col("d").isNotNull).distinct()
-      .collect().map(_.getDate(0).toLocalDate).toSeq
-    val _ = Lake.refreshSilver(spark, lakeRoot, catalog, cfg, dates)
+    val _ = Lake.refreshSilver(spark, lakeRoot, catalog, cfg, batchDates(batch))
   }
 
   /** The Bronze file stream; `date` is re-derived by the Silver sink. */
   private def bronzeStream(spark: SparkSession, lakeRoot: String): DataFrame =
-    spark.readStream
-      .schema(Lake.BronzeSchema)
-      .option("ignoreCorruptFiles", "true")
-      .parquet(Lake.bronzePath(lakeRoot))
-      .drop("date")
+    Lake.tail(spark, Lake.bronzePath(lakeRoot), Lake.BronzeSchema).drop("date")
 
   def start(spark: SparkSession, lakeRoot: String, catalog: DataFrame,
       cfg: EtlConfig = EtlConfig(), triggerInterval: String = "2 minutes"): StreamingQuery =

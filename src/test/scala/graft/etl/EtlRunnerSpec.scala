@@ -29,6 +29,16 @@ class EtlRunnerSpec extends SparkSpec {
     assert(byLayer("gold_device_health") == 5)
   }
 
+  test("a pass over an empty lake counts nothing") {
+    val lake = java.nio.file.Files.createTempDirectory("graft-etl-empty").toString
+    val cfg = EtlConfig(
+      referenceInstant = Some(Fixtures.DefaultStart.plusSeconds(2 * 3600)))
+    val counts = EtlRunner.pass(spark, lake, Fixtures.deviceCatalog(spark, 4), cfg,
+      hoursBack = 24, daysBack = 7)
+    assert(counts == Seq("bronze" -> 0L, "silver" -> 0L, "gold_daily_energy" -> 0L,
+      "gold_device_health" -> 0L, "gold_business_summary" -> 0L))
+  }
+
   test("the flag parser rejects what it does not know") {
     assert(EtlRunner.parse(Seq("--fixtures", "--hours-back", "2", "--compact")) ==
       Some(Map("--fixtures" -> "true", "--hours-back" -> "2", "--compact" -> "true")))

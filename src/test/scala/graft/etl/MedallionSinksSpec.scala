@@ -17,6 +17,21 @@ class MedallionSinksSpec extends SparkSpec {
   private def multiset(df: DataFrame) =
     df.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
 
+  test("Silver's declared schema is the schema its table reads back with") {
+    val lake = Files.createTempDirectory("graft-silver-schema").toString
+    val cfg = EtlConfig(
+      referenceInstant = Some(Fixtures.DefaultStart.plusSeconds(2 * 3600)))
+    Lake.writeBronze(Fixtures.bronzeTelemetry(spark, nDevices = 4, rowsPerDevice = 30,
+      dirty = true), lake)
+    val refreshed = Lake.refreshSilver(spark, lake, Fixtures.deviceCatalog(spark, 4), cfg,
+      Seq(java.time.LocalDate.parse("2025-07-15")))
+    assert(refreshed.nonEmpty)
+    // names, order and types; a file source reads every column nullable
+    def shape(s: org.apache.spark.sql.types.StructType) =
+      s.fields.toSeq.map(f => f.name -> f.dataType)
+    assert(shape(spark.read.parquet(Lake.silverPath(lake)).schema) == shape(Lake.SilverSchema))
+  }
+
   test("a batch pass between refinery drains keeps every Gold date") {
     val lake = Files.createTempDirectory("graft-sinks").toString
     val cfg = EtlConfig(referenceInstant = Some(Instant.parse("2025-07-15T14:00:00Z")))

@@ -86,4 +86,82 @@ class GoldRefinerySpec extends SparkSpec {
     val expect = SilverToGold.deviceHealthMetrics(silver, cfg)
     assert(multiset(dh.select(expect.columns.map(col): _*)) == multiset(expect))
   }
+
+  test("a drain's progress counts the Silver rows it was delivered") {
+    val lake = java.nio.file.Files.createTempDirectory("graft-goldref-progress").toString
+    val start = java.time.Instant.parse("2025-07-15T23:59:00Z")
+    val cfg = EtlConfig(referenceInstant = Some(start.plusSeconds(2 * 3600)))
+    val full = Fixtures.bronzeTelemetry(spark, nDevices = 3,
+      rowsPerDevice = 120, start = start).cache()
+    val splitTs = start.plusSeconds(90).toString
+    def silverOf(bronze: org.apache.spark.sql.DataFrame) =
+      BronzeToSilver.run(bronze, Fixtures.deviceCatalog(spark, 3), cfg)
+    val checkpoint = Lake.checkpointPath(lake, "gold_refinery")
+    // every job of a drain, the side-by-side write's included, carries
+    // the query's id and the run's job group, by which a listener
+    // attributes it to the stream
+    def drain(): Long = {
+      val run = footprint(streamInputRows(checkpoint)(GoldRefinery.runOnce(spark, lake, cfg)))
+      def tags(key: String) = run.jobs.map(j => Option(j.properties.getProperty(key))).distinct
+      assert(run.jobs.nonEmpty)
+      assert(tags("sql.streaming.queryId") == Seq(Some(checkpointQueryId(checkpoint))))
+      assert(tags("spark.jobGroup.id").size == 1 && tags("spark.jobGroup.id").head.nonEmpty)
+      run.result
+    }
+    Lake.writeSilver(silverOf(full.filter(col("timestamp") < lit(splitTs))), lake)
+    assert(drain() == 3 * 90)
+    silverOf(full.filter(col("timestamp") >= lit(splitTs)))
+      .withColumn("date", to_date(col("timestamp")))
+      .write.partitionBy("date").mode("append")
+      .parquet(Lake.silverPath(lake))
+    assert(drain() == 3 * 30)
+  }
+
+  test("the refineries can start on an empty lake, before Bronze and Silver exist") {
+    val lake = java.nio.file.Files.createTempDirectory("graft-goldref-empty").toString
+    val start = java.time.Instant.parse("2025-07-15T23:59:00Z")
+    val cfg = EtlConfig(referenceInstant = Some(start.plusSeconds(2 * 3600)))
+    val catalog = Fixtures.deviceCatalog(spark, 3)
+    GoldRefinery.runOnce(spark, lake, cfg)
+    SilverRefinery.runOnce(spark, lake, catalog, cfg)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(lake, "gold")), "no Gold written")
+
+    Lake.writeBronze(Fixtures.bronzeTelemetry(spark, nDevices = 3,
+      rowsPerDevice = 120, start = start), lake)
+    SilverRefinery.runOnce(spark, lake, catalog, cfg)
+    GoldRefinery.runOnce(spark, lake, cfg)
+
+    val silver = spark.read.parquet(Lake.silverPath(lake)).drop("date").cache()
+    assert(silver.count() == 3 * 120)
+    val de = SilverToGold.dailyEnergyConsumption(silver, cfg)
+    val dh = SilverToGold.deviceHealthMetrics(silver, cfg)
+    val bs = SilverToGold.dailyBusinessSummary(de, dh, cfg)
+    def back(path: String, like: org.apache.spark.sql.DataFrame) =
+      spark.read.parquet(path).select(like.columns.map(col): _*)
+    assert(multiset(back(Lake.dailyEnergyPath(lake), de)) == multiset(de))
+    assert(multiset(back(Lake.deviceHealthPath(lake), dh)) == multiset(dh))
+    assert(multiset(back(Lake.businessSummaryPath(lake), bs)) == multiset(bs))
+    val _ = silver.unpersist()
+  }
+
+  test("a Gold refresh throws a failed write only after both side-by-side writes end") {
+    val lake = java.nio.file.Files.createTempDirectory("graft-goldref-fail").toString
+    val start = java.time.Instant.parse("2025-07-20T10:00:00Z")
+    val cfg = EtlConfig(referenceInstant = Some(start.plusSeconds(2 * 3600)))
+    Lake.writeSilver(BronzeToSilver.run(Fixtures.bronzeTelemetry(spark, nDevices = 3,
+      rowsPerDevice = 60, start = start), Fixtures.deviceCatalog(spark, 3), cfg), lake)
+    // device health, the write beside the calling thread's, fails as it runs
+    val failHealth: Lake.Tap = (name, df) =>
+      if (name == "gold_device_health")
+        df.filter(assert_true(lit(false), lit("health write failed")).isNull)
+      else df
+    val e = intercept[Exception](Lake.refreshGold(spark, lake, cfg,
+      Seq(java.time.LocalDate.parse("2025-07-20")), failHealth))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("health write failed")), e)
+    drainListeners()
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assert(spark.read.parquet(Lake.dailyEnergyPath(lake)).count() == 3,
+      "daily energy, written on the calling thread, finished")
+  }
 }

@@ -32,7 +32,8 @@ class RefineryStreamsSpec extends SparkSpec {
     val silver = SilverRefinery.start(spark, lake, catalog, cfg,
       triggerInterval = "100 milliseconds")
     try {
-      // Silver must exist before Gold's stream can take its schema
+      // the first delivery reaches Silver before Gold starts (Gold can
+      // also start on a lake without Silver: GoldRefinerySpec)
       silver.processAllAvailable()
       val gold = GoldRefinery.start(spark, lake, cfg,
         triggerInterval = "100 milliseconds")

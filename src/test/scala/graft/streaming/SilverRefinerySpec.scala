@@ -1,10 +1,49 @@
 package graft.streaming
 
+import java.time.LocalDate
+
 import graft.SparkSpec
 import graft.etl.{BronzeToSilver, EtlConfig, Fixtures, Lake}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 class SilverRefinerySpec extends SparkSpec {
+
+  // first in the suite, so that its compiles are counted against a
+  // cold code cache
+  test("the date step is one shuffle-free job that skips rows without a date") {
+    val ts = Seq("2025-07-15T23:59:30Z", null, "2025-07-16T00:00:10Z",
+      "not-a-time", "2025-07-15T23:00:00Z", "2025-07-16T00:30:00Z")
+    val batch = spark.createDataFrame(spark.sparkContext.parallelize(ts.map(Row(_)), 3),
+      StructType(Seq(StructField("timestamp", StringType))))
+    val step = footprint(SilverRefinery.batchDates(batch))
+    assert(step.result == Seq(LocalDate.parse("2025-07-15"), LocalDate.parse("2025-07-16")))
+    assert(step.jobs.size == 1, step.jobs.map(_.jobId))
+    // an Exchange in its plan would add a stage to the job
+    assert(step.jobs.head.stageInfos.size == 1, step.jobs.head.stageInfos.map(_.name))
+    assert(step.compiles <= 3, s"${step.compiles} generated classes compiled")
+  }
+
+  test("a drain's progress counts the Bronze rows it was delivered") {
+    val lake = java.nio.file.Files.createTempDirectory("graft-refinery-progress").toString
+    val cfg = EtlConfig(
+      referenceInstant = Some(Fixtures.DefaultStart.plusSeconds(2 * 3600)))
+    val catalog = Fixtures.deviceCatalog(spark, 3)
+    val checkpoint = Lake.checkpointPath(lake, "silver_refinery")
+    // dirty rows included: an unparseable timestamp is still an input row
+    val first = Fixtures.bronzeTelemetry(spark, nDevices = 3, rowsPerDevice = 50, dirty = true)
+    Lake.writeBronze(first, lake)
+    assert(streamInputRows(checkpoint)(
+      SilverRefinery.runOnce(spark, lake, catalog, cfg)) == first.count())
+    val second = Fixtures.bronzeTelemetry(spark, nDevices = 3, rowsPerDevice = 20,
+      start = Fixtures.DefaultStart.plusSeconds(600))
+    second.withColumn("date", to_date(try_to_timestamp(col("timestamp"))))
+      .write.partitionBy("date").mode("append")
+      .parquet(Lake.bronzePath(lake))
+    assert(streamInputRows(checkpoint)(
+      SilverRefinery.runOnce(spark, lake, catalog, cfg)) == 3 * 20)
+  }
 
   test("file-source stream refines new bronze into silver exactly once") {
     val lake = java.nio.file.Files.createTempDirectory("graft-refinery").toString
