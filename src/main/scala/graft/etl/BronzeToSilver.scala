@@ -10,15 +10,15 @@ import org.apache.spark.sql.functions._
   * as pure DataFrame transforms. Each stage is a standalone function
   * (unit-testable without files); `run` composes them in reference
   * order. The plan has one shuffle, by device_id, and one
-  * (device_id, timestamp) sort: the F3 dedup is a `lag(timestamp)`
-  * window over that sort, and the 60-row rolling windows reuse it.
-  * Catalyst fuses the filter/projection stages between them into
-  * whole-stage-codegen regions; no aggregate runs. At 100 TB the
-  * shuffle is keyed on device_id (high cardinality in a real fleet, so
-  * it parallelizes; per-device data streams through the 60-row frame
-  * without materializing the partition). Rows leave unique per
-  * (device_id, timestamp), which is what lets `Lake.writeSilver` write
-  * them without a second dedup.
+  * (device_id, event date, timestamp) sort: the F3 dedup is a
+  * `lag(timestamp)` window over that sort, and the 60-row rolling
+  * windows reuse it. Catalyst fuses the filter/projection stages
+  * between them into whole-stage-codegen regions; no aggregate runs.
+  * At 100 TB the shuffle is keyed on device_id (high cardinality in a
+  * real fleet, so it parallelizes; per-device data streams through the
+  * 60-row frame without materializing the partition). Rows leave
+  * unique per (device_id, timestamp), which is what lets
+  * `Lake.writeSilver` write them without a second dedup.
   *
   * Rounding note: pandas `.round()` is numpy half-even on the binary
   * double; Spark's `bround` matches that mode, so derived formulas
@@ -38,23 +38,30 @@ object BronzeToSilver {
     screen(dedupByKey(parsed), cfg)
   }
 
+  /** The UTC event date both windows partition by, with device_id: added
+    * before the device shuffle by [[dedupByKey]], dropped by
+    * [[derivedMetrics]]. One column, not `to_date` in each window spec,
+    * lets the two windows share one sort. */
+  private val Day = "__day"
+  private val byDeviceDay =
+    Window.partitionBy(col("device_id"), col(Day)).orderBy(col("timestamp"))
+
   /** F3: one row per (device_id, timestamp), the first of each run of
-    * equal timestamps in a device's sorted rows. Rows with a null key
-    * are dropped up front, as F4 would drop them anyway. The window's
-    * (device_id, timestamp) sort is the one [[derivedMetrics]] needs,
-    * so the two share it; `dropDuplicates` would add a shuffle by the
-    * full key, a sort and a sort-based aggregate over every column.
-    * The shuffle count is the session's `spark.sql.shuffle.partitions`:
-    * an explicit count keeps AQE from coalescing the device shuffle
-    * into one task. */
+    * equal timestamps in a device's sorted rows (equal timestamps share
+    * a date). Rows with a null key are dropped up front, as F4 would
+    * drop them anyway. The window's sort is the one [[derivedMetrics]]
+    * needs, so the two share it; `dropDuplicates` would add a shuffle
+    * by the full key, a sort and a sort-based aggregate over every
+    * column. The shuffle count is the session's
+    * `spark.sql.shuffle.partitions`: an explicit count keeps AQE from
+    * coalescing the device shuffle into one task. */
   private[etl] def dedupByKey(parsed: DataFrame): DataFrame = {
     val n = parsed.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val prev = lag(col("timestamp"), 1)
-      .over(Window.partitionBy(col("device_id")).orderBy(col("timestamp")))
     parsed
       .filter(col("device_id").isNotNull && col("timestamp").isNotNull)
+      .withColumn(Day, to_date(col("timestamp")))
       .repartition(n, col("device_id"))
-      .withColumn("__prev_ts", prev)
+      .withColumn("__prev_ts", lag(col("timestamp"), 1).over(byDeviceDay))
       .filter(col("__prev_ts").isNull || col("__prev_ts") =!= col("timestamp"))
       .drop("__prev_ts")
   }
@@ -130,11 +137,18 @@ object BronzeToSilver {
     * mean/sum (min_periods=1 ≡ rowsBetween(-59, 0)), energy
     * efficiency, alert flags. The "_1h_" names are the reference's; its
     * 60-ROW frame only spans an hour at exactly 1 msg/min (SURVEY
-    * §7.5.3). */
+    * §7.5.3).
+    *
+    * Deviation: frames restart at each UTC event date, so a Silver
+    * date is a function of that date's Bronze rows alone. The
+    * reference's frames stop wherever its 2-minute rerun's 2 h read
+    * window starts (SURVEY ST7). A frame that skipped [[dedupByKey]]
+    * gets the date column here. */
   def derivedMetrics(df: DataFrame, cfg: EtlConfig = EtlConfig()): DataFrame = {
-    val w = Window.partitionBy(col("device_id")).orderBy(col("timestamp"))
-      .rowsBetween(-(cfg.rollingWindowRows - 1), 0)
-    df.withColumn("temp_1h_avg", avg(col("temperature")).over(w))
+    val w = byDeviceDay.rowsBetween(-(cfg.rollingWindowRows - 1), 0)
+    val dated = if (df.columns.contains(Day)) df
+      else df.withColumn(Day, to_date(col("timestamp")))
+    dated.withColumn("temp_1h_avg", avg(col("temperature")).over(w))
       .withColumn("power_1h_avg", avg(col("power_usage")).over(w))
       .withColumn("energy_efficiency",
         when(col("power_usage") > 0,
@@ -142,6 +156,7 @@ object BronzeToSilver {
       .withColumn("has_alert", col("alert") =!= "none")
       .withColumn("alert_frequency_1h",
         sum(col("has_alert").cast("double")).over(w))
+      .drop(Day)
   }
 
   /** Full Bronze→Silver refinement (process_bronze_to_silver stages

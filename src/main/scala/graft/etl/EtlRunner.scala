@@ -2,6 +2,8 @@ package graft.etl
 
 import java.time.{Instant, LocalDate, ZoneOffset}
 
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
@@ -15,7 +17,8 @@ import org.apache.spark.sql.functions.{count, lit}
   *     [--interval-seconds 0] [--iterations 1]
   *     [--compact] [--compact-target-mb 128]
   *
-  * Any other argument exits with status 2 and the usage line.
+  * Any other argument, or a value that does not convert, exits with
+  * status 2 and the usage line.
   * `--fixtures` seeds the lake's Bronze layer from the deterministic
   * generator first (demo/CI mode; production Bronze comes from the
   * streaming ingest). One invocation = one full bronze→silver→gold
@@ -60,62 +63,68 @@ object EtlRunner {
       case _ => None
     }
 
+  /** A run's settings: every flag's value, converted. */
+  private[etl] final case class Options(lake: String, fixtures: Option[(Int, Int)],
+      catalogCsv: Option[String], hoursBack: Int, daysBack: Int, cfg: EtlConfig,
+      intervalSeconds: Long, iterations: Int, compactTargetMb: Option[Long])
+
+  /** The one place flag values are converted; None where [[parse]]
+    * rejects the arguments or a value does not convert (`--hours-back x`,
+    * `--at nope`). */
+  private[etl] def options(args: Seq[String]): Option[Options] = parse(args).flatMap { o =>
+    def int(flag: String, default: Int) = o.get(flag).fold(default)(_.toInt)
+    Try(Options(
+      lake = o.getOrElse("--lake", sys.env.getOrElse("GRAFT_LAKE", "/tmp/graft-lake")),
+      fixtures = Option.when(o.contains("--fixtures"))(
+        (int("--devices", 10), int("--rows-per-device", 3600))),
+      catalogCsv = o.get("--catalog-csv"),
+      hoursBack = int("--hours-back", 24),
+      daysBack = int("--days-back", 7),
+      // fixtures are pinned at 2025-07-15; anchor lookbacks there unless
+      // --at overrides (wall-clock-free by default in demo mode)
+      cfg = EtlConfig(referenceInstant = o.get("--at").map(Instant.parse)
+        .orElse(Option.when(o.contains("--fixtures"))(
+          Fixtures.DefaultStart.plusSeconds(2 * 3600)))),
+      intervalSeconds = o.get("--interval-seconds").fold(0L)(_.toLong),
+      iterations = int("--iterations", 1),
+      compactTargetMb = Option.when(o.contains("--compact"))(
+        o.get("--compact-target-mb").fold(128L)(_.toLong)))).toOption
+  }
+
   def main(args: Array[String]): Unit = {
-    val opts = parse(args.toSeq).getOrElse {
+    val o = options(args.toSeq).getOrElse {
       System.err.println(Usage)
       sys.exit(2)
     }
-    val lake = opts.getOrElse("--lake",
-      sys.env.getOrElse("GRAFT_LAKE", "/tmp/graft-lake"))
-    val hoursBack = opts.getOrElse("--hours-back", "24").toInt
-    val daysBack = opts.getOrElse("--days-back", "7").toInt
-    // fixtures are pinned at 2025-07-15; anchor lookbacks there unless
-    // --at overrides (wall-clock-free by default in demo mode)
-    val cfg = EtlConfig(referenceInstant =
-      opts.get("--at").map(Instant.parse)
-        .orElse(if (opts.contains("--fixtures"))
-          Some(Fixtures.DefaultStart.plusSeconds(2 * 3600)) else None))
-
     val spark = graft.GraftSession.create()
-
-    if (opts.contains("--fixtures")) {
-      val nDevices = opts.getOrElse("--devices", "10").toInt
-      val rowsPerDevice = opts.getOrElse("--rows-per-device", "3600").toInt
+    o.fixtures.foreach { case (nDevices, rowsPerDevice) =>
       Lake.writeBronze(
         Fixtures.bronzeTelemetry(spark, nDevices = nDevices,
-          rowsPerDevice = rowsPerDevice, dirty = true), lake)
-      println(s"[etl] seeded fixture bronze at $lake " +
+          rowsPerDevice = rowsPerDevice, dirty = true), o.lake)
+      println(s"[etl] seeded fixture bronze at ${o.lake} " +
         s"($nDevices devices × $rowsPerDevice rows)")
     }
 
-    val catalog = opts.get("--catalog-csv")
-      .map(Lake.readDeviceCatalog(spark, _))
+    val catalog = o.catalogCsv.map(Lake.readDeviceCatalog(spark, _))
       .getOrElse(Fixtures.deviceCatalog(spark))
 
-    def onePass(): Unit = {
-      val counts = pass(spark, lake, catalog, cfg, hoursBack, daysBack)
+    for (it <- 1 to o.iterations) {
+      val counts = pass(spark, o.lake, catalog, o.cfg, o.hoursBack, o.daysBack)
       println("[etl] " + counts.map { case (k, v) => s"$k=$v" }.mkString(" "))
-    }
-
-    val iterations = opts.getOrElse("--iterations", "1").toInt
-    val intervalS = opts.getOrElse("--interval-seconds", "0").toLong
-    for (it <- 1 to iterations) {
-      onePass()
-      if (it < iterations && intervalS > 0) Thread.sleep(intervalS * 1000)
+      if (it < o.iterations && o.intervalSeconds > 0) Thread.sleep(o.intervalSeconds * 1000)
     }
     // optional lake maintenance after the passes: rewrite small-file
     // residue in the partitioned sinks (micro-batch ingest accretes
     // it; the scheduler would run this on a slower cadence)
-    if (opts.contains("--compact")) {
-      val target = opts.getOrElse("--compact-target-mb", "128").toLong << 20
-      Seq(Lake.bronzePath(lake), Lake.silverPath(lake),
-        Lake.businessSummaryPath(lake))
+    o.compactTargetMb.foreach { mb =>
+      Seq(Lake.bronzePath(o.lake), Lake.silverPath(o.lake),
+        Lake.businessSummaryPath(o.lake))
         // skipHotPartitions = 1: micro-batch ingest actively appends
         // to the newest date partition; compacting it here would race
         // the writer (see Lake.compact's concurrency contract)
-        .foreach(Lake.compact(spark, _, targetBytes = target,
+        .foreach(Lake.compact(spark, _, targetBytes = mb << 20,
           skipHotPartitions = 1))
-      println(s"[etl] compacted partitioned sinks (target ${target >> 20} MB)")
+      println(s"[etl] compacted partitioned sinks (target $mb MB)")
     }
     spark.stop()
   }
@@ -123,9 +132,9 @@ object EtlRunner {
   /** One bronze→silver→gold pass: `Lake.refreshSilver` over the
     * `hoursBack` dates, then `Lake.refreshGold` over the `daysBack`
     * dates. Returns each layer's row count, observed as the refreshes
-    * run: the Bronze rows the Silver refresh read (its context day
-    * included) and the rows written to each table. Nothing is scanned
-    * or recomputed after the writes. An empty lake gives zero counts. */
+    * run: the Bronze rows of the refreshed Silver dates and the rows
+    * written to each table. Nothing is scanned or recomputed after the
+    * writes. An empty lake gives zero counts. */
   private[etl] def pass(spark: SparkSession, lake: String, catalog: DataFrame,
       cfg: EtlConfig, hoursBack: Int, daysBack: Int): Seq[(String, Long)] = {
     val observed = scala.collection.mutable.Map.empty[String, Observation]
@@ -139,7 +148,7 @@ object EtlRunner {
     def through(from: LocalDate) =
       Iterator.iterate(from)(_.plusDays(1)).takeWhile(!_.isAfter(today)).toSeq
 
-    val _ = Lake.refreshSilver(spark, lake, catalog, cfg,
+    Lake.refreshSilver(spark, lake, catalog, cfg,
       through(dateOf(cfg.now.minusSeconds(hoursBack * 3600L))), tap)
     Lake.refreshGold(spark, lake, cfg, through(today.minusDays(daysBack)), tap)
     Seq("bronze", "silver", "gold_daily_energy", "gold_device_health",

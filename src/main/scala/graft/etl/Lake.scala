@@ -21,20 +21,23 @@ import org.apache.spark.sql.types.StructType
   * (the Bronze ingest stream appends instead); Gold device health is
   * flat and overwritten whole.
   *
-  * Schemas: the refreshes and the refinery streams read Bronze and
-  * Silver with declared schemas ([[BronzeSchema]], [[SilverSchema]]:
-  * the table's columns plus the `date` partition column), so none of
-  * them infers one from file footers. A table nothing has written yet
-  * reads as empty: [[tail]] and [[refreshSilver]] make its directory
-  * first, so a refinery or a pass over an empty lake reads no rows
-  * instead of failing.
+  * Schemas: the refreshes, [[readSilver]] and the refinery streams
+  * read Bronze and Silver with declared schemas ([[BronzeSchema]],
+  * [[SilverSchema]]: the table's columns plus the `date` partition
+  * column), so none of them infers one from file footers. A table
+  * nothing has written yet reads as empty: [[tail]], [[readSilver]]
+  * and [[refreshSilver]] make its directory first, so a refinery, a
+  * pass or a Silver scan over an empty lake reads no rows instead of
+  * failing.
   *
   * Refresh scope: the batch pass and the refineries recompute Silver
   * and Gold through [[refreshSilver]] and [[refreshGold]] only, so they
   * share one policy. The unit of a recompute is a whole event date:
   * the dynamic overwrite replaces every date a write holds, so a write
-  * must hold all of each date's rows. Silver reads [[ContextDays]] of
-  * Bronze before its dates for frame context. Gold recomputes daily
+  * must hold all of each date's rows. A Silver date is recomputed from
+  * that date's Bronze rows alone, as its rolling frames restart at each
+  * event date (`BronzeToSilver.derivedMetrics`), so it comes out the
+  * same whichever other dates a refresh holds. Gold recomputes daily
   * energy for its dates and device health from all of Silver side by
   * side (the two writes are independent), then the business summary
   * from those two tables read back.
@@ -97,7 +100,8 @@ object Lake {
       cfg: EtlConfig = EtlConfig()): DataFrame = {
     val cutoff = java.sql.Date.valueOf(
       cfg.now.atZone(java.time.ZoneOffset.UTC).toLocalDate.minusDays(daysBack))
-    spark.read
+    makeTableDir(spark, silverPath(root))
+    spark.read.schema(SilverSchema)
       // S6 semantics: skip corrupt files with a warning instead of
       // failing the job (bronze_to_silver.py:96-101)
       .option("ignoreCorruptFiles", "true")
@@ -122,16 +126,6 @@ object Lake {
   private def writeBusinessSummary(summary: DataFrame, root: String): Unit =
     writeByDate(summary, businessSummaryPath(root))
 
-  /** Days of Bronze a Silver refresh reads before its dates, so that
-    * each rolling window sees its whole frame. Exactness bound: a frame
-    * reaches at most this far back. With the default 60-row frame that
-    * holds whenever a device emits at least 60 rows a day (one a minute
-    * or faster); a sparser device's frames are cut at the context edge.
-    * Past the bound a frame also depends on what else the refresh reads:
-    * a date refreshed together with an older date takes that date's
-    * rows as context, and a later refresh of it alone does not. */
-  private val ContextDays = 1
-
   /** A refresh hands each frame it reads from Bronze or writes to a
     * table through a tap, under the batch pass's count names (`bronze`,
     * `silver`, `gold_daily_energy`, `gold_device_health`,
@@ -142,38 +136,20 @@ object Lake {
   private def sqlDates(dates: Seq[LocalDate]): Seq[java.sql.Date] =
     dates.map(java.sql.Date.valueOf)
 
-  /** Recomputes whole Silver event dates from Bronze and returns the
-    * dates it rewrote. A Bronze row for day D also changes the frames of
-    * day D+1..D+[[ContextDays]], so the rewrite set extends forward to
-    * those dates where Bronze already holds them (the `date=` listing
-    * answers that without a job; a directory without rows only widens
-    * the read). The Bronze read adds [[ContextDays]] before each date;
-    * those context rows shape frames only and are not written back. */
+  /** Recomputes whole Silver event dates from those dates' Bronze rows;
+    * a Silver date depends on no other date. The write keeps only rows
+    * whose event date is in `dates`: the dynamic overwrite replaces
+    * every date a write holds, so it must hold all of each. */
   def refreshSilver(spark: SparkSession, root: String, catalog: DataFrame,
-      cfg: EtlConfig, dates: Seq[LocalDate], tap: Tap = untapped): Seq[LocalDate] = {
-    if (dates.isEmpty) return Seq.empty
+      cfg: EtlConfig, dates: Seq[LocalDate], tap: Tap = untapped): Unit = {
+    if (dates.isEmpty) return
     makeTableDir(spark, bronzePath(root)) // a lake without Bronze has no rows
-    val forward = dates.flatMap(d => (1 to ContextDays).map(d.plusDays(_))).distinct
-      .diff(dates).intersect(bronzeDates(spark, root))
-    val refreshed = dates ++ forward
-    val context = refreshed.flatMap(d => (0 to ContextDays).map(d.minusDays(_))).distinct
     val bronze = bronzeScan(spark, root)
-      .filter(col("date").isin(sqlDates(context): _*)) // partition pruning
+      .filter(col("date").isin(sqlDates(dates): _*)) // partition pruning
       .drop("date")
     val silver = BronzeToSilver.run(tap("bronze", bronze), catalog, cfg)
     writeSilver(tap("silver",
-      silver.filter(to_date(col("timestamp")).isin(sqlDates(refreshed): _*))), root)
-    refreshed
-  }
-
-  /** Event dates with a `date=` directory under the Bronze root. */
-  private def bronzeDates(spark: SparkSession, root: String): Seq[LocalDate] = {
-    val dir = new org.apache.hadoop.fs.Path(bronzePath(root))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(dir).toSeq
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .collect { case s"date=$d" => scala.util.Try(LocalDate.parse(d)) }
-      .flatMap(_.toOption)
+      silver.filter(to_date(col("timestamp")).isin(sqlDates(dates): _*))), root)
   }
 
   /** Recomputes Gold for Silver event dates: daily energy for `dates`

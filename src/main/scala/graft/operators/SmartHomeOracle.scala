@@ -132,7 +132,7 @@ object SmartHomeOracle {
        |         ELSE 0.0::DOUBLE END AS energy_efficiency,
        |    sum(${boolDouble("alert <> 'none'")}) OVER w AS alert_frequency_1h
        |  FROM enr
-       |  WINDOW w AS (PARTITION BY device_id ORDER BY ts
+       |  WINDOW w AS (PARTITION BY device_id, CAST(ts AS DATE) ORDER BY ts
        |               ROWS BETWEEN 59 PRECEDING AND CURRENT ROW)
        |)""".stripMargin
 

@@ -27,9 +27,8 @@ object SilverRefinery {
     LakeTail.dates(batch, to_date(try_to_timestamp(col("timestamp"))))
 
   private def refineBatch(spark: SparkSession, lakeRoot: String,
-      catalog: DataFrame, cfg: EtlConfig)(batch: DataFrame): Unit = {
-    val _ = Lake.refreshSilver(spark, lakeRoot, catalog, cfg, batchDates(batch))
-  }
+      catalog: DataFrame, cfg: EtlConfig)(batch: DataFrame): Unit =
+    Lake.refreshSilver(spark, lakeRoot, catalog, cfg, batchDates(batch))
 
   /** The Bronze file stream; `date` is re-derived by the Silver sink. */
   private def bronzeStream(spark: SparkSession, lakeRoot: String): DataFrame =

@@ -78,6 +78,21 @@ class BronzeToSilverSpec extends SparkSpec {
     assert(multiset(got) == multiset(want))
   }
 
+  test("W1-W3: a date's rows depend on that date's Bronze rows alone") {
+    // per device: 20 rows before midnight (fewer than a 60-row frame),
+    // then 100 on the next date
+    val before = Fixtures.bronzeTelemetry(spark, nDevices = 2, rowsPerDevice = 20,
+      start = java.time.Instant.parse("2025-07-14T23:59:40Z"))
+    val day = Fixtures.bronzeTelemetry(spark, nDevices = 2, rowsPerDevice = 100,
+      seed = 7L)
+    val cat = Fixtures.deviceCatalog(spark, 2)
+    val together = BronzeToSilver.run(before.union(day), cat, cfg)
+      .filter(to_date(col("timestamp")) === lit(java.sql.Date.valueOf("2025-07-15")))
+    val alone = BronzeToSilver.run(day, cat, cfg)
+    assert(alone.count() == 2 * 100)
+    assert(multiset(together) == multiset(alone))
+  }
+
   test("J1: a duplicated catalog row does not duplicate Silver rows") {
     val dupCatalog = catalog.union(catalog.filter(col("device_id") === "device_002"))
     val got = BronzeToSilver.run(bronzeDirty, dupCatalog, cfg)

@@ -45,6 +45,9 @@ class EtlRunnerSpec extends SparkSpec {
     assert(EtlRunner.parse(Seq("--hours-bak", "2")).isEmpty, "a misspelt flag")
     assert(EtlRunner.parse(Seq("--days-back")).isEmpty, "a flag without its value")
     assert(EtlRunner.parse(Seq("--lake", "/tmp/x", "stray")).isEmpty, "a stray value")
+    assert(EtlRunner.options(Seq("--hours-back", "2")).map(_.hoursBack).contains(2))
+    assert(EtlRunner.options(Seq("--hours-back", "x")).isEmpty, "a number that does not parse")
+    assert(EtlRunner.options(Seq("--at", "nope")).isEmpty, "an instant that does not parse")
     Seq("--lake", "--fixtures", "--devices", "--rows-per-device", "--catalog-csv",
       "--hours-back", "--days-back", "--at", "--interval-seconds", "--iterations",
       "--compact", "--compact-target-mb").foreach(f => assert(EtlRunner.Usage.contains(f), f))

@@ -17,19 +17,27 @@ class MedallionSinksSpec extends SparkSpec {
   private def multiset(df: DataFrame) =
     df.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
 
+  // names, order and types; a file source reads every column nullable
+  private def shape(s: org.apache.spark.sql.types.StructType) =
+    s.fields.toSeq.map(f => f.name -> f.dataType)
+
   test("Silver's declared schema is the schema its table reads back with") {
     val lake = Files.createTempDirectory("graft-silver-schema").toString
     val cfg = EtlConfig(
       referenceInstant = Some(Fixtures.DefaultStart.plusSeconds(2 * 3600)))
     Lake.writeBronze(Fixtures.bronzeTelemetry(spark, nDevices = 4, rowsPerDevice = 30,
       dirty = true), lake)
-    val refreshed = Lake.refreshSilver(spark, lake, Fixtures.deviceCatalog(spark, 4), cfg,
+    Lake.refreshSilver(spark, lake, Fixtures.deviceCatalog(spark, 4), cfg,
       Seq(java.time.LocalDate.parse("2025-07-15")))
-    assert(refreshed.nonEmpty)
-    // names, order and types; a file source reads every column nullable
-    def shape(s: org.apache.spark.sql.types.StructType) =
-      s.fields.toSeq.map(f => f.name -> f.dataType)
     assert(shape(spark.read.parquet(Lake.silverPath(lake)).schema) == shape(Lake.SilverSchema))
+  }
+
+  test("readSilver on a fresh lake reads no rows, with Silver's declared schema") {
+    val lake = Files.createTempDirectory("graft-silver-empty").toString
+    val silver = Lake.readSilver(spark, lake, daysBack = 7, EtlConfig(
+      referenceInstant = Some(Fixtures.DefaultStart.plusSeconds(2 * 3600))))
+    assert(silver.count() == 0)
+    assert(shape(silver.schema) == shape(Lake.SilverSchema))
   }
 
   test("a batch pass between refinery drains keeps every Gold date") {
@@ -75,23 +83,21 @@ class MedallionSinksSpec extends SparkSpec {
     // 3 devices × 60 one-second rows per delivery, appended as the
     // ingest sink appends; the 24 h lookback's cutoff (07-14T14:00)
     // falls between the 07-14 deliveries
-    def deliverAndDrain(starts: String*): Unit = {
+    def deliverAndDrain(root: String, starts: String*): Unit = {
       starts.foreach { start =>
         Fixtures.bronzeTelemetry(spark, nDevices = 3, rowsPerDevice = 60,
             start = Instant.parse(start))
           .withColumn("date", to_date(try_to_timestamp(col("timestamp"))))
           .write.partitionBy("date").mode("append")
-          .parquet(Lake.bronzePath(lake))
+          .parquet(Lake.bronzePath(root))
       }
-      SilverRefinery.runOnce(spark, lake, catalog, cfg)
-      GoldRefinery.runOnce(spark, lake, cfg)
+      SilverRefinery.runOnce(spark, root, catalog, cfg)
+      GoldRefinery.runOnce(spark, root, cfg)
     }
-    // 07-05 is drained on its own: drained together with 07-14, it would
-    // be read as frame context of 07-14's first rows, nine days back,
-    // past the one context day a refresh of 07-14 reads (Lake.ContextDays)
-    deliverAndDrain("2025-07-05T12:00:00Z")
-    deliverAndDrain("2025-07-14T12:00:00Z", "2025-07-14T12:01:00Z",
+    val july14 = Seq("2025-07-14T12:00:00Z", "2025-07-14T12:01:00Z",
       "2025-07-14T15:00:00Z")
+    // one micro-batch holds 07-05 and 07-14
+    deliverAndDrain(lake, "2025-07-05T12:00:00Z" +: july14: _*)
 
     // snapshots are collected: a cached frame is re-read once the pass
     // overwrites its files, and would compare the new data with itself
@@ -103,6 +109,14 @@ class MedallionSinksSpec extends SparkSpec {
     }
     val drained = tables.map(t => t -> multiset(byName(t))).toMap
     assert(drained(Lake.silverPath(lake)).values.sum == 4 * 3 * 60)
+    // 07-14's Silver is what a lake that never held 07-05 gets
+    val only0714 = Files.createTempDirectory("graft-refresh-0714").toString
+    deliverAndDrain(only0714, july14: _*)
+    def silverOn0714(root: String) = multiset(byName(Lake.silverPath(root))
+      .filter(col("date") === lit(java.sql.Date.valueOf("2025-07-14"))))
+    assert(silverOn0714(lake).values.sum == 3 * 3 * 60)
+    assert(silverOn0714(lake) == silverOn0714(only0714))
+
     EtlRunner.pass(spark, lake, catalog, cfg, hoursBack = 24, daysBack = 7)
     tables.foreach(t => assert(multiset(byName(t)) == drained(t), t))
 

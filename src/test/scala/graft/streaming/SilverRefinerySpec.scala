@@ -68,8 +68,7 @@ class SilverRefinerySpec extends SparkSpec {
   test("streaming silver equals batch silver across batch and midnight boundaries") {
     val lake = java.nio.file.Files.createTempDirectory("graft-refinery2").toString
     // rows start 1 min before midnight so the fixture spans two date
-    // partitions; the second micro-batch lands entirely on day 2 with
-    // frames reaching back into day 1 (context-day read)
+    // partitions; the second micro-batch lands entirely on day 2
     val start = java.time.Instant.parse("2025-07-15T23:59:00Z")
     val cfg = EtlConfig(
       referenceInstant = Some(start.plusSeconds(2 * 3600)))
@@ -107,7 +106,7 @@ class SilverRefinerySpec extends SparkSpec {
     assert(multiset(streamed) == multiset(batch))
   }
 
-  test("late rows for day D also rewrite day D+1's boundary frames") {
+  test("late rows for day D leave day D+1's Silver files untouched") {
     val lake = java.nio.file.Files.createTempDirectory("graft-refinery3").toString
     val start = java.time.Instant.parse("2025-07-15T23:58:00Z")
     val cfg = EtlConfig(referenceInstant = Some(start.plusSeconds(2 * 3600)))
@@ -115,7 +114,7 @@ class SilverRefinerySpec extends SparkSpec {
     val full = Fixtures.bronzeTelemetry(spark, nDevices = 2,
       rowsPerDevice = 240, start = start).cache()
     // withhold day 1's final 20 rows (seconds 100-119); batch 1 still
-    // contains ALL of day 2, whose first rows' frames reach into them
+    // contains ALL of day 2
     val lateLo = start.plusSeconds(100).toString
     val lateHi = start.plusSeconds(120).toString
     val late = full.filter(col("timestamp") >= lit(lateLo) &&
@@ -125,10 +124,15 @@ class SilverRefinerySpec extends SparkSpec {
 
     Lake.writeBronze(onTime, lake)
     SilverRefinery.runOnce(spark, lake, catalog, cfg)
+    // a rewrite of day 2 would replace its files with new ones
+    def day2Files() = new java.io.File(Lake.silverPath(lake), "date=2025-07-16").list().toSet
+    val day2Before = day2Files()
     late.withColumn("date", to_date(try_to_timestamp(col("timestamp"))))
       .write.partitionBy("date").mode("append")
       .parquet(s"$lake/bronze/telemetry")
     SilverRefinery.runOnce(spark, lake, catalog, cfg)
+    assert(day2Before.exists(_.endsWith(".parquet")))
+    assert(day2Files() == day2Before)
 
     val streamed = Lake.readSilver(spark, lake, daysBack = 7, cfg).drop("date")
     val batch = BronzeToSilver.run(
