@@ -222,7 +222,7 @@ object Scale {
   }
 
   /** A/B of q191's reconciliation on the plain parquet scan vs the
-    * bucketed fact layout ([[etl.Lake.writeBucketedFacts]]): prints
+    * bucketed fact layout ([[operators.LayoutOps.writeBucketedFacts]]): prints
     * the one-time bucket-write cost and both read-path times, so the
     * bucketing claim ("pay the shuffle once, every downstream
     * orderkey join is exchange-free") carries a measured number at
@@ -234,8 +234,8 @@ object Scale {
       val _ = operators.CurationOps.reconciliationOn(
         Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir)).count()
     }.median
-    val build = Timing.seconds(etl.Lake.writeBucketedFacts(spark, sfDir))
-    val (li, o) = etl.Lake.readBucketedFacts(spark)
+    val build = Timing.seconds(operators.LayoutOps.writeBucketedFacts(spark, sfDir))
+    val (li, o) = operators.LayoutOps.readBucketedFacts(spark)
     val bucketed = Timing.time(spark, "q191_bucketed") {
       val _ = operators.CurationOps.reconciliationOn(o, li).count()
     }.median

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 
 /** Native expressions for physical data layout: Morton (Z-order)
   * interleaving, the multi-dimensional generalization of
-  * `Lake.clusteredWrite`'s single-key range clustering. Sorting by
+  * `LayoutOps.clusteredWrite`'s single-key range clustering. Sorting by
   * the interleaved code keeps rows that are close in BOTH key
   * dimensions physically adjacent, so parquet min/max stats prune
   * files for 2-D range predicates where a lexicographic sort prunes

@@ -443,7 +443,12 @@ object TextExpressions {
     * array_min(slice(h, i+1, w)) for i in 0..max(len−w, 0) — same
     * values, same first-occurrence order as the old
     * array_distinct(transform(..., array_min(slice(...)))) chain,
-    * without a per-window slice allocation + interpreted lambda. */
+    * without a per-window slice allocation + interpreted lambda.
+    *
+    * Precondition: a non-empty input. The old chain gives `[null]` on
+    * an empty array, which this non-null result type cannot hold, so
+    * an empty input fails the query instead (callers keep documents
+    * with at least `WinnowK` tokens). */
   case class WinnowMinima(child: Expression, w: Int)
       extends UnaryExpression {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -475,6 +480,7 @@ object TextExpressions {
     * code — keep the signature stable). */
   def winnowMinima(h: ArrayData, w: Int): ArrayData = {
     val n = h.numElements()
+    require(n > 0, "graft_winnow_minima needs a non-empty array (WinnowMinima's precondition)")
     val m = java.lang.Math.max(n - w, 0) + 1
     val seen = new java.util.LinkedHashSet[java.lang.Long]()
     var i = 0

@@ -219,8 +219,9 @@ object AnalyticsOps15 {
       .withColumn("presum",
         sum(dec(lit(2) * (col("cum") - col("cnt")) + col("cnt"))).over(wp))
       .filter(col("cnt") > 0) // the b-cells: rows where a real cell sits
-      .agg(sum(dec(col("cnt")) * coalesce(col("presum"), dec(lit(0))))
-        .as("j2"))
+      // a cell with no earlier month has a NULL presum, a skipped term
+      // as in the oracle's join: one month in all gives a NULL j2
+      .agg(sum(dec(col("cnt")) * col("presum")).as("j2"))
     // pooled tie counts t_j per value cell (value-range-bounded —
     // the same grid the dense frame rides)
     val tv = c.groupBy(col("v")).agg(sum(col("cnt")).cast("long").as("tc"))

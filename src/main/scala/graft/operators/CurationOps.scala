@@ -1184,7 +1184,7 @@ object CurationOps {
   }
 
   /** q191's plan body over caller-supplied fact frames — the seam the
-    * bucketed lake plugs into: handed `Lake.readBucketedFacts` tables
+    * bucketed lake plugs into: handed `LayoutOps.readBucketedFacts` tables
     * (bucketed+sorted on orderkey), the lineitem rollup AND the
     * fact-to-fact join both ride the bucket layout and plan with ZERO
     * exchanges (BucketingSpec locks it); handed raw parquet scans it

@@ -485,7 +485,7 @@ object Relational3 {
   /** Z-order (Morton) bucketing of the order book on
     * (custkey, orderkey): the interleaved code's high bits partition
     * the 2-D key space into buckets whose rows are bounded in BOTH
-    * dimensions — the layout contract behind Lake.zorderWrite's 2-D
+    * dimensions — the layout contract behind LayoutOps.zorderWrite's 2-D
     * file skipping. Spark computes the code with the native
     * `graft_morton` expression; the oracle replays the identical
     * magic-mask spread arithmetic (& | << on int64) step by step, so

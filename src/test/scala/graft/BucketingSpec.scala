@@ -79,13 +79,13 @@ class BucketingSpec extends SparkSpec {
   test("q191 on the bucketed lake plans its join + rollup with zero " +
       "fact exchanges and matches the parquet-scan answer") {
     val d = sf("sf0.001")
-    etl.Lake.writeBucketedFacts(spark, d, buckets = 8)
+    operators.LayoutOps.writeBucketedFacts(spark, d, buckets = 8)
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val (li, o) = etl.Lake.readBucketedFacts(spark)
+      val (li, o) = operators.LayoutOps.readBucketedFacts(spark)
       val bucketed = operators.CurationOps.reconciliationOn(o, li)
       val plain = operators.CurationOps.reconciliationOn(
         Tables.orders(spark, d), Tables.lineitem(spark, d))

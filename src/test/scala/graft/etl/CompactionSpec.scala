@@ -238,7 +238,7 @@ class CompactionSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-cluster")
       .toString + "/t"
     val li = graft.Tables.lineitem(spark, sf("sf0.001"))
-    Lake.clusteredWrite(li, dir, "l_orderkey", nFiles = 8)
+    graft.operators.LayoutOps.clusteredWrite(li, dir, "l_orderkey", nFiles = 8)
 
     val back = spark.read.parquet(dir)
     assert(back.count() == li.count())

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.etl.Lake
+import graft.operators.LayoutOps
 import org.apache.spark.sql.functions._
 
 class LayoutExpressionsSpec extends SparkSpec {
@@ -44,7 +44,7 @@ class LayoutExpressionsSpec extends SparkSpec {
       .toDF("a", "b")
     val dir = java.nio.file.Files.createTempDirectory("graft-znull")
       .toString + "/t"
-    Lake.zorderWrite(df, dir, "a", "b", nFiles = 4)
+    LayoutOps.zorderWrite(df, dir, "a", "b", nFiles = 4)
     val back = spark.read.parquet(dir)
     assert(back.count() == 4000)
     val ranges = back.groupBy(input_file_name())
@@ -58,7 +58,7 @@ class LayoutExpressionsSpec extends SparkSpec {
     // both keys all-NULL (or empty input) → plain write, no crash
     val dir2 = java.nio.file.Files.createTempDirectory("graft-znull2")
       .toString + "/t"
-    Lake.zorderWrite(
+    LayoutOps.zorderWrite(
       Seq((None: Option[Long], None: Option[Double])).toDF("a", "b"),
       dir2, "a", "b", nFiles = 4)
     assert(spark.read.parquet(dir2).count() == 1)
@@ -74,9 +74,9 @@ class LayoutExpressionsSpec extends SparkSpec {
         .collect().map(_.getLong(1)).toSeq
 
     val zdir = java.nio.file.Files.createTempDirectory("graft-z").toString + "/t"
-    Lake.zorderWrite(li, zdir, "l_orderkey", "l_partkey", nFiles = 8)
+    LayoutOps.zorderWrite(li, zdir, "l_orderkey", "l_partkey", nFiles = 8)
     val odir = java.nio.file.Files.createTempDirectory("graft-o").toString + "/t"
-    Lake.clusteredWrite(li, odir, "l_orderkey", nFiles = 8)
+    LayoutOps.clusteredWrite(li, odir, "l_orderkey", nFiles = 8)
 
     assert(spark.read.parquet(zdir).count() == li.count())
     val globalPartSpan = li.agg(max("l_partkey") - min("l_partkey"))

@@ -85,6 +85,15 @@ class MapSideKernelsSpec extends SparkSpec {
     assert(kernel == old)
   }
 
+  test("WinnowMinima fails loudly on an empty array, its precondition") {
+    val e = intercept[Exception](
+      spark.range(1).select(TextExpressions.winnowMinimaCol(
+        array().cast("array<bigint>"), 5)).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains("needs a non-empty array")), e)
+  }
+
   test("BestCentroid == crossJoin + groupBy(vec_id) max_by argmax, " +
       "incl. exact ties, zero-norm NaN rows, float and double centroids") {
     val vecs = Seq(

@@ -73,6 +73,20 @@ class AnalyticsOps15Spec extends SparkSpec {
     assert(math.abs(r.getAs[Double]("z") - z) < 1e-9)
   }
 
+  test("q259: one month of orders has no earlier month, so J is NULL") {
+    import org.apache.spark.sql.functions._
+    val dir = tmp("graft-jt1")
+    val orders = graft.Tables.orders(spark, d)
+      .withColumn("mon", date_trunc("month", col("o_orderdate")))
+    val first = orders.agg(min(col("mon"))).head().get(0)
+    orders.filter(col("mon") === lit(first)).drop("mon")
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    val r = AnalyticsOps15.q259Jonckheere.fn(spark, dir).head()
+    assert(r.getAs[Long]("n_months") == 1L)
+    assert(r.getAs[Long]("n_orders") > 1L)
+    assert(r.isNullAt(r.fieldIndex("j_stat")))
+  }
+
   test("q260: two sources in perfect agreement give W = 1") {
     import spark.implicits._
     val dir = tmp("graft-kw2")

@@ -6,18 +6,20 @@ import graft.SparkSpec
 import graft.etl.{BronzeToSilver, EtlConfig, Fixtures, Lake}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DateType, StructField, StructType}
 
 class SilverRefinerySpec extends SparkSpec {
 
   // first in the suite, so that its compiles are counted against a
   // cold code cache
   test("the date step is one shuffle-free job that skips rows without a date") {
-    val ts = Seq("2025-07-15T23:59:30Z", null, "2025-07-16T00:00:10Z",
-      "not-a-time", "2025-07-15T23:00:00Z", "2025-07-16T00:30:00Z")
-    val batch = spark.createDataFrame(spark.sparkContext.parallelize(ts.map(Row(_)), 3),
-      StructType(Seq(StructField("timestamp", StringType))))
-    val step = footprint(SilverRefinery.batchDates(batch))
+    // a tailed table's `date` partition column; a null is a row in
+    // the null date partition (Bronze's unparseable timestamps)
+    val dates = Seq("2025-07-15", null, "2025-07-16", null, "2025-07-15", "2025-07-16")
+      .map(d => Row(Option(d).map(java.sql.Date.valueOf).orNull))
+    val batch = spark.createDataFrame(spark.sparkContext.parallelize(dates, 3),
+      StructType(Seq(StructField("date", DateType))))
+    val step = footprint(LakeTail.dates(batch))
     assert(step.result == Seq(LocalDate.parse("2025-07-15"), LocalDate.parse("2025-07-16")))
     assert(step.jobs.size == 1, step.jobs.map(_.jobId))
     // an Exchange in its plan would add a stage to the job
@@ -89,7 +91,7 @@ class SilverRefinerySpec extends SparkSpec {
     SilverRefinery.runOnce(spark, lake, catalog, cfg)
 
     val streamed = Lake.readSilver(spark, lake, daysBack = 7, cfg).drop("date")
-    // batch comparison path = EtlRunner.onePass's: fresh bronze scan of
+    // batch comparison path = EtlRunner.pass's: fresh bronze scan of
     // the same lake bytes through the same batch transform (fresh
     // DataFrame instances — reusing `full`/`catalog` across both sides
     // of exceptAll trips attribute resolution)
