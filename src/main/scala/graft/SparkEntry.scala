@@ -12,10 +12,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  /** All query groups. Name collisions are a bug — each group owns a
-    * distinct q-number range / prefix. Exposed so the collision spec
-    * sums the SAME list the merge uses (a new group can't silently
-    * desync the expected count). */
+  /** All query groups, one per domain module. A group is a domain, not
+    * a q-number range, and query names must be unique across the whole
+    * list. Exposed so RegistrySpec sums the SAME list the merge uses (a
+    * new group can't silently desync the expected count). */
   private[graft] lazy val groups: Seq[Map[String, QueryDef]] = Seq(
     operators.Relational.all,
     operators.Relational2.all,
@@ -29,31 +29,12 @@ object SparkEntry {
     operators.ClusteringOps.all,
     operators.GraphOps.all,
     operators.ChangeOps.all,
-    operators.AnalyticsOps.all,
-    operators.AnalyticsOps2.all,
-    operators.AnalyticsOps3.all,
-    operators.AnalyticsOps4.all,
-    operators.AnalyticsOps5.all,
     operators.LayoutOps.all,
-    operators.AnalyticsOps6.all,
-    operators.AnalyticsOps7.all,
-    operators.AnalyticsOps8.all,
-    operators.AnalyticsOps9.all,
-    operators.AnalyticsOps10.all,
-    operators.AnalyticsOps11.all,
-    operators.AnalyticsOps12.all,
-    operators.AnalyticsOps13.all,
-    operators.AnalyticsOps14.all,
-    operators.AnalyticsOps15.all,
-    operators.AnalyticsOps16.all,
-    operators.AnalyticsOps17.all,
-    operators.AnalyticsOps18.all,
-    operators.AnalyticsOps19.all,
-    operators.AnalyticsOps20.all,
-    operators.AnalyticsOps21.all,
-    operators.AnalyticsOps22.all,
-    operators.AnalyticsOps23.all,
-    operators.AnalyticsOps24.all,
+    operators.StatsOps.all,
+    operators.SeriesOps.all,
+    operators.TextStatsOps.all,
+    operators.BusinessOps.all,
+    operators.SketchOps.all,
     operators.EvalOps.all,
     operators.SmartHomeOps.all)
 

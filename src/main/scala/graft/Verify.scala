@@ -51,12 +51,12 @@ object Verify {
     // partial-merge order, so q196 gates on THIS dump — the Spark
     // query and the DuckDB oracle read the same estimate bytes, and
     // the rank-error calibration downstream is deterministic.
-    operators.AnalyticsOps5.kllEstimatesFrame(spark, sfDir)
+    operators.SketchOps.kllEstimatesFrame(spark, sfDir)
       .write.mode("overwrite").parquet(s"$fx/sf_$sfTag/kll_estimates.parquet")
     // Per-doc DEFLATE ratios (1e-6 fixed point): zlib can't run in
     // DuckDB, so q203's oracle re-derives its banding/aggregation
     // from these engine-computed values (the minhash/simhash pattern)
-    operators.AnalyticsOps7.deflateRatioFrame(spark, sfDir)
+    operators.TextStatsOps.deflateRatioFrame(spark, sfDir)
       .write.mode("overwrite").parquet(s"$fx/sf_$sfTag/deflate_ratios.parquet")
     multimodal.Multimodal.decode(
       multimodal.Multimodal.mediaFromDocuments(spark, Tables.documents(spark, sfDir)))

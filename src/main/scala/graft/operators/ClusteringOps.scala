@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import graft.functions.VectorExpressions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import Exact.{dec, cents}
 
 /** Embedding-space clustering for the training-data pipeline:
   * spherical k-means (cosine assignment) with two Lloyd iterations —
@@ -25,6 +26,15 @@ import org.apache.spark.sql.functions._
   * two IEEE divisions in both engines. Assignment compares unrounded
   * cosines, which the native expression computes bit-identically to
   * DuckDB's list_cosine_similarity (validated by q44/q50/q53).
+  *
+  * Beside the clustering sit the embedding-geometry statistics that
+  * read the label clustering and the vector cloud: per-label centroid
+  * drift, the covariance participation ratio, mean pairwise cosine
+  * (anisotropy), linear CKA between the embedding halves, and the
+  * cluster-validity panel (simplified silhouette, Davies-Bouldin,
+  * Calinski-Harabasz, label-centroid cosines). The panel reads one
+  * shared centroid frame, quantized to 1e-6 ints BEFORE any distance,
+  * so both engines measure against the same centroid.
   */
 object ClusteringOps {
 
@@ -91,7 +101,6 @@ object ClusteringOps {
       |      AS BIGINT) AS sq,
       |    count(*) AS n
       |  FROM d2 GROUP BY 1, 2)""".stripMargin
-
 
   /** Spherical k-means over `embeddings`: seeds = vectors with
     * vec_id % 101 = 1, two assign→update rounds, then a final
@@ -232,8 +241,810 @@ object ClusteringOps {
         (floor(col("keep.sim") * 1000000 + 0.5) / 1000000).as("sim"))
   }
 
+  /** Per-label embedding centroid drift — cosine of each label's
+    * centroid against the global centroid, the vector-space twin of
+    * q158's token KL (is a label's region of embedding space moving
+    * away from the corpus?). The q144 exactness discipline end to
+    * end: float components widen to double (exact), quantize at 1e-9
+    * BEFORE any sum, per-(label, dim) sums are int64 (order-free),
+    * the global centroid is the SUM OF THE LABEL SUMS (no second
+    * data pass), centroid components are one IEEE division each, the
+    * three cosine accumulators re-quantize the products, and the
+    * final cosine is the same division/sqrt sequence in both engines,
+    * rounded at 1e-6 (q113 convention).
+    *
+    * Scale shape: ONE data pass (posexplode → (label, dim)
+    * partial+final aggregate, ≤ |labels|·64 rows out); everything
+    * downstream — the global rollup, the dim join, the cosine — runs
+    * on metadata-sized frames. */
+  val q161CentroidDrift: QueryDef = QueryDef.withOracle(
+    """WITH e AS (
+      |  SELECT label, u.dim AS dim,
+      |    CAST(emb[u.dim + 1] AS DOUBLE) AS x
+      |  FROM (SELECT label, CAST(embedding AS DOUBLE[]) AS emb
+      |        FROM embeddings) t,
+      |    LATERAL (SELECT unnest(range(0, len(emb))) AS dim) u),
+      |lc AS (
+      |  SELECT label, dim,
+      |    CAST(sum(CAST(floor(x * 1000000000 + 0.5) AS BIGINT)) AS BIGINT)
+      |      AS s_fp,
+      |    count(*) AS n
+      |  FROM e GROUP BY 1, 2),
+      |gc AS (
+      |  SELECT dim, CAST(sum(s_fp) AS BIGINT) AS gs_fp,
+      |    CAST(sum(n) AS BIGINT) AS gn
+      |  FROM lc GROUP BY 1),
+      |j AS (
+      |  SELECT lc.label, lc.n,
+      |    (CAST(lc.s_fp AS DOUBLE) / 1000000000) / lc.n AS a,
+      |    (CAST(gc.gs_fp AS DOUBLE) / 1000000000) / gc.gn AS b
+      |  FROM lc JOIN gc USING (dim)),
+      |p AS (
+      |  SELECT label, max(n) AS n_vecs,
+      |    CAST(sum(CAST(floor(a * b * 1000000000 + 0.5) AS BIGINT))
+      |      AS BIGINT) AS num_fp,
+      |    CAST(sum(CAST(floor(a * a * 1000000000 + 0.5) AS BIGINT))
+      |      AS BIGINT) AS na_fp,
+      |    CAST(sum(CAST(floor(b * b * 1000000000 + 0.5) AS BIGINT))
+      |      AS BIGINT) AS nb_fp
+      |  FROM j GROUP BY 1)
+      |SELECT label, CAST(n_vecs AS BIGINT) AS n_vecs,
+      |  floor(((CAST(num_fp AS DOUBLE) / sqrt(CAST(na_fp AS DOUBLE)))
+      |    / sqrt(CAST(nb_fp AS DOUBLE))) * 1000000 + 0.5) / 1000000
+      |    AS cos_global
+      |FROM p""".stripMargin
+  ) { (s, d) =>
+    val e = Tables.embeddings(s, d)
+      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "xf")))
+      .select(col("label"), col("dim"), col("xf").cast("double").as("x"))
+    val lc = e.groupBy(col("label"), col("dim"))
+      .agg(sum(floor(col("x") * 1000000000L + 0.5).cast("long")).as("s_fp"),
+        count(lit(1)).as("n"))
+    val gc = lc.groupBy(col("dim"))
+      .agg(sum(col("s_fp")).as("gs_fp"), sum(col("n")).as("gn"))
+    val a = (col("s_fp").cast("double") / 1000000000L) / col("n")
+    val b = (col("gs_fp").cast("double") / 1000000000L) / col("gn")
+    val j = lc.join(broadcast(gc), Seq("dim"))
+      .select(col("label"), col("n"), a.as("a"), b.as("b"))
+    j.groupBy(col("label"))
+      .agg(max(col("n")).as("n_vecs"),
+        sum(floor(col("a") * col("b") * 1000000000L + 0.5).cast("long"))
+          .as("num_fp"),
+        sum(floor(col("a") * col("a") * 1000000000L + 0.5).cast("long"))
+          .as("na_fp"),
+        sum(floor(col("b") * col("b") * 1000000000L + 0.5).cast("long"))
+          .as("nb_fp"))
+      .select(col("label"), col("n_vecs"),
+        (floor(((col("num_fp").cast("double") /
+          sqrt(col("na_fp").cast("double"))) /
+          sqrt(col("nb_fp").cast("double"))) * 1000000 + 0.5) / 1000000)
+          .as("cos_global"))
+  }
+
+  /** Simplified (centroid-based) silhouette per embedding label — "are
+    * the labeled clusters SEPARABLE in embedding space": a(v) = ‖v −
+    * centroid(own label)‖, b(v) = min over other labels, s = (b −
+    * a)/max(a, b), averaged per label. The geometry companion to
+    * q146's purity (which needs a clustering to compare against) and
+    * q161's drift (which tracks centroids over time); near-zero or
+    * negative mean silhouette flags labels that embedding-based
+    * curation (q81) cannot possibly respect. Uses the standard
+    * centroid simplification (Hruschka 2004) — O(n·k·dim), one
+    * k-means-iteration cost, never the O(n²) pairwise original.
+    *
+    * Exactness: vector components quantize to the 1e-9 int grid
+    * FIRST, so centroid sums are exact integer algebra and centroids
+    * are one division each; per-(vector, label) squared distances
+    * int-sum 1e-9-quantized per-dimension terms (order-free — the
+    * array dimension order is fixed); s quantizes to 1e-6 and the
+    * per-label mean is an exact int sum with one final division. A
+    * singleton label has a = 0, s = 1 by this construction (stated;
+    * sklearn's full silhouette defines 0 — the centroid variant
+    * legitimately differs).
+    *
+    * Scale shape: one embeddings pass posexplodes to (vec, dim)
+    * terms; centroids are a (label × dim) metadata aggregate joined
+    * back BROADCAST on dim cells; the n·k distance frame collapses
+    * map-side into per-(vec, label) sums — no shuffle carries a
+    * vector twice. */
+  val q253Silhouette: QueryDef = QueryDef.withOracle(
+    """WITH e AS (
+      |  SELECT vec_id, label,
+      |    unnest(generate_series(1, len(embedding))) AS pos,
+      |    CAST(floor(unnest(CAST(embedding AS DOUBLE[])) * 1000000000
+      |      + 0.5) AS BIGINT) AS xq
+      |  FROM embeddings),
+      |cent AS (
+      |  SELECT label AS clabel, pos,
+      |    CAST(sum(xq) AS DOUBLE) / count(*) AS c
+      |  FROM e GROUP BY 1, 2),
+      |d2 AS (
+      |  SELECT e.vec_id, e.label, cent.clabel,
+      |    CAST(sum(CAST(floor(((e.xq - cent.c) / 1000000000)
+      |      * ((e.xq - cent.c) / 1000000000) * 1000000000 + 0.5)
+      |      AS BIGINT)) AS BIGINT) AS d9
+      |  FROM e JOIN cent USING (pos) GROUP BY 1, 2, 3),
+      |ab AS (
+      |  SELECT vec_id, label,
+      |    CAST(max(CASE WHEN clabel = label THEN d9 END) AS BIGINT) AS a9,
+      |    CAST(min(CASE WHEN clabel <> label THEN d9 END) AS BIGINT) AS b9
+      |  FROM d2 GROUP BY 1, 2),
+      |sil AS (
+      |  SELECT label,
+      |    CASE WHEN b9 IS NULL OR a9 = b9 THEN CAST(0 AS BIGINT)
+      |      ELSE CAST(floor(((sqrt(CAST(b9 AS DOUBLE) / 1000000000)
+      |          - sqrt(CAST(a9 AS DOUBLE) / 1000000000))
+      |        / (CASE WHEN a9 >= b9
+      |            THEN sqrt(CAST(a9 AS DOUBLE) / 1000000000)
+      |            ELSE sqrt(CAST(b9 AS DOUBLE) / 1000000000) END))
+      |        * 1000000 + 0.5) AS BIGINT) END AS s6
+      |  FROM ab)
+      |SELECT CAST(label AS BIGINT) AS label, count(*) AS n,
+      |  floor((CAST(sum(s6) AS DOUBLE) / count(*) / 1000000)
+      |    * 1000000 + 0.5) / 1000000 AS mean_silhouette
+      |FROM sil GROUP BY 1""".stripMargin
+  ) { (s, d) =>
+    val e = Tables.embeddings(s, d)
+      .select(col("vec_id"), col("label"),
+        posexplode(col("embedding")).as(Seq("pos0", "x")))
+      .select(col("vec_id"), col("label"),
+        (col("pos0") + 1).as("pos"),
+        floor(col("x").cast("double") * 1000000000L + 0.5)
+          .cast("long").as("xq"))
+      .cache() // one embeddings pass; centroids and distances reuse it
+    val cent = e.groupBy(col("label").as("clabel"), col("pos"))
+      .agg((sum(col("xq")).cast("double") / count(lit(1))).as("c"))
+    val d2 = e.join(broadcast(cent), Seq("pos"))
+      .groupBy(col("vec_id"), col("label"), col("clabel"))
+      .agg(sum(floor(((col("xq") - col("c")) / 1000000000L)
+        * ((col("xq") - col("c")) / 1000000000L) * 1000000000L + 0.5)
+        .cast("long")).cast("long").as("d9"))
+    val ab = d2.groupBy(col("vec_id"), col("label"))
+      .agg(max(when(col("clabel") === col("label"), col("d9")))
+        .cast("long").as("a9"),
+        min(when(col("clabel") =!= col("label"), col("d9")))
+          .cast("long").as("b9"))
+    val ad = sqrt(col("a9").cast("double") / 1000000000L)
+    val bd = sqrt(col("b9").cast("double") / 1000000000L)
+    // b9 null = single-label corpus (no "other" centroid): degrade to 0
+    val sil = ab.select(col("label"),
+      when(col("b9").isNull || col("a9") === col("b9"), lit(0L))
+        .otherwise(floor(((bd - ad)
+          / when(col("a9") >= col("b9"), ad).otherwise(bd))
+          * 1000000L + 0.5).cast("long")).as("s6"))
+    sil.groupBy(col("label").cast("long").as("label"))
+      .agg(count(lit(1)).as("n"),
+        (floor((sum(col("s6")).cast("double") / count(lit(1))
+          / 1000000L) * 1000000L + 0.5) / 1000000L)
+          .as("mean_silhouette"))
+  }
+
+  /** Participation ratio of the embedding covariance — the effective
+    * dimensionality PR = tr(C)²/tr(C²) ∈ [1, d]: PR ≈ d means
+    * variance spreads isotropically, PR ≪ d means the cloud collapsed
+    * onto a few directions and every cosine-based op upstream
+    * (q50–q72 retrieval, q44 near-dup, q81 curation) is effectively
+    * ranking in that tiny subspace. Needs ALL eigenvalues' first two
+    * power sums — which are exactly tr(C) and tr(C²), both available
+    * from the q144 gram cells without any eigendecomposition.
+    *
+    * Exactness: gram cells are q144's 1e-9-quantized exact int sums;
+    * component sums quantize on the same grid; each covariance entry
+    * is one double chain quantized 1e-9 before squaring; tr(C²) sums
+    * the ≤d² quantized squares as exact ints. Bound: the quantized
+    * sums are int64/decimal-safe through ~1e9 vectors (the q144
+    * convention — shrink the quantum beyond).
+    *
+    * Scale shape: q144's one pass (n·d² map-side work, constant-size
+    * exchange) + one posexplode pass for the mean vector; everything
+    * after is a ≤d² metadata frame. */
+  val q266ParticipationRatio: QueryDef = QueryDef.withOracle(
+    """WITH c AS (
+      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
+      |  FROM embeddings),
+      |p AS (
+      |  SELECT i.i AS i, j.j AS j,
+      |    CAST(floor(emb[i.i + 1] * emb[j.j + 1] * 1000000000 + 0.5)
+      |      AS BIGINT) AS fp
+      |  FROM c,
+      |    LATERAL (SELECT unnest(range(0, len(emb))) AS i) i,
+      |    LATERAL (SELECT unnest(range(0, len(emb))) AS j) j
+      |  WHERE j.j >= i.i),
+      |gm AS (
+      |  SELECT i, j, count(*) AS n, CAST(sum(fp) AS BIGINT) AS g
+      |  FROM p GROUP BY 1, 2),
+      |sv AS (
+      |  SELECT i.i AS i,
+      |    CAST(sum(CAST(floor(emb[i.i + 1] * 1000000000 + 0.5)
+      |      AS BIGINT)) AS BIGINT) AS sq
+      |  FROM c, LATERAL (SELECT unnest(range(0, len(emb))) AS i) i
+      |  GROUP BY 1),
+      |cv AS (
+      |  SELECT gm.i, gm.j, gm.n,
+      |    CAST(floor(((CAST(gm.g AS DOUBLE) / 1000000000
+      |        - (CAST(si.sq AS DOUBLE) / 1000000000)
+      |          * (CAST(sj.sq AS DOUBLE) / 1000000000) / gm.n)
+      |      / (gm.n - 1)) * 1000000000 + 0.5) AS BIGINT) AS c9
+      |  FROM gm JOIN sv si ON si.i = gm.i JOIN sv sj ON sj.i = gm.j),
+      |t AS (
+      |  SELECT max(n) AS n,
+      |    CAST(sum(CASE WHEN i = j THEN c9 ELSE 0 END) AS BIGINT)
+      |      AS tr9,
+      |    sum(CASE WHEN i = j THEN CAST(c9 AS HUGEINT) * c9
+      |      ELSE 2 * CAST(c9 AS HUGEINT) * c9 END) AS tr2_18,
+      |    CAST(max(j) + 1 AS BIGINT) AS dim
+      |  FROM cv)
+      |SELECT n AS n_vectors, dim,
+      |  floor((CAST(tr9 AS DOUBLE) / 1000000000) * 1000000 + 0.5)
+      |    / 1000000 AS trace_c,
+      |  CASE WHEN tr2_18 = 0 THEN CAST(0 AS DOUBLE)
+      |    ELSE floor(((CAST(tr9 AS DOUBLE) / 1000000000)
+      |        * (CAST(tr9 AS DOUBLE) / 1000000000)
+      |      / (CAST(tr2_18 AS DOUBLE) / 1000000000000000000))
+      |      * 1000000 + 0.5) / 1000000 END AS participation_ratio
+      |FROM t""".stripMargin
+  ) { (s, d) =>
+    val gm = Relational4.q144GramMatrix.fn(s, d)
+      .select(col("i"), col("j"), col("n"), col("gram_fp").as("g"))
+    val sv = Tables.embeddings(s, d)
+      .select(posexplode(expr("CAST(embedding AS ARRAY<DOUBLE>)"))
+        .as(Seq("i", "x")))
+      .groupBy(col("i"))
+      .agg(sum(floor(col("x") * 1000000000L + 0.5).cast("long"))
+        .cast("long").as("sq"))
+    val si = sv.toDF("i", "sqi")
+    val sj = sv.toDF("j", "sqj")
+    val cv = gm.join(broadcast(si), Seq("i")).join(broadcast(sj), Seq("j"))
+      .select(col("i"), col("j"), col("n"),
+        floor(((col("g").cast("double") / 1000000000L
+          - (col("sqi").cast("double") / 1000000000L)
+            * (col("sqj").cast("double") / 1000000000L) / col("n"))
+          / (col("n") - 1)) * 1000000000L + 0.5).cast("long").as("c9"))
+    val t = cv.agg(max(col("n")).as("n"),
+      sum(when(col("i") === col("j"), col("c9")).otherwise(0L))
+        .cast("long").as("tr9"),
+      sum(when(col("i") === col("j"), dec(col("c9")) * col("c9"))
+        .otherwise(lit(2) * dec(col("c9")) * col("c9"))).as("tr2_18"),
+      (max(col("j")) + 1).cast("long").as("dim"))
+    t.select(col("n").as("n_vectors"), col("dim"),
+      (floor((col("tr9").cast("double") / 1000000000L) * 1000000L + 0.5)
+        / 1000000L).as("trace_c"),
+      when(col("tr2_18") === dec(lit(0)), lit(0.0))
+        .otherwise(floor(((col("tr9").cast("double") / 1000000000L)
+          * (col("tr9").cast("double") / 1000000000L)
+          / (col("tr2_18").cast("double") / 1.0e18))
+          * 1000000L + 0.5) / 1000000L).as("participation_ratio"))
+  }
+
+  /** Mean pairwise cosine of the L2-normalized embedding corpus — the
+    * direct anisotropy number (Ethayarajh 2019): for unit vectors,
+    * the average cosine over ALL n(n−1) ordered pairs equals
+    * (‖Σu‖² − Σ‖u‖²)/(n(n−1)) — one pass, no pair join ever. High
+    * mean cosine says the cloud points one way (the "anisotropy cone"
+    * of contextual embedders) and raw-cosine thresholds (q44/q81)
+    * measure the cone, not semantics.
+    *
+    * Exactness: unit components quantize to the 1e-9 int grid, so the
+    * dimension sums, their squares, and the per-vector norm² sums are
+    * all exact integer/decimal algebra (safe through ~1e9 vectors —
+    * the q144 bound convention); one final double chain, floored
+    * 1e-6. Zero-norm vectors are excluded (stated; count reported).
+    *
+    * Scale shape: one embeddings pass → ≤d dimension cells; nothing
+    * after is data-sized. */
+  val q267Anisotropy: QueryDef = QueryDef.withOracle(
+    """WITH nv AS (
+      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
+      |    sqrt(list_sum(list_transform(CAST(embedding AS DOUBLE[]),
+      |      x -> x * x))) AS nrm
+      |  FROM embeddings),
+      |u AS (
+      |  SELECT vec_id, i.i AS i,
+      |    CAST(floor(emb[i.i + 1] / nrm * 1000000000 + 0.5) AS BIGINT)
+      |      AS uq
+      |  FROM nv, LATERAL (SELECT unnest(range(0, len(emb))) AS i) i
+      |  WHERE nrm > 0),
+      |sd AS (
+      |  SELECT i, CAST(sum(uq) AS HUGEINT) AS s,
+      |    sum(CAST(uq AS HUGEINT) * uq) AS q
+      |  FROM u GROUP BY 1),
+      |t AS (
+      |  SELECT sum(s * s) AS ssq, CAST(sum(q) AS HUGEINT) AS sq
+      |  FROM sd),
+      |n AS (
+      |  SELECT CAST(count(*) AS BIGINT) AS n FROM nv WHERE nrm > 0)
+      |SELECT n AS n_vectors,
+      |  CASE WHEN n <= 1 THEN CAST(0 AS DOUBLE)
+      |    ELSE floor((CAST(ssq - sq AS DOUBLE)
+      |      / (CAST(n AS DOUBLE) * (n - 1)) / 1000000000000000000)
+      |      * 1000000 + 0.5) / 1000000 END AS mean_cosine,
+      |  floor((sqrt(CAST(ssq AS DOUBLE)) / n / 1000000000)
+      |    * 1000000 + 0.5) / 1000000 AS mean_vector_norm
+      |FROM t CROSS JOIN n""".stripMargin
+  ) { (s, d) =>
+    val nv = Tables.embeddings(s, d)
+      .select(col("vec_id"),
+        expr("CAST(embedding AS ARRAY<DOUBLE>)").as("emb"))
+      .withColumn("nrm", sqrt(VectorExpressions.sqnorm(col("emb"))))
+      .filter(col("nrm") > 0)
+      .cache() // one pass; the count and the dimension cells reuse it
+    val u = nv
+      .select(posexplode(col("emb")).as(Seq("i", "x")), col("nrm"))
+      .select(col("i"),
+        floor(col("x") / col("nrm") * 1000000000L + 0.5)
+          .cast("long").as("uq"))
+    val sd = u.groupBy(col("i"))
+      .agg(sum(dec(col("uq"))).as("s"),
+        sum(dec(col("uq")) * col("uq")).as("q"))
+    val t = sd.agg(sum(col("s") * col("s")).as("ssq"),
+      sum(col("q")).as("sq"))
+    val n = nv.agg(count(lit(1)).as("n"))
+    t.crossJoin(broadcast(n))
+      .select(col("n").as("n_vectors"),
+        when(col("n") <= 1, lit(0.0))
+          .otherwise(floor(((col("ssq") - col("sq")).cast("double")
+            / (col("n").cast("double") * (col("n") - 1)) / 1.0e18)
+            * 1000000L + 0.5) / 1000000L).as("mean_cosine"),
+        (floor((sqrt(col("ssq").cast("double")) / col("n")
+          / 1000000000L) * 1000000L + 0.5) / 1000000L)
+          .as("mean_vector_norm"))
+  }
+
+  /** Linear CKA between the two 32-dimension halves of the embedding,
+    * per label — centered kernel alignment (Kornblith et al. 2019):
+    * CKA = ||Cxy||_F^2 / (||Cxx||_F * ||Cyy||_F) over the centered
+    * cross-covariance blocks. High CKA says the two halves encode the
+    * SAME geometry (redundant width — q225's dim-truncation recall
+    * read a related signal through retrieval); low CKA says the
+    * halves specialize. Per label, so a single collapsed class can't
+    * hide behind the corpus average.
+    *
+    * Exactness: the q144 gram convention — per-row products quantize
+    * to 1e-9 int BEFORE summing, component sums likewise; covariance
+    * entries assemble in ONE mirrored double expression, re-quantize
+    * to 1e-9 int (the q266 convention), and all three Frobenius sums
+    * are exact decimal sums of int squares; one sqrt-divide at the
+    * end. Degenerate blocks (zero variance) report 0 (stated).
+    *
+    * Scale shape: ONE embeddings pass -> per-label (i<=j) product
+    * cells (2 080 cells/label — metadata) + per-label component sums;
+    * everything downstream is cell algebra. No pair-of-rows join
+    * anywhere. */
+  val q283CkaHalves: QueryDef = QueryDef.withOracle(
+    """WITH c AS (
+      |  SELECT label, CAST(embedding AS DOUBLE[]) AS emb
+      |  FROM embeddings),
+      |pz AS (
+      |  SELECT label, i.i AS i, j.j AS j,
+      |    CAST(floor(emb[i.i + 1] * emb[j.j + 1] * 1000000000 + 0.5)
+      |      AS BIGINT) AS fp
+      |  FROM c,
+      |    LATERAL (SELECT unnest(range(0, len(emb))) AS i) i,
+      |    LATERAL (SELECT unnest(range(0, len(emb))) AS j) j
+      |  WHERE j.j >= i.i),
+      |pg AS (
+      |  SELECT label, i, j, CAST(count(*) AS BIGINT) AS n,
+      |    CAST(sum(fp) AS BIGINT) AS sfp
+      |  FROM pz GROUP BY 1, 2, 3),
+      |sz AS (
+      |  SELECT label, i.i AS i,
+      |    CAST(floor(emb[i.i + 1] * 1000000000 + 0.5) AS BIGINT) AS sp
+      |  FROM c, LATERAL (SELECT unnest(range(0, len(emb))) AS i) i),
+      |sg AS (
+      |  SELECT label, i, CAST(sum(sp) AS BIGINT) AS ssp
+      |  FROM sz GROUP BY 1, 2),
+      |cv AS (
+      |  SELECT pg.label, pg.i, pg.j,
+      |    CAST(floor((CAST(pg.sfp AS DOUBLE) / pg.n / 1000000000
+      |      - (CAST(a.ssp AS DOUBLE) / pg.n / 1000000000)
+      |        * (CAST(b.ssp AS DOUBLE) / pg.n / 1000000000))
+      |      * 1000000000 + 0.5) AS BIGINT) AS c9
+      |  FROM pg
+      |  JOIN sg a ON a.label = pg.label AND a.i = pg.i
+      |  JOIN sg b ON b.label = pg.label AND b.i = pg.j),
+      |fr AS (
+      |  SELECT label,
+      |    sum(CASE WHEN j < 32 THEN
+      |      (CASE WHEN i = j THEN 1 ELSE 2 END) * CAST(c9 AS HUGEINT)
+      |        * c9 ELSE 0 END) AS sxx,
+      |    sum(CASE WHEN i >= 32 THEN
+      |      (CASE WHEN i = j THEN 1 ELSE 2 END) * CAST(c9 AS HUGEINT)
+      |        * c9 ELSE 0 END) AS syy,
+      |    sum(CASE WHEN i < 32 AND j >= 32 THEN CAST(c9 AS HUGEINT)
+      |        * c9 ELSE 0 END) AS sxy,
+      |    max(n) AS n_vecs
+      |  FROM cv JOIN (SELECT label AS l2, max(n) AS n FROM pg GROUP BY 1)
+      |    ON l2 = label
+      |  GROUP BY 1)
+      |SELECT CAST(label AS BIGINT) AS label, CAST(n_vecs AS BIGINT)
+      |    AS n_vecs,
+      |  CASE WHEN sxx <= 0 OR syy <= 0 THEN CAST(0 AS DOUBLE)
+      |    ELSE floor(CAST(sxy AS DOUBLE)
+      |      / (sqrt(CAST(sxx AS DOUBLE)) * sqrt(CAST(syy AS DOUBLE)))
+      |      * 1000000 + 0.5) / 1000000 END AS cka
+      |FROM fr""".stripMargin
+  ) { (s, d) =>
+    val c = Tables.embeddings(s, d)
+      .select(col("label"),
+        expr("transform(CAST(embedding AS ARRAY<DOUBLE>), x -> x)")
+          .as("emb"))
+      .cache() // one pass feeds pair cells and component sums
+    // r13: per-label gram cells via the GramCells aggregate (one FMA
+    // loop per row, 128-bit accumulation emitted as decimal(38,0) —
+    // the q304 int64-headroom convention preserved by construction);
+    // identical summands, exact in any partial/merge order
+    val pg = c.groupBy(col("label"))
+      .agg(graft.functions.GramAggregate.gramCells(col("emb")).as("cells"))
+      .select(col("label"), explode(col("cells")).as("t"))
+      .select(col("label"), col("t.i").as("i"), col("t.j").as("j"),
+        col("t.n").as("n"), col("t.fp").as("sfp"))
+    val sg = c.select(col("label"), explode(expr(
+        """transform(sequence(0, size(emb) - 1), i ->
+          |  struct(i AS i,
+          |    CAST(floor(emb[i] * 1000000000D + 0.5D) AS BIGINT)
+          |      AS sp))""".stripMargin)).as("t"))
+      .select(col("label"), col("t.i").as("i"), col("t.sp").as("sp"))
+      .groupBy(col("label"), col("i"))
+      .agg(sum(dec(col("sp"))).as("ssp"))
+    val cv = pg
+      .join(sg.toDF("label", "i", "sspa"), Seq("label", "i"))
+      .join(sg.toDF("label", "j", "sspb"), Seq("label", "j"))
+      .select(col("label"), col("i"), col("j"), col("n"),
+        floor((col("sfp").cast("double") / col("n") / 1000000000L
+          - (col("sspa").cast("double") / col("n") / 1000000000L)
+            * (col("sspb").cast("double") / col("n") / 1000000000L))
+          * 1000000000L + 0.5).cast("long").as("c9"))
+    val fr = cv.groupBy(col("label")).agg(
+      sum(when(col("j") < 32,
+        when(col("i") === col("j"), lit(1)).otherwise(lit(2))
+          * dec(col("c9")) * col("c9")).otherwise(lit(0)))
+        .as("sxx"),
+      sum(when(col("i") >= 32,
+        when(col("i") === col("j"), lit(1)).otherwise(lit(2))
+          * dec(col("c9")) * col("c9")).otherwise(lit(0)))
+        .as("syy"),
+      sum(when(col("i") < 32 && col("j") >= 32,
+        dec(col("c9")) * col("c9")).otherwise(lit(0))).as("sxy"),
+      max(col("n")).as("n_vecs"))
+    fr.select(col("label").cast("long").as("label"),
+      col("n_vecs").cast("long").as("n_vecs"),
+      when(col("sxx") <= 0 || col("syy") <= 0, lit(0.0))
+        .otherwise(floor(col("sxy").cast("double")
+          / (sqrt(col("sxx").cast("double"))
+            * sqrt(col("syy").cast("double"))) * 1000000L + 0.5)
+          / 1000000L).as("cka"))
+  }
+
+  /** Davies-Bouldin per-label row — intra-cluster mean distance s_i
+    * (Euclidean, to the 1e-6-quantized label centroid) and R_i =
+    * max_{j != i} (s_i + s_j) / d(c_i, c_j), the index's per-cluster
+    * term (Davies & Bouldin 1979; the full index is avg(R_i), left
+    * to the reader so the per-label diagnosis — WHICH pairing is the
+    * worst — survives in the output). Complements q253's silhouette:
+    * silhouette scores separation per label against the NEAREST
+    * centroid; R_i names the worst offender and weighs both sides'
+    * spread.
+    *
+    * Exactness: centroids quantize to 1e-6 ints off exact 1e-9
+    * component sums; per-(point, dim) squared deviations quantize to
+    * 1e-9 ints before the exact per-point sum; per-point distances
+    * quantize to 1e-6 before the exact per-label sum; centroid-pair
+    * distances are exact decimal sums of int squares under ONE sqrt.
+    * The R_i max runs over identical mirrored doubles. Labels with
+    * n = 0 can't occur; k = 1 emits no R (no j) — row dropped
+    * (stated).
+    *
+    * Scale shape: ONE embeddings pass -> (label, dim) component sums
+    * (the q283 frame); ONE more pass for point-to-own-centroid
+    * distances (64 cells per point, map-side against a broadcast
+    * 640-row centroid frame); the pair sweep is k x k x 64 cell
+    * algebra — metadata. */
+  val q292DaviesBouldin: QueryDef = QueryDef.withOracle(
+    """WITH c AS (
+      |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
+      |  FROM embeddings),
+      |sz AS (
+      |  SELECT label, i.i AS i,
+      |    CAST(sum(CAST(floor(emb[i.i + 1] * 1000000000 + 0.5)
+      |      AS BIGINT)) AS BIGINT) AS ssp,
+      |    CAST(count(*) AS BIGINT) AS n
+      |  FROM c, LATERAL (SELECT unnest(range(0, len(emb))) AS i) i
+      |  GROUP BY 1, 2),
+      |cen AS (
+      |  SELECT label, i,
+      |    CAST(floor(CAST(ssp AS DOUBLE) / n / 1000 + 0.5) AS BIGINT)
+      |      AS c6, n
+      |  FROM sz),
+      |pd AS (
+      |  SELECT c.vec_id, c.label,
+      |    CAST(sum(CAST(floor((emb[cen.i + 1]
+      |        - CAST(cen.c6 AS DOUBLE) / 1000000)
+      |      * (emb[cen.i + 1] - CAST(cen.c6 AS DOUBLE) / 1000000)
+      |      * 1000000000 + 0.5) AS BIGINT)) AS BIGINT) AS d9
+      |  FROM c JOIN cen ON cen.label = c.label
+      |  GROUP BY 1, 2),
+      |pt AS (
+      |  SELECT label,
+      |    CAST(floor(sqrt(CAST(d9 AS DOUBLE) / 1000000000)
+      |      * 1000000 + 0.5) AS BIGINT) AS d6
+      |  FROM pd),
+      |si AS (
+      |  SELECT label, CAST(sum(d6) AS BIGINT) AS sd6,
+      |    CAST(count(*) AS BIGINT) AS n
+      |  FROM pt GROUP BY 1),
+      |dc AS (
+      |  SELECT a.label AS la, b.label AS lb,
+      |    sqrt(CAST(sum(CAST(a.c6 - b.c6 AS HUGEINT) * (a.c6 - b.c6))
+      |      AS DOUBLE)) / 1000000 AS dij
+      |  FROM cen a JOIN cen b ON a.i = b.i AND a.label <> b.label
+      |  GROUP BY 1, 2),
+      |ri AS (
+      |  SELECT dc.la AS label,
+      |    max((CAST(sa.sd6 AS DOUBLE) / sa.n / 1000000
+      |      + CAST(sb.sd6 AS DOUBLE) / sb.n / 1000000) / dc.dij) AS r
+      |  FROM dc JOIN si sa ON sa.label = dc.la
+      |  JOIN si sb ON sb.label = dc.lb
+      |  WHERE dc.dij > 0 GROUP BY 1)
+      |SELECT CAST(si.label AS BIGINT) AS label, si.n AS n_vecs,
+      |  floor(CAST(si.sd6 AS DOUBLE) / si.n / 1000000 * 1000000 + 0.5)
+      |    / 1000000 AS s_intra,
+      |  floor(ri.r * 1000000 + 0.5) / 1000000 AS r_max
+      |FROM si JOIN ri ON ri.label = si.label""".stripMargin
+  ) { (s, d) =>
+    val c = Tables.embeddings(s, d)
+      .select(col("vec_id"), col("label"),
+        expr("transform(CAST(embedding AS ARRAY<DOUBLE>), x -> x)")
+          .as("emb"))
+      .cache() // component sums and the distance pass share it
+    val sz = c.select(col("label"), explode(expr(
+        """transform(sequence(0, size(emb) - 1), i ->
+          |  struct(i AS i,
+          |    CAST(floor(emb[i] * 1000000000D + 0.5D) AS BIGINT)
+          |      AS sp))""".stripMargin)).as("t"))
+      .select(col("label"), col("t.i").as("i"), col("t.sp").as("sp"))
+      .groupBy(col("label"), col("i"))
+      .agg(sum(dec(col("sp"))).as("ssp"),
+        count(lit(1)).as("n"))
+    val cen = sz.select(col("label"), col("i"),
+        floor(col("ssp").cast("double") / col("n") / 1000 + 0.5)
+          .cast("long").as("c6"), col("n"))
+      .cache() // broadcast to the point pass; reused by dc pairs
+    val pd = c.join(broadcast(cen.withColumnRenamed("label", "lc")),
+        col("lc") === col("label"))
+      .select(col("vec_id"), col("label"),
+        floor((element_at(col("emb"), (col("i") + 1).cast("int"))
+          - col("c6").cast("double") / 1000000L)
+          * (element_at(col("emb"), (col("i") + 1).cast("int"))
+            - col("c6").cast("double") / 1000000L)
+          * 1000000000L + 0.5).cast("long").as("t9"))
+      .groupBy(col("vec_id"), col("label"))
+      .agg(sum(col("t9")).cast("long").as("d9"))
+    val pt = pd.select(col("label"),
+      floor(sqrt(col("d9").cast("double") / 1000000000L) * 1000000L
+        + 0.5).cast("long").as("d6"))
+    val si = pt.groupBy(col("label"))
+      // decimal from the start (the q304 sse3 int64-headroom class):
+      // 1e-6-grid point distances sum past long near n ~ 1e12
+      .agg(sum(dec(col("d6"))).as("sd6"),
+        count(lit(1)).as("n"))
+    val cb = cen.select(col("label").as("lb"), col("i").as("ib"),
+      col("c6").as("cb6"))
+    val dc = cen.join(cb,
+        col("ib") === col("i") && col("lb") =!= col("label"))
+      .groupBy(col("label").as("la"), col("lb"))
+      .agg((sqrt(sum(dec(col("c6") - col("cb6"))
+        * (col("c6") - col("cb6"))).cast("double")) / 1000000L)
+        .as("dij"))
+    val sa = si.toDF("la", "sda", "na")
+    val sb = si.toDF("lb", "sdb", "nb")
+    val ri = dc.filter(col("dij") > 0)
+      .join(sa, Seq("la")).join(sb, Seq("lb"))
+      .groupBy(col("la").as("label"))
+      .agg(max((col("sda").cast("double") / col("na") / 1000000L
+        + col("sdb").cast("double") / col("nb") / 1000000L)
+        / col("dij")).as("r"))
+    si.join(ri, Seq("label"))
+      .select(col("label").cast("long").as("label"),
+        col("n").as("n_vecs"),
+        (floor(col("sd6").cast("double") / col("n") / 1000000L
+          * 1000000L + 0.5) / 1000000L).as("s_intra"),
+        (floor(col("r") * 1000000L + 0.5) / 1000000L).as("r_max"))
+  }
+
+  /** Calinski-Harabasz index over the label clustering — CH =
+    * (SSB/(k-1)) / (SSW/(n-k)), the between/within variance ratio
+    * (Calinski & Harabasz 1974): the single number that makes two
+    * labelings of the SAME corpus comparable (bigger = tighter,
+    * better-separated clusters). q292 diagnoses pairs; this ranks
+    * the whole partition — the metric a labeling/clustering sweep
+    * optimizes.
+    *
+    * Exactness: SSW is the exact integer sum of q292's per-(point,
+    * dim) 1e-9 deviation cells; SSB = sum_i n_i * ||c_i - g||^2 is
+    * exact decimal algebra on the 1e-6 centroid grid (g is the
+    * n-weighted mean of label centroids on the same grid, so both
+    * engines subtract IDENTICAL integers); one mirrored double ratio.
+    * k < 2 or zero SSW degrade to ch = 0 (stated).
+    *
+    * Scale shape: q292's two passes re-aggregated global — nothing
+    * new touches data; SSB is k x 64 cell algebra. */
+  val q293CalinskiHarabasz: QueryDef = QueryDef.withOracle(
+    """WITH c AS (
+      |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
+      |  FROM embeddings),
+      |sz AS (
+      |  SELECT label, i.i AS i,
+      |    CAST(sum(CAST(floor(emb[i.i + 1] * 1000000000 + 0.5)
+      |      AS BIGINT)) AS BIGINT) AS ssp,
+      |    CAST(count(*) AS BIGINT) AS n
+      |  FROM c, LATERAL (SELECT unnest(range(0, len(emb))) AS i) i
+      |  GROUP BY 1, 2),
+      |cen AS (
+      |  SELECT label, i,
+      |    CAST(floor(CAST(ssp AS DOUBLE) / n / 1000 + 0.5) AS BIGINT)
+      |      AS c6, n
+      |  FROM sz),
+      |gc AS (
+      |  SELECT i,
+      |    CAST(floor(CAST(sum(c6 * n) AS DOUBLE) / sum(n) + 0.5)
+      |      AS BIGINT) AS g6
+      |  FROM cen GROUP BY 1),
+      |ssb AS (
+      |  SELECT sum(CAST(cen.n AS HUGEINT) * (cen.c6 - gc.g6)
+      |    * (cen.c6 - gc.g6)) AS b12
+      |  FROM cen JOIN gc ON gc.i = cen.i),
+      |ssw AS (
+      |  SELECT CAST(sum(CAST(floor((emb[cen.i + 1]
+      |        - CAST(cen.c6 AS DOUBLE) / 1000000)
+      |      * (emb[cen.i + 1] - CAST(cen.c6 AS DOUBLE) / 1000000)
+      |      * 1000000000 + 0.5) AS BIGINT)) AS HUGEINT) AS w9
+      |  FROM c JOIN cen ON cen.label = c.label),
+      |kk AS (
+      |  SELECT CAST(count(DISTINCT label) AS BIGINT) AS k,
+      |    CAST(count(*) AS BIGINT) AS n
+      |  FROM c)
+      |SELECT kk.n AS n_vecs, kk.k AS n_labels,
+      |  floor(CAST(b12 AS DOUBLE) / 1000000000000 * 1000000 + 0.5)
+      |    / 1000000 AS ssb,
+      |  floor(CAST(w9 AS DOUBLE) / 1000000000 * 1000000 + 0.5)
+      |    / 1000000 AS ssw,
+      |  CASE WHEN kk.k < 2 OR w9 <= 0 THEN CAST(0 AS DOUBLE)
+      |    ELSE floor((CAST(b12 AS DOUBLE) / 1000000000000 / (kk.k - 1))
+      |      / (CAST(w9 AS DOUBLE) / 1000000000 / (kk.n - kk.k))
+      |      * 1000000 + 0.5) / 1000000 END AS ch
+      |FROM ssb CROSS JOIN ssw CROSS JOIN kk""".stripMargin
+  ) { (s, d) =>
+    val c = Tables.embeddings(s, d)
+      .select(col("vec_id"), col("label"),
+        expr("transform(CAST(embedding AS ARRAY<DOUBLE>), x -> x)")
+          .as("emb"))
+      .cache()
+    val sz = c.select(col("label"), explode(expr(
+        """transform(sequence(0, size(emb) - 1), i ->
+          |  struct(i AS i,
+          |    CAST(floor(emb[i] * 1000000000D + 0.5D) AS BIGINT)
+          |      AS sp))""".stripMargin)).as("t"))
+      .select(col("label"), col("t.i").as("i"), col("t.sp").as("sp"))
+      .groupBy(col("label"), col("i"))
+      .agg(sum(dec(col("sp"))).as("ssp"), count(lit(1)).as("n"))
+    val cen = sz.select(col("label"), col("i"),
+        floor(col("ssp").cast("double") / col("n") / 1000 + 0.5)
+          .cast("long").as("c6"), col("n"))
+      .cache()
+    val gc = cen.groupBy(col("i"))
+      .agg(floor(sum(col("c6") * col("n")).cast("double")
+        / sum(col("n")) + 0.5).cast("long").as("g6"))
+    val ssb = cen.join(gc, Seq("i"))
+      .agg(sum(dec(col("n")) * (col("c6") - col("g6"))
+        * (col("c6") - col("g6"))).as("b12"))
+    val ssw = c.join(broadcast(cen.withColumnRenamed("label", "lc")),
+        col("lc") === col("label"))
+      .agg(sum(floor((element_at(col("emb"), (col("i") + 1).cast("int"))
+        - col("c6").cast("double") / 1000000L)
+        * (element_at(col("emb"), (col("i") + 1).cast("int"))
+          - col("c6").cast("double") / 1000000L)
+        * 1000000000L + 0.5).cast("long").cast("decimal(38,0)"))
+        .as("w9"))
+    val kk = c.agg(countDistinct(col("label")).as("k"),
+      count(lit(1)).as("n"))
+    ssb.crossJoin(ssw).crossJoin(kk)
+      .select(col("n").as("n_vecs"), col("k").as("n_labels"),
+        (floor(col("b12").cast("double") / 1000000000000L * 1000000L
+          + 0.5) / 1000000L).as("ssb"),
+        (floor(col("w9").cast("double") / 1000000000L * 1000000L + 0.5)
+          / 1000000L).as("ssw"),
+        when(col("k") < 2 || col("w9") <= 0, lit(0.0))
+          .otherwise(floor((col("b12").cast("double") / 1000000000000L
+            / (col("k") - 1))
+            / (col("w9").cast("double") / 1000000000L
+              / (col("n") - col("k")))
+            * 1000000L + 0.5) / 1000000L).as("ch"))
+  }
+
+  /** Label-centroid cosine matrix — cos(c_a, c_b) for every label
+    * pair off the SAME quantized centroid frame as q292/q293: the
+    * direction-space confusion map (which classes point the same way
+    * even when their clouds don't overlap). The embedding-side twin
+    * of q265's token-space cross-entropy matrix, and the map a
+    * label-merge / taxonomy-cleanup decision reads.
+    *
+    * Exactness: dot products and norms are exact decimal sums of
+    * 1e-6-grid centroid ints; one mirrored sqrt-divide per pair;
+    * zero-norm centroids degrade to 0 (stated).
+    *
+    * Scale shape: k x k x 64 pure cell algebra off the cached
+    * centroid frame — no data pass beyond the component sums. */
+  val q294CentroidCosines: QueryDef = QueryDef.withOracle(
+    """WITH c AS (
+      |  SELECT label, CAST(embedding AS DOUBLE[]) AS emb
+      |  FROM embeddings),
+      |sz AS (
+      |  SELECT label, i.i AS i,
+      |    CAST(sum(CAST(floor(emb[i.i + 1] * 1000000000 + 0.5)
+      |      AS BIGINT)) AS BIGINT) AS ssp,
+      |    CAST(count(*) AS BIGINT) AS n
+      |  FROM c, LATERAL (SELECT unnest(range(0, len(emb))) AS i) i
+      |  GROUP BY 1, 2),
+      |cen AS (
+      |  SELECT label, i,
+      |    CAST(floor(CAST(ssp AS DOUBLE) / n / 1000 + 0.5) AS BIGINT)
+      |      AS c6
+      |  FROM sz),
+      |pr AS (
+      |  SELECT a.label AS la, b.label AS lb,
+      |    sum(CAST(a.c6 AS HUGEINT) * b.c6) AS dot,
+      |    sum(CAST(a.c6 AS HUGEINT) * a.c6) AS na,
+      |    sum(CAST(b.c6 AS HUGEINT) * b.c6) AS nb
+      |  FROM cen a JOIN cen b ON b.i = a.i AND a.label < b.label
+      |  GROUP BY 1, 2)
+      |SELECT CAST(la AS BIGINT) AS label_a, CAST(lb AS BIGINT)
+      |    AS label_b,
+      |  CASE WHEN na <= 0 OR nb <= 0 THEN CAST(0 AS DOUBLE)
+      |    ELSE floor(CAST(dot AS DOUBLE)
+      |      / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE)))
+      |      * 1000000 + 0.5) / 1000000 END AS cosine
+      |FROM pr""".stripMargin
+  ) { (s, d) =>
+    val sz = Tables.embeddings(s, d)
+      .select(col("label"),
+        expr("transform(CAST(embedding AS ARRAY<DOUBLE>), x -> x)")
+          .as("emb"))
+      .select(col("label"), explode(expr(
+        """transform(sequence(0, size(emb) - 1), i ->
+          |  struct(i AS i,
+          |    CAST(floor(emb[i] * 1000000000D + 0.5D) AS BIGINT)
+          |      AS sp))""".stripMargin)).as("t"))
+      .select(col("label"), col("t.i").as("i"), col("t.sp").as("sp"))
+      .groupBy(col("label"), col("i"))
+      .agg(sum(dec(col("sp"))).as("ssp"), count(lit(1)).as("n"))
+    val cen = sz.select(col("label"), col("i"),
+      floor(col("ssp").cast("double") / col("n") / 1000 + 0.5)
+        .cast("long").as("c6"))
+    val cb = cen.toDF("lb", "ib", "cb6")
+    val pr = cen.join(cb,
+        col("ib") === col("i") && col("label") < col("lb"))
+      .groupBy(col("label").as("la"), col("lb"))
+      .agg(sum(dec(col("c6")) * col("cb6")).as("dot"),
+        sum(dec(col("c6")) * col("c6")).as("na"),
+        sum(dec(col("cb6")) * col("cb6")).as("nb"))
+    pr.select(col("la").cast("long").as("label_a"),
+      col("lb").cast("long").as("label_b"),
+      when(col("na") <= 0 || col("nb") <= 0, lit(0.0))
+        .otherwise(floor(col("dot").cast("double")
+          / (sqrt(col("na").cast("double")) * sqrt(col("nb")
+            .cast("double"))) * 1000000L + 0.5) / 1000000L)
+        .as("cosine"))
+  }
+
   val all: Map[String, QueryDef] = Map(
     "q56_kmeans" -> q56Kmeans,
-    "q81_semantic_keep" -> q81SemanticKeep
-  )
+    "q81_semantic_keep" -> q81SemanticKeep,
+    "q161_centroid_drift" -> q161CentroidDrift,
+    "q253_silhouette" -> q253Silhouette,
+    "q266_participation_ratio" -> q266ParticipationRatio,
+    "q267_anisotropy" -> q267Anisotropy,
+    "q283_cka_halves" -> q283CkaHalves,
+    "q292_davies_bouldin" -> q292DaviesBouldin,
+    "q293_calinski_harabasz" -> q293CalinskiHarabasz,
+    "q294_centroid_cosines" -> q294CentroidCosines)
 }

@@ -409,7 +409,7 @@ object CurationOps {
     * and the join-back branch re-evaluating the nondeterministic
     * `spark_partition_id` stamp independently (AQE compiles the
     * broadcast side as its own job) can disagree on the assignment
-    * and corrupt the prefix (the q112 overshoot, AnalyticsOps2). */
+    * and corrupt the prefix (the q112 overshoot, Kernels.globalRowNumber). */
   val q91WeightedSample: QueryDef = QueryDef.withOracle(
     """WITH w AS (
       |  SELECT o_orderkey,
@@ -639,7 +639,7 @@ object CurationOps {
       expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), " +
         "16, 10) AS BIGINT)").as("hk"),
       size(split(col("text"), " ", -1)).cast("long").as("n_tok"))
-    val offsets = AnalyticsOps2.groupedPrefixSums(docs, Seq.empty,
+    val offsets = Kernels.groupedPrefixSums(docs, Seq.empty,
       Seq(col("hk"), col("doc_id")), Seq((col("n_tok"), "cum", None)))
     val perChunk = offsets.filter(col("n_tok") > 0)
       .select(explode(sequence(

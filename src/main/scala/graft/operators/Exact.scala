@@ -4,7 +4,25 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The operators' exact-arithmetic conventions, spelled once so engine
-  * and oracle text cannot drift apart between query families. */
+  * and oracle text cannot drift apart between query families.
+  *
+  * The cross-engine rules every query module follows:
+  *   - money is cents-exact (`cents`); time is epoch-µs int64 with
+  *     floordiv-by-construction day math (`epochDay`);
+  *   - counts and moment products accumulate in decimal(38,0) /
+  *     HUGEINT (`dec`) until the one final division;
+  *   - an order-dependent float sum first quantizes each term to a
+  *     fixed-point grid (1e-9), because integer sums are
+  *     merge-order-free;
+  *   - the final IEEE expression is written in the same operation
+  *     order in engine and oracle and floored onto the 1e-6 grid
+  *     (`q6`);
+  *   - irrational constants are shared literals, never cross-engine
+  *     libm calls;
+  *   - `div`/`//` only on non-negative dividends: Spark's `div`
+  *     truncates toward zero, DuckDB's `//` floors;
+  *   - every fractional SQL literal carries an explicit DOUBLE cast
+  *     (DuckDB parses bare decimals as DECIMAL). */
 private[operators] object Exact {
 
   /** decimal(38,0) (DuckDB: HUGEINT): order-independent exact sums. */

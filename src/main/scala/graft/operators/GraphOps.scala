@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exact.{dec, q6}
 
 /** Graph analytics over relational-derived edge lists. The dedup
   * clustering path (DedupCluster) already ships label propagation /
@@ -27,6 +29,10 @@ import org.apache.spark.sql.functions._
   * self-contained stage — at real scale you'd localCheckpoint the
   * rank frame every few rounds exactly as DedupCluster does for its
   * propagation loop.
+  *
+  * HITS hubs and authorities run the same integer-deterministic
+  * recurrence shape; degree assortativity and the rich-club
+  * coefficient read the supplier↔customer and co-purchase edge sets.
   */
 object GraphOps {
 
@@ -713,10 +719,10 @@ object GraphOps {
         expr("aggregate(regs, CAST(0 AS DOUBLE), " +
           "(acc, r) -> acc + pow(CAST(2 AS DOUBLE), -r))").as("s_inv"),
         expr("CAST(size(filter(regs, r -> r = 0)) AS BIGINT)").as("v_zero"))
-      // the ONE shared estimator (AnalyticsOps5.hllEstimate) at the
+      // the ONE shared estimator (Kernels.hllEstimate) at the
       // p = 8 register count, rounded to an integer degree
       .withColumn("deg_est",
-        floor(AnalyticsOps5.hllEstimate(col("s_inv"), col("v_zero"), 256)
+        floor(Kernels.hllEstimate(col("s_inv"), col("v_zero"), 256)
           + 0.5).cast("long"))
       .groupBy((length(bin(col("deg_est"))) - 1).cast("long")
         .as("log2_bucket"))
@@ -1242,6 +1248,285 @@ object GraphOps {
           .as("mean_coef"))
   }
 
+  /** HITS hubs-and-authorities over the supplier→customer bipartite
+    * digraph — the second staple iterative graph score beside q75's
+    * PageRank: PageRank ranks by global random-surfer mass, HITS
+    * separates "good providers" (hubs: suppliers serving
+    * high-authority customers) from "good consumers" (authorities:
+    * customers served by high-hub suppliers) — the two-sided
+    * influence view a marketplace health report wants.
+    *
+    * Determinism (the q75 contract): scores are int64 micro-units;
+    * one half-step is raw(v) = Σ neighbour scores followed by
+    * MAX-normalization score'(v) = raw·10⁶ div max(raw) — every step
+    * integer math (the product lifts to decimal(38,0)/HUGEINT before
+    * the div: raw reaches deg·10⁶ ≈ 10¹⁵ at web-scale degree, and
+    * ×10⁶ would cross int64), so partial-merge order can't perturb a
+    * bit and the same recurrence unrolls as plain SQL. Two full
+    * h→a→h iterations (fixed count, like q75's 3).
+    *
+    * Scale shape per half-step: one join keyed by the edge's source
+    * side against the ≤|nodes| score frame (AQE broadcasts while it
+    * fits) + one aggregate keyed by the other side; the max is a
+    * scalar broadcast. Unlike q75 (3 reuses, where re-deriving beat
+    * checkpointing), the 2-iteration HITS plan reuses the edge list
+    * SEVEN times (both final frames chain through every half-step),
+    * so the distinct pair frame is cached — one lineitem⋈orders
+    * derivation instead of seven; at real scale this is the edge-list
+    * materialization every iterative graph engine starts with. */
+  val q208Hits: QueryDef = QueryDef.withOracle(
+    """WITH pair AS (
+      |  SELECT DISTINCT l_suppkey AS s, o_custkey AS c
+      |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+      |a1r AS (
+      |  SELECT c, CAST(count(*) AS HUGEINT) * 1000000 AS r
+      |  FROM pair GROUP BY c),
+      |a1 AS (
+      |  SELECT c, CAST(r * 1000000 // (SELECT max(r) FROM a1r)
+      |    AS BIGINT) AS a FROM a1r),
+      |h1r AS (
+      |  SELECT pair.s, CAST(sum(a1.a) AS HUGEINT) AS r
+      |  FROM pair JOIN a1 USING (c) GROUP BY pair.s),
+      |h1 AS (
+      |  SELECT s, CAST(r * 1000000 // (SELECT max(r) FROM h1r)
+      |    AS BIGINT) AS h FROM h1r),
+      |a2r AS (
+      |  SELECT pair.c, CAST(sum(h1.h) AS HUGEINT) AS r
+      |  FROM pair JOIN h1 USING (s) GROUP BY pair.c),
+      |a2 AS (
+      |  SELECT c, CAST(r * 1000000 // (SELECT max(r) FROM a2r)
+      |    AS BIGINT) AS a FROM a2r),
+      |h2r AS (
+      |  SELECT pair.s, CAST(sum(a2.a) AS HUGEINT) AS r
+      |  FROM pair JOIN a2 USING (c) GROUP BY pair.s),
+      |h2 AS (
+      |  SELECT s, CAST(r * 1000000 // (SELECT max(r) FROM h2r)
+      |    AS BIGINT) AS h FROM h2r)
+      |SELECT 'hub' AS role, s AS node, h AS score_micro FROM h2
+      |UNION ALL
+      |SELECT 'authority' AS role, c AS node, a AS score_micro FROM a2"""
+      .stripMargin
+  ) { (s, d) =>
+    val pair = Tables.lineitem(s, d)
+      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
+      .select(col("l_suppkey").as("s"), col("o_custkey").as("c"))
+      .distinct()
+    hits(pair, iterations = 2)
+  }
+
+  /** q208's integer HITS over an (s, c) bipartite edge list: `iterations`
+    * full h→a→h rounds after the uniform-hub start (so iteration 1's
+    * first half-step is a(c) ∝ in-degree). Returns the final hub and
+    * authority frames unioned with a role column. */
+  private[operators] def hits(pairIn: DataFrame, iterations: Int): DataFrame = {
+    val pair = pairIn.cache() // reused by every half-step (see above)
+    def normalize(rawIn: DataFrame, key: String, out: String): DataFrame = {
+      // the raw score frame is referenced TWICE (max probe + the
+      // normalizing join) and every later half-step chains through
+      // it — uncached, each reference re-embeds the entire prior
+      // chain (2^depth recompute; the q75 lineage lesson). Caching
+      // the ≤|nodes| state per half-step keeps the plan linear.
+      val raw = rawIn.cache()
+      val mx = raw.agg(max(col("r")).as("mx"))
+      raw.crossJoin(broadcast(mx))
+        .select(col(key),
+          expr("CAST((CAST(r AS DECIMAL(38,0)) * 1000000) div mx AS BIGINT)")
+            .as(out))
+    }
+    var h = pair.select(col("s")).distinct()
+      .withColumn("h", lit(1000000L))
+    var a: DataFrame = null
+    for (_ <- 1 to iterations) {
+      a = normalize(
+        pair.join(h, Seq("s"))
+          .groupBy(col("c")).agg(sum(col("h")).as("r")), "c", "a")
+      h = normalize(
+        pair.join(a, Seq("c"))
+          .groupBy(col("s")).agg(sum(col("a")).as("r")), "s", "h")
+    }
+    h.select(lit("hub").as("role"), col("s").as("node"),
+      col("h").as("score_micro"))
+      .unionByName(a.select(lit("authority").as("role"),
+        col("c").as("node"), col("a").as("score_micro")))
+  }
+
+  /** Degree assortativity of the supplier↔customer graph (q75's edge
+    * set): the Pearson correlation of end degrees over the directed
+    * edge list — positive means hubs wire to hubs, negative means
+    * hub-and-spoke. q148's degree histogram says WHAT degrees exist;
+    * this says how they MIX, which decides whether q73-style salting
+    * or q180's skew audit will find one mega-join or many (the
+    * networkx degree-Pearson convention, both orientations counted).
+    *
+    * Exactness: degrees are exact counts; the five moment sums over
+    * edges accumulate in decimal (Σd² reaches E·d_max² ≈ 1e30 on a
+    * hub-heavy fleet graph); r is one double chain floored 1e-6; a
+    * degree-regular graph (zero variance) degrades to 0 (stated).
+    *
+    * Scale shape: one edge build (the q75 join) → degree rollup →
+    * two node-keyed equi-joins attach end degrees → one 5-number
+    * aggregate. By symmetry of the bidirectional list the two margin
+    * moments coincide — computed once. */
+  val q269Assortativity: QueryDef = QueryDef.withOracle(
+    """WITH pair AS (
+      |  SELECT DISTINCT l_suppkey * 2 AS s, o_custkey * 2 + 1 AS c
+      |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+      |e AS (
+      |  SELECT s AS src, c AS dst FROM pair
+      |  UNION
+      |  SELECT c AS src, s AS dst FROM pair),
+      |deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS d
+      |        FROM e GROUP BY 1),
+      |ed AS (
+      |  SELECT ds.d AS x, dd.d AS y
+      |  FROM e JOIN deg ds ON ds.node = e.src
+      |  JOIN deg dd ON dd.node = e.dst),
+      |m AS (
+      |  SELECT CAST(count(*) AS BIGINT) AS ne,
+      |    sum(CAST(x AS HUGEINT)) AS sx,
+      |    sum(CAST(x AS HUGEINT) * x) AS sxx,
+      |    sum(CAST(x AS HUGEINT) * y) AS sxy
+      |  FROM ed),
+      |nn AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM deg)
+      |SELECT n_nodes, ne // 2 AS n_edges,
+      |  CASE WHEN CAST(ne AS HUGEINT) * sxx - sx * sx = 0
+      |    THEN CAST(0 AS DOUBLE)
+      |    ELSE floor((CAST(CAST(ne AS HUGEINT) * sxy - sx * sx
+      |        AS DOUBLE)
+      |      / CAST(CAST(ne AS HUGEINT) * sxx - sx * sx AS DOUBLE))
+      |      * 1000000 + 0.5) / 1000000 END AS assortativity
+      |FROM m CROSS JOIN nn""".stripMargin
+  ) { (s, d) =>
+    val pair = Tables.lineitem(s, d)
+      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
+      .select((col("l_suppkey") * 2).as("s"),
+        (col("o_custkey") * 2 + 1).as("c"))
+      .distinct()
+    // both directions emit map-side off the DISTINCT (s, c) frame:
+    // supplier and customer ids live in disjoint namespaces (2k vs
+    // 2k+1), so the mirrored stream is distinct by construction and
+    // the old union + second global distinct exchange bought nothing
+    // (r13 port; guide §2.4)
+    val e = pair.select(explode(array(
+        struct(col("s").as("src"), col("c").as("dst")),
+        struct(col("c").as("src"), col("s").as("dst")))).as("x"))
+      .select(col("x.src").as("src"), col("x.dst").as("dst"))
+      .cache() // edge list feeds the degree rollup and both attaches
+    val deg = e.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).cast("long").as("d"))
+    val ed = e.join(deg.toDF("src", "x"), Seq("src"))
+      .join(deg.toDF("dst", "y"), Seq("dst"))
+      .select(col("x"), col("y"))
+    val m = ed.agg(count(lit(1)).as("ne"),
+      sum(dec(col("x"))).as("sx"),
+      sum(dec(col("x")) * col("x")).as("sxx"),
+      sum(dec(col("x")) * col("y")).as("sxy"))
+    val nn = deg.agg(count(lit(1)).as("n_nodes"))
+    val varX = dec(col("ne")) * col("sxx") - col("sx") * col("sx")
+    m.crossJoin(broadcast(nn))
+      .select(col("n_nodes"), (col("ne") / 2).cast("long").as("n_edges"),
+        when(varX === dec(lit(0)), lit(0.0))
+          .otherwise(floor(((dec(col("ne")) * col("sxy")
+            - col("sx") * col("sx")).cast("double")
+            / varX.cast("double")) * 1000000L + 0.5) / 1000000L)
+          .as("assortativity"))
+  }
+
+  /** Rich-club coefficient of the co-purchase graph at degree
+    * thresholds k in {1,2,4,8,16,32} — phi(k) = 2*E_k / (N_k(N_k-1))
+    * where N_k counts nodes of degree > k and E_k edges with BOTH
+    * endpoints of degree > k (Zhou & Mondragon 2004). A rising phi(k)
+    * says hubs preferentially interlink — the "popular parts all
+    * co-sell with each other" structure that q148's degree histogram
+    * (no linking info) and q227's local clustering (per-node, not
+    * stratified by degree) both miss; in curation terms it is the
+    * spam-ring / coordinated-boilerplate shape at the source-graph
+    * level.
+    *
+    * Exactness: pure integer counting — degrees, threshold rollups,
+    * and edge-minimum-degree cells are exact; one double phi per
+    * threshold row, quantized 1e-6. Thresholds with N_k < 2 are
+    * dropped (phi undefined; stated).
+    *
+    * Scale shape: the q227 edge list (distinct bipartite projection,
+    * fan-out capped 2..1000, pair support >= 2 — the pair join is the
+    * documented q86-class candidate generator); degrees are one agg
+    * over edges; E_k needs NO per-k edge pass — edges collapse to
+    * min-degree cells (<= |distinct degrees| rows) and each of the 6
+    * thresholds sums cells above it, same for N_k over the degree
+    * histogram. Everything after the edge list is metadata-sized cell
+    * algebra. */
+  val q280RichClub: QueryDef = QueryDef.withOracle(
+    """WITH bp AS (
+      |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+      |ok AS (SELECT o FROM bp GROUP BY o
+      |  HAVING count(*) BETWEEN 2 AND 1000),
+      |qb AS (SELECT bp.o, bp.p FROM bp JOIN ok USING (o)),
+      |pc AS (
+      |  SELECT a.p AS u, b.p AS v, count(*) AS n
+      |  FROM qb a JOIN qb b ON a.o = b.o AND a.p < b.p
+      |  GROUP BY 1, 2),
+      |e AS (SELECT u, v FROM pc WHERE n >= 2),
+      |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS d FROM
+      |  (SELECT u AS node FROM e UNION ALL SELECT v AS node FROM e)
+      |  GROUP BY 1),
+      |em AS (
+      |  SELECT least(du.d, dv.d) AS m, count(*) AS cnt
+      |  FROM e JOIN deg du ON du.node = e.u JOIN deg dv ON dv.node = e.v
+      |  GROUP BY 1),
+      |dn AS (SELECT d, count(*) AS cnt FROM deg GROUP BY 1),
+      |ks AS (SELECT unnest([1, 2, 4, 8, 16, 32]) AS k),
+      |nk AS (
+      |  SELECT ks.k, CAST(sum(CASE WHEN dn.d > ks.k THEN dn.cnt ELSE 0
+      |    END) AS BIGINT) AS n_nodes
+      |  FROM ks CROSS JOIN dn GROUP BY 1),
+      |ek AS (
+      |  SELECT ks.k, CAST(sum(CASE WHEN em.m > ks.k THEN em.cnt ELSE 0
+      |    END) AS BIGINT) AS n_edges
+      |  FROM ks CROSS JOIN em GROUP BY 1)
+      |SELECT CAST(nk.k AS BIGINT) AS k, nk.n_nodes,
+      |  coalesce(ek.n_edges, 0) AS n_edges,
+      |  floor(2.0 * coalesce(ek.n_edges, 0)
+      |    / (CAST(nk.n_nodes AS DOUBLE) * (nk.n_nodes - 1))
+      |    * 1000000 + 0.5) / 1000000 AS phi
+      |FROM nk LEFT JOIN ek ON ek.k = nk.k
+      |WHERE nk.n_nodes >= 2""".stripMargin
+  ) { (s, d) =>
+    // the edge list IS q86's capped map-side pair generator (r13
+    // port; guide §2.4) — the old inline distinct / sizes / join-back
+    // / self-join chain re-paid four data-sized exchanges for it
+    val e = GraphOps.basketPairs(s, d).filter(col("n_orders") >= 2)
+      .select(col("part_a").as("u"), col("part_b").as("v"))
+      .cache() // edge list reused by the degree agg and the em cells
+    val deg = e.select(col("u").as("node"))
+      .union(e.select(col("v").as("node")))
+      .groupBy(col("node")).agg(count(lit(1)).as("d"))
+    val du = deg.toDF("u", "du")
+    val dv = deg.toDF("v", "dv")
+    val em = e.join(du, Seq("u")).join(dv, Seq("v"))
+      .groupBy(least(col("du"), col("dv")).as("m"))
+      .agg(count(lit(1)).as("cnt"))
+    val dn = deg.groupBy(col("d")).agg(count(lit(1)).as("cnt"))
+    val ks = s.createDataFrame(Seq(Tuple1(1L), Tuple1(2L), Tuple1(4L),
+      Tuple1(8L), Tuple1(16L), Tuple1(32L))).toDF("k")
+    val nk = broadcast(ks).crossJoin(dn)
+      .groupBy(col("k"))
+      .agg(sum(when(col("d") > col("k"), col("cnt")).otherwise(0L))
+        .cast("long").as("n_nodes"))
+    val ek = broadcast(ks).crossJoin(em)
+      .groupBy(col("k"))
+      .agg(sum(when(col("m") > col("k"), col("cnt")).otherwise(0L))
+        .cast("long").as("n_edges"))
+    nk.join(ek.withColumnRenamed("k", "k2"), col("k2") === col("k"),
+        "left")
+      .filter(col("n_nodes") >= 2)
+      .select(col("k"), col("n_nodes"),
+        coalesce(col("n_edges"), lit(0L)).as("n_edges"),
+        q6(lit(2.0) * coalesce(col("n_edges"), lit(0L))
+          / (col("n_nodes").cast("double") * (col("n_nodes") - 1)))
+          .as("phi"))
+  }
+
   val all: Map[String, QueryDef] = Map(
     "q148_degree_dist" -> q148DegreeDist,
     "q198_recommend_sampled" -> q198RecommendSampled,
@@ -1255,6 +1540,8 @@ object GraphOps {
     "q86_copurchase" -> q86Copurchase,
     "q101_khop" -> q101Khop,
     "q102_item_sim" -> q102ItemSim,
-    "q108_assoc_rules" -> q108AssocRules
-  )
+    "q108_assoc_rules" -> q108AssocRules,
+    "q208_hits" -> q208Hits,
+    "q269_assortativity" -> q269Assortativity,
+    "q280_rich_club" -> q280RichClub)
 }

@@ -36,7 +36,7 @@ object LayoutOps {
     *
     * Scale shape: each layout's file assignment is a GLOBAL rank —
     * which rides the two-phase range-partitioned prefix
-    * ([[AnalyticsOps2.globalRowNumber]]), never a single-task window
+    * ([[Kernels.globalRowNumber]]), never a single-task window
     * — followed by one integer floordiv into 64 equal-row files
     * (rank·64 div n; the row-count scalar is a broadcast, the q168
     * pattern). Everything after the two per-(layout, file) min/max
@@ -110,7 +110,7 @@ object LayoutOps {
         graft.functions.LayoutExpressions.morton(col("x"), col("y")))
     val n = base.agg(count(lit(1)).as("n"))
     def layoutFiles(name: String, sortCols: Seq[Column]) =
-      AnalyticsOps2.globalRowNumber(base, sortCols, "rn")
+      Kernels.globalRowNumber(base, sortCols, "rn")
         .crossJoin(broadcast(n))
         .select(lit(name).as("layout"),
           expr("((rn - 1) * 64) div n").as("f"), col("x"), col("y"))
@@ -126,7 +126,7 @@ object LayoutOps {
     // halves the spill-bound sort, leaving only the linear side,
     // whose sort key t is row-unique: cells = rows, no collapse
     // exists). Oracle keeps the row-level form.
-    val zfiles = AnalyticsOps2.groupedPrefixSums(
+    val zfiles = Kernels.groupedPrefixSums(
         base.groupBy(col("morton"), col("x"), col("y"))
           .agg(count(lit(1)).as("cnt")),
         Seq.empty, Seq(col("morton")), Seq((col("cnt"), "cum", None)))
@@ -237,7 +237,7 @@ object LayoutOps {
       expr("CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 15), " +
         "16, 10) AS BIGINT)").as("h"))
     val n = base.agg(count(lit(1)).as("n"))
-    val fl = AnalyticsOps2.globalRowNumber(base,
+    val fl = Kernels.globalRowNumber(base,
         Seq(col("t"), col("event_id")), "rn")
       .crossJoin(broadcast(n))
       .select(col("user_id"), col("h"), expr("((rn - 1) * 64) div n").as("f"))
@@ -490,7 +490,7 @@ object LayoutOps {
       .cache()
     val n = cells.agg(sum(col("cnt")).as("n"))
     def files(name: String, key: Column) =
-      AnalyticsOps2.groupedPrefixSums(
+      Kernels.groupedPrefixSums(
         cells.select(key.as("k"), col("x"), col("y"), col("cnt")),
         Seq.empty, Seq(col("k")), Seq((col("cnt"), "cum", None)))
         .crossJoin(broadcast(n))

@@ -336,7 +336,7 @@ object RankingOps {
       |FROM top""".stripMargin
   ) { (s, d) =>
     import graft.functions.VectorExpressions
-    val rt = AnalyticsOps2.globalRowNumber(
+    val rt = Kernels.globalRowNumber(
       bm25Agg(s, d, Seq("spark", "window", "join")).select("doc_id", "s_fp"),
       Seq(col("s_fp").desc, col("doc_id")), "rt")
     val c = Tables.embeddings(s, d)
@@ -345,7 +345,7 @@ object RankingOps {
       .select(col("vec_id"),
         round(VectorExpressions.cosine(col("q_emb"), col("embedding")), 6)
           .as("cosine"))
-    val rv = AnalyticsOps2.globalRowNumber(
+    val rv = Kernels.globalRowNumber(
       sv, Seq(col("cosine").desc, col("vec_id")), "rv")
     val fused = rt.select(col("doc_id"), col("rt"))
       .join(rv.select(col("vec_id"), col("rv")),
@@ -354,7 +354,7 @@ object RankingOps {
         col("rt"), col("rv"),
         (coalesce(lit(1.0) / (lit(60) + col("rt")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(60) + col("rv")), lit(0.0))).as("rrf"))
-    AnalyticsOps2.topKByCount(fused,
+    Kernels.topKByCount(fused,
         Seq(col("rrf").desc, col("id")), 10, Some("rank"))
       .withColumn("rank", col("rank").cast("long"))
       .select(col("rank"), col("id"), coalesce(col("rt"), lit(0L)).as("rt"),

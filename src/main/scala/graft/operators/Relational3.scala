@@ -607,7 +607,7 @@ object Relational3 {
     // reference): with value = 1 the grouped prefix IS the per-step
     // row_number, and totalOut carries n — same range-partitioned /
     // broadcast-offset plan the hand-rolled r8 version built inline
-    val r = AnalyticsOps2.groupedPrefixSum(lat, Seq("step"),
+    val r = Kernels.groupedPrefixSum(lat, Seq("step"),
       Seq(col("lat_us"), col("user_id")), lit(1L), "rn", "n")
     // n rides the already-reduced median picks (it is constant per
     // step and every picked row carries it) — a groupBy over the full

@@ -4,22 +4,54 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import Exact.epochDay
+import Exact.{dec, epochDay}
+import Kernels.hllEstimate
 
-/** Round-9 analytics tranche: mergeable-sketch distinct counting,
-  * behavioral transition/debounce/retention reports, distribution
-  * drift, and rank-migration — each chosen to exercise a scale
-  * primitive the 100 TB engine needs (HLL registers, user-keyed
-  * windows, token-keyed smoothed divergence, the N-measure two-phase
-  * prefix over a 2-value group).
+/** Sketches, samples and cardinality estimates: the synopses a
+  * 100 TB engine answers from instead of exact scans, each printed
+  * beside (or calibrated against) its exact answer — HyperLogLog
+  * distinct counts, rolling distincts and overlap algebra, count-min
+  * and heavy hitters, log-linear histogram and KLL quantiles,
+  * equi-depth bins, weighted sampling without replacement, Neyman
+  * allocation, Kish effective sample size, capture-recapture, and the
+  * estimates a cost-based planner runs on (join fan-out, selectivity).
   *
-  * Cross-engine conventions throughout: cents-exact money, epoch-µs
-  * int64 time with floordiv-by-construction day math (the q143 pmod
-  * guard), quantize-then-sum for float folds (1e-9 fixed point), and
-  * explicit DOUBLE casts on every fractional SQL literal (DuckDB
-  * parses bare decimals as DECIMAL, not DOUBLE).
+  * Every HLL consumer estimates through `Kernels.hllEstimate`.
+  * `kllEstimatesFrame` is also dumped by Verify, so q196's Spark
+  * query and its DuckDB oracle read the same estimate bytes. The
+  * cross-engine arithmetic rules are `Exact`'s.
   */
-object AnalyticsOps5 {
+object SketchOps {
+
+  /** Equi-depth feature binning: per language, 4 document-count-equal
+    * buckets of n_chars with per-bucket count and bounds — the
+    * feature-engineering discretizer (quantile binning with EXACT
+    * bucket populations, where q74's sketch gives approximate
+    * boundaries). `ntile` semantics are pinned by ANSI (larger
+    * buckets first, assignment by the total order) and the
+    * (n_chars, doc_id) tiebreak makes the order total, so both
+    * engines bin identically. Scale: one window per group — fine
+    * while groups are many/balanced; for few huge groups the scale
+    * path is q74's sketch boundaries + a map-side bucket lookup, and
+    * this operator IS the exactness reference for that. */
+  val q96EquidepthBins: QueryDef = QueryDef.withOracle(
+    """WITH b AS (
+      |  SELECT lang, n_chars,
+      |    ntile(4) OVER (PARTITION BY lang ORDER BY n_chars, doc_id)
+      |      AS bucket
+      |  FROM documents)
+      |SELECT lang, CAST(bucket AS BIGINT) AS bucket, count(*) AS n,
+      |  min(n_chars) AS lo, max(n_chars) AS hi
+      |FROM b GROUP BY 1, 2""".stripMargin
+  ) { (s, d) =>
+    val w = Window.partitionBy(col("lang")).orderBy(col("n_chars"), col("doc_id"))
+    Tables.documents(s, d)
+      .select(col("lang"), col("n_chars"),
+        ntile(4).over(w).cast("long").as("bucket"))
+      .groupBy(col("lang"), col("bucket"))
+      .agg(count(lit(1)).as("n"),
+        min(col("n_chars")).as("lo"), max(col("n_chars")).as("hi"))
+  }
 
   /** Per-source distinct-document estimate from the mergeable
     * HyperLogLog register sketch (`SketchAggregates.HllRegisters`,
@@ -95,352 +127,6 @@ object AnalyticsOps5 {
       .select(col("source"), col("n_exact"), col("v_zero"), col("hll_est"),
         (abs(col("hll_est") - col("n_exact").cast("double")) /
           col("n_exact")).as("rel_err"))
-  }
-
-  /** First-order Markov transition matrix of event types — the
-    * behavioral fingerprint report (which action follows which, and
-    * with what probability) that sits upstream of q114's top path
-    * strings. Transitions are (event, NEXT event by the same user in
-    * (ts, event_id) order); probability is row-normalized by the
-    * from-type margin.
-    *
-    * Scale shape: ONE user-keyed exchange for the lead window (user
-    * cardinality parallelism), then a partial+final rollup onto the
-    * ≤ |types|² = 25-key domain; the margin attach is a broadcast of
-    * the ≤5-row from-type frame. The probability is one IEEE division
-    * of exact int64 counts. */
-  val q155MarkovTransitions: QueryDef = QueryDef.withOracle(
-    """WITH o AS (
-      |  SELECT user_id, event_type,
-      |    lead(event_type) OVER (PARTITION BY user_id
-      |      ORDER BY ts, event_id) AS next_type
-      |  FROM events),
-      |t AS (
-      |  SELECT event_type AS from_type, next_type AS to_type,
-      |    count(*) AS n
-      |  FROM o WHERE next_type IS NOT NULL GROUP BY 1, 2),
-      |f AS (
-      |  SELECT from_type, CAST(sum(n) AS BIGINT) AS n_from
-      |  FROM t GROUP BY 1)
-      |SELECT from_type, to_type, n, n_from,
-      |  CAST(n AS DOUBLE) / n_from AS p
-      |FROM t JOIN f USING (from_type)""".stripMargin
-  ) { (s, d) =>
-    val o = Tables.events(s, d).select(col("user_id"), col("event_type"),
-      lead(col("event_type"), 1).over(
-        Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))).as("next_type"))
-    val t = o.filter(col("next_type").isNotNull)
-      .groupBy(col("event_type").as("from_type"),
-        col("next_type").as("to_type"))
-      .agg(count(lit(1)).as("n"))
-    val f = t.groupBy(col("from_type")).agg(sum(col("n")).as("n_from"))
-    t.join(broadcast(f), Seq("from_type"))
-      .select(col("from_type"), col("to_type"), col("n"), col("n_from"),
-        (col("n").cast("double") / col("n_from")).as("p"))
-  }
-
-  /** Debounce report — how many events a 5-second same-(user, type)
-    * suppression window would drop, per type: the batch twin of the
-    * streaming dedup-within-watermark stage (ST5's cousin), and the
-    * number a pipeline owner reads before turning such a filter on.
-    * An event is suppressed when the PREVIOUS event of the same
-    * (user, type) is < 5 s older (lag-based — the one-window
-    * definition; a kept-state debounce would be iterative and is
-    * exactly what the streaming path's mapGroupsWithState does).
-    *
-    * Scale shape: ONE (user, type)-keyed exchange for the lag window,
-    * then a partial+final rollup onto the ≤5-row type domain. All
-    * arithmetic is int64 µs. */
-  val q156Debounce: QueryDef = QueryDef.withOracle(
-    """WITH o AS (
-      |  SELECT event_type,
-      |    CAST(epoch_us(ts) AS BIGINT) AS ts_us,
-      |    lag(CAST(epoch_us(ts) AS BIGINT)) OVER (
-      |      PARTITION BY user_id, event_type
-      |      ORDER BY ts, event_id) AS prev_us
-      |  FROM events)
-      |SELECT event_type, count(*) AS n_total,
-      |  CAST(sum(CASE WHEN prev_us IS NOT NULL
-      |    AND ts_us - prev_us < 5000000 THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS n_suppressed,
-      |  CAST(count(*) - sum(CASE WHEN prev_us IS NOT NULL
-      |    AND ts_us - prev_us < 5000000 THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS n_kept
-      |FROM o GROUP BY 1""".stripMargin
-  ) { (s, d) =>
-    val o = Tables.events(s, d).select(col("event_type"),
-      unix_micros(col("ts")).as("ts_us"),
-      lag(unix_micros(col("ts")), 1).over(
-        Window.partitionBy(col("user_id"), col("event_type"))
-          .orderBy(col("ts"), col("event_id"))).as("prev_us"))
-    val supp = when(col("prev_us").isNotNull &&
-      col("ts_us") - col("prev_us") < 5000000L, 1L).otherwise(0L)
-    o.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_total"), sum(supp).as("n_suppressed"))
-      .select(col("event_type"), col("n_total"), col("n_suppressed"),
-        (col("n_total") - col("n_suppressed")).as("n_kept"))
-  }
-
-  /** Cohort retention triangle — users grouped by their FIRST active
-    * day, counted as retained in each subsequent week-index: the
-    * table every growth dashboard draws as the retention staircase
-    * (q106 reports daily churn states; this is the cohort-relative
-    * view).
-    *
-    * Scale shape: one (user, day) dedup aggregate (map-side
-    * pre-combine), one user-keyed min for the cohort, one user-keyed
-    * equi-join back, and a rollup onto the (cohort-days × weeks)
-    * domain — calendar-bounded, metadata-sized output. Day and week
-    * indexes are floordiv-by-construction int64. */
-  val q157RetentionTriangle: QueryDef = QueryDef.withOracle(
-    """WITH du AS (
-      |  SELECT DISTINCT user_id,
-      |    CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day
-      |  FROM events),
-      |c AS (SELECT user_id, min(day) AS cohort FROM du GROUP BY 1)
-      |SELECT c.cohort AS cohort_day,
-      |  CAST((du.day - c.cohort) // 7 AS BIGINT) AS wk,
-      |  count(DISTINCT du.user_id) AS n_users
-      |FROM du JOIN c USING (user_id)
-      |GROUP BY 1, 2""".stripMargin
-  ) { (s, d) =>
-    val du = Tables.events(s, d)
-      .select(col("user_id"), epochDay(unix_micros(col("ts"))).as("day"))
-      .distinct()
-      .cache() // one events scan + dedup exchange feeds BOTH the
-               // cohort margin and the join's probe side
-    val c = du.groupBy(col("user_id")).agg(min(col("day")).as("cohort"))
-    du.join(c, Seq("user_id"))
-      .groupBy(col("cohort").as("cohort_day"),
-        // day - cohort >= 0 by construction, so div == floordiv here
-        expr("(day - cohort) div 7").as("wk"))
-      .agg(countDistinct(col("user_id")).as("n_users"))
-  }
-
-  /** Smoothed unigram KL divergence of each source's token
-    * distribution from the corpus distribution — the drift score
-    * curation uses to spot a source whose language shifted (q117's χ²
-    * is binned counts; this is the full-vocabulary divergence). Add-1
-    * smoothing over the corpus vocabulary, so absent tokens
-    * contribute their mass too (the dense |V|×|sources| term table —
-    * sources are a handful, the vocabulary is Heaps-bounded).
-    *
-    * Parity: p and q are ratios of EXACT int64 counts, the term
-    * p·ln(p/q) is the same IEEE sequence in both engines, each term
-    * quantizes to 1e-9 fixed point BEFORE summing (signed terms — KL
-    * is a sum of both signs that only totals nonnegative), and the
-    * per-source sum is int64 — order-free. The final kl is one IEEE
-    * division.
-    *
-    * Scale shape: token explode → (source, token) partial+final
-    * counts → corpus margin by token-keyed rollup of THAT frame (no
-    * second corpus scan) → vocab × sources dense frame via broadcast
-    * of the ≤20-row source margin; the term sum rides one
-    * source-keyed rollup. */
-  val q158UnigramKl: QueryDef = QueryDef.withOracle(
-    """WITH st AS (
-      |  SELECT source, unnest(string_split(text, ' ')) AS tok
-      |  FROM documents),
-      |sc AS (
-      |  SELECT source, tok, count(*) AS c_s FROM st GROUP BY 1, 2),
-      |tc AS (
-      |  SELECT tok, CAST(sum(c_s) AS BIGINT) AS c FROM sc GROUP BY 1),
-      |sm AS (
-      |  SELECT source, CAST(sum(c_s) AS BIGINT) AS n_s FROM sc GROUP BY 1),
-      |gl AS (
-      |  SELECT CAST(sum(c) AS BIGINT) AS n,
-      |    CAST(count(*) AS BIGINT) AS v FROM tc),
-      |dense AS (
-      |  SELECT sm.source, tc.tok, sm.n_s, tc.c, gl.n, gl.v,
-      |    coalesce(sc.c_s, 0) AS c_s
-      |  FROM tc CROSS JOIN sm CROSS JOIN gl
-      |  LEFT JOIN sc ON sc.source = sm.source AND sc.tok = tc.tok),
-      |terms AS (
-      |  SELECT source, n_s,
-      |    CAST(floor(
-      |      (CAST(c_s + 1 AS DOUBLE) / (n_s + v)) *
-      |      ln((CAST(c_s + 1 AS DOUBLE) / (n_s + v)) /
-      |         (CAST(c + 1 AS DOUBLE) / (n + v)))
-      |      * 1000000000 + 0.5) AS BIGINT) AS term_fp
-      |  FROM dense)
-      |SELECT source, max(n_s) AS n_tokens,
-      |  CAST(sum(term_fp) AS BIGINT) AS kl_fp,
-      |  CAST(sum(term_fp) AS DOUBLE) / 1000000000 AS kl
-      |FROM terms GROUP BY 1""".stripMargin
-  ) { (s, d) =>
-    val st = Tables.documents(s, d)
-      .select(col("source"), explode(split(col("text"), " ", -1)).as("tok"))
-    // ONE corpus pass: tc/sm/gl and the dense join all derive from
-    // this compact (source, tok, c_s) aggregate — uncached, each
-    // branch re-exploded the corpus (4 parquet scans in the plan)
-    val sc = st.groupBy(col("source"), col("tok"))
-      .agg(count(lit(1)).as("c_s"))
-      .cache()
-    val tc = sc.groupBy(col("tok")).agg(sum(col("c_s")).as("c"))
-    val sm = sc.groupBy(col("source")).agg(sum(col("c_s")).as("n_s"))
-    val gl = tc.agg(sum(col("c")).as("n"), count(lit(1)).as("v"))
-    val p = (col("c_s") + 1).cast("double") / (col("n_s") + col("v"))
-    val q = (col("c") + 1).cast("double") / (col("n") + col("v"))
-    tc.crossJoin(broadcast(sm)).crossJoin(broadcast(gl))
-      .join(sc, Seq("source", "tok"), "left")
-      .na.fill(0L, Seq("c_s"))
-      .select(col("source"), col("n_s"),
-        floor(p * log(p / q) * 1000000000L + 0.5).cast("long").as("term_fp"))
-      .groupBy(col("source"))
-      .agg(max(col("n_s")).as("n_tokens"), sum(col("term_fp")).as("kl_fp"))
-      .select(col("source"), col("n_tokens"), col("kl_fp"),
-        (col("kl_fp").cast("double") / 1000000000L).as("kl"))
-  }
-
-  /** Customer spend-decile migration matrix between the early and
-    * late halves of the order history — who moved up, who churned
-    * down, the panel-analysis table behind "net revenue retention by
-    * segment". The period split is the exact midpoint of the epoch-µs
-    * date range (int floordiv, engine-neutral); deciles are exact
-    * integer cuts over each period's global spend rank.
-    *
-    * Scale shape: the per-period spend rollup is customer-keyed
-    * (partial+final); the per-period GLOBAL rank is the q132 class —
-    * `period` has exactly TWO values, so a Window.partitionBy(period)
-    * would sort both populations through two single reducers — and
-    * therefore runs the GROUPED two-phase range-partitioned prefix
-    * (groupedPrefixSum with period leading the range key, the tested
-    * N-measure helper); the early↔late pairing is one customer-keyed
-    * equi-join; the matrix rollup lands on the ≤100-cell domain. */
-  val q159DecileMigration: QueryDef = QueryDef.withOracle(
-    """WITH mid AS (
-      |  SELECT (min(CAST(epoch_us(o_orderdate) AS BIGINT)) +
-      |          max(CAST(epoch_us(o_orderdate) AS BIGINT))) // 2 AS m
-      |  FROM orders),
-      |pc AS (
-      |  SELECT CASE WHEN CAST(epoch_us(o_orderdate) AS BIGINT) < mid.m
-      |      THEN 'early' ELSE 'late' END AS period,
-      |    o_custkey,
-      |    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-      |      AS BIGINT) AS cents
-      |  FROM orders CROSS JOIN mid GROUP BY 1, 2),
-      |r AS (
-      |  SELECT period, o_custkey, cents,
-      |    row_number() OVER (PARTITION BY period
-      |      ORDER BY cents, o_custkey) AS rn,
-      |    count(*) OVER (PARTITION BY period) AS np
-      |  FROM pc),
-      |dd AS (
-      |  SELECT period, o_custkey,
-      |    CAST((rn - 1) * 10 // np AS BIGINT) AS dec FROM r)
-      |SELECT e.dec AS d_early, l.dec AS d_late,
-      |  count(*) AS n_customers
-      |FROM dd e JOIN dd l ON e.o_custkey = l.o_custkey
-      |WHERE e.period = 'early' AND l.period = 'late'
-      |GROUP BY 1, 2""".stripMargin
-  ) { (s, d) =>
-    val ord = Tables.orders(s, d)
-      .select(col("o_custkey"),
-        unix_micros(col("o_orderdate")).as("ts_us"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-    // exact int64 midpoint (Spark's `/` is double division; div keeps
-    // the epoch math integral — positive epochs, so div == floordiv)
-    val mid = ord.agg(min(col("ts_us")).as("mn"), max(col("ts_us")).as("mx"))
-      .select(expr("(mn + mx) div 2").as("m"))
-    val pc = ord.crossJoin(broadcast(mid))
-      .select(
-        when(col("ts_us") < col("m"), "early").otherwise("late").as("period"),
-        col("o_custkey"), col("cents"))
-      .groupBy(col("period"), col("o_custkey"))
-      .agg(sum(col("cents")).as("cents"))
-    // period has 2 values — the q132 skewed-key class; the grouped
-    // two-phase prefix keeps every partition parallel
-    val r = AnalyticsOps2.groupedPrefixSum(pc, Seq("period"),
-      Seq(col("cents"), col("o_custkey")), lit(1L), "rn", "np")
-    val dd = r.select(col("period"), col("o_custkey"),
-      expr("(rn - 1) * 10 div np").as("dec"))
-    dd.filter(col("period") === "early")
-      .select(col("o_custkey"), col("dec").as("d_early"))
-      .join(dd.filter(col("period") === "late")
-        .select(col("o_custkey"), col("dec").as("d_late")), Seq("o_custkey"))
-      .groupBy(col("d_early"), col("d_late"))
-      .agg(count(lit(1)).as("n_customers"))
-  }
-
-  /** Per-label embedding centroid drift — cosine of each label's
-    * centroid against the global centroid, the vector-space twin of
-    * q158's token KL (is a label's region of embedding space moving
-    * away from the corpus?). The q144 exactness discipline end to
-    * end: float components widen to double (exact), quantize at 1e-9
-    * BEFORE any sum, per-(label, dim) sums are int64 (order-free),
-    * the global centroid is the SUM OF THE LABEL SUMS (no second
-    * data pass), centroid components are one IEEE division each, the
-    * three cosine accumulators re-quantize the products, and the
-    * final cosine is the same division/sqrt sequence in both engines,
-    * rounded at 1e-6 (q113 convention).
-    *
-    * Scale shape: ONE data pass (posexplode → (label, dim)
-    * partial+final aggregate, ≤ |labels|·64 rows out); everything
-    * downstream — the global rollup, the dim join, the cosine — runs
-    * on metadata-sized frames. */
-  val q161CentroidDrift: QueryDef = QueryDef.withOracle(
-    """WITH e AS (
-      |  SELECT label, u.dim AS dim,
-      |    CAST(emb[u.dim + 1] AS DOUBLE) AS x
-      |  FROM (SELECT label, CAST(embedding AS DOUBLE[]) AS emb
-      |        FROM embeddings) t,
-      |    LATERAL (SELECT unnest(range(0, len(emb))) AS dim) u),
-      |lc AS (
-      |  SELECT label, dim,
-      |    CAST(sum(CAST(floor(x * 1000000000 + 0.5) AS BIGINT)) AS BIGINT)
-      |      AS s_fp,
-      |    count(*) AS n
-      |  FROM e GROUP BY 1, 2),
-      |gc AS (
-      |  SELECT dim, CAST(sum(s_fp) AS BIGINT) AS gs_fp,
-      |    CAST(sum(n) AS BIGINT) AS gn
-      |  FROM lc GROUP BY 1),
-      |j AS (
-      |  SELECT lc.label, lc.n,
-      |    (CAST(lc.s_fp AS DOUBLE) / 1000000000) / lc.n AS a,
-      |    (CAST(gc.gs_fp AS DOUBLE) / 1000000000) / gc.gn AS b
-      |  FROM lc JOIN gc USING (dim)),
-      |p AS (
-      |  SELECT label, max(n) AS n_vecs,
-      |    CAST(sum(CAST(floor(a * b * 1000000000 + 0.5) AS BIGINT))
-      |      AS BIGINT) AS num_fp,
-      |    CAST(sum(CAST(floor(a * a * 1000000000 + 0.5) AS BIGINT))
-      |      AS BIGINT) AS na_fp,
-      |    CAST(sum(CAST(floor(b * b * 1000000000 + 0.5) AS BIGINT))
-      |      AS BIGINT) AS nb_fp
-      |  FROM j GROUP BY 1)
-      |SELECT label, CAST(n_vecs AS BIGINT) AS n_vecs,
-      |  floor(((CAST(num_fp AS DOUBLE) / sqrt(CAST(na_fp AS DOUBLE)))
-      |    / sqrt(CAST(nb_fp AS DOUBLE))) * 1000000 + 0.5) / 1000000
-      |    AS cos_global
-      |FROM p""".stripMargin
-  ) { (s, d) =>
-    val e = Tables.embeddings(s, d)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "xf")))
-      .select(col("label"), col("dim"), col("xf").cast("double").as("x"))
-    val lc = e.groupBy(col("label"), col("dim"))
-      .agg(sum(floor(col("x") * 1000000000L + 0.5).cast("long")).as("s_fp"),
-        count(lit(1)).as("n"))
-    val gc = lc.groupBy(col("dim"))
-      .agg(sum(col("s_fp")).as("gs_fp"), sum(col("n")).as("gn"))
-    val a = (col("s_fp").cast("double") / 1000000000L) / col("n")
-    val b = (col("gs_fp").cast("double") / 1000000000L) / col("gn")
-    val j = lc.join(broadcast(gc), Seq("dim"))
-      .select(col("label"), col("n"), a.as("a"), b.as("b"))
-    j.groupBy(col("label"))
-      .agg(max(col("n")).as("n_vecs"),
-        sum(floor(col("a") * col("b") * 1000000000L + 0.5).cast("long"))
-          .as("num_fp"),
-        sum(floor(col("a") * col("a") * 1000000000L + 0.5).cast("long"))
-          .as("na_fp"),
-        sum(floor(col("b") * col("b") * 1000000000L + 0.5).cast("long"))
-          .as("nb_fp"))
-      .select(col("label"), col("n_vecs"),
-        (floor(((col("num_fp").cast("double") /
-          sqrt(col("na_fp").cast("double"))) /
-          sqrt(col("nb_fp").cast("double"))) * 1000000 + 0.5) / 1000000)
-          .as("cos_global"))
   }
 
   /** Corpus heavy hitters (tokens with ≥ 0.5% of all occurrences) via
@@ -665,80 +351,6 @@ object AnalyticsOps5 {
           col("n_exact")).as("rel_err"))
   }
 
-  /** Per-source dataset card — the datasheet a corpus release ships:
-    * volume (docs, tokens, chars), exact-duplicate share (via the q40
-    * content-hash), and the majority language with its share, one row
-    * per source. Everything is exact integer arithmetic; the only
-    * doubles are three final divisions.
-    *
-    * Scale shape: one doc-level pass computes tokens/chars map-side
-    * and the md5 content hash; the dup share needs one
-    * (source, hash)-keyed aggregate (16-byte keys); the language
-    * margin is a (source, lang) rollup with the majority pick via
-    * max_by on the (count, lang) struct — deterministic tiebreak,
-    * no window. All post-scan frames are source- or
-    * source×lang-sized. */
-  val q165DatasetCard: QueryDef = QueryDef.withOracle(
-    """WITH d AS (
-      |  SELECT source, lang, n_chars,
-      |    len(string_split(text, ' ')) AS n_tok,
-      |    md5(text) AS h
-      |  FROM documents),
-      |hash_groups AS (
-      |  SELECT source, h, count(*) AS n FROM d GROUP BY 1, 2),
-      |dup AS (
-      |  SELECT source,
-      |    CAST(sum(n) AS BIGINT) AS n_docs,
-      |    CAST(sum(CASE WHEN n > 1 THEN n ELSE 0 END) AS BIGINT) AS n_dup
-      |  FROM hash_groups GROUP BY 1),
-      |vol AS (
-      |  SELECT source,
-      |    CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-      |    CAST(sum(n_chars) AS BIGINT) AS n_chars
-      |  FROM d GROUP BY 1),
-      |lc AS (
-      |  SELECT source, lang, count(*) AS n FROM d GROUP BY 1, 2),
-      |ml AS (
-      |  SELECT source, lang AS top_lang, CAST(n AS BIGINT) AS top_lang_n
-      |  FROM (SELECT source, lang, n, row_number() OVER (
-      |          PARTITION BY source ORDER BY n DESC, lang DESC) AS rn
-      |        FROM lc)
-      |  WHERE rn = 1)
-      |SELECT dup.source, dup.n_docs, vol.n_tokens, vol.n_chars,
-      |  dup.n_dup,
-      |  CAST(dup.n_dup AS DOUBLE) / dup.n_docs AS dup_share,
-      |  CAST(vol.n_chars AS DOUBLE) / dup.n_docs AS mean_chars,
-      |  ml.top_lang,
-      |  CAST(ml.top_lang_n AS DOUBLE) / dup.n_docs AS top_lang_share
-      |FROM dup JOIN vol USING (source) JOIN ml USING (source)""".stripMargin
-  ) { (s, d) =>
-    val base = Tables.documents(s, d)
-      .select(col("source"), col("lang"), col("n_chars"),
-        size(split(col("text"), " ", -1)).as("n_tok"),
-        md5(col("text")).as("h"))
-      .cache() // one doc pass feeds all three rollups
-    val hashGroups = base.groupBy(col("source"), col("h"))
-      .agg(count(lit(1)).as("n"))
-    val dup = hashGroups.groupBy(col("source"))
-      .agg(sum(col("n")).as("n_docs"),
-        sum(when(col("n") > 1, col("n")).otherwise(0L)).as("n_dup"))
-    val vol = base.groupBy(col("source"))
-      .agg(sum(col("n_tok")).as("n_tokens"), sum(col("n_chars")).as("n_chars"))
-    val ml = base.groupBy(col("source"), col("lang"))
-      .agg(count(lit(1)).as("n"))
-      .groupBy(col("source"))
-      .agg(max_by(col("lang"), struct(col("n"), col("lang"))).as("top_lang"),
-        max_by(col("n"), struct(col("n"), col("lang"))).as("top_lang_n"))
-    dup.join(vol, Seq("source")).join(ml, Seq("source"))
-      .select(col("source"), col("n_docs"), col("n_tokens"), col("n_chars"),
-        col("n_dup"),
-        (col("n_dup").cast("double") / col("n_docs")).as("dup_share"),
-        (col("n_chars").cast("double") / col("n_docs")).as("mean_chars"),
-        col("top_lang"),
-        (col("top_lang_n").cast("double") / col("n_docs"))
-          .as("top_lang_share"))
-  }
-
   /** Per-event-type latency/value quantiles (p50/p95/p99) from a
     * MERGEABLE log-linear histogram sketch — the HdrHistogram shape —
     * with the exact rank-based quantile and the one-sided overshoot
@@ -847,7 +459,7 @@ object AnalyticsOps5 {
       .filter(col("cum") >= col("r"))
       .groupBy(col("event_type"), col("pct"), col("n"), col("r"))
       .agg(min(ub).as("est_cents"))
-    val exact = AnalyticsOps2.groupedPrefixSums(vcells, Seq("event_type"),
+    val exact = Kernels.groupedPrefixSums(vcells, Seq("event_type"),
         Seq(col("v")), Seq((col("cnt"), "cum", None)))
       .join(broadcast(est.select(col("event_type"), col("pct"), col("r"))),
         Seq("event_type"))
@@ -859,39 +471,6 @@ object AnalyticsOps5 {
         (col("est_cents") - col("exact_cents")).as("overshoot_cents"),
         (floor(((col("est_cents") - col("exact_cents")).cast("double") /
           col("exact_cents")) * 1000000 + 0.5) / 1000000).as("rel_err"))
-  }
-
-  /** THE HLL estimator tail, parameterized by register count m = 2^p:
-    * raw α·m²/S with the 2.5m linear-counting switch, rounded at 1e-6
-    * to absorb last-ulp libm disagreement. `sInv` = Σ 2^−reg (exact
-    * in any order — dyadic rationals), `vZero` = count of empty
-    * registers. Every HLL consumer estimates through this ONE
-    * definition — q154/q164/q171 at m = 1024, GraphOps q160 at
-    * m = 256 — so the constants (α's rational form, the regime
-    * threshold, the rounding quantum) cannot drift apart from each
-    * other or from their four oracles. */
-  private[operators] def hllEstimate(sInv: Column, vZero: Column,
-      m: Int): Column = {
-    val md = m.toDouble
-    // α switches on m (Flajolet et al. §5): the 0.7213/(1+1.079/m)
-    // form is the bias constant only for m ≥ 128; the small-m values
-    // are the paper's exact constants — HllRegisters accepts p ≥ 4, so
-    // without the switch a p ∈ 4..6 consumer would get a silently
-    // biased estimate. A small-m consumer's oracle SQL must hardcode
-    // the SAME constant (every current oracle is m ≥ 256, large form).
-    val alphaMm: Column = m match {
-      case 16 => lit(0.673) * lit(md * md)
-      case 32 => lit(0.697) * lit(md * md)
-      case 64 => lit(0.709) * lit(md * md)
-      case _ =>
-        require(m >= 128 && (m & (m - 1)) == 0,
-          s"hllEstimate needs a power-of-two register count >= 16, got $m")
-        (lit(0.7213) * lit(md * md)) / (lit(1.0) + (lit(1.079) / lit(md)))
-    }
-    val eRaw = alphaMm / sInv
-    floor((when(eRaw <= lit(2.5 * md) && vZero > 0,
-      lit(md) * log(lit(md) / vZero.cast("double")))
-      .otherwise(eRaw)) * 1000000 + 0.5) / 1000000
   }
 
   /** Pairwise audience overlap between event types from HLL sketch
@@ -1164,7 +743,7 @@ object AnalyticsOps5 {
       .agg(sum(col("cnt")).as("n"))
       .join(broadcast(estSrc), Seq("event_type"))
       .withColumn("r", expr("(pct * n + 99) div 100"))
-    val exact = AnalyticsOps2.groupedPrefixSums(cells, Seq("event_type"),
+    val exact = Kernels.groupedPrefixSums(cells, Seq("event_type"),
         Seq(col("cents")), Seq((col("cnt"), "cum", None)))
       .join(broadcast(targets.select(col("event_type"), col("pct"),
         col("r"))), Seq("event_type"))
@@ -1186,20 +765,461 @@ object AnalyticsOps5 {
         (col("rel_rank_err") <= 0.02).as("within_bound"))
   }
 
+  /** Self-join fan-out audit on events.user_id — the "why did my join
+    * explode" diagnostic a 100 TB pipeline runs BEFORE a user-keyed
+    * self-join (sessions × sessions, interactions × interactions):
+    * each key's output contribution is n², so one hot key owns the
+    * job. Reports the top-10 keys by output rows with their share of
+    * the total — exactly the numbers that decide whether to salt
+    * (q73's lever) or cap. On the adversarial-skew replica the
+    * planted 1%-of-events user shows up owning ~99% of the would-be
+    * output; on benign data shares are ~uniform.
+    *
+    * Scale shape: ONE user-keyed count (map-side partial) collapses
+    * the events to per-key cardinalities; n² and the Σn² total are
+    * exact integer algebra on that frame (the total accumulates in
+    * decimal(38,0)/int128 — n² terms near 2⁶² must not wrap the
+    * sum); top-10 is TakeOrdered. The join itself is never run. */
+  val q180JoinSkewAudit: QueryDef = QueryDef.withOracle(
+    """WITH k AS (
+      |  SELECT user_id, count(*) AS n FROM events GROUP BY 1),
+      |o AS (SELECT user_id, n, n * n AS out_rows FROM k),
+      |t AS (SELECT sum(CAST(n AS HUGEINT) * n) AS total FROM k)
+      |SELECT user_id, n, out_rows,
+      |  floor((CAST(out_rows AS DOUBLE) / CAST(total AS DOUBLE)) * 1000000
+      |    + 0.5) / 1000000 AS out_share
+      |FROM o CROSS JOIN t
+      |ORDER BY out_rows DESC, user_id LIMIT 10""".stripMargin
+  ) { (s, d) =>
+    val k = Tables.events(s, d).groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n"))
+    val t = k.agg(sum(col("n").cast("decimal(38,0)") * col("n"))
+      .as("total"))
+    k.select(col("user_id"), col("n"), (col("n") * col("n")).as("out_rows"))
+      .crossJoin(broadcast(t))
+      .select(col("user_id"), col("n"), col("out_rows"),
+        (floor((col("out_rows").cast("double") /
+          col("total").cast("double")) * 1000000 + 0.5) / 1000000)
+          .as("out_share"))
+      .orderBy(col("out_rows").desc, col("user_id")).limit(10)
+  }
+
+  /** Efraimidis–Spirakis weighted sampling WITHOUT replacement: the
+    * top-5 documents per source drawn with probability proportional
+    * to length (n_chars) — the per-stratum quality-weighted draw a
+    * curation pipeline uses for human-review panels and few-shot
+    * pools. q91's systematic sampler draws a GLOBAL rate-k sample;
+    * this is the other sampling primitive: exactly k per stratum,
+    * heavier rows more likely, no replacement, one pass, no global
+    * state. Each row gets the exponential-race key ln(u)/w (u
+    * deterministic from md5(doc_id) — the q48/q91 replayable-RNG
+    * convention); the k largest keys per stratum ARE the E–S sample
+    * (Efraimidis & Spirakis 2006).
+    *
+    * Exactness: u = (md5₆₀(doc_id)+1)/2⁶⁰ and ln(u)/w are one
+    * identical IEEE chain in both engines; ranking ties break on
+    * doc_id; the output is all-integer (rank, id, weight) — nothing
+    * floats through the gate.
+    *
+    * Scale shape: key assignment is map-side scalar math on the scan;
+    * the per-source top-5 pushes a partial WindowGroupLimit below the
+    * exchange (the q7/q38 top-k shape), so the shuffle carries ≤5
+    * rows per (partition, source) — never the corpus. */
+  val q216WeightedTopk: QueryDef = QueryDef.withOracle(
+    """WITH k AS (
+      |  SELECT source, doc_id, n_chars,
+      |    ln(((('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))
+      |      ::BIGINT) + 1) / 1152921504606846976.0) / n_chars AS key
+      |  FROM documents),
+      |r AS (
+      |  SELECT source, doc_id, n_chars,
+      |    row_number() OVER (PARTITION BY source
+      |      ORDER BY key DESC, doc_id) AS rk
+      |  FROM k)
+      |SELECT source, rk, doc_id, n_chars AS weight_chars
+      |FROM r WHERE rk <= 5""".stripMargin
+  ) { (s, d) =>
+    Tables.documents(s, d)
+      .select(col("source"), col("doc_id"), col("n_chars"),
+        expr("ln((CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), " +
+          "16, 10) AS BIGINT) + 1) / 1152921504606846976.0) / n_chars")
+          .as("key"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("source"))
+          .orderBy(col("key").desc, col("doc_id"))))
+      .filter(col("rk") <= 5)
+      .select(col("source"), col("rk").cast("long").as("rk"),
+        col("doc_id"), col("n_chars").as("weight_chars"))
+  }
+
+  /** Neyman-optimal stratified sample allocation — the sampling DESIGN
+    * operator beside the sampling EXECUTORS (q37/q48/q91/q216): given
+    * a 10% row budget, how many samples should each source stratum
+    * get to minimize the variance of the estimated mean doc length?
+    * n_h ∝ N_h·S_h (big and internally-diverse strata earn more than
+    * proportional; uniform strata earn less), integerized by the
+    * largest-remainder (Hamilton) method so allocations sum EXACTLY
+    * to the budget.
+    *
+    * Exactness: per-stratum S_h comes from exact decimal(38,0)/HUGEINT
+    * moments (one sqrt of a deterministic double, clamped at 0 against
+    * ulp-negative variance); the weights quantize SCALE-FREE as
+    * (N_h/N)·S_h at 1e-9 (bounded by the value range, not the row
+    * count); every division/remainder after that is exact integer
+    * arithmetic in decimal(38,0)/HUGEINT, and the remainder rank is a
+    * ≤|sources| metadata sort with a source-name tiebreak.
+    *
+    * Scale shape: ONE documents pass into the ≤|sources| moment
+    * aggregate; allocation algebra rides the cell frame with broadcast
+    * 1-row totals. The q194 water-fill posture, closed-form. */
+  val q228NeymanAllocation: QueryDef = QueryDef.withOracle(
+    """WITH cell AS (
+      |  SELECT source, count(*) AS nh,
+      |    sum(CAST(n_chars AS HUGEINT)) AS sh,
+      |    sum(CAST(n_chars AS HUGEINT) * n_chars) AS qh
+      |  FROM documents GROUP BY 1),
+      |tot AS (SELECT CAST(sum(nh) AS BIGINT) AS n FROM cell),
+      |u AS (
+      |  SELECT source, nh,
+      |    CASE WHEN nh = 1 THEN CAST(0 AS DOUBLE)
+      |      ELSE sqrt(greatest(0, (CAST(qh AS DOUBLE)
+      |        - (CAST(sh AS DOUBLE) / nh) * (CAST(sh AS DOUBLE) / nh) * nh)
+      |        / (nh - 1))) END AS sigma,
+      |    CAST(floor((CAST(nh AS DOUBLE) / n)
+      |      * CASE WHEN nh = 1 THEN CAST(0 AS DOUBLE)
+      |        ELSE sqrt(greatest(0, (CAST(qh AS DOUBLE)
+      |          - (CAST(sh AS DOUBLE) / nh) * (CAST(sh AS DOUBLE) / nh) * nh)
+      |          / (nh - 1))) END * 1000000000 + 0.5) AS BIGINT) AS ufp
+      |  FROM cell CROSS JOIN tot),
+      |su AS (SELECT CAST(sum(ufp) AS BIGINT) AS s FROM u),
+      |al AS (
+      |  SELECT source, nh, sigma,
+      |    CAST((CAST(n // 10 AS HUGEINT) * ufp) // s AS BIGINT) AS base,
+      |    CAST((CAST(n // 10 AS HUGEINT) * ufp) % s AS BIGINT) AS rem
+      |  FROM u CROSS JOIN su CROSS JOIN tot),
+      |lo AS (
+      |  SELECT CAST(max(n // 10) - sum(base) AS BIGINT) AS leftover
+      |  FROM al CROSS JOIN tot),
+      |rk AS (
+      |  SELECT *, row_number() OVER (ORDER BY rem DESC, source) AS rnk
+      |  FROM al)
+      |SELECT source, nh AS n_pop,
+      |  floor(sigma * 1000000 + 0.5) / 1000000 AS sigma,
+      |  base + CASE WHEN rnk <= leftover THEN 1 ELSE 0 END AS alloc
+      |FROM rk CROSS JOIN lo""".stripMargin
+  ) { (s, d) =>
+    val cell = Tables.documents(s, d)
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("nh"),
+        sum(dec(col("n_chars"))).as("sh"),
+        sum(dec(col("n_chars")) * col("n_chars")).as("qh"))
+      .cache() // one corpus pass feeds totals and the weight frame
+    val tot = cell.agg(sum(col("nh")).cast("long").as("n"))
+    // nh = 1 guard: a singleton stratum has no variance signal — the
+    // raw expression divides by zero (Inf) and the 1e-9 cast would
+    // throw; it earns only its largest-remainder floor instead
+    val sigma = when(col("nh") === 1, lit(0.0))
+      .otherwise(sqrt(greatest(lit(0), (col("qh").cast("double")
+        - (col("sh").cast("double") / col("nh"))
+          * (col("sh").cast("double") / col("nh")) * col("nh"))
+        / (col("nh") - 1))))
+    val u = cell.crossJoin(broadcast(tot))
+      .select(col("source"), col("nh"), col("n"), sigma.as("sigma"),
+        floor((col("nh").cast("double") / col("n")) * sigma
+          * 1000000000L + 0.5).cast("long").as("ufp"))
+      .cache() // ≤|sources| rows feed the total and the allocation
+    val su = u.agg(sum(col("ufp")).cast("long").as("s"))
+    val al = u.crossJoin(broadcast(su))
+      .select(col("source"), col("nh"), col("sigma"),
+        expr("CAST((CAST(n div 10 AS DECIMAL(38,0)) * ufp) div s AS LONG)")
+          .as("base"),
+        expr("CAST((CAST(n div 10 AS DECIMAL(38,0)) * ufp) % s AS LONG)")
+          .as("rem"),
+        expr("n div 10").as("budget"))
+    val lo = al.agg((max(col("budget")) - sum(col("base")))
+      .cast("long").as("leftover"))
+    al.withColumn("rnk", row_number().over(
+        Window.orderBy(col("rem").desc, col("source"))))
+      .crossJoin(broadcast(lo))
+      .select(col("source"), col("nh").as("n_pop"),
+        (floor(col("sigma") * 1000000L + 0.5) / 1000000L).as("sigma"),
+        (col("base") + when(col("rnk") <= col("leftover"), 1L)
+          .otherwise(0L)).as("alloc"))
+  }
+
+  /** Chapman capture-recapture estimate of the active user population
+    * from two activity samples (even- vs odd-calendar-day users), with
+    * the TRUE distinct count printed beside it — the estimator audits
+    * itself on this data. The production use is populations you can't
+    * enumerate (the user base behind sampled logs, vocabulary behind
+    * sampled shards): Chapman's (n1+1)(n2+1)/(m+1) − 1 is the
+    * bias-corrected Lincoln-Petersen, with its standard SE.
+    *
+    * Exactness: the three counts are exact (one pass → per-user
+    * even/odd flags → conditional counts); the estimate and SE are
+    * one double chain each, floored 1e-6. m = 0 still works (the +1
+    * correction IS the guard — stated).
+    *
+    * Scale shape: one events pass → per-user flag cells (data-sized
+    * groupBy on the natural key) → one 4-number aggregate. */
+  val q261CaptureRecapture: QueryDef = QueryDef.withOracle(
+    """WITH u AS (
+      |  SELECT user_id,
+      |    max(CASE WHEN date_part('day', CAST(ts AS DATE)) % 2 = 0
+      |      THEN 1 ELSE 0 END) AS e,
+      |    max(CASE WHEN date_part('day', CAST(ts AS DATE)) % 2 = 1
+      |      THEN 1 ELSE 0 END) AS o
+      |  FROM events GROUP BY 1),
+      |c AS (
+      |  SELECT CAST(sum(e) AS BIGINT) AS n1, CAST(sum(o) AS BIGINT) AS n2,
+      |    CAST(sum(e * o) AS BIGINT) AS m,
+      |    CAST(count(*) AS BIGINT) AS n_true
+      |  FROM u)
+      |SELECT n1 AS n_even, n2 AS n_odd, m AS n_both, n_true,
+      |  floor(((CAST(n1 + 1 AS DOUBLE) * (n2 + 1)) / (m + 1) - 1)
+      |    * 1000000 + 0.5) / 1000000 AS n_hat,
+      |  floor(sqrt((CAST(n1 + 1 AS DOUBLE) * (n2 + 1) * (n1 - m)
+      |      * (n2 - m))
+      |    / ((CAST(m + 1 AS DOUBLE) * (m + 1)) * (m + 2)))
+      |    * 1000000 + 0.5) / 1000000 AS se
+      |FROM c""".stripMargin
+  ) { (s, d) =>
+    val u = Tables.events(s, d)
+      .select(col("user_id"),
+        (dayofmonth(to_date(col("ts"))) % 2 === 0).cast("long").as("ef"),
+        (dayofmonth(to_date(col("ts"))) % 2 === 1).cast("long").as("of"))
+      .groupBy(col("user_id"))
+      .agg(max(col("ef")).as("e"), max(col("of")).as("o"))
+    val c = u.agg(sum(col("e")).cast("long").as("n1"),
+      sum(col("o")).cast("long").as("n2"),
+      sum(col("e") * col("o")).cast("long").as("m"),
+      count(lit(1)).as("n_true"))
+    c.select(col("n1").as("n_even"), col("n2").as("n_odd"),
+      col("m").as("n_both"), col("n_true"),
+      (floor((((col("n1") + 1).cast("double") * (col("n2") + 1))
+        / (col("m") + 1) - 1) * 1000000L + 0.5) / 1000000L).as("n_hat"),
+      (floor(sqrt(((col("n1") + 1).cast("double") * (col("n2") + 1)
+        * (col("n1") - col("m")) * (col("n2") - col("m")))
+        / (((col("m") + 1).cast("double") * (col("m") + 1))
+          * (col("m") + 2))) * 1000000L + 0.5) / 1000000L).as("se"))
+  }
+
+  /** Kish effective sample size per source under n_chars value
+    * weighting — what q91's value-weighted sampling actually COSTS in
+    * variance: ESS = (Σw)²/Σw², deff = n/ESS. A source whose long
+    * docs dominate its weight has ESS ≪ n, and any statistic computed
+    * from its weighted sample carries deff× the variance a naive
+    * n-based CI claims (Kish 1965 — the survey-sampling standard).
+    *
+    * Exactness: pure decimal moment algebra ((Σw)² reaches (n·w̄)² —
+    * decimal mandatory), one division chain per source, floored 1e-6.
+    *
+    * Scale shape: ONE documents pass → ≤|sources| moment cells. */
+  val q268EssKish: QueryDef = QueryDef.withOracle(
+    """WITH m AS (
+      |  SELECT source, count(*) AS n,
+      |    sum(CAST(n_chars AS HUGEINT)) AS sw,
+      |    sum(CAST(n_chars AS HUGEINT) * n_chars) AS sww
+      |  FROM documents GROUP BY 1)
+      |SELECT source, n AS n_docs,
+      |  CASE WHEN sww = 0 THEN CAST(0 AS DOUBLE)
+      |    ELSE floor((CAST(sw AS DOUBLE) / sww * sw) * 1000000 + 0.5)
+      |      / 1000000 END AS ess,
+      |  CASE WHEN sw = 0 THEN CAST(0 AS DOUBLE)
+      |    ELSE floor((n * (CAST(sww AS DOUBLE) / sw / sw))
+      |      * 1000000 + 0.5) / 1000000 END AS deff,
+      |  CASE WHEN sww = 0 THEN CAST(0 AS DOUBLE)
+      |    ELSE floor((CAST(sw AS DOUBLE) / sww * sw / n)
+      |      * 1000000 + 0.5) / 1000000 END AS ess_share
+      |FROM m""".stripMargin
+  ) { (s, d) =>
+    val m = Tables.documents(s, d)
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n"), sum(dec(col("n_chars"))).as("sw"),
+        sum(dec(col("n_chars")) * col("n_chars")).as("sww"))
+    m.select(col("source"), col("n").as("n_docs"),
+      when(col("sww") === dec(lit(0)), lit(0.0))
+        .otherwise(floor((col("sw").cast("double") / col("sww")
+          * col("sw")) * 1000000L + 0.5) / 1000000L).as("ess"),
+      when(col("sw") === dec(lit(0)), lit(0.0))
+        .otherwise(floor((col("n") * (col("sww").cast("double")
+          / col("sw") / col("sw"))) * 1000000L + 0.5) / 1000000L)
+        .as("deff"),
+      when(col("sww") === dec(lit(0)), lit(0.0))
+        .otherwise(floor((col("sw").cast("double") / col("sww")
+          * col("sw") / col("n")) * 1000000L + 0.5) / 1000000L)
+        .as("ess_share"))
+  }
+
+  /** Optimizer-statistics quality audit — the two estimates a
+    * cost-based planner runs on, printed against exact truth from the
+    * SAME cell frames: (a) range-predicate selectivity on
+    * l_extendedprice through a 64-bin equi-width histogram with
+    * uniform fill-in (9 overlapping 20%-of-range probes), and (b)
+    * equi-join cardinality |orders JOIN lineitem| through the
+    * textbook |L|*|O| / max(ndv_L, ndv_O) distinct-count formula.
+    * The q_error column (max/min ratio, floored at 1 event) is the
+    * planner-accuracy currency — a q_error of 3 on a probe says any
+    * plan choice hinging on that cardinality is a coin flip. This is
+    * the engine auditing its own planning statistics, the same layer
+    * q180 (join skew) and q165 (dataset card) report on.
+    *
+    * Exactness: histogram boundaries, bin assignment, and actual
+    * counts are pure integer math on the cents grid; each bin's
+    * estimate term (overlap fraction * bin count, a mirrored double)
+    * quantizes to a 1e-6 integer BEFORE the sum (the q277/q284
+    * per-term convention — r12 ADVICE: a raw double sum is partial-
+    * agg-order-dependent) with ONE divide at the end; the estimator's
+    * internal floor-boundary convention is stated as part of the
+    * estimator, so both engines audit the SAME estimator.
+    *
+    * Scale shape: ONE lineitem pass -> price-cents cells (the 9
+    * probes sum the SAME cell frame under different predicates — no
+    * re-scan) + one orderkey-cells pass per side for (b); actual join
+    * cardinality is a key-cells join (never a row join). */
+  val q285SelectivityAudit: QueryDef = QueryDef.withOracle(
+    """WITH pv AS (
+      |  SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS v,
+      |    count(*) AS cnt
+      |  FROM lineitem GROUP BY 1),
+      |mm AS (
+      |  SELECT min(v) AS mn, max(v) - min(v) + 1 AS r,
+      |    CAST(sum(cnt) AS BIGINT) AS n
+      |  FROM pv),
+      |hb AS (
+      |  SELECT (pv.v - mm.mn) * 64 // mm.r AS b,
+      |    CAST(sum(cnt) AS BIGINT) AS hcnt
+      |  FROM pv CROSS JOIN mm GROUP BY 1),
+      |pr AS (
+      |  SELECT j.j, mm.mn + j.j * mm.r // 10 AS lo,
+      |    mm.mn + (j.j + 2) * mm.r // 10 AS hi
+      |  FROM (SELECT unnest(range(0, 9)) AS j) j CROSS JOIN mm),
+      |es AS (
+      |  SELECT pr.j, pr.lo, pr.hi,
+      |    sum(CAST(floor((CASE WHEN mm.mn + (hb.b + 1) * mm.r // 64
+      |          - (mm.mn + hb.b * mm.r // 64) <= 0 THEN CAST(0 AS DOUBLE)
+      |      ELSE CAST(greatest(0, least(pr.hi,
+      |          mm.mn + (hb.b + 1) * mm.r // 64)
+      |        - greatest(pr.lo, mm.mn + hb.b * mm.r // 64)) AS DOUBLE)
+      |        / (mm.mn + (hb.b + 1) * mm.r // 64
+      |          - (mm.mn + hb.b * mm.r // 64)) * hb.hcnt END)
+      |      * 1000000 + 0.5) AS BIGINT)) AS e6
+      |  FROM pr CROSS JOIN mm CROSS JOIN hb
+      |  GROUP BY 1, 2, 3),
+      |ac AS (
+      |  SELECT pr.j, CAST(coalesce(sum(pv.cnt), 0) AS BIGINT) AS act
+      |  FROM pr LEFT JOIN pv ON pv.v >= pr.lo AND pv.v < pr.hi
+      |  GROUP BY 1),
+      |sel AS (
+      |  SELECT 'sel_0' || CAST(es.j AS VARCHAR) AS probe,
+      |    CAST(es.e6 AS DOUBLE) / 1000000 AS est_rows,
+      |    ac.act AS actual_rows
+      |  FROM es JOIN ac ON ac.j = es.j),
+      |lk AS (
+      |  SELECT l_orderkey AS k, count(*) AS cl FROM lineitem GROUP BY 1),
+      |okc AS (
+      |  SELECT o_orderkey AS k, count(*) AS co FROM orders GROUP BY 1),
+      |jm AS (
+      |  SELECT (SELECT CAST(sum(cl) AS BIGINT) FROM lk) AS nl,
+      |    (SELECT CAST(sum(co) AS BIGINT) FROM okc) AS no,
+      |    (SELECT CAST(count(*) AS BIGINT) FROM lk) AS ndvl,
+      |    (SELECT CAST(count(*) AS BIGINT) FROM okc) AS ndvo,
+      |    (SELECT CAST(coalesce(sum(lk.cl * okc.co), 0) AS BIGINT)
+      |     FROM lk JOIN okc ON okc.k = lk.k) AS act),
+      |jr AS (
+      |  SELECT 'join_orderkey' AS probe,
+      |    floor(CAST(nl AS DOUBLE) * no / greatest(ndvl, ndvo)
+      |      * 1000000 + 0.5) / 1000000 AS est_rows,
+      |    act AS actual_rows
+      |  FROM jm),
+      |un AS (SELECT * FROM sel UNION ALL SELECT * FROM jr)
+      |SELECT probe, est_rows, actual_rows,
+      |  floor(greatest(greatest(est_rows, 1.0),
+      |      greatest(CAST(actual_rows AS DOUBLE), 1.0))
+      |    / least(greatest(est_rows, 1.0),
+      |      greatest(CAST(actual_rows AS DOUBLE), 1.0))
+      |    * 1000000 + 0.5) / 1000000 AS q_error
+      |FROM un""".stripMargin
+  ) { (s, d) =>
+    val pv = Tables.lineitem(s, d)
+      .select(floor(col("l_extendedprice") * 100 + 0.5).cast("long")
+        .as("v"))
+      .groupBy(col("v")).agg(count(lit(1)).as("cnt"))
+      .cache() // one price pass: histogram, probes, totals reuse it
+    val mm = pv.agg(min(col("v")).as("mn"),
+      (max(col("v")) - min(col("v")) + 1).as("r"),
+      sum(col("cnt")).cast("long").as("n"))
+    def idiv(a: Column, b: Column): Column =
+      call_function("div", a - pmod(a, b), b)
+    val hb = pv.crossJoin(broadcast(mm))
+      .groupBy(idiv((col("v") - col("mn")) * 64, col("r")).as("b"))
+      .agg(sum(col("cnt")).cast("long").as("hcnt"))
+    val js = s.range(0, 9).toDF("j")
+    val pr = broadcast(js).crossJoin(broadcast(mm))
+      .select(col("j"),
+        (col("mn") + idiv(col("j") * col("r"), lit(10L))).as("lo"),
+        (col("mn") + idiv((col("j") + 2) * col("r"), lit(10L))).as("hi"))
+    val bl = col("mn") + idiv(col("b") * col("r"), lit(64L))
+    val bh = col("mn") + idiv((col("b") + 1) * col("r"), lit(64L))
+    val es = pr.crossJoin(broadcast(mm)).crossJoin(hb)
+      .groupBy(col("j"), col("lo"), col("hi"))
+      // per-term 1e-6 quantization BEFORE the order-dependent sum
+      // (the q277/q284 house convention): partial-agg order is not
+      // guaranteed to match DuckDB's, so each bin's fractional
+      // contribution rounds to an integer first and the sum is exact
+      .agg(sum(dec(floor(when(bh - bl <= 0, lit(0.0))
+        .otherwise(greatest(lit(0L), least(col("hi"), bh)
+          - greatest(col("lo"), bl)).cast("double")
+          / (bh - bl) * col("hcnt")) * 1000000L + 0.5).cast("long")))
+        .as("e6"))
+    val ac = pr.join(pv,
+        col("v") >= col("lo") && col("v") < col("hi"), "left")
+      .groupBy(col("j"))
+      .agg(coalesce(sum(col("cnt")), lit(0L)).cast("long").as("act"))
+    val sel = es.join(ac, Seq("j"))
+      .select(concat(lit("sel_0"), col("j").cast("string")).as("probe"),
+        (col("e6").cast("double") / 1000000L).as("est_rows"),
+        col("act").as("actual_rows"))
+    val lk = Tables.lineitem(s, d).groupBy(col("l_orderkey").as("k"))
+      .agg(count(lit(1)).as("cl"))
+    val okc = Tables.orders(s, d).groupBy(col("o_orderkey").as("k"))
+      .agg(count(lit(1)).as("co"))
+    val lm = lk.agg(sum(col("cl")).cast("long").as("nl"),
+      count(lit(1)).as("ndvl"))
+    val om = okc.agg(sum(col("co")).cast("long").as("no"),
+      count(lit(1)).as("ndvo"))
+    val aj = lk.join(okc.withColumnRenamed("k", "k2"),
+        col("k2") === col("k"))
+      .agg(coalesce(sum(col("cl") * col("co")), lit(0L)).cast("long")
+        .as("act"))
+    val jr = lm.crossJoin(om).crossJoin(aj)
+      .select(lit("join_orderkey").as("probe"),
+        (floor(col("nl").cast("double") * col("no")
+          / greatest(col("ndvl"), col("ndvo")) * 1000000L + 0.5)
+          / 1000000L).as("est_rows"),
+        col("act").as("actual_rows"))
+    val un = sel.unionByName(jr)
+    un.select(col("probe"), col("est_rows"), col("actual_rows"),
+      (floor(greatest(greatest(col("est_rows"), lit(1.0)),
+        greatest(col("actual_rows").cast("double"), lit(1.0)))
+        / least(greatest(col("est_rows"), lit(1.0)),
+          greatest(col("actual_rows").cast("double"), lit(1.0)))
+        * 1000000L + 0.5) / 1000000L).as("q_error"))
+  }
+
   val all: Map[String, QueryDef] = Map(
-    "q196_kll_quantiles" -> q196KllQuantiles,
+    "q96_equidepth_bins" -> q96EquidepthBins,
     "q154_hll_distinct" -> q154HllDistinct,
-    "q161_centroid_drift" -> q161CentroidDrift,
     "q162_heavy_hitters" -> q162HeavyHitters,
     "q163_count_min" -> q163CountMin,
     "q164_rolling_distinct" -> q164RollingDistinct,
-    "q165_dataset_card" -> q165DatasetCard,
     "q166_histogram_quantiles" -> q166HistogramQuantiles,
     "q171_hll_overlap" -> q171HllOverlap,
-    "q155_markov_transitions" -> q155MarkovTransitions,
-    "q156_debounce" -> q156Debounce,
-    "q157_retention_triangle" -> q157RetentionTriangle,
-    "q158_unigram_kl" -> q158UnigramKl,
-    "q159_decile_migration" -> q159DecileMigration
-  )
+    "q196_kll_quantiles" -> q196KllQuantiles,
+    "q180_join_skew_audit" -> q180JoinSkewAudit,
+    "q216_weighted_topk" -> q216WeightedTopk,
+    "q228_neyman_allocation" -> q228NeymanAllocation,
+    "q261_capture_recapture" -> q261CaptureRecapture,
+    "q268_ess_kish" -> q268EssKish,
+    "q285_selectivity_audit" -> q285SelectivityAudit)
 }

@@ -679,7 +679,7 @@ object TextOps {
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
       .cache() // consumed by the vocab count and the top-1000
     val tot = w.agg(count(lit(1)).as("n_vocab"))
-    val top = AnalyticsOps2.topKByCount(w,
+    val top = Kernels.topKByCount(w,
       Seq(col("cnt").desc, col("word")), 1000, Some("rnk"))
     val q = top.select(
       floor(log(col("rnk").cast("double")) * 10000 + 0.5).cast("long").as("x"),

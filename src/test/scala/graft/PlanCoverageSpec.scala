@@ -203,7 +203,7 @@ class PlanCoverageSpec extends SparkSpec {
       "data-sized work is the one orders pass into day cells, and " +
       "the breakpoint argmin is TakeOrdered(1)"),
     "q304_break_confidence" -> ("reads q299's SSE curve through the " +
-      "SHARED AnalyticsOps23.sseCandidates frame — the same day-index " +
+      "SHARED SeriesOps.sseCandidates frame — the same day-index " +
       "and prefix-moment windows over the daily-revenue AGGREGATE " +
       "(q299's exemption, one shared instance); everything downstream " +
       "is a broadcast scalar against the <= |days| candidate frame"))

@@ -553,7 +553,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q134/q135: grouped prefix runs range-partitioned, never per-group windows") {
-    // both use AnalyticsOps2.groupedPrefixSum: segment/flag has ≤5
+    // both use Kernels.groupedPrefixSum: segment/flag has ≤5
     // values, so the rank/cumsum must come from range partitions with
     // the group LEADING the range key — partition-local windows over
     // (__pid, group), broadcast offset attach, no single-reducer sort
@@ -1071,7 +1071,7 @@ class PlanSpec extends SparkSpec {
     // query swaps in the dumped fixture, so its own plan is mode-
     // dependent): the KLL state must pre-combine map-side like every
     // mergeable sketch — never collect values
-    val live = operators.AnalyticsOps5
+    val live = operators.SketchOps
       .kllEstimatesFrame(spark, sf("sf0.001"))
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(live.toLowerCase.contains("klldoubles"), live)

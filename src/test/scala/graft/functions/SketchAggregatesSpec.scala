@@ -178,7 +178,7 @@ class SketchAggregatesSpec extends SparkSpec {
     (1 to 2000).map(i => (i.toLong, s"unique document text $i", "web"))
       .toDF("doc_id", "text", "source")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = graft.operators.AnalyticsOps5.q154HllDistinct.fn(spark, dir)
+    val r = graft.operators.SketchOps.q154HllDistinct.fn(spark, dir)
       .collect()
     assert(r.length == 1)
     val (exact, est, relErr) =

@@ -13,7 +13,7 @@ class AnalyticsOps10Spec extends SparkSpec {
   private val d = sf("sf0.001")
 
   test("q217: bootstrap CI brackets the point mean; SE positive") {
-    val r = AnalyticsOps10.q217PoissonBootstrap.fn(spark, d).head()
+    val r = BusinessOps.q217PoissonBootstrap.fn(spark, d).head()
     val (point, bm, se) = (r.getAs[Double]("point_mean"),
       r.getAs[Double]("boot_mean"), r.getAs[Double]("boot_se"))
     val (lo, hi) = (r.getAs[Double]("ci_lo"), r.getAs[Double]("ci_hi"))
@@ -28,7 +28,7 @@ class AnalyticsOps10Spec extends SparkSpec {
 
   test("q218: jackknife matches a direct leave-one-out recomputation") {
     import org.apache.spark.sql.functions._
-    val r = AnalyticsOps10.q218BucketJackknife.fn(spark, d).head()
+    val r = BusinessOps.q218BucketJackknife.fn(spark, d).head()
     assert(r.getAs[Long]("n_buckets") == 64L)
     assert(r.getAs[Double]("jk_se") > 0)
     assert(r.getAs[Double]("ci_lo") < r.getAs[Double]("avg_cents") &&
@@ -55,7 +55,7 @@ class AnalyticsOps10Spec extends SparkSpec {
   }
 
   test("q219: Heaps fit is sublinear and anchored (0 < beta < 1)") {
-    val r = AnalyticsOps10.q219HeapsLaw.fn(spark, d).head()
+    val r = TextStatsOps.q219HeapsLaw.fn(spark, d).head()
     assert(r.getAs[Long]("vocab") <= r.getAs[Long]("n_tokens"))
     assert(r.getAs[Long]("n_points") >= 5, "need enough checkpoints to fit")
     val beta = r.getAs[Double]("beta")
@@ -63,7 +63,7 @@ class AnalyticsOps10Spec extends SparkSpec {
   }
 
   test("q220: ANOVA decomposition reconciles (SSB + SSW = SST ≥ 0)") {
-    val r = AnalyticsOps10.q220Anova.fn(spark, d).head()
+    val r = StatsOps.q220Anova.fn(spark, d).head()
     val (ssb, ssw) = (r.getAs[Double]("ssb"), r.getAs[Double]("ssw"))
     assert(ssb >= 0 && ssw >= 0)
     assert(r.getAs[Double]("f_stat") >= 0)
@@ -73,7 +73,7 @@ class AnalyticsOps10Spec extends SparkSpec {
   }
 
   test("q221: Brier in [0,1]; binned-identity residual stays bin-width-bounded") {
-    val r = AnalyticsOps10.q221BrierDecomposition.fn(spark, d).head()
+    val r = EvalOps.q221BrierDecomposition.fn(spark, d).head()
     val b = r.getAs[Double]("brier")
     assert(b >= 0 && b <= 1)
     assert(r.getAs[Double]("reliability") >= 0)
@@ -97,7 +97,7 @@ class AnalyticsOps10Spec extends SparkSpec {
       (3L, "click", 2.5), (4L, "purchase", 2.5))
       .toDF("event_id", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = AnalyticsOps10.q221BrierDecomposition.fn(spark, dir).head()
+    val r = EvalOps.q221BrierDecomposition.fn(spark, dir).head()
     assert(r.getAs[Long]("n_events") == 4L)
     assert(r.getAs[Double]("reliability") == 0.0)
     assert(r.getAs[Double]("resolution") == 0.0)
@@ -107,7 +107,7 @@ class AnalyticsOps10Spec extends SparkSpec {
   }
 
   test("q222: metric ordering invariants (hit rate bounds MRR ≥ MAP terms)") {
-    val r = AnalyticsOps10.q222MrrMap.fn(spark, d).head()
+    val r = EvalOps.q222MrrMap.fn(spark, d).head()
     val (n, mrr, map) = (r.getAs[Long]("n_users"),
       r.getAs[Double]("mrr"), r.getAs[Double]("map_at10"))
     val hits = r.getAs[Long]("n_hits")
@@ -118,7 +118,7 @@ class AnalyticsOps10Spec extends SparkSpec {
   }
 
   test("q223: blocking metrics are ratios in [0,1]; counts consistent") {
-    val r = AnalyticsOps10.q223BlockingMetrics.fn(spark, d).head()
+    val r = EvalOps.q223BlockingMetrics.fn(spark, d).head()
     val rr = r.getAs[Double]("reduction_ratio")
     val pc = r.getAs[Double]("pairs_completeness")
     assert(rr >= 0 && rr <= 1)
@@ -129,7 +129,7 @@ class AnalyticsOps10Spec extends SparkSpec {
   }
 
   test("q224: correction only shrinks V; both in [0,1]") {
-    val r = AnalyticsOps10.q224CramersV.fn(spark, d).head()
+    val r = StatsOps.q224CramersV.fn(spark, d).head()
     val (v, vc) = (r.getAs[Double]("v"), r.getAs[Double]("v_corrected"))
     assert(v >= 0 && v <= 1 && vc >= 0 && vc <= 1)
     assert(vc <= v + 1e-9, s"corrected $vc must not exceed raw $v")
@@ -137,7 +137,7 @@ class AnalyticsOps10Spec extends SparkSpec {
   }
 
   test("q225: recall is monotone in kept dimensions") {
-    val rows = AnalyticsOps10.q225DimTruncationRecall.fn(spark, d)
+    val rows = EvalOps.q225DimTruncationRecall.fn(spark, d)
       .collect().map(r => r.getAs[Int]("k_dims") -> r.getAs[Double]("recall"))
       .toMap
     assert(rows.keySet == Set(8, 16, 32))
@@ -149,7 +149,7 @@ class AnalyticsOps10Spec extends SparkSpec {
   }
 
   test("q226: arm counts partition active users; flag matches chi2") {
-    val rows = AnalyticsOps10.q226SrmCheck.fn(spark, d).collect()
+    val rows = BusinessOps.q226SrmCheck.fn(spark, d).collect()
     assert(rows.nonEmpty)
     rows.foreach { r: Row =>
       val (na, nb) = (r.getAs[Long]("n_a"), r.getAs[Long]("n_b"))
@@ -174,7 +174,7 @@ class AnalyticsOps10Spec extends SparkSpec {
   }
 
   test("q229: gains are valid and the reported splits beat the median cell") {
-    val rows = AnalyticsOps10.q229SplitFinding.fn(spark, d).collect()
+    val rows = EvalOps.q229SplitFinding.fn(spark, d).collect()
     assert(rows.length == 5)
     val gains = rows.map(_.getAs[Double]("gini_gain"))
     // Gini gain of a binary split is bounded by the root impurity ≤ 0.5
@@ -187,7 +187,7 @@ class AnalyticsOps10Spec extends SparkSpec {
   }
 
   test("q230: Chao1 dominates observed vocab; unseen mass is a ratio") {
-    val rows = AnalyticsOps10.q230VocabRichness.fn(spark, d).collect()
+    val rows = TextStatsOps.q230VocabRichness.fn(spark, d).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val v = r.getAs[Long]("vocab")
@@ -200,7 +200,7 @@ class AnalyticsOps10Spec extends SparkSpec {
   }
 
   test("q231: AP sits between base rate and 1; counts reconcile") {
-    val r = AnalyticsOps10.q231PrAuc.fn(spark, d).head()
+    val r = EvalOps.q231PrAuc.fn(spark, d).head()
     val (base, ap) = (r.getAs[Double]("base_rate"), r.getAs[Double]("pr_auc"))
     assert(base > 0 && base < 1)
     assert(ap >= 0 && ap <= 1)
@@ -213,7 +213,7 @@ class AnalyticsOps10Spec extends SparkSpec {
 
   test("q228: allocations conserve the exact budget and are Neyman-shaped") {
     import org.apache.spark.sql.functions._
-    val out = AnalyticsOps10.q228NeymanAllocation.fn(spark, d)
+    val out = SketchOps.q228NeymanAllocation.fn(spark, d)
     val total = graft.Tables.documents(spark, d).count()
     val allocs = out.select(sum(col("alloc"))).head().getLong(0)
     assert(allocs == total / 10,

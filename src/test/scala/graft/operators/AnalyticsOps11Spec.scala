@@ -31,7 +31,7 @@ class AnalyticsOps11Spec extends SparkSpec {
       .map { case (id, s, n) => (id, "x", "en", s, n) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = AnalyticsOps11.q232KruskalWallis.fn(spark, dir).head()
+    val r = StatsOps.q232KruskalWallis.fn(spark, dir).head()
     assert(r.getAs[Long]("n_groups") == 2L)
     assert(math.abs(r.getAs[Double]("h_stat") - 27.0 / 7) < 1e-4,
       s"h=${r.getAs[Double]("h_stat")}")
@@ -44,7 +44,7 @@ class AnalyticsOps11Spec extends SparkSpec {
       .map { case (id, s, n) => (id, "x", "en", s, n) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = AnalyticsOps11.q232KruskalWallis.fn(spark, dir).head()
+    val r = StatsOps.q232KruskalWallis.fn(spark, dir).head()
     assert(r.getAs[Double]("h_stat") == 0.0)
   }
 
@@ -55,7 +55,7 @@ class AnalyticsOps11Spec extends SparkSpec {
       (2L, "A", "zzz zzz common word word"),
       (3L, "B", "common word word common word"),
       (4L, "B", "word common word common word")))
-    val top = AnalyticsOps11.q233LlrKeyness.fn(spark, dir)
+    val top = TextStatsOps.q233LlrKeyness.fn(spark, dir)
       .filter("source = 'A' AND rnk = 1").head()
     assert(top.getAs[String]("word") == "zzz", top.toString)
     assert(top.getAs[Double]("g2") > 0)
@@ -65,7 +65,7 @@ class AnalyticsOps11Spec extends SparkSpec {
     val dir = tmp("graft-gt")
     // bigrams: "a b" ×2, "c d" ×1 → N=3, N1=1, N2=1
     writeDocs(dir, Seq((1L, "A", "a b"), (2L, "A", "a b"), (3L, "A", "c d")))
-    val rows = AnalyticsOps11.q234GoodTuring.fn(spark, dir)
+    val rows = TextStatsOps.q234GoodTuring.fn(spark, dir)
       .collect().map(r => r.getAs[Long]("r") ->
         (r.getAs[Long]("n_words"), r.getAs[Double]("raw_mass"),
           r.getAs[Double]("gt_count"))).toMap
@@ -90,7 +90,7 @@ class AnalyticsOps11Spec extends SparkSpec {
       (7L, post, 1L, "diff", 9.0), (8L, post, 1L, "diff", 10.0))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val m = AnalyticsOps11.q235HellingerDrift.fn(spark, dir)
+    val m = StatsOps.q235HellingerDrift.fn(spark, dir)
       .collect().map(r => r.getAs[String]("event_type") ->
         r.getAs[Double]("hellinger")).toMap
     assert(m("same") == 0.0, m.toString)
@@ -107,7 +107,7 @@ class AnalyticsOps11Spec extends SparkSpec {
       .map { case ((s, n), i) => (i.toLong, "x", "en", s, n) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = AnalyticsOps11.q236CohensD.fn(spark, dir).head()
+    val r = StatsOps.q236CohensD.fn(spark, dir).head()
     val dExp = 2.0 / math.sqrt(2.5)
     assert(math.abs(r.getAs[Double]("cohens_d") - dExp) < 1e-6)
     // Hedges J = 1 − 3/(4·6−9) = 0.8
@@ -122,7 +122,7 @@ class AnalyticsOps11Spec extends SparkSpec {
       .map { case ((s, n), i) => (i.toLong, "x", "en", s, n) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r0 = AnalyticsOps11.q237BrownForsythe.fn(spark, dir).head()
+    val r0 = StatsOps.q237BrownForsythe.fn(spark, dir).head()
     assert(r0.getAs[Double]("f_bf") == 0.0)
     val dir2 = tmp("graft-bf2")
     // A tight around 10, B spread wide: BF should be clearly > 1
@@ -132,7 +132,7 @@ class AnalyticsOps11Spec extends SparkSpec {
       .map { case ((s, n), i) => (i.toLong, "x", "en", s, n) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir2/documents.parquet")
-    val r1 = AnalyticsOps11.q237BrownForsythe.fn(spark, dir2).head()
+    val r1 = StatsOps.q237BrownForsythe.fn(spark, dir2).head()
     assert(r1.getAs[Double]("f_bf") > 1.0, s"f=${r1.getAs[Double]("f_bf")}")
   }
 
@@ -142,7 +142,7 @@ class AnalyticsOps11Spec extends SparkSpec {
       (1L, "A", "the cat sat on the mat the end"),
       (2L, "B", "the cat sat on the mat the end"),
       (3L, "C", "quantum flux inverts the manifold gauge field theory")))
-    val m = AnalyticsOps11.q238BurrowsDelta.fn(spark, dir)
+    val m = TextStatsOps.q238BurrowsDelta.fn(spark, dir)
       .collect().map(r => (r.getAs[String]("source_a"),
         r.getAs[String]("source_b")) -> r.getAs[Double]("delta")).toMap
     assert(m(("A", "B")) == 0.0, m.toString)
@@ -153,7 +153,7 @@ class AnalyticsOps11Spec extends SparkSpec {
     val dir = tmp("graft-vj")
     writeDocs(dir, Seq(
       (1L, "A", "a b c"), (2L, "B", "b c d"), (3L, "C", "x y")))
-    val rows = AnalyticsOps11.q239VocabJaccard.fn(spark, dir)
+    val rows = TextStatsOps.q239VocabJaccard.fn(spark, dir)
       .collect().map(r => (r.getAs[String]("source_a"),
         r.getAs[String]("source_b")) ->
         (r.getAs[Long]("vocab_common"), r.getAs[Double]("jaccard"))).toMap
@@ -165,7 +165,7 @@ class AnalyticsOps11Spec extends SparkSpec {
     val dir = tmp("graft-vj64")
     writeDocs(dir, (1L to 64L).map(i => (i, f"s$i%02d", "a b")))
     val e = intercept[Exception] {
-      AnalyticsOps11.q239VocabJaccard.fn(spark, dir).collect()
+      TextStatsOps.q239VocabJaccard.fn(spark, dir).collect()
     }
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
@@ -174,14 +174,14 @@ class AnalyticsOps11Spec extends SparkSpec {
     // and exactly 63 sources still works (bit 62 is the last safe one)
     val dir2 = tmp("graft-vj63")
     writeDocs(dir2, (1L to 63L).map(i => (i, f"s$i%02d", "a b")))
-    val n = AnalyticsOps11.q239VocabJaccard.fn(spark, dir2).count()
+    val n = TextStatsOps.q239VocabJaccard.fn(spark, dir2).count()
     assert(n == 63L * 62 / 2)
   }
 
   test("q240: a single-token source degrades simpson to 0, never NaN") {
     val dir = tmp("graft-sd1")
     writeDocs(dir, Seq((1L, "A", "solo")))
-    val r = AnalyticsOps11.q240SimpsonDiversity.fn(spark, dir).head()
+    val r = TextStatsOps.q240SimpsonDiversity.fn(spark, dir).head()
     assert(r.getAs[Long]("n_tokens") == 1L)
     assert(r.getAs[Double]("simpson") == 0.0)
     assert(r.getAs[Double]("inv_simpson") == 0.0)
@@ -196,7 +196,7 @@ class AnalyticsOps11Spec extends SparkSpec {
     // FOUR words = 1.5 (a literal /30 would deflate this to 0.2)
     val dir = tmp("graft-bd4")
     writeDocs(dir, Seq((1L, "A", "a a b c"), (2L, "B", "a b d d")))
-    val r = AnalyticsOps11.q238BurrowsDelta.fn(spark, dir).head()
+    val r = TextStatsOps.q238BurrowsDelta.fn(spark, dir).head()
     assert(math.abs(r.getAs[Double]("delta") - 1.5) < 1e-6, r.toString)
   }
 
@@ -204,7 +204,7 @@ class AnalyticsOps11Spec extends SparkSpec {
     val dir = tmp("graft-sd")
     // counts {2,2,2}: λ = 3·2·1/(6·5) = 0.2 → inv 5; H = ln 3
     writeDocs(dir, Seq((1L, "A", "a b c a b c")))
-    val r = AnalyticsOps11.q240SimpsonDiversity.fn(spark, dir).head()
+    val r = TextStatsOps.q240SimpsonDiversity.fn(spark, dir).head()
     assert(r.getAs[Long]("vocab") == 3L)
     assert(math.abs(r.getAs[Double]("simpson") - 0.2) < 1e-6)
     assert(math.abs(r.getAs[Double]("inv_simpson") - 5.0) < 1e-6)
@@ -214,7 +214,7 @@ class AnalyticsOps11Spec extends SparkSpec {
 
   test("q241: Hill alpha matches a driver-side recomputation") {
     import org.apache.spark.sql.functions._
-    val r = AnalyticsOps11.q241HillTail.fn(spark, d).head()
+    val r = StatsOps.q241HillTail.fn(spark, d).head()
     val (n, k, xk) = (r.getAs[Long]("n_orders"), r.getAs[Long]("k"),
       r.getAs[Long]("xk_cents"))
     assert(k == math.min(math.max(10L, n / 100), n - 1))
@@ -240,7 +240,7 @@ class AnalyticsOps11Spec extends SparkSpec {
     (1L to 40L).map(i => (i, 123.45))
       .toDF("o_orderkey", "o_totalprice")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val r = AnalyticsOps11.q241HillTail.fn(spark, dir).head()
+    val r = StatsOps.q241HillTail.fn(spark, dir).head()
     assert(r.getAs[Long]("xk_cents") == 12345L)
     assert(r.getAs[Double]("hill_alpha") == 0.0)
   }

@@ -31,7 +31,7 @@ class AnalyticsOps12Spec extends SparkSpec {
       (4L, "click", 0.0),
       (5L, "purchase", 1.0), (6L, "purchase", 1.0), (7L, "view", 1.0),
       (8L, "view", 1.0)))
-    val r = AnalyticsOps12.q242CalibrationError.fn(spark, dir).head()
+    val r = EvalOps.q242CalibrationError.fn(spark, dir).head()
     assert(r.getAs[Long]("n_bins") == 2L)
     assert(math.abs(r.getAs[Double]("ece") - 0.25) < 1e-6)
     assert(math.abs(r.getAs[Double]("mce") - 0.5) < 1e-6)
@@ -40,13 +40,13 @@ class AnalyticsOps12Spec extends SparkSpec {
   test("q242: constant scores degrade to ECE = MCE = 0, never throw") {
     val dir = tmp("graft-ece0")
     writeEvents(dir, Seq((1L, "purchase", 3.0), (2L, "view", 3.0)))
-    val r = AnalyticsOps12.q242CalibrationError.fn(spark, dir).head()
+    val r = EvalOps.q242CalibrationError.fn(spark, dir).head()
     assert(r.getAs[Double]("ece") == 0.0 && r.getAs[Double]("mce") == 0.0)
   }
 
   test("q243: LLR walk matches a driver-side recomputation; decisions consistent") {
     import org.apache.spark.sql.functions._
-    val rows = AnalyticsOps12.q243Sprt.fn(spark, d)
+    val rows = BusinessOps.q243Sprt.fn(spark, d)
       .orderBy(col("day")).collect()
     assert(rows.nonEmpty)
     // cumulative counts are monotone
@@ -83,7 +83,7 @@ class AnalyticsOps12Spec extends SparkSpec {
     // the production shape: p0 fixed BEFORE the data; recompute the
     // Wald walk in plain Scala from the engine's own cumulative counts
     val p0 = 0.9 // registered null far above any observed purchase rate
-    val rows = AnalyticsOps12.sprtWalk(spark, d, Some(p0))
+    val rows = BusinessOps.sprtWalk(spark, d, Some(p0))
       .orderBy(col("day")).collect()
     assert(rows.nonEmpty)
     assert(rows.head.schema.fieldNames.toSeq ==
@@ -103,10 +103,10 @@ class AnalyticsOps12Spec extends SparkSpec {
     assert(rows.last.getAs[Double]("llr") < 0.0)
     // out-of-range registrations are refused at the driver
     intercept[IllegalArgumentException] {
-      AnalyticsOps12.sprtWalk(spark, d, Some(1.0))
+      BusinessOps.sprtWalk(spark, d, Some(1.0))
     }
     intercept[IllegalArgumentException] {
-      AnalyticsOps12.sprtWalk(spark, d, Some(0.0))
+      BusinessOps.sprtWalk(spark, d, Some(0.0))
     }
   }
 
@@ -118,7 +118,7 @@ class AnalyticsOps12Spec extends SparkSpec {
       (1L, "view", 1.0), (2L, "view", 1.0), (3L, "click", 1.0),
       (4L, "purchase", 2.0), (5L, "purchase", 2.0), (6L, "purchase", 2.0),
       (7L, "view", 2.0), (8L, "click", 2.0)))
-    val r = AnalyticsOps12.q244ConfusionPanel.fn(spark, dir).head()
+    val r = EvalOps.q244ConfusionPanel.fn(spark, dir).head()
     assert(r.getAs[Long]("threshold_cents") == 200L)
     assert((r.getAs[Long]("tp"), r.getAs[Long]("fp"), r.getAs[Long]("fn"),
       r.getAs[Long]("tn")) == ((3L, 2L, 0L, 3L)))
@@ -135,7 +135,7 @@ class AnalyticsOps12Spec extends SparkSpec {
     // positive → tn = fn = 0 → MCC guard fires
     writeEvents(dir, Seq(
       (1L, "purchase", 1.0), (2L, "view", 1.0), (3L, "view", 1.0)))
-    val r = AnalyticsOps12.q244ConfusionPanel.fn(spark, dir).head()
+    val r = EvalOps.q244ConfusionPanel.fn(spark, dir).head()
     assert(r.getAs[Long]("tn") == 0L && r.getAs[Long]("fn") == 0L)
     assert(r.getAs[Double]("mcc") == 0.0)
     assert(r.getAs[Double]("recall") == 1.0)
@@ -147,7 +147,7 @@ class AnalyticsOps12Spec extends SparkSpec {
     writeEvents(dir, (1L to 10L).map(i => (i, "view", 0.0)) ++
       (11L to 18L).map(i => (i, "purchase", 1.0)) ++
       Seq((19L, "view", 1.0), (20L, "view", 1.0)))
-    val r = AnalyticsOps12.q246CochranArmitage.fn(spark, dir).head()
+    val r = StatsOps.q246CochranArmitage.fn(spark, dir).head()
     assert(r.getAs[Long]("n_events") == 20L && r.getAs[Long]("n_pos") == 8L)
     // N·Σwk − K·Σwn = 20·152 − 8·190 = 1520;
     // var = K(N−K)·(N·Σw²n − (Σwn)²)/N = 96·36100/20
@@ -157,7 +157,7 @@ class AnalyticsOps12Spec extends SparkSpec {
     assert(r.getAs[Double]("z_trend") > 2.0)
     val dir2 = tmp("graft-ca0")
     writeEvents(dir2, Seq((1L, "purchase", 5.0), (2L, "view", 5.0)))
-    assert(AnalyticsOps12.q246CochranArmitage.fn(spark, dir2)
+    assert(StatsOps.q246CochranArmitage.fn(spark, dir2)
       .head().getAs[Double]("z_trend") == 0.0)
   }
 
@@ -167,13 +167,13 @@ class AnalyticsOps12Spec extends SparkSpec {
     // threshold 200 separates perfectly → TPR 1, FPR 0, J 1
     writeEvents(dir, Seq((1L, "view", 1.0), (2L, "view", 1.0),
       (3L, "purchase", 2.0), (4L, "purchase", 3.0)))
-    val r = AnalyticsOps12.q247YoudenThreshold.fn(spark, dir).head()
+    val r = EvalOps.q247YoudenThreshold.fn(spark, dir).head()
     assert(r.getAs[Long]("threshold_cents") == 200L)
     assert(r.getAs[Double]("tpr") == 1.0 && r.getAs[Double]("fpr") == 0.0)
     assert(r.getAs[Double]("youden_j") == 1.0)
     val dir2 = tmp("graft-yj0")
     writeEvents(dir2, Seq((1L, "purchase", 1.0), (2L, "purchase", 2.0)))
-    assert(AnalyticsOps12.q247YoudenThreshold.fn(spark, dir2).count() == 0L)
+    assert(EvalOps.q247YoudenThreshold.fn(spark, dir2).count() == 0L)
   }
 
   test("q245: ten distinct scores, purchases on top — capture and lift") {
@@ -181,7 +181,7 @@ class AnalyticsOps12Spec extends SparkSpec {
     // scores 10..1, purchases at the two highest
     writeEvents(dir, (1L to 10L).map(i =>
       (i, if (i <= 2) "purchase" else "view", (11 - i).toDouble)))
-    val rows = AnalyticsOps12.q245GainsLift.fn(spark, dir)
+    val rows = EvalOps.q245GainsLift.fn(spark, dir)
       .collect().map(r => r.getAs[Long]("decile") ->
         (r.getAs[Long]("eff_n"), r.getAs[Long]("captured_k"),
           r.getAs[Double]("capture_rate"), r.getAs[Double]("lift"))).toMap

@@ -69,7 +69,7 @@ class AnalyticsOps13Spec extends SparkSpec {
     // lt = 6-1-1 = 4 → delta = (1-4)/6 = -0.5 → |d| ≥ 0.474 → large
     writeDocsN(dir, Seq((1L, "A", "en", 1L), (2L, "A", "en", 2L),
       (3L, "A", "en", 3L), (4L, "B", "en", 2L), (5L, "B", "en", 4L)))
-    val r = AnalyticsOps13.q248CliffsDelta.fn(spark, dir).head()
+    val r = StatsOps.q248CliffsDelta.fn(spark, dir).head()
     assert(r.getAs[String]("source_a") == "A")
     assert((r.getAs[Long]("n_a"), r.getAs[Long]("n_b")) == ((3L, 2L)))
     assert(math.abs(r.getAs[Double]("cliffs_delta") + 0.5) < 1e-9)
@@ -80,7 +80,7 @@ class AnalyticsOps13Spec extends SparkSpec {
     val dir = tmp("graft-cd0")
     writeDocsN(dir, Seq((1L, "A", "en", 5L), (2L, "A", "en", 7L),
       (3L, "B", "en", 5L), (4L, "B", "en", 7L)))
-    val r = AnalyticsOps13.q248CliffsDelta.fn(spark, dir).head()
+    val r = StatsOps.q248CliffsDelta.fn(spark, dir).head()
     assert(r.getAs[Double]("cliffs_delta") == 0.0)
     assert(r.getAs[String]("magnitude") == "negligible")
   }
@@ -90,7 +90,7 @@ class AnalyticsOps13Spec extends SparkSpec {
     // even half: "a a b" → ranks a=1, b=2; odd half: "a c c" →
     // ranks c=1, a=2. Shared: a at max-depth 2 → a_d = 1 for d ≥ 2
     writeDocsText(dir, Seq((2L, "A", "a a b"), (1L, "A", "a c c")))
-    val r = AnalyticsOps13.q249Rbo.fn(spark, dir).head()
+    val r = EvalOps.q249Rbo.fn(spark, dir).head()
     assert((r.getAs[Long]("n_a"), r.getAs[Long]("n_b")) == ((2L, 2L)))
     assert(r.getAs[Long]("overlap_at_k") == 1L)
     // same quantized chain as the engine/oracle share
@@ -106,7 +106,7 @@ class AnalyticsOps13Spec extends SparkSpec {
   test("q249: identical halves give RBO 1") {
     val dir = tmp("graft-rbo1")
     writeDocsText(dir, Seq((2L, "A", "a a b"), (1L, "A", "a a b")))
-    val r = AnalyticsOps13.q249Rbo.fn(spark, dir).head()
+    val r = EvalOps.q249Rbo.fn(spark, dir).head()
     // a_d = min(d, 2) for both 2-word lists → rbo = (1-p)·Σ p^(d-1)·
     // min(d,2)/d over d=1..50, computed on the same quantized grid
     val s9 = (1 to 50).map { dd =>
@@ -124,7 +124,7 @@ class AnalyticsOps13Spec extends SparkSpec {
     // 4th day; p = 2·exp(-6·256/(8³+8²)) = 2·exp(-8/3)
     writeOrders(dir, (0L to 7L).map(i =>
       (i, if (i < 4) 0.10 else 10.00, i)))
-    val r = AnalyticsOps13.q250Pettitt.fn(spark, dir).head()
+    val r = SeriesOps.q250Pettitt.fn(spark, dir).head()
     assert(r.getAs[Long]("n_days") == 8L)
     assert(r.getAs[java.sql.Date]("change_day").toString == "2024-01-04")
     assert(r.getAs[Double]("k_stat") == 16.0)
@@ -140,7 +140,7 @@ class AnalyticsOps13Spec extends SparkSpec {
     writeEvents(dir, Seq((1L, 1L, "purchase", 0.01, 0L),
       (2L, 1L, "purchase", 0.02, 0L), (3L, 1L, "view", 0.01, 0L),
       (4L, 1L, "view", 0.02, 0L)))
-    val r = AnalyticsOps13.q251DelongAuc.fn(spark, dir).head()
+    val r = StatsOps.q251DelongAuc.fn(spark, dir).head()
     assert((r.getAs[Long]("n_pos"), r.getAs[Long]("n_neg")) == ((2L, 2L)))
     assert(r.getAs[Double]("auc") == 0.5)
     val se = math.sqrt(0.125)
@@ -154,7 +154,7 @@ class AnalyticsOps13Spec extends SparkSpec {
     writeEvents(dir, Seq((1L, 1L, "purchase", 0.02, 0L),
       (2L, 1L, "purchase", 0.02, 0L), (3L, 1L, "view", 0.01, 0L),
       (4L, 1L, "view", 0.01, 0L)))
-    val r = AnalyticsOps13.q251DelongAuc.fn(spark, dir).head()
+    val r = StatsOps.q251DelongAuc.fn(spark, dir).head()
     assert(r.getAs[Double]("auc") == 1.0)
     assert(r.getAs[Double]("se") == 0.0)
     assert(r.getAs[Double]("ci_lo") == 1.0 &&
@@ -168,7 +168,7 @@ class AnalyticsOps13Spec extends SparkSpec {
     writeEvents(dir, Seq((1L, 1L, "purchase", 1.00, 0L),
       (2L, 1L, "view", 9.99, 0L), (3L, 2L, "view", 5.00, 0L),
       (4L, 2L, "click", 5.00, 0L)))
-    val r = AnalyticsOps13.q252RatioDeltaCi.fn(spark, dir).head()
+    val r = StatsOps.q252RatioDeltaCi.fn(spark, dir).head()
     assert(r.getAs[Long]("n_users") == 2L)
     assert(r.getAs[Double]("ratio_cents_per_event") == 25.0)
     assert(r.getAs[Double]("se") == 25.0)
@@ -184,7 +184,7 @@ class AnalyticsOps13Spec extends SparkSpec {
     writeEmbeddings(dir, Seq(
       (1L, Seq(0f, 0f), 0), (2L, Seq(0f, 2f), 0),
       (3L, Seq(10f, 0f), 1), (4L, Seq(10f, 2f), 1)))
-    val rows = AnalyticsOps13.q253Silhouette.fn(spark, dir)
+    val rows = ClusteringOps.q253Silhouette.fn(spark, dir)
       .collect().map(r => r.getAs[Long]("label") ->
         (r.getAs[Long]("n"), r.getAs[Double]("mean_silhouette"))).toMap
     val b = math.sqrt(101.0)
@@ -359,11 +359,11 @@ class AnalyticsOps13Spec extends SparkSpec {
   * uniformly. */
 private object AnalyticsOps13List {
   def q254(s: org.apache.spark.sql.SparkSession, d: String) =
-    AnalyticsOps14.q254BhFdr.fn(s, d)
+    StatsOps.q254BhFdr.fn(s, d)
   def q255(s: org.apache.spark.sql.SparkSession, d: String) =
-    AnalyticsOps14.q255EbShrinkage.fn(s, d)
+    StatsOps.q255EbShrinkage.fn(s, d)
   def q256(s: org.apache.spark.sql.SparkSession, d: String) =
-    AnalyticsOps14.q256Mahalanobis.fn(s, d)
+    StatsOps.q256Mahalanobis.fn(s, d)
   def q257(s: org.apache.spark.sql.SparkSession, d: String) =
-    AnalyticsOps14.q257GumbelMaxima.fn(s, d)
+    StatsOps.q257GumbelMaxima.fn(s, d)
 }

@@ -48,13 +48,13 @@ class AnalyticsOps15Spec extends SparkSpec {
     writeEvents(dir, Seq((0L, 1L, "view", 0.01, 0L),
       (2L, 1L, "view", 0.02, 0L), (1L, 1L, "view", 0.01, 0L),
       (3L, 1L, "view", 0.03, 0L)))
-    val r = AnalyticsOps15.q258CvmDrift.fn(spark, dir).head()
+    val r = StatsOps.q258CvmDrift.fn(spark, dir).head()
     assert((r.getAs[Long]("n_a"), r.getAs[Long]("n_b")) == ((2L, 2L)))
     assert(r.getAs[Double]("cvm_t") == 0.0625)
     val dir2 = tmp("graft-cvm0")
     writeEvents(dir2, Seq((0L, 1L, "view", 0.01, 0L),
       (1L, 1L, "view", 0.01, 0L)))
-    assert(AnalyticsOps15.q258CvmDrift.fn(spark, dir2)
+    assert(StatsOps.q258CvmDrift.fn(spark, dir2)
       .head().getAs[Double]("cvm_t") == 0.0)
   }
 
@@ -64,7 +64,7 @@ class AnalyticsOps15Spec extends SparkSpec {
     // Var = (16·11 − 8·7)/72 = 5/3 → z = 2/sqrt(5/3)
     writeOrders(dir, Seq((1L, 0.01, 0L), (2L, 0.02, 1L),
       (3L, 0.03, 32L), (4L, 0.04, 33L)))
-    val r = AnalyticsOps15.q259Jonckheere.fn(spark, dir).head()
+    val r = StatsOps.q259Jonckheere.fn(spark, dir).head()
     assert(r.getAs[Long]("n_orders") == 4L)
     assert(r.getAs[Long]("n_months") == 2L)
     assert(r.getAs[Double]("j_stat") == 4.0)
@@ -81,7 +81,7 @@ class AnalyticsOps15Spec extends SparkSpec {
     val first = orders.agg(min(col("mon"))).head().get(0)
     orders.filter(col("mon") === lit(first)).drop("mon")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val r = AnalyticsOps15.q259Jonckheere.fn(spark, dir).head()
+    val r = StatsOps.q259Jonckheere.fn(spark, dir).head()
     assert(r.getAs[Long]("n_months") == 1L)
     assert(r.getAs[Long]("n_orders") > 1L)
     assert(r.isNullAt(r.fieldIndex("j_stat")))
@@ -93,7 +93,7 @@ class AnalyticsOps15Spec extends SparkSpec {
     Seq((1L, "a a b", "en", "A", 5L), (2L, "a a a b", "en", "B", 7L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = AnalyticsOps15.q260KendallsW.fn(spark, dir).head()
+    val r = StatsOps.q260KendallsW.fn(spark, dir).head()
     assert(r.getAs[Long]("n_sources") == 2L)
     assert(r.getAs[Long]("n_words") == 2L)
     assert(r.getAs[Double]("w") == 1.0)
@@ -107,7 +107,7 @@ class AnalyticsOps15Spec extends SparkSpec {
     Seq((1L, "a a b", "en", "A", 5L), (2L, "a b b", "en", "B", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = AnalyticsOps15.q260KendallsW.fn(spark, dir).head()
+    val r = StatsOps.q260KendallsW.fn(spark, dir).head()
     assert(r.getAs[Double]("w") == 0.0)
   }
 
@@ -120,7 +120,7 @@ class AnalyticsOps15Spec extends SparkSpec {
     writeEvents(dir, Seq((1L, 1L, "view", 1.0, 1L),
       (2L, 2L, "view", 1.0, 1L), (3L, 2L, "view", 1.0, 0L),
       (4L, 3L, "view", 1.0, 0L)))
-    val r = AnalyticsOps15.q261CaptureRecapture.fn(spark, dir).head()
+    val r = SketchOps.q261CaptureRecapture.fn(spark, dir).head()
     assert((r.getAs[Long]("n_even"), r.getAs[Long]("n_odd"),
       r.getAs[Long]("n_both"), r.getAs[Long]("n_true"))
       == ((2L, 2L, 1L, 3L)))
@@ -136,19 +136,19 @@ class AnalyticsOps15Spec extends SparkSpec {
     // C = (1, 0, 2), R = (2, 1, 0): Q = 2(3·5 − 9)/(3·3 − 5) = 3
     writeDocsN(dir, Seq((1L, "A", "t", 2000L), (2L, "A", "t", 10L),
       (3L, "A", "t", 3L)))
-    val r = AnalyticsOps15.q262CochransQ.fn(spark, dir).head()
+    val r = StatsOps.q262CochransQ.fn(spark, dir).head()
     assert((r.getAs[Long]("n_long"), r.getAs[Long]("n_digit"),
       r.getAs[Long]("n_longtok")) == ((1L, 0L, 2L)))
     assert(r.getAs[Double]("q_stat") == 3.0)
     val dir2 = tmp("graft-cq0")
     writeDocsN(dir2, Seq((1L, "A", "t", 3L), (2L, "A", "t", 3L)))
-    assert(AnalyticsOps15.q262CochransQ.fn(spark, dir2)
+    assert(StatsOps.q262CochransQ.fn(spark, dir2)
       .head().getAs[Double]("q_stat") == 0.0)
   }
 
   test("q263: the panel matches the closed form on the engine's own counts") {
     import org.apache.spark.sql.functions._
-    val r = AnalyticsOps15.q263MdePower.fn(spark, d).head()
+    val r = BusinessOps.q263MdePower.fn(spark, d).head()
     // recompute the md5 arm split independently (the q243-spec device)
     val m = graft.Tables.events(spark, d)
       .select(expr("conv(substring(md5(cast(user_id AS string)), 1, 15)," +
@@ -181,7 +181,7 @@ class AnalyticsOps15Spec extends SparkSpec {
     // 9/11, 1/3 for each source → A2 = (3/4)·2·(S/2), S = 2/3 + 18/11
     writeDocsN(dir, Seq((1L, "X", "t", 1L), (2L, "X", "t", 2L),
       (3L, "Y", "t", 3L), (4L, "Y", "t", 4L)))
-    val r = AnalyticsOps15.q264KSampleAd.fn(spark, dir).head()
+    val r = StatsOps.q264KSampleAd.fn(spark, dir).head()
     assert(r.getAs[Long]("n_sources") == 2L)
     assert(r.getAs[Long]("n_docs") == 4L)
     // recompute through the same quantized chain
@@ -196,7 +196,7 @@ class AnalyticsOps15Spec extends SparkSpec {
     val dir2 = tmp("graft-ad0")
     writeDocsN(dir2, Seq((1L, "X", "t", 1L), (2L, "X", "t", 2L),
       (3L, "Y", "t", 1L), (4L, "Y", "t", 2L)))
-    assert(AnalyticsOps15.q264KSampleAd.fn(spark, dir2)
+    assert(StatsOps.q264KSampleAd.fn(spark, dir2)
       .head().getAs[Double]("a2_stat") == 0.0)
   }
 }

@@ -44,7 +44,7 @@ class AnalyticsOps16Spec extends SparkSpec {
     // the OOV default l9(ln 1/5)
     val hAB = -(2.0 * q9(math.log(2.0 / 5)) + q9(math.log(1.0 / 5)))
       .toDouble / 1e9 / 3
-    val rows = AnalyticsOps16.q265CrossEntropyMatrix.fn(spark, dir)
+    val rows = TextStatsOps.q265CrossEntropyMatrix.fn(spark, dir)
       .collect().map(r => (r.getAs[String]("source_train"),
         r.getAs[String]("source_eval")) ->
         r.getAs[Double]("cross_entropy")).toMap
@@ -57,7 +57,7 @@ class AnalyticsOps16Spec extends SparkSpec {
     val dir = tmp("graft-pr")
     writeEmbeddings(dir, Seq((1L, Seq(1f, 0f), 0), (2L, Seq(0f, 1f), 0),
       (3L, Seq(-1f, 0f), 0), (4L, Seq(0f, -1f), 0)))
-    val r = AnalyticsOps16.q266ParticipationRatio.fn(spark, dir).head()
+    val r = ClusteringOps.q266ParticipationRatio.fn(spark, dir).head()
     assert(r.getAs[Long]("n_vectors") == 4L)
     assert(r.getAs[Long]("dim") == 2L)
     // C = diag(2/3, 2/3) on the 1e-9 grid → PR = 2 exactly (up to the
@@ -72,21 +72,21 @@ class AnalyticsOps16Spec extends SparkSpec {
     val dir2 = tmp("graft-pr1")
     writeEmbeddings(dir2, Seq((1L, Seq(1f, 0f), 0), (2L, Seq(-1f, 0f), 0),
       (3L, Seq(2f, 0f), 0)))
-    val r2 = AnalyticsOps16.q266ParticipationRatio.fn(spark, dir2).head()
+    val r2 = ClusteringOps.q266ParticipationRatio.fn(spark, dir2).head()
     assert(math.abs(r2.getAs[Double]("participation_ratio") - 1.0) < 1e-5)
   }
 
   test("q267: orthogonal pair has mean cosine 0; aligned pair has 1") {
     val dir = tmp("graft-ani")
     writeEmbeddings(dir, Seq((1L, Seq(1f, 0f), 0), (2L, Seq(0f, 1f), 0)))
-    val r = AnalyticsOps16.q267Anisotropy.fn(spark, dir).head()
+    val r = ClusteringOps.q267Anisotropy.fn(spark, dir).head()
     assert(r.getAs[Long]("n_vectors") == 2L)
     assert(r.getAs[Double]("mean_cosine") == 0.0)
     val nrm = math.floor(math.sqrt(2e18) / 2 / 1e9 * 1e6 + 0.5) / 1e6
     assert(r.getAs[Double]("mean_vector_norm") == nrm)
     val dir2 = tmp("graft-ani1")
     writeEmbeddings(dir2, Seq((1L, Seq(3f, 0f), 0), (2L, Seq(5f, 0f), 0)))
-    val r2 = AnalyticsOps16.q267Anisotropy.fn(spark, dir2).head()
+    val r2 = ClusteringOps.q267Anisotropy.fn(spark, dir2).head()
     assert(math.abs(r2.getAs[Double]("mean_cosine") - 1.0) < 1e-6)
   }
 
@@ -94,7 +94,7 @@ class AnalyticsOps16Spec extends SparkSpec {
     val dir = tmp("graft-ess")
     writeDocsN(dir, Seq((1L, "EQ", "t", 1L), (2L, "EQ", "t", 1L),
       (3L, "SK", "t", 1L), (4L, "SK", "t", 3L)))
-    val out = AnalyticsOps16.q268EssKish.fn(spark, dir).collect()
+    val out = SketchOps.q268EssKish.fn(spark, dir).collect()
       .map(r => r.getAs[String]("source") ->
         (r.getAs[Double]("ess"), r.getAs[Double]("deff"))).toMap
     assert(out("EQ") == ((2.0, 1.0)))
@@ -116,7 +116,7 @@ class AnalyticsOps16Spec extends SparkSpec {
       .toDF("l_orderkey", "l_suppkey", "l_quantity", "l_extendedprice",
         "l_discount")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val r = AnalyticsOps16.q269Assortativity.fn(spark, dir).head()
+    val r = GraphOps.q269Assortativity.fn(spark, dir).head()
     assert(r.getAs[Long]("n_nodes") == 4L)
     assert(r.getAs[Long]("n_edges") == 3L)
     assert(r.getAs[Double]("assortativity") == -1.0)
@@ -129,7 +129,7 @@ class AnalyticsOps16Spec extends SparkSpec {
     // degrade to 0 on the |r|=1 denominator guard
     writeDocsN(dir, Seq((1L, "A", "a b", 10L),
       (2L, "A", "a b c d", 20L), (3L, "A", "a b c d e f", 30L)))
-    val r = AnalyticsOps16.q270PartialCorr.fn(spark, dir).head()
+    val r = StatsOps.q270PartialCorr.fn(spark, dir).head()
     assert(r.getAs[Long]("n_docs") == 3L)
     assert(r.getAs[Double]("r12") == 1.0)
     assert(r.getAs[Double]("r13") == 0.0)

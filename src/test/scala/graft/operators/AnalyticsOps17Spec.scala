@@ -24,7 +24,7 @@ class AnalyticsOps17Spec extends SparkSpec {
     // only abcd pooled elsewhere → p = 0.5; "x y" has no 4-gram
     writeDocs(dir, Seq((1L, "A", "a b c d"), (2L, "A", "a b c d e"),
       (3L, "A", "x y")))
-    val r = AnalyticsOps17.q271SelfBleu.fn(spark, dir).head()
+    val r = TextStatsOps.q271SelfBleu.fn(spark, dir).head()
     assert(r.getAs[Long]("n_docs_scored") == 2L)
     assert(r.getAs[Double]("loo_gram_precision") == 0.75)
   }
@@ -32,7 +32,7 @@ class AnalyticsOps17Spec extends SparkSpec {
   test("q271: a source of unique texts scores 0") {
     val dir = tmp("graft-sbleu0")
     writeDocs(dir, Seq((1L, "A", "a b c d"), (2L, "A", "e f g h")))
-    val r = AnalyticsOps17.q271SelfBleu.fn(spark, dir).head()
+    val r = TextStatsOps.q271SelfBleu.fn(spark, dir).head()
     assert(r.getAs[Double]("loo_gram_precision") == 0.0)
   }
 
@@ -42,7 +42,7 @@ class AnalyticsOps17Spec extends SparkSpec {
     val block2 = Seq.fill(25)("same").mkString(" ")
     writeDocs(dir, Seq((1L, "A", s"$block1 $block2"),
       (2L, "A", "too short")))
-    val r = AnalyticsOps17.q272Sttr.fn(spark, dir).head()
+    val r = TextStatsOps.q272Sttr.fn(spark, dir).head()
     assert(r.getAs[Long]("n_blocks") == 2L)
     assert(r.getAs[Double]("sttr") == 0.52)
   }
@@ -51,7 +51,7 @@ class AnalyticsOps17Spec extends SparkSpec {
     val dir = tmp("graft-burst")
     writeDocs(dir, Seq((1L, "A", "the zz zz zz zz"), (2L, "A", "the"),
       (3L, "A", "the"), (4L, "A", "the")))
-    val out = AnalyticsOps17.q273WordBurstiness.fn(spark, dir)
+    val out = TextStatsOps.q273WordBurstiness.fn(spark, dir)
       .collect().map(r => r.getAs[String]("word") ->
         (r.getAs[Long]("doc_freq"), r.getAs[Long]("total_count"),
           r.getAs[Double]("burstiness"))).toMap
@@ -61,7 +61,7 @@ class AnalyticsOps17Spec extends SparkSpec {
 
   test("q274: coverage matches a driver recompute and is monotone") {
     import org.apache.spark.sql.functions._
-    val rows = AnalyticsOps17.q274CoverageCurve.fn(spark, d)
+    val rows = TextStatsOps.q274CoverageCurve.fn(spark, d)
       .orderBy(col("train_pct")).collect()
     assert(rows.map(_.getAs[Long]("train_pct")).toSeq ==
       Seq(20L, 40L, 60L, 80L))

@@ -39,7 +39,7 @@ class AnalyticsOps18Spec extends SparkSpec {
   test("q275: 'a a b' gives K = 10^4 * (5 - 3) / 9") {
     val dir = tmp("graft-yule")
     writeDocs(dir, Seq((1L, "A", "a a b")))
-    val r = AnalyticsOps18.q275YuleK.fn(spark, dir).head()
+    val r = TextStatsOps.q275YuleK.fn(spark, dir).head()
     assert(r.getAs[Long]("n_tokens") == 3L)
     assert(r.getAs[Long]("n_types") == 2L)
     assert(r.getAs[Double]("yule_k") == 2222.222222)
@@ -48,7 +48,7 @@ class AnalyticsOps18Spec extends SparkSpec {
   test("q275: all-distinct tokens score K = 0") {
     val dir = tmp("graft-yule0")
     writeDocs(dir, Seq((1L, "A", "a b c d")))
-    assert(AnalyticsOps18.q275YuleK.fn(spark, dir).head()
+    assert(TextStatsOps.q275YuleK.fn(spark, dir).head()
       .getAs[Double]("yule_k") == 0.0)
   }
 
@@ -59,7 +59,7 @@ class AnalyticsOps18Spec extends SparkSpec {
       (1L, 1 * day, "view", 1.0), (2L, 2 * day, "view", 2.0),
       (3L, 3 * day, "view", 3.0),
       (4L, 1 * day, "click", 7.0), (5L, 2 * day, "click", 7.0)))
-    val out = AnalyticsOps18.q276JarqueBera.fn(spark, dir).collect()
+    val out = StatsOps.q276JarqueBera.fn(spark, dir).collect()
       .map(r => r.getAs[String]("event_type") -> r).toMap
     val v = out("view")
     // mu=200c, m2=20000/3, m3=0, m4/m2^2=1.5 -> exk=-1.5,
@@ -77,7 +77,7 @@ class AnalyticsOps18Spec extends SparkSpec {
     val day = 86400000L
     writeEvents(dir, (1 to 8).map(d =>
       (d.toLong, d * day, "view", d.toDouble)))
-    val r = AnalyticsOps18.q277LjungBox.fn(spark, dir).head()
+    val r = SeriesOps.q277LjungBox.fn(spark, dir).head()
     assert(r.getAs[Long]("n_days") == 8L)
     assert(r.getAs[Double]("r1") == 0.625)
     assert(r.getAs[Double]("q_lb") == 24.84127)
@@ -88,7 +88,7 @@ class AnalyticsOps18Spec extends SparkSpec {
     val day = 86400000L
     writeEvents(dir, (1 to 9).map(d =>
       (d.toLong, d * day, "view", 5.0)))
-    val r = AnalyticsOps18.q277LjungBox.fn(spark, dir).head()
+    val r = SeriesOps.q277LjungBox.fn(spark, dir).head()
     assert(r.getAs[Double]("r1") == 0.0)
     assert(r.getAs[Double]("q_lb") == 0.0)
   }
@@ -100,7 +100,7 @@ class AnalyticsOps18Spec extends SparkSpec {
     writeEvents(dir, vals.zipWithIndex.map { case (v, i) =>
       ((i + 1).toLong, (i + 1) * day, "view", v) })
     // lower median = 5 (dropped); signs -+-+-+ +-+ -> 8 runs, 5 pos 4 neg
-    val r = AnalyticsOps18.q278RunsTest.fn(spark, dir).head()
+    val r = SeriesOps.q278RunsTest.fn(spark, dir).head()
     assert(r.getAs[Long]("n_runs") == 8L)
     assert(r.getAs[Long]("n_pos") == 5L)
     assert(r.getAs[Long]("n_neg") == 4L)
@@ -113,7 +113,7 @@ class AnalyticsOps18Spec extends SparkSpec {
     // median 1 (lower); the single 2 is the only non-median day
     writeEvents(dir, Seq((1L, 1 * day, "view", 1.0),
       (2L, 2 * day, "view", 1.0), (3L, 3 * day, "view", 2.0)))
-    val r = AnalyticsOps18.q278RunsTest.fn(spark, dir).head()
+    val r = SeriesOps.q278RunsTest.fn(spark, dir).head()
     assert(r.getAs[Long]("n_neg") == 0L)
     assert(r.getAs[Double]("z") == 0.0)
   }
@@ -124,7 +124,7 @@ class AnalyticsOps18Spec extends SparkSpec {
     writeEvents(dir, (0 to 7).map(h =>
       ((h + 1).toLong, h * hour, "view",
         if (h % 2 == 0) 1.0 else 3.0)))
-    val out = AnalyticsOps18.q279AllanVariance.fn(spark, dir).collect()
+    val out = SeriesOps.q279AllanVariance.fn(spark, dir).collect()
       .map(r => r.getAs[Long]("tau_hours") ->
         (r.getAs[Long]("n_pairs"), r.getAs[Double]("allan_var"))).toMap
     // tau=1: 7 diffs of +-2 -> 7*4/(2*7*1) = 2.0
@@ -143,7 +143,7 @@ class AnalyticsOps18Spec extends SparkSpec {
     // block 1 incomplete -> no adjacent pair at tau=2
     writeEvents(dir, Seq((1L, 0 * hour, "view", 1.0),
       (2L, 1 * hour, "view", 3.0), (3L, 3 * hour, "view", 5.0)))
-    val out = AnalyticsOps18.q279AllanVariance.fn(spark, dir).collect()
+    val out = SeriesOps.q279AllanVariance.fn(spark, dir).collect()
       .map(r => r.getAs[Long]("tau_hours") -> r.getAs[Long]("n_pairs"))
       .toMap
     // tau=1: only hours 0-1 adjacent (1-3 not consecutive) -> 1 pair
@@ -157,7 +157,7 @@ class AnalyticsOps18Spec extends SparkSpec {
       (1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L), // edge 1-2 x2
       (3L, 1L), (3L, 3L), (4L, 1L), (4L, 3L), // edge 1-3 x2
       (5L, 2L), (5L, 3L), (6L, 2L), (6L, 3L))) // edge 2-3 x2
-    val rows = AnalyticsOps18.q280RichClub.fn(spark, dir).collect()
+    val rows = GraphOps.q280RichClub.fn(spark, dir).collect()
     assert(rows.length == 1) // k >= 2 thresholds have N_k = 0 < 2
     val r = rows.head
     assert(r.getAs[Long]("k") == 1L)
@@ -169,6 +169,6 @@ class AnalyticsOps18Spec extends SparkSpec {
   test("q280: single-support pairs generate no edges and no rows") {
     val dir = tmp("graft-rc0")
     writeLineitem(dir, Seq((1L, 1L), (1L, 2L), (2L, 2L), (2L, 3L)))
-    assert(AnalyticsOps18.q280RichClub.fn(spark, dir).count() == 0L)
+    assert(GraphOps.q280RichClub.fn(spark, dir).count() == 0L)
   }
 }

@@ -47,7 +47,7 @@ class AnalyticsOps19Spec extends SparkSpec {
     // context) -> H=1.022768, ppl=2.780882 (python recompute)
     writeDocs(dir, Seq((train.head, "A", "a b a b"),
       (test(0), "A", "a b x"), (test(1), "A", "z a")))
-    val r = AnalyticsOps19.q281KneserNey.fn(spark, dir).head()
+    val r = TextStatsOps.q281KneserNey.fn(spark, dir).head()
     assert(r.getAs[Long]("n_test_bigrams") == 3L)
     assert(r.getAs[Double]("kn_cross_entropy") == 1.022768)
     assert(r.getAs[Double]("kn_perplexity") == 2.780882)
@@ -59,7 +59,7 @@ class AnalyticsOps19Spec extends SparkSpec {
     val dist26 = (1 to 26).map(i => s"w$i").mkString(" ")
     writeDocs(dir, Seq((1L, "A", const25), (2L, "A", dist26),
       (3L, "A", "too short")))
-    val r = AnalyticsOps19.q282Mattr.fn(spark, dir).head()
+    val r = TextStatsOps.q282Mattr.fn(spark, dir).head()
     assert(r.getAs[Long]("n_docs_scored") == 2L)
     assert(r.getAs[Long]("n_docs_short") == 1L)
     assert(r.getAs[Double]("mattr") == 0.52)
@@ -79,7 +79,7 @@ class AnalyticsOps19Spec extends SparkSpec {
       base.zipWithIndex.map { case (xs, i) => ((i + 100).toLong, vecConst(xs), 1) }
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val out = AnalyticsOps19.q283CkaHalves.fn(spark, dir).collect()
+    val out = ClusteringOps.q283CkaHalves.fn(spark, dir).collect()
       .map(r => r.getAs[Long]("label") -> r.getAs[Double]("cka")).toMap
     assert(out(0L) == 1.0) // Cxy = Cxx = Cyy cell-for-cell
     assert(out(1L) == 0.0) // zero-variance Y block degrades
@@ -96,7 +96,7 @@ class AnalyticsOps19Spec extends SparkSpec {
         // click: 1.0 early vs 3.0 late -> bins 0 and 63,
         // kernel at distance 63 rounds to 0 -> mmd2 = 1 + 1 = 2
         (5L, 1 * day, "click", 1.0), (6L, 2 * day, "click", 3.0)))
-    val out = AnalyticsOps19.q284MmdDrift.fn(spark, dir).collect()
+    val out = StatsOps.q284MmdDrift.fn(spark, dir).collect()
       .map(r => r.getAs[String]("event_type") -> r.getAs[Double]("mmd2"))
       .toMap
     assert(out("view") == 0.0)
@@ -111,7 +111,7 @@ class AnalyticsOps19Spec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     Seq(Tuple1(1L), Tuple1(2L)).toDF("o_orderkey")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val rows = AnalyticsOps19.q285SelectivityAudit.fn(spark, dir)
+    val rows = SketchOps.q285SelectivityAudit.fn(spark, dir)
       .collect().map(r => r.getAs[String]("probe") ->
         (r.getAs[Double]("est_rows"), r.getAs[Long]("actual_rows"),
           r.getAs[Double]("q_error"))).toMap
@@ -133,7 +133,7 @@ class AnalyticsOps19Spec extends SparkSpec {
         ((i + 1).toLong, (i + 1) * day, "click", v) } ++
       ramp.zipWithIndex.map { case (v, i) =>
         ((i + 100).toLong, (i + 2) * day, "view", v) })
-    val out = AnalyticsOps19.q286CrossCorrelation.fn(spark, dir)
+    val out = SeriesOps.q286CrossCorrelation.fn(spark, dir)
       .collect().map(r => r.getAs[Long]("lag") ->
         (r.getAs[Long]("n_pairs"), r.getAs[Double]("ccf"))).toMap
     // view day d+1 equals click day d: join matches at lag -1

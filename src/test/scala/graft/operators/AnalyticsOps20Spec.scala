@@ -28,7 +28,7 @@ class AnalyticsOps20Spec extends SparkSpec {
       (3L, 3 * day, "view", 1.0), (4L, 4 * day, "view", 10.0),
       (5L, 1 * day, "click", 7.0), (6L, 2 * day, "click", 7.0),
       (7L, 3 * day, "click", 7.0)))
-    val out = AnalyticsOps20.q287Grubbs.fn(spark, dir).collect()
+    val out = StatsOps.q287Grubbs.fn(spark, dir).collect()
       .map(r => r.getAs[String]("event_type") -> r).toMap
     val v = out("view")
     assert(v.getAs[Long]("extreme_cents") == 1000L)
@@ -45,7 +45,7 @@ class AnalyticsOps20Spec extends SparkSpec {
     writeEvents(dir, Seq(
       (1L, 1 * day, "view", 1.0), (2L, 1 * day, "view", 3.0),
       (3L, 2 * day, "view", 2.0), (4L, 2 * day, "view", 6.0)))
-    val r = AnalyticsOps20.q288QqDriftFit.fn(spark, dir).head()
+    val r = StatsOps.q288QqDriftFit.fn(spark, dir).head()
     assert(r.getAs[Long]("n_early") == 2L && r.getAs[Long]("n_late") == 2L)
     assert(r.getAs[Double]("qq_slope") == 2.0)
     assert(r.getAs[Double]("qq_intercept") == 0.0)
@@ -57,7 +57,7 @@ class AnalyticsOps20Spec extends SparkSpec {
     val vals = Seq(1.0, 3.0, 1.0, 3.0, 1.0, 3.0, 1.0, 5.0, 1.0)
     writeEvents(dir, vals.zipWithIndex.map { case (v, i) =>
       ((i + 1).toLong, (i + 1) * day, "view", v) })
-    val r = AnalyticsOps20.q289DickeyFuller.fn(spark, dir).head()
+    val r = SeriesOps.q289DickeyFuller.fn(spark, dir).head()
     assert(r.getAs[Long]("n_obs") == 8L)
     assert(r.getAs[Double]("beta") == -1.806452) // python recompute
     assert(r.getAs[Double]("df_stat") == -7.483315)
@@ -69,7 +69,7 @@ class AnalyticsOps20Spec extends SparkSpec {
     writeEvents(dir, Seq((1L, 1 * day, "view", 1.0),
       (2L, 2 * day, "view", 3.0), (3L, 4 * day, "view", 1.0),
       (4L, 5 * day, "view", 3.0)))
-    assert(AnalyticsOps20.q289DickeyFuller.fn(spark, dir).head()
+    assert(SeriesOps.q289DickeyFuller.fn(spark, dir).head()
       .getAs[Long]("n_obs") == 2L)
   }
 
@@ -78,7 +78,7 @@ class AnalyticsOps20Spec extends SparkSpec {
     writeEvents(dir, (1 to 21).map { dd =>
       val v = if ((dd + 4) % 7 == 0) 13.0 else 10.0
       (dd.toLong, dd * day, "view", v) })
-    val r = AnalyticsOps20.q290SeasonalStrength.fn(spark, dir).head()
+    val r = SeriesOps.q290SeasonalStrength.fn(spark, dir).head()
     assert(r.getAs[Long]("n_days_used") == 15L) // 21 minus 3 each edge
     assert(r.getAs[Double]("f_seasonal") == 1.0)
     assert(r.getAs[Double]("f_trend") == 0.0) // deseasonalized is flat
@@ -92,7 +92,7 @@ class AnalyticsOps20Spec extends SparkSpec {
           if (h % 2 == 0) 1.0 else 3.0) } ++
       (0 until 32).map { h => // constant stream: all blocks sd 0
         ((h + 100).toLong, h * hour, "click", 5.0) })
-    val rows = AnalyticsOps20.q291HurstRs.fn(spark, dir).collect()
+    val rows = SeriesOps.q291HurstRs.fn(spark, dir).collect()
     assert(rows.length == 1) // click has no scoreable block
     val r = rows.head
     assert(r.getAs[String]("event_type") == "view")

@@ -38,7 +38,7 @@ class AnalyticsOps21Spec extends SparkSpec {
   test("q292: two unit-spread clusters 10 apart give R = 0.2") {
     val dir = tmp("graft-db")
     twoClusters(dir)
-    val out = AnalyticsOps21.q292DaviesBouldin.fn(spark, dir).collect()
+    val out = ClusteringOps.q292DaviesBouldin.fn(spark, dir).collect()
       .map(r => r.getAs[Long]("label") ->
         (r.getAs[Double]("s_intra"), r.getAs[Double]("r_max"))).toMap
     assert(out(0L) == ((1.0, 0.2)))
@@ -48,7 +48,7 @@ class AnalyticsOps21Spec extends SparkSpec {
   test("q293: the same fixture scores CH = (100/1)/(4/2) = 50") {
     val dir = tmp("graft-ch")
     twoClusters(dir)
-    val r = AnalyticsOps21.q293CalinskiHarabasz.fn(spark, dir).head()
+    val r = ClusteringOps.q293CalinskiHarabasz.fn(spark, dir).head()
     assert(r.getAs[Long]("n_vecs") == 4L)
     assert(r.getAs[Long]("n_labels") == 2L)
     assert(r.getAs[Double]("ssb") == 100.0)
@@ -61,7 +61,7 @@ class AnalyticsOps21Spec extends SparkSpec {
     writeEmb(dir, Seq(
       (1L, Map(0 -> 1.0f), 0), (2L, Map(1 -> 1.0f), 1),
       (3L, Map(0 -> 1.0f, 1 -> 1.0f), 2)))
-    val out = AnalyticsOps21.q294CentroidCosines.fn(spark, dir)
+    val out = ClusteringOps.q294CentroidCosines.fn(spark, dir)
       .collect().map(r => (r.getAs[Long]("label_a"),
         r.getAs[Long]("label_b")) -> r.getAs[Double]("cosine")).toMap
     assert(out((0L, 1L)) == 0.0)
@@ -75,7 +75,7 @@ class AnalyticsOps21Spec extends SparkSpec {
     writeEvents(dir,
       (1 to 24).map(i => (i.toLong, 0 * hour, "view", 1.0)) ++
       (1 to 24).map(i => ((i + 100).toLong, 1 * hour, "click", 1.0)))
-    val out = AnalyticsOps21.q295DiurnalProfile.fn(spark, dir)
+    val out = SeriesOps.q295DiurnalProfile.fn(spark, dir)
       .collect().map(r => r.getAs[String]("event_type") -> r).toMap
     val v = out("view")
     assert(v.getAs[Double]("chi2") == 24.0)
@@ -89,7 +89,7 @@ class AnalyticsOps21Spec extends SparkSpec {
     writeEvents(dir,
       Seq((1L, 0 * hour, "view", 1.0), (2L, 1 * hour, "view", 1.0),
         (3L, 0 * hour, "click", 1.0), (4L, 1 * hour, "click", 1.0)))
-    val out = AnalyticsOps21.q295DiurnalProfile.fn(spark, dir)
+    val out = SeriesOps.q295DiurnalProfile.fn(spark, dir)
       .collect()
     assert(out.forall(_.getAs[Double]("chi2") == 0.0))
   }

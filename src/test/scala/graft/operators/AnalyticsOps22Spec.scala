@@ -29,7 +29,7 @@ class AnalyticsOps22Spec extends SparkSpec {
         (4L, 2 * day, 1L, "view", 1.0),
         (5L, 1 * day, 1L, "click", 1.0), (6L, 1 * day, 1L, "click", 1.0),
         (7L, 2 * day, 1L, "click", 1.0), (8L, 2 * day, 1L, "click", 1.0)))
-    val out = AnalyticsOps22.q296CountDispersion.fn(spark, dir)
+    val out = StatsOps.q296CountDispersion.fn(spark, dir)
       .collect().map(r => r.getAs[String]("event_type") -> r).toMap
     val v = out("view")
     assert(v.getAs[Long]("n_days") == 2L &&
@@ -45,7 +45,7 @@ class AnalyticsOps22Spec extends SparkSpec {
       Seq(0L, 1L, 2L, 10L).zipWithIndex.map { case (h, i) =>
         ((i + 1).toLong, h * hour, 1L, "view", 1.0) } ++
       Seq((9L, 5 * hour, 1L, "click", 1.0)))
-    val out = AnalyticsOps22.q297CoverageGaps.fn(spark, dir)
+    val out = SeriesOps.q297CoverageGaps.fn(spark, dir)
       .collect().map(r => r.getAs[String]("event_type") -> r).toMap
     val v = out("view")
     assert(v.getAs[Long]("n_hours") == 4L && v.getAs[Long]("span") == 11L)
@@ -66,7 +66,7 @@ class AnalyticsOps22Spec extends SparkSpec {
       Seq((5L, 1 * day, 2L, "view", 1.0), (6L, 2 * day, 2L, "view", 1.0),
         (7L, 3 * day, 2L, "click", 1.0),
         (8L, 4 * day, 2L, "click", 1.0)))
-    val r = AnalyticsOps22.q298UserTypeEntropy.fn(spark, dir).head()
+    val r = BusinessOps.q298UserTypeEntropy.fn(spark, dir).head()
     assert(r.getAs[Long]("n_users") == 2L)
     assert(r.getAs[Double]("max_entropy") == 0.693147) // ln 2
     assert(r.getAs[Double]("mean_entropy") == 0.346574)

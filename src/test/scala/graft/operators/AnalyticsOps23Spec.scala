@@ -37,7 +37,7 @@ class AnalyticsOps23Spec extends SparkSpec {
     writeOrders(dir, (1 to 12).map { dd =>
       val v = if (dd <= 6) 10.0 * dd else 60.0 + 50.0 * (dd - 6)
       (dd.toLong, v) })
-    val r = AnalyticsOps23.q299SegmentedFit.fn(spark, dir).head()
+    val r = SeriesOps.q299SegmentedFit.fn(spark, dir).head()
     assert(r.getAs[Long]("break_day") == 5L)
     assert(r.getAs[Long]("n_days_left") == 5L)
     assert(r.getAs[Long]("n_days_right") == 7L)
@@ -50,7 +50,7 @@ class AnalyticsOps23Spec extends SparkSpec {
     val dir = tmp("graft-mase")
     writeEvents(dir, (1 to 15).map { dd =>
       (dd.toLong, dd * day, "view", (dd % 7 + 1).toDouble) })
-    val r = AnalyticsOps23.q300MaseBacktest.fn(spark, dir).head()
+    val r = SeriesOps.q300MaseBacktest.fn(spark, dir).head()
     assert(r.getAs[Long]("n_eval_days") == 8L) // days 8..15
     assert(r.getAs[Double]("mae_seasonal") == 0.0)
     assert(r.getAs[Double]("mae_naive1") > 0.0)
@@ -62,7 +62,7 @@ class AnalyticsOps23Spec extends SparkSpec {
     writeEvents(dir, (1 to 28).map { dd =>
       val v = 10.0 + (dd % 2) + (if (dd == 14) 50.0 else 0.0)
       (dd.toLong, dd * day, "view", v) })
-    val rows = AnalyticsOps23.q301StlOutlierDays.fn(spark, dir)
+    val rows = SeriesOps.q301StlOutlierDays.fn(spark, dir)
       .collect()
     assert(rows.nonEmpty)
     assert(rows.forall(r =>
@@ -76,14 +76,14 @@ class AnalyticsOps23Spec extends SparkSpec {
     writeEvents(dir, (1 to 21).map { dd =>
       val v = if ((dd + 4) % 7 == 0) 13.0 else 10.0
       (dd.toLong, dd * day, "view", v) })
-    assert(AnalyticsOps23.q301StlOutlierDays.fn(spark, dir).count() == 0L)
+    assert(SeriesOps.q301StlOutlierDays.fn(spark, dir).count() == 0L)
   }
 
   test("q302: a strict alternation is AR(1)-shaped: pacf1 = -0.9") {
     val dir = tmp("graft-pacf")
     writeEvents(dir, (1 to 10).map { dd =>
       (dd.toLong, dd * day, "view", if (dd % 2 == 0) 3.0 else 1.0) })
-    val r = AnalyticsOps23.q302Pacf.fn(spark, dir).head()
+    val r = SeriesOps.q302Pacf.fn(spark, dir).head()
     assert(r.getAs[Long]("n_days") == 10L)
     assert(r.getAs[Double]("pacf1") == -0.9) // python recompute
     assert(r.getAs[Double]("pacf2") == -0.052632)

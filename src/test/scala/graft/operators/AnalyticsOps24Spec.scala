@@ -33,7 +33,7 @@ class AnalyticsOps24Spec extends SparkSpec {
     val dir = tmp("graft-corr")
     writeEvents(dir, (1 to 10).map { dd =>
       (dd.toLong, dd * day, "view", if (dd % 2 == 0) 3.0 else 1.0) })
-    val out = AnalyticsOps24.q303Correlogram.fn(spark, dir).collect()
+    val out = SeriesOps.q303Correlogram.fn(spark, dir).collect()
       .map(r => r.getAs[Long]("lag") -> (r.getAs[Double]("r"),
         r.getAs[Double]("bartlett_se"), r.getAs[Long]("significant")))
       .toMap
@@ -47,7 +47,7 @@ class AnalyticsOps24Spec extends SparkSpec {
     writeOrders(dir, (1 to 12).map { dd =>
       val v = if (dd <= 6) 10.0 * dd else 60.0 + 50.0 * (dd - 6)
       (dd.toLong, v) })
-    val r = AnalyticsOps24.q304BreakConfidence.fn(spark, dir).head()
+    val r = SeriesOps.q304BreakConfidence.fn(spark, dir).head()
     assert(r.getAs[Long]("n_candidates") == 2L) // i=5 and i=6
     assert(r.getAs[Long]("ci_lo_day") == 5L)
     assert(r.getAs[Long]("ci_hi_day") == 6L)
@@ -59,7 +59,7 @@ class AnalyticsOps24Spec extends SparkSpec {
     val dir = tmp("graft-ribbon")
     writeEvents(dir, (1 to 10).map { i =>
       (i.toLong, 1 * day, "view", i.toDouble) })
-    val r = AnalyticsOps24.q305DailyQuantiles.fn(spark, dir).head()
+    val r = SeriesOps.q305DailyQuantiles.fn(spark, dir).head()
     assert(r.getAs[Long]("n") == 10L)
     assert(r.getAs[Double]("p10") == 1.0)
     assert(r.getAs[Double]("p50") == 5.0)
@@ -71,7 +71,7 @@ class AnalyticsOps24Spec extends SparkSpec {
     writeEvents(dir, (1 to 14).map { dd =>
       val weekend = Set(0L, 6L).contains((dd + 4L) % 7)
       (dd.toLong, dd * day, "view", if (weekend) 9.0 else 1.0) })
-    val r = AnalyticsOps24.q306WeekendContrast.fn(spark, dir).head()
+    val r = SeriesOps.q306WeekendContrast.fn(spark, dir).head()
     assert(r.getAs[Long]("n_weekday") == 10L)
     assert(r.getAs[Long]("n_weekend") == 4L)
     assert(r.getAs[Long]("u2") == 0L) // every weekday below every weekend

@@ -27,7 +27,7 @@ class AnalyticsOps3Spec extends SparkSpec {
       .drop("d")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
 
-    val out = AnalyticsOps3.q122CohortLtv.fn(spark, dir)
+    val out = BusinessOps.q122CohortLtv.fn(spark, dir)
       .collect()
       .map(r => (r.getTimestamp(0).toString.take(7),
         r.getAs[Number](1).longValue) ->
@@ -59,7 +59,7 @@ class AnalyticsOps3Spec extends SparkSpec {
       .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
 
-    val rows = AnalyticsOps3.q123SeasonalAnomaly.fn(spark, dir).collect()
+    val rows = SeriesOps.q123SeasonalAnomaly.fn(spark, dir).collect()
     assert(rows.length == 1, rows.mkString(";"))
     val r = rows.head
     assert(r.getLong(0) == 99L)

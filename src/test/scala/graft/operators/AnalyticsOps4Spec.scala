@@ -26,7 +26,7 @@ class AnalyticsOps4Spec extends SparkSpec {
     Seq((1L, "A"), (2L, "A"), (3L, "A"), (4L, "B"))
       .toDF("c_custkey", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    val out = AnalyticsOps4.q134Gini.fn(spark, dir).collect()
+    val out = StatsOps.q134Gini.fn(spark, dir).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     assert(out.size == 2, out)
@@ -44,7 +44,7 @@ class AnalyticsOps4Spec extends SparkSpec {
       ("B", 9.00, 5.0))
       .toDF("l_returnflag", "l_extendedprice", "l_quantity")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = AnalyticsOps4.q135WeightedMedian.fn(spark, dir).collect()
+    val out = StatsOps.q135WeightedMedian.fn(spark, dir).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     assert(out("A") == ((6L, 200L, 2.00)), out)
@@ -63,7 +63,7 @@ class AnalyticsOps4Spec extends SparkSpec {
       .toDF("event_id", "user_id", "tss")
       .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps4.q136DauMau.fn(spark, dir).collect()
+    val out = BusinessOps.q136DauMau.fn(spark, dir).collect()
       .map(r => r.getDate(0).toString ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     assert(out == Map(
@@ -82,7 +82,7 @@ class AnalyticsOps4Spec extends SparkSpec {
     }
     rows.toDF("event_id", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps4.q151ScoreCalibration.fn(spark, dir).collect()
+    val out = EvalOps.q151ScoreCalibration.fn(spark, dir).collect()
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(4), r.getDouble(5)))).toMap
     assert(out.size == 10, out)
@@ -103,7 +103,7 @@ class AnalyticsOps4Spec extends SparkSpec {
     Seq((2L, 1.0), (4L, 2.0), (6L, 3.0), (1L, 3.0), (3L, 4.0))
       .toDF("event_id", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = AnalyticsOps4.q153KsDrift.fn(spark, dir).head()
+    val r = StatsOps.q153KsDrift.fn(spark, dir).head()
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((3L, 2L, 4L)), r)
     assert(r.getDouble(3) == 4.0 / 3.0 / 2.0, r)
 
@@ -112,7 +112,7 @@ class AnalyticsOps4Spec extends SparkSpec {
     Seq((2L, 5.0), (4L, 7.0), (1L, 5.0), (3L, 7.0))
       .toDF("event_id", "value")
       .write.mode("overwrite").parquet(s"$dir2/events.parquet")
-    val z = AnalyticsOps4.q153KsDrift.fn(spark, dir2).head()
+    val z = StatsOps.q153KsDrift.fn(spark, dir2).head()
     assert(z.getLong(2) == 0L && z.getDouble(3) == 0.0, z)
   }
 
@@ -123,7 +123,7 @@ class AnalyticsOps4Spec extends SparkSpec {
       (31 to 40).map(i => (i.toLong, "purchase"))
     rows.toDF("event_id", "event_type")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps4.q137WilsonCi.fn(spark, dir).collect()
+    val out = StatsOps.q137WilsonCi.fn(spark, dir).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4),
           r.getDouble(5)))).toMap

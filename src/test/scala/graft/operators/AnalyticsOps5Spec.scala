@@ -28,7 +28,7 @@ class AnalyticsOps5Spec extends SparkSpec {
       .toDF("event_id", "user_id", "event_type", "tss")
       .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps5.q155MarkovTransitions.fn(spark, dir).collect()
+    val out = BusinessOps.q155MarkovTransitions.fn(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     assert(out == Map(
@@ -50,7 +50,7 @@ class AnalyticsOps5Spec extends SparkSpec {
       .toDF("event_id", "user_id", "event_type", "tss")
       .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps5.q156Debounce.fn(spark, dir).collect()
+    val out = SeriesOps.q156Debounce.fn(spark, dir).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(out == Map(
@@ -70,7 +70,7 @@ class AnalyticsOps5Spec extends SparkSpec {
       .toDF("event_id", "user_id", "tss")
       .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps5.q157RetentionTriangle.fn(spark, dir).collect()
+    val out = BusinessOps.q157RetentionTriangle.fn(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(out == Map(
       (day("2026-01-01"), 0L) -> 2L,
@@ -93,7 +93,7 @@ class AnalyticsOps5Spec extends SparkSpec {
     }
     val wantW = term(2, 3, 3, 5, 2) + term(1, 3, 2, 5, 2)
     val wantP = term(1, 2, 3, 5, 2) + term(1, 2, 2, 5, 2)
-    val out = AnalyticsOps5.q158UnigramKl.fn(spark, dir).collect()
+    val out = TextStatsOps.q158UnigramKl.fn(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(out == Map("w" -> ((3L, wantW)), "p" -> ((2L, wantP))), out)
     // KL of a distribution against a mixture containing it is >= 0
@@ -111,7 +111,7 @@ class AnalyticsOps5Spec extends SparkSpec {
     Seq((1L, toks.mkString(" ")))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = AnalyticsOps5.q162HeavyHitters.fn(spark, dir).collect()
+    val out = SketchOps.q162HeavyHitters.fn(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(out == Map(
       "the" -> ((10L, 0.01)),
@@ -126,7 +126,7 @@ class AnalyticsOps5Spec extends SparkSpec {
       (3L, "z", "de", "A", 1L), (4L, "solo doc", "fr", "B", 8L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = AnalyticsOps5.q165DatasetCard.fn(spark, dir).collect()
+    val out = TextStatsOps.q165DatasetCard.fn(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getDouble(5), r.getDouble(6), r.getString(7),
         r.getDouble(8)))).toMap
@@ -151,7 +151,7 @@ class AnalyticsOps5Spec extends SparkSpec {
       .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val d0 = day("2026-01-01")
-    val out = AnalyticsOps5.q164RollingDistinct.fn(spark, dir).collect()
+    val out = SketchOps.q164RollingDistinct.fn(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(3)))).toMap
     val wantExact = Map(d0 -> 2L, (d0 + 1) -> 3L, (d0 + 2) -> 3L,
       (d0 + 3) -> 3L, (d0 + 4) -> 3L, (d0 + 5) -> 3L, (d0 + 6) -> 3L,
@@ -169,7 +169,7 @@ class AnalyticsOps5Spec extends SparkSpec {
     Seq((1L, toks.mkString(" ")))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = AnalyticsOps5.q163CountMin.fn(spark, dir).collect()
+    val out = SketchOps.q163CountMin.fn(spark, dir).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(out.keySet == Set("alpha", "beta", "gamma"), out)
@@ -200,7 +200,7 @@ class AnalyticsOps5Spec extends SparkSpec {
         math.sqrt(nb.toDouble)) * 1e6 + 0.5) / 1e6
     }
     val g = Seq(2.0 / 3.0, 1.0 / 3.0)
-    val out = AnalyticsOps5.q161CentroidDrift.fn(spark, dir).collect()
+    val out = ClusteringOps.q161CentroidDrift.fn(spark, dir).collect()
       .map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(out == Map(
       1 -> ((2L, cosRef(Seq(1.0, 0.0), g))),
@@ -220,7 +220,7 @@ class AnalyticsOps5Spec extends SparkSpec {
       .withColumn("ts", to_timestamp(lit("2026-01-01 00:00:00")))
       .withColumn("user_id", lit(1L)).withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val rows = AnalyticsOps5.q166HistogramQuantiles.fn(spark, dir).collect()
+    val rows = SketchOps.q166HistogramQuantiles.fn(spark, dir).collect()
     assert(rows.length == 6, rows.toSeq)
     val m = rows.map(r => (r.getString(0), r.getLong(1)) ->
       ((r.getLong(3), r.getLong(4)))).toMap // (exact, est)
@@ -251,7 +251,7 @@ class AnalyticsOps5Spec extends SparkSpec {
       .toDF("o_orderkey", "o_custkey", "o_totalprice", "tss")
       .withColumn("o_orderdate", to_timestamp(col("tss"))).drop("tss")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = AnalyticsOps5.q159DecileMigration.fn(spark, dir).collect()
+    val out = BusinessOps.q159DecileMigration.fn(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(out == Map((0L, 5L) -> 1L, (5L, 0L) -> 1L), out)
     graft.CacheHygiene.sweep(spark) // groupedPrefixSum pins a cache
@@ -269,7 +269,7 @@ class AnalyticsOps5Spec extends SparkSpec {
       .withColumn("ts", to_timestamp(lit("2024-01-05 00:00:00")))
       .withColumn("value", lit(1.0)).withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val rows = AnalyticsOps5.q171HllOverlap.fn(spark, dir).collect()
+    val rows = SketchOps.q171HllOverlap.fn(spark, dir).collect()
     assert(rows.length == 1, rows.toSeq)
     val r = rows.head
     assert(r.getString(0) == "a" && r.getString(1) == "b", r)

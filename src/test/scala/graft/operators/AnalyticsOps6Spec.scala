@@ -30,7 +30,7 @@ class AnalyticsOps6Spec extends SparkSpec {
       .withColumn("event_type", lit("purchase"))
       .withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val rows = AnalyticsOps6.q172Cuped.fn(spark, dir).collect()
+    val rows = BusinessOps.q172Cuped.fn(spark, dir).collect()
     assert(rows.map(_.getLong(1)).sum == 8L, rows.toSeq) // all users
     rows.foreach { r =>
       assert(r.getDouble(4) == 2.0, r)   // theta
@@ -55,7 +55,7 @@ class AnalyticsOps6Spec extends SparkSpec {
       .withColumn("event_type", lit("a"))
       .withColumn("value", lit(1.0)).withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val rows = AnalyticsOps6.q173CusumChangepoint.fn(spark, dir).collect()
+    val rows = SeriesOps.q173CusumChangepoint.fn(spark, dir).collect()
     assert(rows.length == 1, rows.toSeq)
     val r = rows.head
     assert(r.getLong(1) == 10L, r)          // n_days
@@ -80,7 +80,7 @@ class AnalyticsOps6Spec extends SparkSpec {
       .withColumn("event_type", lit("view"))
       .withColumn("value", lit(1.0)).withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps6.q175Burstiness.fn(spark, dir).collect()
+    val out = SeriesOps.q175Burstiness.fn(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(3)))).toMap
     assert(out.keySet == Set(1L, 2L), out)
     assert(out(1L) == ((3L, -1.0)), out)
@@ -105,7 +105,7 @@ class AnalyticsOps6Spec extends SparkSpec {
       .withColumn("event_type", lit("view"))
       .withColumn("value", lit(1.0)).withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps6.q175Burstiness.fn(spark, dir).collect()
+    val out = SeriesOps.q175Burstiness.fn(spark, dir).collect()
     assert(out.length == 1 && out.head.getDouble(3) == -1.0 &&
       out.head.getDouble(2) == 0.0, out.toSeq)
   }
@@ -129,7 +129,7 @@ class AnalyticsOps6Spec extends SparkSpec {
       .withColumn("event_type", lit("a"))
       .withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps6.q176ConformalInterval.fn(spark, dir).collect()
+    val out = StatsOps.q176ConformalInterval.fn(spark, dir).collect()
     assert(out.length == 1, out.toSeq)
     val r = out.head
     assert(r.getLong(1) == 10L, r)        // n_cal
@@ -149,7 +149,7 @@ class AnalyticsOps6Spec extends SparkSpec {
       .withColumn("event_type", lit("view"))
       .withColumn("value", lit(1.0)).withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps6.q180JoinSkewAudit.fn(spark, dir).collect()
+    val out = SketchOps.q180JoinSkewAudit.fn(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     def share(o: Long) = math.floor((o / 21.0) * 1000000 + 0.5) / 1000000
     assert(out.toSeq == Seq(
@@ -179,7 +179,7 @@ class AnalyticsOps6Spec extends SparkSpec {
     evs.toDF("event_id", "ts", "user_id", "event_type")
       .withColumn("value", lit(1.0)).withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps6.q183KmSurvival.fn(spark, dir).collect()
+    val out = BusinessOps.q183KmSurvival.fn(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
         r.getDouble(3)))).toMap
     assert(out == Map(0L -> ((5L, 1L, 0.8)), 2L -> ((4L, 1L, 0.6))), out)
@@ -198,7 +198,7 @@ class AnalyticsOps6Spec extends SparkSpec {
     val d1 = tmp("graft-mi1")
     // type 'a' only at hour 0, 'b' only at hour 1 -> perfect dependence
     write(d1, Seq((1L, 0, "a"), (2L, 0, "a"), (3L, 1, "b"), (4L, 1, "b")))
-    val r1 = AnalyticsOps6.q184MutualInfo.fn(spark, d1).head()
+    val r1 = StatsOps.q184MutualInfo.fn(spark, d1).head()
     val ln2 = math.floor(
       2 * math.floor(0.5 * math.log(2.0) * 1e9 + 0.5) / 1000 + 0.5) / 1e6
     assert(r1.getDouble(0) == ln2, r1)  // mi_nats
@@ -207,7 +207,7 @@ class AnalyticsOps6Spec extends SparkSpec {
     val d2 = tmp("graft-mi2")
     // uniform 2x2 -> independence, MI exactly 0
     write(d2, Seq((1L, 0, "a"), (2L, 1, "a"), (3L, 0, "b"), (4L, 1, "b")))
-    val r2 = AnalyticsOps6.q184MutualInfo.fn(spark, d2).head()
+    val r2 = StatsOps.q184MutualInfo.fn(spark, d2).head()
     assert(r2.getDouble(0) == 0.0 && r2.getDouble(3) == 0.0, r2)
   }
 
@@ -225,7 +225,7 @@ class AnalyticsOps6Spec extends SparkSpec {
       .withColumn("user_id", lit(1L)).withColumn("event_type", lit("a"))
       .withColumn("value", lit(1.0)).withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps6.q185Acf.fn(spark, dir).collect()
+    val out = SeriesOps.q185Acf.fn(spark, dir).collect()
       .map(r => r.getLong(1) -> ((r.getLong(2), r.getDouble(3)))).toMap
     assert(out.size == 7, out)
     (1L to 7L).foreach { k =>
@@ -248,7 +248,7 @@ class AnalyticsOps6Spec extends SparkSpec {
       .withColumn("o_orderdate", to_timestamp(lit("2020-06-01 00:00:00")))
       .withColumn("o_orderpriority", lit("1-URGENT"))
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val r = AnalyticsOps6.q188Benford.fn(spark, dir).head()
+    val r = StatsOps.q188Benford.fn(spark, dir).head()
     assert(r.getLong(0) == 2020L && r.getLong(1) == 10L, r)
     // replicate the engine's zero-filled grid + fixed-point MAD fold
     def expected(d: Long): Double =
@@ -281,7 +281,7 @@ class AnalyticsOps6Spec extends SparkSpec {
       .withColumn("event_type", lit("a"))
       .withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = AnalyticsOps6.q189TrimmedMean.fn(spark, dir).head()
+    val r = StatsOps.q189TrimmedMean.fn(spark, dir).head()
     assert(r.getLong(1) == 20L && r.getLong(2) == 2L, r)
     assert(r.getLong(3) == 80L, r)
     assert(r.getDouble(4) == 5.0, r)
@@ -307,7 +307,7 @@ class AnalyticsOps6Spec extends SparkSpec {
       .withColumn("value", lit(0.0))
       .withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = AnalyticsOps6.q190TheilSen.fn(spark, dir).head()
+    val r = SeriesOps.q190TheilSen.fn(spark, dir).head()
     assert(r.getLong(1) == 36L, r) // C(9,2) pairs
     assert(r.getDouble(2) == 1.0, r)
     graft.CacheHygiene.sweep(spark) // daily frame is pinned
@@ -331,7 +331,7 @@ class AnalyticsOps6Spec extends SparkSpec {
       .withColumn("value", lit(0.0))
       .withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = AnalyticsOps6.q192MannKendall.fn(spark, dir).head()
+    val r = SeriesOps.q192MannKendall.fn(spark, dir).head()
     assert(r.getLong(1) == 6L && r.getLong(2) == 14L, r)
     assert(r.getLong(3) == 492L, r)
     val want = math.floor((13.0 / math.sqrt(492.0 / 18.0)) * 1e6 + 0.5) / 1e6
@@ -354,7 +354,7 @@ class AnalyticsOps6Spec extends SparkSpec {
       .withColumn("event_type", lit("a"))
       .withColumn("props", lit("{}"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = AnalyticsOps6.q187PsiDrift.fn(spark, dir).head()
+    val r = StatsOps.q187PsiDrift.fn(spark, dir).head()
     assert(r.getLong(1) == 100L && r.getLong(2) == 50L, r)
     // replicate the engine's fixed-point fold exactly
     def term(p: Double, q: Double): Long =

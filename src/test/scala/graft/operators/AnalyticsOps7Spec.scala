@@ -16,7 +16,7 @@ class AnalyticsOps7Spec extends SparkSpec {
   // ---- q200 Spearman ----
 
   private def rhoOf(rows: Seq[(String, Long, Long)]): Map[String, Double] =
-    AnalyticsOps7.spearmanOn(rows.toDF("source", "x", "y"))
+    StatsOps.spearmanOn(rows.toDF("source", "x", "y"))
       .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
 
   /** Brute reference: average ranks, Pearson on ranks, floored like
@@ -72,7 +72,7 @@ class AnalyticsOps7Spec extends SparkSpec {
 
   private def w1Of(cells: Seq[(String, Long, Long)])
       : Map[(String, String), Double] =
-    AnalyticsOps7.wassersteinOn(cells.toDF("t", "v", "cnt"))
+    StatsOps.wassersteinOn(cells.toDF("t", "v", "cnt"))
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(4)).toMap
 
@@ -124,7 +124,7 @@ class AnalyticsOps7Spec extends SparkSpec {
 
   private def qnOf(cells: Seq[(String, Long, Long)])
       : Seq[(String, Long, Long, Long)] =
-    AnalyticsOps7.quantileNormalizeOn(cells.toDF("source", "v", "cnt"))
+    StatsOps.quantileNormalizeOn(cells.toDF("source", "v", "cnt"))
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq

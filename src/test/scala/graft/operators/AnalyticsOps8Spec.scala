@@ -15,7 +15,7 @@ class AnalyticsOps8Spec extends SparkSpec {
   // ---- q204 Kendall τ-b ----
 
   private def tauOf(rows: Seq[(String, Long, Long)]): Map[String, Double] =
-    AnalyticsOps8.kendallOn(rows.toDF("source", "x", "y"))
+    StatsOps.kendallOn(rows.toDF("source", "x", "y"))
       .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
 
   /** Brute all-pairs τ-b, floored like the engine. Valid as an EXACT
@@ -72,7 +72,7 @@ class AnalyticsOps8Spec extends SparkSpec {
 
   private def mwOf(rows: Seq[(String, Long)])
       : Map[(String, String), (Long, Double)] =
-    AnalyticsOps8.mannWhitneyOn(
+    StatsOps.mannWhitneyOn(
       rows.toDF("source", "v").groupBy("source", "v")
         .agg(count(lit(1)).as("cnt")))
       .collect()
@@ -134,7 +134,7 @@ class AnalyticsOps8Spec extends SparkSpec {
       .withColumn("lang", lit("en")).withColumn("n_chars", lit(11L))
     val dir = java.nio.file.Files.createTempDirectory("jsd").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = AnalyticsOps8.q206JsDivergence.fn(spark, dir).collect()
+    val out = TextStatsOps.q206JsDivergence.fn(spark, dir).collect()
     assert(out.length == 1 && out(0).getDouble(3) == 0.0)
   }
 
@@ -149,7 +149,7 @@ class AnalyticsOps8Spec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val dir = java.nio.file.Files.createTempDirectory("tc").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = AnalyticsOps8.q207TCloseness.fn(spark, dir).collect()
+    val out = StatsOps.q207TCloseness.fn(spark, dir).collect()
     assert(out.length == 1 && out(0).getString(0) == "t>0.3"
       && out(0).getDouble(4) == 0.5)
   }
@@ -161,7 +161,7 @@ class AnalyticsOps8Spec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val dir = java.nio.file.Files.createTempDirectory("tc2").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = AnalyticsOps8.q207TCloseness.fn(spark, dir).collect()
+    val out = StatsOps.q207TCloseness.fn(spark, dir).collect()
     assert(out.length == 1 && out(0).getString(0) == "t<=0.1"
       && out(0).getDouble(4) == 0.0)
   }
@@ -176,7 +176,7 @@ class AnalyticsOps8Spec extends SparkSpec {
     //   c2 = 1e12 // 1666666 = 600000 (floor of 600000.24)
     // h2raw: s1 = 1600000, s2 = 1e6 -> h2: s1 = 1e6, s2 = 625000
     val pair = Seq((1L, 1L), (1L, 2L), (2L, 1L)).toDF("s", "c")
-    val out = AnalyticsOps8.hits(pair, iterations = 2).collect()
+    val out = GraphOps.hits(pair, iterations = 2).collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(out(("authority", 1L)) == 1000000L)
     assert(out(("authority", 2L)) == 600000L)
@@ -187,7 +187,7 @@ class AnalyticsOps8Spec extends SparkSpec {
   test("q208: symmetric complete bipartite graph scores everyone 1e6") {
     val pair = (for (s <- 1L to 3L; c <- 1L to 4L) yield (s, c))
       .toDF("s", "c")
-    val out = AnalyticsOps8.hits(pair, iterations = 2).collect()
+    val out = GraphOps.hits(pair, iterations = 2).collect()
     assert(out.length == 7 && out.forall(_.getLong(2) == 1000000L))
   }
 
@@ -200,7 +200,7 @@ class AnalyticsOps8Spec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val dir = java.nio.file.Files.createTempDirectory("ppl").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = AnalyticsOps8.q209Perplexity.fn(spark, dir).collect()
+    val out = TextStatsOps.q209Perplexity.fn(spark, dir).collect()
     assert(out.length == 1)
     val nTest = out(0).getLong(1)
     val nTrain = 3L * (200 - nTest / 3)
@@ -227,7 +227,7 @@ class AnalyticsOps8Spec extends SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val dir = java.nio.file.Files.createTempDirectory("oov").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = AnalyticsOps8.q210OovRate.fn(spark, dir).collect()
+    val out = TextStatsOps.q210OovRate.fn(spark, dir).collect()
     assert(out.length == 1)
     // Independent reference: replay the split + vocab pick in Scala.
     val all = docs.select("doc_id", "text").collect()

@@ -58,7 +58,7 @@ class AnalyticsOps9Spec extends SparkSpec {
   }
 
   private def isoOf(cells: Seq[(Long, Long, Long)]): Map[Long, Double] =
-    AnalyticsOps9.isotonicOn(cells.toDF("band", "n", "k"))
+    EvalOps.isotonicOn(cells.toDF("band", "n", "k"))
       .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
 
   test("q213: min-max formula reproduces sequential PAV") {
@@ -99,14 +99,14 @@ class AnalyticsOps9Spec extends SparkSpec {
     } yield (l.hashCode.toLong * 100 + s.hashCode + i, "x", l, s, 10L)
     val d1 = writeDocs(ind.zipWithIndex.map { case ((_, t, l, s, n), i) =>
       (i.toLong, t, l, s, n) })
-    val r1 = AnalyticsOps9.q212TheilU.fn(spark, d1).collect()(0)
+    val r1 = StatsOps.q212TheilU.fn(spark, d1).collect()(0)
     assert(r1.getDouble(3) == 0.0 && r1.getDouble(4) == 0.0)
     // determined: lang is a function of source (and vice versa)
     val det = (1 to 20).map(i =>
       (i.toLong, "x", if (i % 2 == 0) "en" else "de",
         if (i % 2 == 0) "s1" else "s2", 10L))
     val d2 = writeDocs(det)
-    val r2 = AnalyticsOps9.q212TheilU.fn(spark, d2).collect()(0)
+    val r2 = StatsOps.q212TheilU.fn(spark, d2).collect()(0)
     assert(r2.getDouble(3) == 1.0 && r2.getDouble(4) == 1.0)
   }
 
@@ -124,7 +124,7 @@ class AnalyticsOps9Spec extends SparkSpec {
       (i.toLong, new java.sql.Timestamp(1700000000000L + i), u, t, 1.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps9.q214Ndcg.fn(spark, dir).collect()(0)
+    val out = EvalOps.q214Ndcg.fn(spark, dir).collect()(0)
     assert(out.getLong(0) == 3 && out.getDouble(1) == 1.0
       && out.getLong(2) == 3)
   }
@@ -139,7 +139,7 @@ class AnalyticsOps9Spec extends SparkSpec {
       (i.toLong, new java.sql.Timestamp(1700000000000L + i), u, t, 1.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps9.q214Ndcg.fn(spark, dir).collect()(0)
+    val out = EvalOps.q214Ndcg.fn(spark, dir).collect()(0)
     assert(out.getLong(0) == 2 && out.getLong(2) == 1) // only user 1 perfect
     // user 2: DCG = 1/log2(2) + 3/log2(3), IDCG = 3/log2(2) + 1/log2(3)
     val dcg = math.floor(1.0 / 1 * 1e9 + 0.5) +
@@ -156,7 +156,7 @@ class AnalyticsOps9Spec extends SparkSpec {
   test("q215: deterministic sequences have zero conditional entropy") {
     val d = writeDocs(Seq((1L, "a b a b a b a b", "en", "s1", 15L),
       (2L, "a b a b", "en", "s1", 7L)))
-    val out = AnalyticsOps9.q215BigramEntropy.fn(spark, d).collect()(0)
+    val out = TextStatsOps.q215BigramEntropy.fn(spark, d).collect()(0)
     // bigrams: (a,b)x6, (b,a)x4 — every context has ONE successor
     assert(out.getLong(1) == 10 && out.getDouble(2) == 0.0
       && out.getDouble(3) == 1.0)
@@ -171,7 +171,7 @@ class AnalyticsOps9Spec extends SparkSpec {
     // H = Σ (c/7)·ln(c1/c): ab: (2/7)ln(4/2), ac: (2/7)ln(4/2),
     //     ba: (2/7)ln(2/2)=0, ca: (1/7)ln(1/1)=0  => (4/7)·ln2
     val d = writeDocs(Seq((1L, "a b a c a b a c", "en", "s1", 15L)))
-    val out = AnalyticsOps9.q215BigramEntropy.fn(spark, d).collect()(0)
+    val out = TextStatsOps.q215BigramEntropy.fn(spark, d).collect()(0)
     val t = math.floor(2.0 / 7 * math.log(2) * 1e9 + 0.5) // per ab/ac cell
     val want = math.floor(2 * t / 1e9 * 1e6 + 0.5) / 1e6
     assert(out.getLong(1) == 7 && out.getDouble(2) == want)
@@ -184,7 +184,7 @@ class AnalyticsOps9Spec extends SparkSpec {
     val docs = (1L to 300L).map(i =>
       (i, "x", "en", s"s${i % 4}", 20L + rnd.nextInt(500)))
     val dir = writeDocs(docs)
-    val got = AnalyticsOps9.q216WeightedTopk.fn(spark, dir).collect()
+    val got = SketchOps.q216WeightedTopk.fn(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     def key(id: Long, w: Long): Double = {
       val hex = java.security.MessageDigest.getInstance("MD5")
@@ -209,7 +209,7 @@ class AnalyticsOps9Spec extends SparkSpec {
     val docs = (1L to 300L).map(i =>
       (i, "x", "en", "s1", if (i <= 150) 1000L else 10L))
     val dir = writeDocs(docs)
-    val winners = AnalyticsOps9.q216WeightedTopk.fn(spark, dir).collect()
+    val winners = SketchOps.q216WeightedTopk.fn(spark, dir).collect()
       .map(_.getLong(2))
     assert(winners.forall(_ <= 150L))
   }

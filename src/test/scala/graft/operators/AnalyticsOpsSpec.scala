@@ -28,7 +28,7 @@ class AnalyticsOpsSpec extends SparkSpec {
       (9L, at(3), 3L, "purchase", 1.0))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps.q131MultiTouch.fn(spark, dir).collect()
+    val out = BusinessOps.q131MultiTouch.fn(spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     // u1 splits 1000 cents halfway click/view; u3 splits 100 cents
     // as 3 × floor(100e6/3) (floor loses 1 micro-unit of conversion
@@ -45,7 +45,7 @@ class AnalyticsOpsSpec extends SparkSpec {
       val df = pts.toDF("p_partkey", "p_retailprice", "p_size")
       val dir = java.nio.file.Files.createTempDirectory("graft-sky").toString
       df.write.mode("overwrite").parquet(s"$dir/part.parquet")
-      AnalyticsOps.q92Skyline.fn(spark, dir)
+      BusinessOps.q92Skyline.fn(spark, dir)
         .collect().map(r => (r.getDouble(1), r.getInt(2))).toSet
     }
     def brute(pts: Seq[(Long, Double, Int)]): Set[(Double, Int)] =
@@ -75,7 +75,7 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   test("retention: offset 0 equals cohort size; users counted once per day") {
     val d = sf("sf0.001")
-    val out = AnalyticsOps.q93Retention.fn(spark, d).cache()
+    val out = BusinessOps.q93Retention.fn(spark, d).cache()
     val ev = graft.Tables.events(spark, d)
       .select(col("user_id"), to_date(col("ts")).as("day"))
     val cohortSizes = ev.groupBy("user_id").agg(min("day").as("cohort_day"))
@@ -93,7 +93,7 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   test("hopping windows: every event lands in exactly duration/slide windows") {
     val d = sf("sf0.001")
-    val out = AnalyticsOps.q95Hopping.fn(spark, d).cache()
+    val out = SeriesOps.q95Hopping.fn(spark, d).cache()
     val events = graft.Tables.events(spark, d).count()
     assert(out.agg(sum("n")).head().getLong(0) == 2 * events)
     // window starts align to the 5-minute slide grid
@@ -109,7 +109,7 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   test("equi-depth bins: populations within 1, ranges ordered, all docs binned") {
     val d = sf("sf0.001")
-    val out = AnalyticsOps.q96EquidepthBins.fn(spark, d).cache()
+    val out = SketchOps.q96EquidepthBins.fn(spark, d).cache()
     val perLang = out.groupBy("lang")
       .agg(sum("n").as("tot"), max("n").as("nmax"), min("n").as("nmin"),
         count(lit(1)).as("k"))
@@ -129,7 +129,7 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   test("group regression matches a driver-side exact least squares") {
     val d = sf("sf0.001")
-    val out = AnalyticsOps.q97GroupRegression.fn(spark, d)
+    val out = StatsOps.q97GroupRegression.fn(spark, d)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
     val rows = graft.Tables.part(spark, d)
@@ -163,7 +163,7 @@ class AnalyticsOpsSpec extends SparkSpec {
     ).toDF("user_id", "ts", "event_id", "event_type", "value")
     val dir = java.nio.file.Files.createTempDirectory("graft-twap").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps.q98Twap.fn(spark, dir)
+    val out = SeriesOps.q98Twap.fn(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getDouble(1), r.getLong(2), r.getLong(3))).toMap
     assert(out(1L) == ((11.0, 100000000L, 2L)), out(1L).toString)
@@ -172,7 +172,7 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   test("ohlc: low <= open/close <= high; bars partition the events") {
     val d = sf("sf0.001")
-    val out = AnalyticsOps.q99Ohlc.fn(spark, d).cache()
+    val out = SeriesOps.q99Ohlc.fn(spark, d).cache()
     assert(out.filter(col("low") > col("open") || col("low") > col("close") ||
       col("high") < col("open") || col("high") < col("close") ||
       col("low") > col("high")).count() == 0)
@@ -205,7 +205,7 @@ class AnalyticsOpsSpec extends SparkSpec {
     ).toDF("user_id", "ts", "event_id", "event_type", "value")
     val dir = java.nio.file.Files.createTempDirectory("graft-iv").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps.q100IntervalMerge.fn(spark, dir)
+    val out = SeriesOps.q100IntervalMerge.fn(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     def us(s: Int) = baseUs + s * 1000000L
@@ -217,7 +217,7 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   test("interval merge on sf0.001: islands partition events, no overlaps") {
     val d = sf("sf0.001")
-    val out = AnalyticsOps.q100IntervalMerge.fn(spark, d).cache()
+    val out = SeriesOps.q100IntervalMerge.fn(spark, d).cache()
     assert(out.agg(sum("n_events")).head().getLong(0) ==
       graft.Tables.events(spark, d).count())
     // value < 1 floors to a 0-minute lease: end == start is legal
@@ -246,7 +246,7 @@ class AnalyticsOpsSpec extends SparkSpec {
       .toDF("user_id", "ts", "event_id", "event_type", "value")
     val dir = java.nio.file.Files.createTempDirectory("graft-ab").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps.q104AbTest.fn(spark, dir)
+    val out = BusinessOps.q104AbTest.fn(spark, dir)
       .collect().map(r => r.getString(0) -> r).toMap
     val m = out("m")
     assert((m.getLong(1), m.getLong(2), m.getLong(3), m.getLong(4)) ==
@@ -260,7 +260,7 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   test("ab test on sf0.001: splits partition the events, rates in [0,1]") {
     val d = sf("sf0.001")
-    val out = AnalyticsOps.q104AbTest.fn(spark, d).cache()
+    val out = BusinessOps.q104AbTest.fn(spark, d).cache()
     val ev = graft.Tables.events(spark, d)
     assert(out.agg(sum(col("n_a") + col("n_b"))).head().getLong(0) ==
       ev.count())
@@ -286,7 +286,7 @@ class AnalyticsOpsSpec extends SparkSpec {
       .toDF("user_id", "ts", "event_id", "event_type", "value")
     val dir = java.nio.file.Files.createTempDirectory("graft-mad").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps.q105MadOutliers.fn(spark, dir)
+    val out = StatsOps.q105MadOutliers.fn(spark, dir)
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getDouble(2), r.getDouble(3), r.getLong(4)))).toMap
     assert(out("odd") == ((5L, 3.0, 1.0, 1L)), out.toString)
@@ -295,7 +295,7 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   test("mad outliers on sf0.001: med within range, mad >= 0, n partitions") {
     val d = sf("sf0.001")
-    val out = AnalyticsOps.q105MadOutliers.fn(spark, d).cache()
+    val out = StatsOps.q105MadOutliers.fn(spark, d).cache()
     assert(out.agg(sum("n")).head().getLong(0) ==
       graft.Tables.events(spark, d).count())
     assert(out.filter(col("mad") < 0 || col("n_out") > col("n"))
@@ -323,7 +323,7 @@ class AnalyticsOpsSpec extends SparkSpec {
     ).toDF("user_id", "ts", "event_id", "event_type", "value")
     val dir = java.nio.file.Files.createTempDirectory("graft-ga").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps.q106GrowthAccounting.fn(spark, dir)
+    val out = BusinessOps.q106GrowthAccounting.fn(spark, dir)
       .collect().map(r => r.getDate(0).toLocalDate.getDayOfMonth ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     assert(out(1) == ((1L, 0L, 0L, 0L)), out.toString)
@@ -335,7 +335,7 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   test("growth accounting on sf0.001: telescoping DAU identity holds") {
     val d = sf("sf0.001")
-    val out = AnalyticsOps.q106GrowthAccounting.fn(spark, d).cache()
+    val out = BusinessOps.q106GrowthAccounting.fn(spark, d).cache()
     val dau = graft.Tables.events(spark, d)
       .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
       .groupBy("day").agg(count(lit(1)).as("dau"))
@@ -379,7 +379,7 @@ class AnalyticsOpsSpec extends SparkSpec {
     ).toDF("user_id", "ts", "event_id", "event_type", "value")
     val dir = java.nio.file.Files.createTempDirectory("graft-attr").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps.q107Attribution.fn(spark, dir)
+    val out = BusinessOps.q107Attribution.fn(spark, dir)
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap
     assert(out("click") == ((1L, 1000L)), out.toString)
@@ -403,7 +403,7 @@ class AnalyticsOpsSpec extends SparkSpec {
     ).toDF("user_id", "ts", "event_id", "event_type", "value")
     val dir = java.nio.file.Files.createTempDirectory("graft-attr-tie").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = AnalyticsOps.q107Attribution.fn(spark, dir)
+    val out = BusinessOps.q107Attribution.fn(spark, dir)
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap
     assert(out("view") == ((1L, 1000L)), out.toString)
@@ -413,7 +413,7 @@ class AnalyticsOpsSpec extends SparkSpec {
 
   test("attribution on sf0.001: purchases and revenue partition exactly") {
     val d = sf("sf0.001")
-    val out = AnalyticsOps.q107Attribution.fn(spark, d).cache()
+    val out = BusinessOps.q107Attribution.fn(spark, d).cache()
     val p = graft.Tables.events(spark, d)
       .filter(col("event_type") === "purchase")
       .agg(count(lit(1)).as("n"),
@@ -427,7 +427,7 @@ class AnalyticsOpsSpec extends SparkSpec {
   }
 
   test("transitions: probabilities are exact n/tot and sum to 1 per source") {
-    val out = AnalyticsOps.q94Transitions.fn(spark, sf("sf0.001")).cache()
+    val out = BusinessOps.q94Transitions.fn(spark, sf("sf0.001")).cache()
     val bySrc = out.groupBy("src")
       .agg(sum("n").as("tot"), sum("p").as("psum"))
     // each row's p is n/tot of exact longs; per-src p sums to 1

@@ -44,7 +44,7 @@ class CellRankSpec extends SparkSpec {
       // cell method: collapsed counts + grouped prefix, straddle test
       val cells = df.groupBy(col("g"), col("v"))
         .agg(count(lit(1)).as("cnt"))
-      val cum = AnalyticsOps2.groupedPrefixSums(cells, Seq("g"),
+      val cum = Kernels.groupedPrefixSums(cells, Seq("g"),
         Seq(col("v")), Seq((col("cnt"), "cum", None)))
         .select("g", "v", "cnt", "cum").collect()
         .map(x => (x.getString(0), x.getLong(1), x.getLong(2), x.getLong(3)))

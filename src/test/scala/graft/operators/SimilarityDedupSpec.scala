@@ -383,12 +383,4 @@ class SimilarityDedupSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(out == Map(("b", "a") -> 1L), out)
   }
-
-  test("query group maps have no name collisions") {
-    // Sum the SAME group list SparkEntry merges, so adding a group
-    // can never desync this expectation (round-4 regression).
-    val total = graft.SparkEntry.groups.map(_.size).sum
-    assert(graft.SparkEntry.queries.size == total,
-      s"collision: merged ${graft.SparkEntry.queries.size} != sum $total")
-  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, rng}
 
 /** Property-based invariants for the two-phase range-partitioned
-  * prefix idioms (AnalyticsOps2.globalRowNumber / groupedPrefixSum) —
+  * prefix idioms (Kernels.globalRowNumber / groupedPrefixSum) —
   * the load-bearing primitives behind q91/q112/q115/q121/q132/q134/
   * q135/q151/q153: on ANY input the distributed result must equal the
   * single-partition window reference exactly, regardless of where the
@@ -34,7 +34,7 @@ class TwoPhasePrefixSpec extends SparkSpec {
     import spark.implicits._
     for (seed <- 1L to 12L) {
       val df = draw(seed).toDF("g", "v", "w", "id").repartition(7)
-      val got = AnalyticsOps2.groupedPrefixSum(df, Seq("g"),
+      val got = Kernels.groupedPrefixSum(df, Seq("g"),
           Seq(col("v"), col("id")), col("w"), "cum", "tot")
         .select("g", "v", "id", "cum", "tot")
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)) ->
@@ -59,7 +59,7 @@ class TwoPhasePrefixSpec extends SparkSpec {
       // two measures over one pass: a weighted prefix (w) and a pure
       // rank (1) — the q153 dual-CDF and q132 rank+total shapes at once;
       // empty groups = pure global prefix (the q153 case)
-      val got = AnalyticsOps2.groupedPrefixSums(df, Seq.empty,
+      val got = Kernels.groupedPrefixSums(df, Seq.empty,
           Seq(col("v"), col("id")),
           Seq((col("w"), "cw", Some("tw")), (lit(1L), "rn", None)))
         .select("id", "cw", "tw", "rn")
@@ -86,7 +86,7 @@ class TwoPhasePrefixSpec extends SparkSpec {
     import spark.implicits._
     for (seed <- 20L to 31L) {
       val df = draw(seed).toDF("g", "v", "w", "id").repartition(5)
-      val got = AnalyticsOps2.globalRowNumber(df,
+      val got = Kernels.globalRowNumber(df,
           Seq(col("v"), col("id")), "rn")
         .select("id", "rn").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -60,7 +60,7 @@ class DebounceStreamSpec extends SparkSpec {
         .map(e => (e.event_id, e.user_id, e.event_type, e.event_ts))
         .toDF("event_id", "user_id", "event_type", "ts")
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
-      val batch = graft.operators.AnalyticsOps5.q156Debounce.fn(spark, dir)
+      val batch = graft.operators.SeriesOps.q156Debounce.fn(spark, dir)
         .collect().map(r => r.getString(0) ->
           ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
       val streamAgg = spark.table("debounce")
