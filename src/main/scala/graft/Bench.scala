@@ -15,12 +15,13 @@ object Bench {
     // metric — so the six consumer queries (q49/q130/q133/q138/q141/
     // q146) report steady-state numbers by construction AND the bench
     // JSON self-describes where the build cost went (r8 verdict's
-    // bench-protocol footnote). Under SPARK_GRAFT_NO_MEMO there is no
-    // shared frame; every consumer pays its own build inside its own
-    // timed runs, and memo_build_sec is absent from the JSON.
+    // bench-protocol footnote). With the memo off
+    // (CacheHygiene.memoizing) there is no shared frame; every consumer
+    // pays its own build inside its own timed runs, and memo_build_sec
+    // is absent from the JSON.
     var memoPrimeFailed = false
     val memoBuilds: Seq[(String, Double)] =
-      if (sys.env.contains("SPARK_GRAFT_NO_MEMO")) Seq.empty
+      if (!CacheHygiene.memoizing) Seq.empty
       else
         try graft.operators.DedupOps.primeCanonicalMemos(spark, sfDir)
         catch { case e: Throwable =>
@@ -30,7 +31,7 @@ object Bench {
           // absence claims cold numbers — evict whatever was built so
           // every consumer honestly pays its own build, and flag the
           // failure in the JSON
-          graft.operators.DedupOps.evictCanonicalMemos(spark)
+          CacheHygiene.forget(spark)
           memoPrimeFailed = true
           Seq.empty
         }
@@ -148,7 +149,7 @@ object Bench {
       if (quietRef.isEmpty || suspectAll.isEmpty) ""
       else s""""suspect_host":${budgeted(suspectAll, 200)},"suspect_host_n":${suspectAll.size},"quiet_ref":"$quietRef","""
     // memo_build_sec: cold canonical-frame builds paid up front (see
-    // the prime above); absent entirely under SPARK_GRAFT_NO_MEMO so
+    // the prime above); absent entirely with the memo off, so
     // the JSON states which protocol produced the per-query numbers
     val memoJson = {
       val builds =

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One named engine query: a Spark DataFrame program over the testdata
-  * tables, plus (when SQL-expressible) an equivalent ANSI SQL text the
-  * driver runs in DuckDB as the correctness oracle.
+  * tables, plus an equivalent ANSI SQL text that DuckDB runs as the
+  * correctness oracle.
   *
   * Contract notes (see the driver spec):
   *   - Output column names MUST match between the Spark result and the
@@ -15,12 +15,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final case class QueryDef(
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String]
+    oracle: String
 )
 
 object QueryDef {
   def withOracle(sql: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(fn, Some(sql))
-  def rowsOnly(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(fn, None)
+    QueryDef(fn, sql)
 }

@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The engine's query contract (SURVEY.md §7).
   *
   * `queries` is the engine's public query inventory: one entry per
   * operator from SURVEY.md §2 (relational parity surface) plus the
   * LLM-data-pipeline extensions (dedup / similarity / text analysis /
-  * multimodal). `oracleSql` carries the DuckDB-equivalent SQL for
-  * every SQL-expressible query; the rest get rows-only checks.
+  * multimodal). `oracleSql` carries the DuckDB-equivalent SQL of every
+  * query.
   */
 object SparkEntry {
 
@@ -17,10 +17,7 @@ object SparkEntry {
     * list. Exposed so RegistrySpec sums the SAME list the merge uses (a
     * new group can't silently desync the expected count). */
   private[graft] lazy val groups: Seq[Map[String, QueryDef]] = Seq(
-    operators.Relational.all,
-    operators.Relational2.all,
-    operators.Relational3.all,
-    operators.Relational4.all,
+    operators.RelationalOps.all,
     operators.TextOps.all,
     operators.DedupOps.all,
     operators.SimilarityOps.all,
@@ -43,14 +40,14 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    operators.Relational.q1AggRollup.fn(spark, "/root/testdata/sf0.001")
+    operators.RelationalOps.q1AggRollup.fn(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     defs.map { case (name, qd) => name -> qd.fn }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    defs.collect { case (name, QueryDef(_, Some(sql))) => name -> sql }
+    defs.map { case (name, qd) => name -> qd.oracle }
 }

@@ -113,18 +113,19 @@ object EtlRunner {
       println("[etl] " + counts.map { case (k, v) => s"$k=$v" }.mkString(" "))
       if (it < o.iterations && o.intervalSeconds > 0) Thread.sleep(o.intervalSeconds * 1000)
     }
-    // optional lake maintenance after the passes: rewrite small-file
-    // residue in the partitioned sinks (micro-batch ingest accretes
-    // it; the scheduler would run this on a slower cadence)
+    // optional lake maintenance after the passes: rewrite Bronze's
+    // small-file residue (micro-batch ingest accretes it; the
+    // scheduler would run this on a slower cadence). Silver and the
+    // business summary are written with repartition(date) and dynamic
+    // overwrite, so each date holds one file and Lake.compact never
+    // rewrites them.
     o.compactTargetMb.foreach { mb =>
-      Seq(Lake.bronzePath(o.lake), Lake.silverPath(o.lake),
-        Lake.businessSummaryPath(o.lake))
-        // skipHotPartitions = 1: micro-batch ingest actively appends
-        // to the newest date partition; compacting it here would race
-        // the writer (see Lake.compact's concurrency contract)
-        .foreach(Lake.compact(spark, _, targetBytes = mb << 20,
-          skipHotPartitions = 1))
-      println(s"[etl] compacted partitioned sinks (target $mb MB)")
+      // skipHotPartitions = 1: micro-batch ingest actively appends to
+      // the newest date partition; compacting it here would race the
+      // writer (see Lake.compact's concurrency contract)
+      Lake.compact(spark, Lake.bronzePath(o.lake), targetBytes = mb << 20,
+        skipHotPartitions = 1)
+      println(s"[etl] compacted Bronze (target $mb MB)")
     }
     spark.stop()
   }

@@ -165,15 +165,17 @@ object Lake {
     * aggregate-sized). Each Gold table is read back with the schema of
     * the frame that wrote it.
     *
-    * A Silver file listed here can vanish before it is read while a
-    * concurrent Silver refresh overwrites its date; the reads skip it
-    * (`ignoreMissingFiles`), and the rewrite's new files reach a later
-    * refresh of that date. */
+    * A Silver file listed here can vanish while a concurrent Silver
+    * refresh overwrites its date: before it is opened, and the reads
+    * skip it (`ignoreMissingFiles`), or after, and the reads go on
+    * through the streams they opened ([[VectoredReads]]); the
+    * rewrite's new files reach a later refresh of that date. */
   def refreshGold(spark: SparkSession, root: String, cfg: EtlConfig,
       dates: Seq[LocalDate], tap: Tap = untapped): Unit = {
     if (dates.isEmpty) return
     val silver = spark.read.schema(SilverSchema)
       .option("ignoreMissingFiles", "true")
+      .option(VectoredReads, "false")
       .parquet(silverPath(root))
     val daily = tap("gold_daily_energy", SilverToGold.dailyEnergyConsumption(
       silver.filter(col("date").isin(sqlDates(dates): _*)).drop("date"), cfg))
@@ -237,8 +239,19 @@ object Lake {
       // a file a concurrent overwrite (a refresh, a compaction)
       // deleted after the listing
       .option("ignoreMissingFiles", "true")
+      .option(VectoredReads, "false")
       .parquet(path)
   }
+
+  /** Off for the lake reads that race a concurrent overwrite
+    * ([[refreshGold]]'s Silver read, [[tail]]). A vectored Parquet read
+    * reopens the data file and its `.crc` checksum file by path (the
+    * local file system's asynchronous channel), so an overwrite that
+    * deletes them after the scan opened the file fails the read with a
+    * NoSuchFileException, which `ignoreMissingFiles` does not cover.
+    * With vectored reads off, row groups are read through the streams
+    * opened with the file, which still read after the delete. */
+  private val VectoredReads = "parquet.hadoop.vectored.io.enabled"
 
   /** Every Bronze row, `date` included. */
   private[graft] def bronzeScan(spark: SparkSession, root: String): DataFrame =

@@ -65,12 +65,12 @@ object DedupCluster {
     *         a compact plan leaf that survives runner cache sweeps,
     *         so callers (q49/q130, q133) can share one
     *         materialization per session. OWNERSHIP: whoever holds
-    *         the frame decides its lifetime — `DedupOps.memoCanonical`
+    *         the frame decides its lifetime — `CacheHygiene.memo`
     *         shares the frame session-wide and only application end
-    *         retires it, so consumers of a memoized frame must NOT
-    *         call [[releaseCheckpoint]] on it (a lost localCheckpoint
+    *         (or `forget`) retires it, so consumers of a memoized
+    *         frame must NOT call [[releaseCheckpoint]] on it (a lost localCheckpoint
     *         block FAILS, it does not recompute). Only a caller that
-    *         builds privately (e.g. under SPARK_GRAFT_NO_MEMO) should
+    *         builds privately (e.g. with the memo off) should
     *         release the frame when done.
     */
   def canonicalize(docs: DataFrame, pairs: DataFrame,
@@ -163,7 +163,7 @@ object DedupCluster {
     // singletons (docs with no edge) re-attach with themselves as
     // canonical — ONE left join instead of one per round. The frame
     // returned must stay a compact leaf that survives cache sweeps
-    // (the memoCanonical contract), so the union is checkpointed too;
+    // (the session memo's contract), so the union is checkpointed too;
     // the loop's last checkpoint is then released like any superseded
     // round.
     val full = docs

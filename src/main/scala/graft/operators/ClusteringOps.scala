@@ -124,7 +124,7 @@ object ClusteringOps {
     val c = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       .cache()
     val cents2 = twoRoundCentroids(c,
-      kmeansDivisor(SimilarityOps.corpusCount(s, d)))
+      kmeansDivisor(Kernels.corpusCount(s, d)))
     cents2.select(
       col("cent_id").as("cluster_id"),
       col("n_members").cast("long").as("n_members"),
@@ -222,7 +222,7 @@ object ClusteringOps {
     val c = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       .cache()
     val cents2 = twoRoundCentroids(c,
-      kmeansDivisor(SimilarityOps.corpusCount(s, d)))
+      kmeansDivisor(Kernels.corpusCount(s, d)))
       .select(col("cent_id"), col("cent_emb"))
     c.crossJoin(broadcast(centsAsRow(cents2)))
       .filter(size(col("cents")) > 0) // see assign: cheap null guard
@@ -419,6 +419,164 @@ object ClusteringOps {
           .as("mean_silhouette"))
   }
 
+  /** One-pass gram (uncentered second-moment) matrix of the embedding
+    * table — the Σ xᵢxⱼ statistic PCA/whitening starts from, computed
+    * the way a 100 TB pass must: each row emits its d(d+1)/2 upper-
+    * triangle products map-side (a codegen'd nested-sequence
+    * transform + explode), and the (i, j)-keyed aggregate pre-combines
+    * per partition, so the exchange carries ≤ 2080·P rows no matter
+    * how many vectors flow through. n·d² work is the statistic's own
+    * floor; the SHUFFLE is what the design keeps constant.
+    *
+    * Parity: element products quantize to 1e-9 fixed point BEFORE
+    * summing (float32 → float64 widening is exact in both engines, the
+    * product is one IEEE multiply of identical doubles, the quantized
+    * summand is int64 — bound: |x|≤1-ish ⇒ |fp|≤10⁹, safe through
+    * ~10⁹ rows; beyond, shrink the quantum — the q2o convention);
+    * `gram` is one final IEEE division. */
+  val q144GramMatrix: QueryDef = QueryDef.withOracle(
+    """WITH c AS (
+      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      |p AS (
+      |  SELECT i.i AS i, j.j AS j,
+      |    CAST(floor(emb[i.i + 1] * emb[j.j + 1] * 1000000000 + 0.5)
+      |      AS BIGINT) AS fp
+      |  FROM c,
+      |    LATERAL (SELECT unnest(range(0, len(emb))) AS i) i,
+      |    LATERAL (SELECT unnest(range(0, len(emb))) AS j) j
+      |  WHERE j.j >= i.i)
+      |SELECT i, j, count(*) AS n,
+      |  CAST(sum(fp) AS BIGINT) AS gram_fp,
+      |  CAST(sum(fp) AS DOUBLE) / count(*) / 1000000000 AS gram
+      |FROM p GROUP BY 1, 2""".stripMargin
+  ) { (s, d) =>
+    // r13: the d(d+1)/2 per-row struct explode + hash-agg probe per
+    // product is now ONE fused-multiply-add loop inside the GramCells
+    // TypedImperativeAggregate (identical int64 summands quantized by
+    // the same IEEE ops, so any partial/merge order is exact — see
+    // GramAggregate scaladoc); the cells explode AFTER the aggregate,
+    // 2080 rows total instead of 2080 per vector
+    Tables.embeddings(s, d)
+      .select(expr("CAST(embedding AS ARRAY<DOUBLE>)").as("emb"))
+      .agg(graft.functions.GramAggregate.gramCells(col("emb")).as("cells"))
+      .select(explode(col("cells")).as("t"))
+      .select(col("t.i").as("i"), col("t.j").as("j"), col("t.n").as("n"),
+        col("t.fp").cast("long").as("gram_fp"))
+      .select(col("i"), col("j"), col("n"), col("gram_fp"),
+        (col("gram_fp").cast("double") / col("n") / 1000000000L).as("gram"))
+  }
+
+  /** Fixed-point quantum shared by q145's matrix entries and vector:
+    * Q² · d ≤ 6.4·10¹¹ keeps every dot product exact int64, and
+    * u·Q ≤ Q³·d ≈ 6.4·10¹⁶ keeps the normalization numerator safe
+    * (int64 max ≈ 9.2·10¹⁸ — headroom through d ≈ 100k). */
+  private val EigQ = 100000L
+  private val EigIters = 12
+
+  /** First principal direction of the embedding corpus — 12 steps of
+    * POWER ITERATION on q144's mean gram matrix, run entirely in
+    * int64 fixed point so both engines execute bit-identical
+    * arithmetic:
+    *
+    *   - matrix entries quantize to Q = 10⁵ (sign-aware TRUNCATING
+    *     division — DuckDB's `//` floors, so the oracle spells
+    *     −((−x)//n), which equals Scala's truncation on every sign);
+    *   - each step is uᵢ = Σⱼ A(i,j)·vⱼ (exact int64 dot products —
+    *     integer sums are order-independent, so the one float hazard
+    *     of iterative linear algebra, the reduction order, is gone);
+    *   - normalization is the ∞-norm in integers: vᵢ' =
+    *     sign(uᵢ)·(|uᵢ|·Q div max|u|) — again truncation-safe.
+    *
+    * A FIXED iteration count, not a convergence test: on a
+    * near-isotropic gram (random synthetic embeddings) the dominant
+    * eigengap is small and 12 steps only partially converge — the
+    * contract is "the exact state after 12 identical steps", which is
+    * deterministic regardless; on a real corpus with spectral decay
+    * the same 12 steps give the usual power-iteration estimate.
+    *
+    * Scale shape: ALL data-sized work is q144's one-pass aggregate
+    * (shuffle ≤ 2080·P rows); the d×d matrix is then metadata-sized
+    * (the repo's bloom-sketch/centroid convention), so the iteration
+    * runs driver-side in microseconds and the oracle unrolls the same
+    * 12 steps as chained CTEs. Output: the unit-∞-norm component per
+    * dimension plus the Rayleigh-style λ estimate ‖Av‖∞/‖v‖∞ from the
+    * final step (in mean-gram units). */
+  val q145TopEigenvector: QueryDef = QueryDef.withOracle {
+    // MATERIALIZED: DuckDB inlines CTEs by default, and each step
+    // references its predecessor twice (u_k feeds both m_k and v_k) —
+    // inlining would re-expand the whole chain 2^12 times (observed:
+    // thousands of parquet re-opens). Materializing pins each step to
+    // one evaluation, which is also what the engine does.
+    val steps = (1 to EigIters).map { k =>
+      s"""u$k AS MATERIALIZED (
+         |  SELECT g.i AS dim, CAST(sum(g.m * v${k - 1}.v) AS BIGINT) AS u
+         |  FROM g JOIN v${k - 1} ON v${k - 1}.dim = g.j GROUP BY 1),
+         |m$k AS MATERIALIZED (SELECT CAST(max(abs(u)) AS BIGINT) AS m FROM u$k),
+         |v$k AS MATERIALIZED (
+         |  SELECT dim, CAST(CASE WHEN u < 0
+         |    THEN -(((-u) * $EigQ) // m) ELSE ((u * $EigQ) // m) END
+         |    AS BIGINT) AS v
+         |  FROM u$k CROSS JOIN m$k)""".stripMargin
+    }.mkString(",\n")
+    s"""WITH c AS (
+       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+       |p AS (
+       |  SELECT i.i AS i, j.j AS j,
+       |    CAST(floor(emb[i.i + 1] * emb[j.j + 1] * 1000000000 + 0.5)
+       |      AS BIGINT) AS fp
+       |  FROM c,
+       |    LATERAL (SELECT unnest(range(0, len(emb))) AS i) i,
+       |    LATERAL (SELECT unnest(range(0, len(emb))) AS j) j
+       |  WHERE j.j >= i.i),
+       |gm AS (
+       |  SELECT i, j, count(*) AS n, CAST(sum(fp) AS BIGINT) AS gram_fp
+       |  FROM p GROUP BY 1, 2),
+       |gq AS MATERIALIZED (
+       |  SELECT i, j, CAST(CASE WHEN gram_fp < 0
+       |    THEN -(((-gram_fp) // n) // 10000) ELSE ((gram_fp // n) // 10000)
+       |    END AS BIGINT) AS m
+       |  FROM gm),
+       |g AS MATERIALIZED (
+       |  SELECT i, j, m FROM gq
+       |  UNION ALL SELECT j AS i, i AS j, m FROM gq WHERE i <> j),
+       |v0 AS MATERIALIZED (
+       |  SELECT DISTINCT i AS dim, CAST($EigQ AS BIGINT) AS v FROM gq),
+       |$steps
+       |SELECT dim, v AS comp_fp,
+       |  CAST(v AS DOUBLE) / $EigQ AS component,
+       |  CAST(m AS DOUBLE) / $EigQ / $EigQ AS lambda_mean_gram
+       |FROM v$EigIters CROSS JOIN m$EigIters""".stripMargin
+  } { (s, d) =>
+    // data-sized work: q144's pre-combined gram aggregate. The d×d
+    // result (≤2080 rows) is metadata-sized — collected like the bloom
+    // sketch / centroid frames, then iterated in exact int64.
+    val cells = q144GramMatrix.fn(s, d)
+      .select(col("i"), col("j"), col("n"), col("gram_fp")).collect()
+    val dim = cells.iterator.map(_.getInt(1)).max + 1
+    val a = Array.ofDim[Long](dim, dim)
+    cells.foreach { r =>
+      val (i, j, n, g) = (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3))
+      val m = if (g < 0) -(((-g) / n) / 10000) else (g / n) / 10000
+      a(i)(j) = m; a(j)(i) = m
+    }
+    var v = Array.fill(dim)(EigQ)
+    var lastMax = EigQ
+    for (_ <- 1 to EigIters) {
+      val u = Array.tabulate(dim) { i =>
+        var acc = 0L; var j = 0
+        while (j < dim) { acc += a(i)(j) * v(j); j += 1 }; acc
+      }
+      lastMax = u.iterator.map(math.abs).max
+      v = u.map(x =>
+        if (x < 0) -(((-x) * EigQ) / lastMax) else (x * EigQ) / lastMax)
+    }
+    import s.implicits._
+    v.zipWithIndex.map { case (comp, i) =>
+      // λ = ‖Av‖∞/‖v‖∞ de-quantized: u carries Q (matrix) × Q (vector)
+      (i, comp, comp.toDouble / EigQ, lastMax.toDouble / EigQ / EigQ)
+    }.toSeq.toDF("dim", "comp_fp", "component", "lambda_mean_gram")
+  }
+
   /** Participation ratio of the embedding covariance — the effective
     * dimensionality PR = tr(C)²/tr(C²) ∈ [1, d]: PR ≈ d means
     * variance spreads isotropically, PR ≪ d means the cloud collapsed
@@ -484,7 +642,7 @@ object ClusteringOps {
       |      * 1000000 + 0.5) / 1000000 END AS participation_ratio
       |FROM t""".stripMargin
   ) { (s, d) =>
-    val gm = Relational4.q144GramMatrix.fn(s, d)
+    val gm = q144GramMatrix.fn(s, d)
       .select(col("i"), col("j"), col("n"), col("gram_fp").as("g"))
     val sv = Tables.embeddings(s, d)
       .select(posexplode(expr("CAST(embedding AS ARRAY<DOUBLE>)"))
@@ -1039,6 +1197,8 @@ object ClusteringOps {
   val all: Map[String, QueryDef] = Map(
     "q56_kmeans" -> q56Kmeans,
     "q81_semantic_keep" -> q81SemanticKeep,
+    "q144_gram_matrix" -> q144GramMatrix,
+    "q145_top_eigenvector" -> q145TopEigenvector,
     "q161_centroid_drift" -> q161CentroidDrift,
     "q253_silhouette" -> q253Silhouette,
     "q266_participation_ratio" -> q266ParticipationRatio,

@@ -79,7 +79,7 @@ object CurationOps {
   private def fiveGrams(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"), split(col("text"), " ", -1).as("toks"),
-        TextOps.docBucket.as("bucket"))
+        Kernels.docBucket.as("bucket"))
       .filter(size(col("toks")) >= 5)
       .select(col("doc_id"), col("bucket"),
         explode(array_distinct(expr(
@@ -196,7 +196,7 @@ object CurationOps {
   ) { (s, d) =>
     val bg = Tables.documents(s, d)
       .select(col("doc_id"), split(col("text"), " ", -1).as("toks"),
-        TextOps.docBucket.as("bucket"))
+        Kernels.docBucket.as("bucket"))
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), col("bucket"),
         explode(array_distinct(expr(

@@ -813,114 +813,6 @@ object EvalOps {
       sum(col("hit")).cast("long").as("n_hits"))
   }
 
-  /** Blocking-quality audit — the two numbers that grade ANY blocking
-    * scheme before a record-linkage or dedup run commits to it
-    * (Christen, "Data Matching", ch. 4): reduction ratio (what share
-    * of the N² comparison space the blocks eliminate) and pairs
-    * completeness (what share of TRUE duplicate pairs land in the same
-    * block — recall of the candidate generation). Truth is the q49
-    * MinHash near-dup clustering; the audited scheme is the cheap
-    * (lang, n_chars div 64) key a pre-LSH pass would use.
-    *
-    * Both metrics COUNT pairs without materializing any: candidate
-    * pairs are Σ n_b(n_b−1)/2 over block sizes, truth pairs are
-    * Σ g(g−1)/2 over cluster sizes, co-blocked truth pairs are
-    * Σ m(m−1)/2 over (cluster, block) cell sizes — three aggregates,
-    * no joins between documents. Doubled pair counts accumulate in
-    * decimal(38,0)/HUGEINT (n(n−1) crosses 2^63 past ~3e9 docs); each
-    * ratio is one division; outputs are the doubled counts (as DOUBLE
-    * — audit numbers that must report, not throw, past int64) plus
-    * 1e-6-floored ratios.
-    *
-    * Scale shape: reads the memoized q49 canonical frame (its label
-    * propagation is spec'd and plan-audited at q49/q133/q141); one
-    * (block) aggregate, one (cluster) aggregate, one (cluster, block)
-    * aggregate — all map-side combined; the rollups are cell frames. */
-  val q223BlockingMetrics: QueryDef = QueryDef.withOracle(
-    s"""WITH RECURSIVE sg AS (
-      |  SELECT doc_id, sig FROM read_parquet('${SmartHomeOracle.fixtureDir}/sf___SFTAG__/minhash_sigs.parquet/*.parquet')),
-      |banded AS (
-      |  SELECT doc_id, sig, b AS band, sig[b*4+1:b*4+4] AS band_sig
-      |  FROM sg, LATERAL (SELECT unnest([0,1,2,3]) AS b) g),
-      |cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-      |    a.sig AS sig_a, b.sig AS sig_b
-      |  FROM banded a JOIN banded b
-      |    ON a.band = b.band AND a.band_sig = b.band_sig
-      |    AND a.doc_id < b.doc_id),
-      |prs AS (
-      |  SELECT doc_a, doc_b FROM cand
-      |  WHERE CAST(list_sum(list_transform(range(1, 17),
-      |    i -> CASE WHEN sig_a[i] = sig_b[i] THEN 1 ELSE 0 END)) AS DOUBLE)
-      |    / 16 >= 0.25),
-      |edges AS (
-      |  SELECT doc_a AS a, doc_b AS b FROM prs
-      |  UNION SELECT doc_b AS a, doc_a AS b FROM prs),
-      |reach AS (
-      |  SELECT doc_id, doc_id AS r FROM documents
-      |  UNION
-      |  SELECT e.a AS doc_id, reach.r AS r
-      |  FROM edges e JOIN reach ON reach.doc_id = e.b),
-      |canon AS (SELECT doc_id, min(r) AS canonical_id FROM reach GROUP BY 1),
-      |db AS (
-      |  SELECT doc_id, lang || ':' || CAST(n_chars // 64 AS VARCHAR) AS blk
-      |  FROM documents),
-      |blocks AS (
-      |  SELECT count(*) AS n_blocks,
-      |    sum(CAST(nb AS HUGEINT) * (nb - 1)) AS cand2
-      |  FROM (SELECT blk, count(*) AS nb FROM db GROUP BY 1)),
-      |tot AS (SELECT count(*) AS n_docs FROM db),
-      |truth AS (
-      |  SELECT sum(CAST(g AS HUGEINT) * (g - 1)) AS truth2
-      |  FROM (SELECT canonical_id, count(*) AS g FROM canon GROUP BY 1)),
-      |cob AS (
-      |  SELECT sum(CAST(m AS HUGEINT) * (m - 1)) AS co2
-      |  FROM (SELECT canonical_id, blk, count(*) AS m
-      |        FROM canon JOIN db USING (doc_id) GROUP BY 1, 2))
-      |SELECT n_docs, n_blocks,
-      |  CAST(cand2 AS DOUBLE) AS cand_pairs2,
-      |  CAST(truth2 AS DOUBLE) AS truth_pairs2,
-      |  CAST(co2 AS DOUBLE) AS co_pairs2,
-      |  floor((1 - CAST(cand2 AS DOUBLE)
-      |    / (CAST(n_docs AS DOUBLE) * (n_docs - 1))) * 1000000 + 0.5)
-      |    / 1000000 AS reduction_ratio,
-      |  floor((CAST(co2 AS DOUBLE) / CAST(truth2 AS DOUBLE))
-      |    * 1000000 + 0.5) / 1000000 AS pairs_completeness
-      |FROM tot CROSS JOIN blocks CROSS JOIN truth CROSS JOIN cob""".stripMargin
-  ) { (s, d) =>
-    val db = Tables.documents(s, d)
-      .select(col("doc_id"),
-        concat(col("lang"), lit(":"),
-          expr("n_chars div 64").cast("string")).as("blk"))
-      .cache() // feeds the block rollup and the co-block join
-    val blocks = db.groupBy(col("blk")).agg(count(lit(1)).as("nb"))
-      .agg(count(lit(1)).as("n_blocks"),
-        sum(dec(col("nb")) * (col("nb") - 1)).as("cand2"))
-    val tot = db.agg(count(lit(1)).as("n_docs"))
-    val canon = DedupOps.q49DedupClusters.fn(s, d)
-    val truth = canon.groupBy(col("canonical_id"))
-      .agg(count(lit(1)).as("g"))
-      .agg(sum(dec(col("g")) * (col("g") - 1)).as("truth2"))
-    val cob = canon.join(db, Seq("doc_id"))
-      .groupBy(col("canonical_id"), col("blk"))
-      .agg(count(lit(1)).as("m"))
-      .agg(sum(dec(col("m")) * (col("m") - 1)).as("co2"))
-    tot.crossJoin(broadcast(blocks)).crossJoin(broadcast(truth))
-      .crossJoin(broadcast(cob))
-      .select(col("n_docs"), col("n_blocks"),
-        // audit numbers, not join keys: DOUBLE output so a >3e9-doc
-        // corpus (doubled pair counts past int64) reports instead of
-        // throwing on the cast; the accumulation itself is decimal
-        col("cand2").cast("double").as("cand_pairs2"),
-        col("truth2").cast("double").as("truth_pairs2"),
-        col("co2").cast("double").as("co_pairs2"),
-        (floor((lit(1) - col("cand2").cast("double")
-          / (col("n_docs").cast("double") * (col("n_docs") - 1)))
-          * 1000000L + 0.5) / 1000000L).as("reduction_ratio"),
-        (floor((col("co2").cast("double") / col("truth2").cast("double"))
-          * 1000000L + 0.5) / 1000000L).as("pairs_completeness"))
-  }
-
   /** Dimension-truncation recall for the embedding index — the
     * Matryoshka question a 100 TB vector pipeline must answer before
     * it ships a cheaper index: if ANN scores only the first k of 64
@@ -1600,7 +1492,6 @@ object EvalOps {
     "q214_ndcg" -> q214Ndcg,
     "q221_brier_decomposition" -> q221BrierDecomposition,
     "q222_mrr_map" -> q222MrrMap,
-    "q223_blocking_metrics" -> q223BlockingMetrics,
     "q225_dim_truncation_recall" -> q225DimTruncationRecall,
     "q229_split_finding" -> q229SplitFinding,
     "q231_pr_auc" -> q231PrAuc,

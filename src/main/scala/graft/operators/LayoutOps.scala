@@ -619,7 +619,46 @@ object LayoutOps {
       oTable: String = "orders_bucketed"): (DataFrame, DataFrame) =
     (spark.table(liTable), spark.table(oTable))
 
+  /** Z-order (Morton) bucketing of the order book on
+    * (custkey, orderkey): the interleaved code's high bits partition
+    * the 2-D key space into buckets whose rows are bounded in BOTH
+    * dimensions — the layout contract behind [[zorderWrite]]'s 2-D
+    * file skipping. Spark computes the code with the native
+    * `graft_morton` expression; the oracle replays the identical
+    * magic-mask spread arithmetic (& | << on int64) step by step, so
+    * the hash pins the bit-exact interleave cross-engine. */
+  val q84Zorder: QueryDef = QueryDef.withOracle(
+    """WITH o AS (
+      |  SELECT o_custkey AS a, o_orderkey AS b FROM orders),
+      |t0 AS (SELECT a, b, a & 2147483647 AS xa, b & 2147483647 AS xb FROM o),
+      |t1 AS (SELECT a, b, (xa | (xa << 16)) & 281470681808895 AS xa,
+      |                    (xb | (xb << 16)) & 281470681808895 AS xb FROM t0),
+      |t2 AS (SELECT a, b, (xa | (xa << 8)) & 71777214294589695 AS xa,
+      |                    (xb | (xb << 8)) & 71777214294589695 AS xb FROM t1),
+      |t3 AS (SELECT a, b, (xa | (xa << 4)) & 1085102592571150095 AS xa,
+      |                    (xb | (xb << 4)) & 1085102592571150095 AS xb FROM t2),
+      |t4 AS (SELECT a, b, (xa | (xa << 2)) & 3689348814741910323 AS xa,
+      |                    (xb | (xb << 2)) & 3689348814741910323 AS xb FROM t3),
+      |t5 AS (SELECT a, b, (xa | (xa << 1)) & 6148914691236517205 AS xa,
+      |                    (xb | (xb << 1)) & 6148914691236517205 AS xb FROM t4),
+      |m AS (SELECT a, b, xa | (xb << 1) AS z FROM t5)
+      |SELECT z // 1048576 AS zbucket, count(*) AS n,
+      |  min(a) AS min_cust, max(a) AS max_cust,
+      |  min(b) AS min_order, max(b) AS max_order
+      |FROM m GROUP BY 1""".stripMargin
+  ) { (s, d) =>
+    import graft.functions.LayoutExpressions
+    Tables.orders(s, d)
+      .select(col("o_custkey").as("a"), col("o_orderkey").as("b"),
+        LayoutExpressions.morton(col("o_custkey"), col("o_orderkey")).as("z"))
+      .groupBy(expr("z div 1048576").as("zbucket"))
+      .agg(count(lit(1)).as("n"),
+        min(col("a")).as("min_cust"), max(col("a")).as("max_cust"),
+        min(col("b")).as("min_order"), max(col("b")).as("max_order"))
+  }
+
   val all: Map[String, QueryDef] = Map(
+    "q84_zorder" -> q84Zorder,
     "q169_zorder_layout" -> q169ZorderLayout,
     "q174_bloom_index" -> q174BloomIndex,
     "q179_encoding_profile" -> q179EncodingProfile,

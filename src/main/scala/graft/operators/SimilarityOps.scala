@@ -57,35 +57,6 @@ object SimilarityOps {
       .select("q_id", "rank", "neighbor_id", "cosine")
   }
 
-  private val LshTables = 3 // L hash tables ...
-  private val LshBits = 4 // ... of at least k hyperplane bits each
-
-  /** Adaptive bit count: k grows with log₂(corpus) so expected bucket
-    * occupancy stays ~constant (~125 vectors per table bucket). A
-    * FIXED k is the classic LSH scale cliff: occupancy ∝ n makes the
-    * within-bucket candidate join ∝ n²/2ᵏ — measured 8.2× time at 10×
-    * data on this corpus before the change, ~linear after. The count
-    * is a planning-time scalar (parquet row-count scan, no shuffle);
-    * at real scale L would grow alongside k to hold per-table recall
-    * ((1−θ/π)ᵏ shrinks as k grows) — L stays fixed here to keep the
-    * fixture frames small, and recall remains a tuning contract
-    * (the oracle re-derives candidates from the dumped buckets, so
-    * correctness is bucket-consistency, not a fixed recall). */
-  private[operators] def lshBits(n: Long): Int =
-    math.max(LshBits,
-      math.ceil(math.log(math.max(n / 125.0, 1.0)) / math.log(2)).toInt)
-
-  /** Corpus row counts memoized per source dir: the count is a pure
-    * function of the (immutable) test data, and constructing a query
-    * plan should not fire a Spark job per construction — q44, q51,
-    * and the Verify fixture dump all build this frame in one run. */
-  private val corpusCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private[operators] def corpusCount(
-      s: org.apache.spark.sql.SparkSession, d: String): Long =
-    corpusCounts.computeIfAbsent(d, _ => corpus(s, d).count()).longValue()
-
   /** Adaptive IVF centroid-sample divisor: nlist ≈ 4·√n (the standard
     * inverted-index build rule — assignment cost n·nlist ∝ n^1.5, probe
     * cost per query ∝ √n) via p = max(31, ⌈√n / 4⌉). A FIXED divisor is
@@ -102,31 +73,13 @@ object SimilarityOps {
   private[operators] val IvfDivisorSql =
     "(SELECT GREATEST(31, CAST(ceil(sqrt(count(*)) / 4.0) AS BIGINT)) FROM c)"
 
-  /** One fused codegen pass: every (vector, table) row with its LSH
-    * bucket, embedding carried alongside. */
-  private def bucketed(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val c = corpus(s, d)
-    val n = corpusCounts.computeIfAbsent(d, _ => c.count()).longValue()
-    c.select(col("vec_id"), col("embedding"),
-      posexplode(VectorExpressions.lshSignature(col("embedding"),
-        LshTables, lshBits(n))).as(Seq("t", "bucket")))
-  }
-
   /** Exploded hyperplane-LSH bucket assignments (vec_id, t, bucket) —
     * the ONLY engine-specific piece of the LSH paths (the hyperplanes
     * live in the native expression). Verify dumps this frame to
     * parquet so the DuckDB oracle can independently re-derive the
     * candidate join, scoring, and ranking of q51/q44 from it. */
   def lshBucketsFrame(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    bucketed(s, d).select("vec_id", "t", "bucket")
-
-  /** Bucket assignments WITH the embedding carried — for consumers
-    * that score candidates inside the bucket join (q44), where
-    * shipping each vector L times (O(L·n)) beats attaching arrays to
-    * the candidate pairs afterwards (O(candidates) ≫ O(L·n)). */
-  def lshBucketsWithEmbeddings(
-      s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    bucketed(s, d).select("vec_id", "embedding", "t", "bucket")
+    Kernels.lshBucketsWithEmbeddings(s, d).select("vec_id", "t", "bucket")
 
   /** LSH-bucketed ANN: L=3 hash tables of k=4 random-hyperplane bits
     * (one fused codegen loop per row computes all signatures). A
@@ -159,7 +112,7 @@ object SimilarityOps {
       |  FROM scored)
       |SELECT q_id, rank, neighbor_id, cosine FROM ranked WHERE rank <= 5""".stripMargin
   ) { (s, d) =>
-    val cT = bucketed(s, d)
+    val cT = Kernels.lshBucketsWithEmbeddings(s, d)
     val q = cT.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("t"), col("bucket"))
@@ -236,7 +189,7 @@ object SimilarityOps {
       |SELECT q_id, rank, neighbor_id, cosine FROM ranked WHERE rank <= 5""".stripMargin
   ) { (s, d) =>
     val c = corpus(s, d)
-    val cents = c.filter(col("vec_id") % ivfDivisor(corpusCount(s, d)) === 1)
+    val cents = c.filter(col("vec_id") % ivfDivisor(Kernels.corpusCount(s, d)) === 1)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
     // Nearest-centroid assignment as a NARROW partial aggregation:
     // the broadcast nested-loop join emits the k candidate rows of
@@ -463,7 +416,7 @@ object SimilarityOps {
   ) { (s, d) =>
     val c = corpus(s, d)
     // inverted lists: ids only — the embedding never rides past here
-    val cents = c.filter(col("vec_id") % ivfDivisor(corpusCount(s, d)) === 1)
+    val cents = c.filter(col("vec_id") % ivfDivisor(Kernels.corpusCount(s, d)) === 1)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cent_emb"))
     val assigned = c.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cent_id"),

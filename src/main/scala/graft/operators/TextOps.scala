@@ -206,13 +206,6 @@ object TextOps {
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("canonical_doc"))
   }
 
-  /** md5-based 256-way bucket of a doc id — the shared banding under
-    * the q37/q45/q46 split operators (train < 205, val < 230, else
-    * test). One definition: a banding change must hit the three Scala
-    * sites and their oracle SQL together. */
-  private[operators] def docBucket: org.apache.spark.sql.Column =
-    conv(substring(md5(col("doc_id").cast("string")), 1, 2), 16, 10).cast("int")
-
   private[operators] def splitOf(bucket: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     when(bucket < 205, "train").when(bucket < 230, "val").otherwise("test")
 
@@ -239,7 +232,7 @@ object TextOps {
       |FROM b GROUP BY 1""".stripMargin
   ) { (s, d) =>
     Tables.documents(s, d)
-      .select(col("doc_id"), col("text"), docBucket.as("bucket"))
+      .select(col("doc_id"), col("text"), Kernels.docBucket.as("bucket"))
       .select(splitOf(col("bucket")).as("split"), col("doc_id"), col("text"))
       .groupBy(col("split"))
       .agg(count(lit(1)).as("n_docs"),
@@ -316,7 +309,7 @@ object TextOps {
       |FROM sh GROUP BY s
       |ORDER BY df DESC, s LIMIT 100""".stripMargin
   ) { (s, d) =>
-    DedupOps.shingles(
+    Kernels.shingles(
       Tables.documents(s, d).select(col("doc_id"), col("text")))
       .groupBy(col("s").as("shingle"))
       .agg(count(lit(1)).as("df"))
@@ -343,7 +336,7 @@ object TextOps {
   ) { (s, d) =>
     val f = Tables.documents(s, d)
       .select(col("doc_id"), contentFingerprint.as("fingerprint"),
-        docBucket.as("bucket"))
+        Kernels.docBucket.as("bucket"))
     f.filter(col("bucket") >= 230) // test split (q37's banding)
       .join(f.filter(col("bucket") < 205).select(col("fingerprint")),
         Seq("fingerprint"), "left_semi")
@@ -387,7 +380,7 @@ object TextOps {
   ) { (s, d) =>
     val base = Tables.documents(s, d).select(
       col("doc_id"),
-      docBucket.as("bucket"),
+      Kernels.docBucket.as("bucket"),
       size(split(col("text"), " ", -1)).as("n_tok"))
       .select(col("doc_id"), col("n_tok"),
         splitOf(col("bucket")).as("split"),

@@ -11,20 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object EventStreams {
 
-  /** Watermarked stream-stream interval join: click → purchase
-    * conversions within `windowDur` per user (streaming analog of the
-    * batch q2j bucketed interval join). Both sides carry a watermark
-    * and the join predicate bounds purchase_ts to
-    * (click_ts, click_ts + windowDur], so Spark derives state
-    * eviction: a buffered click is dropped once the purchase-side
-    * watermark passes click_ts + windowDur — state is bounded by
-    * in-flight rows inside the watermark horizon, not the stream
-    * history. Scale shape: one hash shuffle per side keyed by
-    * user_id, identical to the batch equi-join profile.
-    *
-    * Inputs need columns (user_id, event_id, ts); both frames may be
-    * streaming, or bounded for a batch parity check — the plan is the
-    * same declarative join either way. */
   /** Watermarked hopping-window rollup over (ts, event_type, value):
     * the streaming execution of the batch q95 — the SAME declarative
     * aggregate serves both modes (the watermark node is a no-op in
@@ -43,6 +29,20 @@ object EventStreams {
       .select(unix_micros(col("w.start")).as("window_start_us"),
         col("event_type"), col("n"), col("value_cents"))
 
+  /** Watermarked stream-stream interval join: click → purchase
+    * conversions within `windowDur` per user (streaming analog of the
+    * batch q2j bucketed interval join). Both sides carry a watermark
+    * and the join predicate bounds purchase_ts to
+    * (click_ts, click_ts + windowDur], so Spark derives state
+    * eviction: a buffered click is dropped once the purchase-side
+    * watermark passes click_ts + windowDur — state is bounded by
+    * in-flight rows inside the watermark horizon, not the stream
+    * history. Scale shape: one hash shuffle per side keyed by
+    * user_id, identical to the batch equi-join profile.
+    *
+    * Inputs need columns (user_id, event_id, ts); both frames may be
+    * streaming, or bounded for a batch parity check — the plan is the
+    * same declarative join either way. */
   def conversionJoin(clicks: DataFrame, purchases: DataFrame,
       windowDur: String = "30 minutes",
       watermark: String = "1 hour"): DataFrame = {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming._
 /** Streaming gap-sessionization per user — the stateful online twin
   * of batch `q2b_sessionize` (ref `dashboard/analytics.py` computes
   * sessions in hindsight from a day's frame; the gate's batch shape
-  * is the nested-window gaps-and-islands at `Relational2.scala`).
+  * is the nested-window gaps-and-islands in `RelationalOps`).
   * Same contract, expressed as it must be at 100 TB of unbounded
   * input: per-user state is ONE open-session summary (index, start,
   * last, count, cents sum) — never the events themselves — so state

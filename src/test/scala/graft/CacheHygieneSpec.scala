@@ -27,22 +27,29 @@ class CacheHygieneSpec extends SparkSpec {
     assert(CacheHygiene.isClean(spark))
   }
 
-  test("SmartHomeOps pins re-register their caches after a sweep") {
+  test("memo frames stay materialized across a sweep and are not rebuilt") {
+    import org.apache.spark.sql.execution.LogicalRDD
     val d = sf("sf0.001")
+    // the localCheckpoint RDDs q64's plan reads: silver's pin and the
+    // daily and health pins (and silver itself, under the pins)
+    def leaves(): Seq[org.apache.spark.rdd.RDD[_]] =
+      operators.SmartHomeOps.q64Dashboard.fn(spark, d).queryExecution
+        .analyzed.collect { case lr: LogicalRDD => lr.rdd }.distinct
     CacheHygiene.sweep(spark)
-    // first access builds + caches silver and the three pinned frames
     assert(operators.SmartHomeOps.q64Dashboard.fn(spark, d).count() > 0)
-    assert(!CacheHygiene.isClean(spark))
+    val before = leaves()
+    assert(before.nonEmpty, "q64 must read memoized checkpoint leaves")
     CacheHygiene.sweep(spark)
     assert(CacheHygiene.isClean(spark))
-    // post-sweep access must RE-REGISTER the memoized frames' caches at
-    // plan-construction time (recache), so q63-q65 read the pins
-    // instead of rebuilding silver from the fixture generator on every
-    // action — the round-6 bench-noise defect (q62: 0.38 s → 3.12 s)
-    val df = operators.SmartHomeOps.q64Dashboard.fn(spark, d)
-    assert(!CacheHygiene.isClean(spark),
-      "pinned()/silver() did not re-register swept caches")
-    assert(df.count() > 0)
+    // after the sweep the same checkpointed RDDs back the plan: the
+    // memo neither rebuilds silver from the fixture generator nor has
+    // to re-register anything with the cache manager (the round-6
+    // bench-noise defect: q62 0.38 s → 3.12 s when a sweep dropped it)
+    val after = leaves()
+    assert(after.map(_.id) == before.map(_.id), "memo frames were rebuilt")
+    assert(after.forall(_.isCheckpointed), "memo frames lost their blocks")
+    assert(CacheHygiene.isClean(spark))
+    assert(operators.SmartHomeOps.q64Dashboard.fn(spark, d).count() > 0)
     CacheHygiene.sweep(spark)
   }
 }

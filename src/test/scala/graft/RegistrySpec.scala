@@ -1,6 +1,7 @@
 package graft
 
 import scala.io.Source
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -42,5 +43,29 @@ class RegistrySpec extends AnyFunSuite {
   test("every inventory query carries oracle SQL") {
     val names = SparkEntry.oracleSql.keySet
     assert(names == inventory, diff(names))
+  }
+
+  test("no query module names another query module") {
+    // a query module is a file under operators/ that registers an
+    // `all` map; shared helpers live in Kernels, not in a query module
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/operators")
+    val sources = java.nio.file.Files.list(dir).iterator().asScala
+      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8") -> p)
+      .collect { case (src, p) if src.contains("val all: Map[String, QueryDef]") =>
+        p.getFileName.toString.stripSuffix(".scala") -> src }
+      .toMap
+    assert(sources.size == SparkEntry.groups.size, sources.keySet)
+    // comments and string literals may name other modules; code may
+    // not. One left-to-right alternation, so a quote inside a comment
+    // or a `/*` inside a string (a parquet glob) starts nothing.
+    val noise =
+      "(?s)\"\"\".*?\"\"\"|\"(?:\\\\.|[^\"\\\\\\n])*\"|/\\*.*?\\*/|//[^\\n]*".r
+    def code(src: String): String = noise.replaceAllIn(src, "")
+    val borrowed = for {
+      (module, src) <- sources.toSeq.sortBy(_._1)
+      other <- sources.keySet.toSeq.sorted if other != module
+      if s"\\b$other\\b".r.findFirstIn(code(src)).nonEmpty
+    } yield s"$module -> $other"
+    assert(borrowed.isEmpty, borrowed.mkString(", "))
   }
 }

@@ -118,7 +118,7 @@ class AnalyticsOps10Spec extends SparkSpec {
   }
 
   test("q223: blocking metrics are ratios in [0,1]; counts consistent") {
-    val r = EvalOps.q223BlockingMetrics.fn(spark, d).head()
+    val r = DedupOps.q223BlockingMetrics.fn(spark, d).head()
     val rr = r.getAs[Double]("reduction_ratio")
     val pc = r.getAs[Double]("pairs_completeness")
     assert(rr >= 0 && rr <= 1)

@@ -52,12 +52,12 @@ class CorpusOpsSpec extends SparkSpec {
     // same shared definitions the operators use — not a re-derivation
     val flagged = TextOps.q45Decontaminate.fn(spark, dir)
     val withBucket = flagged.join(
-      docs.select(col("doc_id"), TextOps.docBucket.as("bucket")), Seq("doc_id"))
+      docs.select(col("doc_id"), Kernels.docBucket.as("bucket")), Seq("doc_id"))
     assert(withBucket.filter(col("bucket") < 230).count() == 0)
     // every flagged fingerprint exists on some train doc
     val trainFps = docs
       .select(TextOps.contentFingerprint.as("fingerprint"),
-        TextOps.docBucket.as("bucket"))
+        Kernels.docBucket.as("bucket"))
       .filter(col("bucket") < 205).select("fingerprint")
     assert(flagged.join(trainFps, Seq("fingerprint"), "left_anti").count() == 0)
   }

@@ -67,7 +67,7 @@ class CurationOpsSpec extends SparkSpec {
     // same dataflow minus the bloom stage
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), split(col("text"), " ", -1).as("toks"),
-        TextOps.docBucket.as("bucket"))
+        Kernels.docBucket.as("bucket"))
       .filter(size(col("toks")) >= 5)
       .select(col("doc_id"), col("bucket"),
         explode(array_distinct(expr(

@@ -52,7 +52,7 @@ class RankingClusteringSpec extends SparkSpec {
   }
 
   test("q2j interval join equals the naive theta join") {
-    val fast = Relational2.q2jIntervalJoin.fn(spark, d)
+    val fast = RelationalOps.q2jIntervalJoin.fn(spark, d)
       .orderBy("click_id", "purchase_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val ev = Tables.events(spark, d)
@@ -95,7 +95,7 @@ class RankingClusteringSpec extends SparkSpec {
   }
 
   test("q2l anomaly equals a driver-side z-score recomputation") {
-    val flagged = Relational2.q2lAnomaly.fn(spark, d)
+    val flagged = RelationalOps.q2lAnomaly.fn(spark, d)
       .collect().map(r => r.getLong(1) -> r.getDouble(3)).toMap
     // brute force per user on the driver (sf0.001 is small)
     val rows = Tables.events(spark, d)

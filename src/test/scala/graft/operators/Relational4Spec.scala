@@ -3,7 +3,9 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Closed-form contracts for the fourth relational tranche. */
+/** Closed-form contracts for the unpivot and streak queries
+  * (RelationalOps) and the gram-matrix and eigenvector queries
+  * (ClusteringOps). */
 class Relational4Spec extends SparkSpec {
 
   private def tmp(prefix: String): String =
@@ -17,7 +19,7 @@ class Relational4Spec extends SparkSpec {
       .toDF("l_returnflag", "l_quantity", "l_extendedprice",
         "l_discount", "l_tax")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = Relational4.q142Unpivot.fn(spark, dir).collect()
+    val out = RelationalOps.q142Unpivot.fn(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
     assert(out.size == 8, out)
@@ -41,7 +43,7 @@ class Relational4Spec extends SparkSpec {
       .withColumn("ts", to_timestamp(col("tss"))).drop("tss")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val day0 = java.time.LocalDate.parse("2026-01-01").toEpochDay
-    val out = Relational4.q143Streaks.fn(spark, dir).collect()
+    val out = RelationalOps.q143Streaks.fn(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(out.toSeq == Seq(
       (1L, 3L, day0), (2L, 2L, day0 + 9), (3L, 1L, day0 + 19)), out.toSeq)
@@ -56,7 +58,7 @@ class Relational4Spec extends SparkSpec {
     Seq((1L, Array(1f, 0f)), (2L, Array(1f, 0f)))
       .toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val out = Relational4.q145TopEigenvector.fn(spark, dir).collect()
+    val out = ClusteringOps.q145TopEigenvector.fn(spark, dir).collect()
       .map(r => r.getInt(0) ->
         ((r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
     assert(out == Map(
@@ -65,7 +67,7 @@ class Relational4Spec extends SparkSpec {
   }
 
   test("q145: on real data the component is unit-infinity-norm, 64 dims") {
-    val rows = Relational4.q145TopEigenvector.fn(spark, sf("sf0.001"))
+    val rows = ClusteringOps.q145TopEigenvector.fn(spark, sf("sf0.001"))
       .collect()
     assert(rows.length == 64)
     assert(rows.map(r => math.abs(r.getLong(1))).max == 100000L,
@@ -79,7 +81,7 @@ class Relational4Spec extends SparkSpec {
     Seq((1L, Array(1f, 2f)), (2L, Array(3f, 4f)))
       .toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val out = Relational4.q144GramMatrix.fn(spark, dir).collect()
+    val out = ClusteringOps.q144GramMatrix.fn(spark, dir).collect()
       .map(r => (r.getInt(0), r.getInt(1)) ->
         ((r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     assert(out.size == 3, out)

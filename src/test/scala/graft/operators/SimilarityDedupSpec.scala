@@ -190,7 +190,7 @@ class SimilarityDedupSpec extends SparkSpec {
 
     // Join-input audit: Σ df² over shingles surviving the df band is
     // the exact row count the candidate self-join produces per key.
-    val dfCounts = DedupOps.shingles(docs).groupBy("s").count()
+    val dfCounts = Kernels.shingles(docs).groupBy("s").count()
       .select(col("count").as("df")).cache()
     val joinRows = (lo: Long, hi: Long) =>
       dfCounts.filter(col("df") >= lo && col("df") <= hi)

@@ -2,7 +2,9 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.etl.{BronzeToSilver, EtlConfig, Fixtures, Lake, SilverToGold}
+import org.apache.hadoop.fs.{FSDataInputStream, LocalFileSystem, Path}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class GoldRefinerySpec extends SparkSpec {
 
@@ -163,5 +165,48 @@ class GoldRefinerySpec extends SparkSpec {
     assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
     assert(spark.read.parquet(Lake.dailyEnergyPath(lake)).count() == 3,
       "daily energy, written on the calling thread, finished")
+  }
+
+  test("a Gold refresh reads on when an overwrite deletes Silver files it opened") {
+    val lake = java.nio.file.Files.createTempDirectory("graft-goldref-race").toString
+    val start = java.time.Instant.parse("2025-07-15T10:00:00Z")
+    val cfg = EtlConfig(referenceInstant = Some(start.plusSeconds(2 * 3600)))
+    Lake.writeSilver(BronzeToSilver.run(Fixtures.bronzeTelemetry(spark, nDevices = 3,
+      rowsPerDevice = 60, start = start), Fixtures.deviceCatalog(spark, 3), cfg), lake)
+    def crcFiles(): Int = java.nio.file.Files.walk(
+        java.nio.file.Paths.get(Lake.silverPath(lake))).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".parquet.crc"))
+    assert(crcFiles() > 0, "the local file system writes no checksum files")
+    // every local file this session opens goes through the vanishing
+    // file system until the refresh returns
+    val armed = Seq("fs.file.impl" -> classOf[CrcVanishingFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    try {
+      armed.foreach { case (k, v) => spark.conf.set(k, v) }
+      Lake.refreshGold(spark, lake, cfg, Seq(java.time.LocalDate.parse("2025-07-15")))
+    } finally armed.foreach { case (k, _) => spark.conf.unset(k) }
+    assert(crcFiles() == 0, "the refresh opened no Silver file")
+
+    val silver = spark.read.parquet(Lake.silverPath(lake)).drop("date")
+    val de = SilverToGold.dailyEnergyConsumption(silver, cfg)
+    val dh = SilverToGold.deviceHealthMetrics(silver, cfg)
+    val gotDe = spark.read.parquet(Lake.dailyEnergyPath(lake))
+    val gotDh = spark.read.parquet(Lake.deviceHealthPath(lake))
+    assert(gotDh.count() == 3)
+    assert(multiset(gotDe.select(de.columns.map(col): _*)) == multiset(de))
+    assert(multiset(gotDh.select(dh.columns.map(col): _*)) == multiset(dh))
+  }
+}
+
+/** A local file system under which a Silver data file loses its `.crc`
+  * checksum file as soon as a reader has opened it: what a concurrent
+  * Silver overwrite does to a Gold scan that opened the date's files
+  * before the overwrite deleted them. */
+class CrcVanishingFileSystem extends LocalFileSystem {
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    val in = super.open(f, bufferSize)
+    if (f.getName.endsWith(".parquet") && f.toUri.getPath.contains("/silver/"))
+      getRawFileSystem.delete(getChecksumFile(f), false)
+    in
   }
 }
