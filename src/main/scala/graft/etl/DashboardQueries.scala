@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference dashboard's analytic queries (dashboard/app.py:
@@ -12,20 +12,15 @@ object DashboardQueries {
 
   /** app.py:290-304 headline KPI row: today's energy (kWh), cost,
     * active devices from gold daily_energy (F9 date filter + A8
-    * scalar aggregation). `deviceCount` parameterizes exact vs approx
-    * distinct (one body, two public entry points below). */
-  private def kpiRow(dailyEnergy: DataFrame, cfg: EtlConfig,
-      deviceCount: Column): DataFrame = {
+    * scalar aggregation). */
+  def todayKpis(dailyEnergy: DataFrame, cfg: EtlConfig = EtlConfig()): DataFrame = {
     val today = java.sql.Date.valueOf(
       cfg.now.atZone(java.time.ZoneOffset.UTC).toLocalDate)
     dailyEnergy.filter(col("date") === lit(today)).agg(
       bround(sum(col("energy_consumption_wh_sum")) / 1000, 2).as("total_energy_kwh"),
       bround(sum(col("energy_cost_estimate")), 2).as("total_cost"),
-      deviceCount.as("active_devices"))
+      countDistinct(col("device_id")).as("active_devices"))
   }
-
-  def todayKpis(dailyEnergy: DataFrame, cfg: EtlConfig = EtlConfig()): DataFrame =
-    kpiRow(dailyEnergy, cfg, countDistinct(col("device_id")))
 
   /** app.py:310-317 24 h fallback KPIs straight from Silver (F8 time
     * cut + A8): used when gold has no row for today. */
@@ -94,14 +89,6 @@ object DashboardQueries {
           .as("total_energy_kwh"),
         bround(sum(col("energy_cost_estimate")), 2).as("total_cost"))
       .orderBy(col("date"))
-
-  /** 100 TB variant of the KPI row: approx_count_distinct (HLL++)
-    * in place of exact distinct — the SURVEY A5 note's acceptable
-    * deviation when device/user cardinality is large enough that the
-    * exact distinct's shuffle dominates. */
-  def todayKpisApprox(dailyEnergy: DataFrame,
-      cfg: EtlConfig = EtlConfig(), rsd: Double = 0.02): DataFrame =
-    kpiRow(dailyEnergy, cfg, approx_count_distinct(col("device_id"), rsd))
 
   /** app.py:506-543 device-health scatter: one point per device,
     * health vs failure probability, sized by alerts. */

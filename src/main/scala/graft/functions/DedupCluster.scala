@@ -176,15 +176,4 @@ object DedupCluster {
     if (prevCp ne null) releaseCheckpoint(prevCp)
     full
   }
-
-  /** Full near-dup removal: keep one row per cluster (the canonical
-    * doc), given a pair-producing candidate stage. */
-  def dropNearDuplicates(docs: DataFrame, pairs: DataFrame,
-      idCol: String = "doc_id"): DataFrame = {
-    val canon = canonicalize(
-      docs.select(col(idCol).as("doc_id")), pairs)
-      .filter(col("doc_id") === col("canonical_id"))
-      .select(col("doc_id").as(idCol))
-    docs.join(canon, Seq(idCol), "left_semi")
-  }
 }

@@ -7,12 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types._
 
 /** Native expressions for physical data layout: Morton (Z-order)
-  * interleaving, the multi-dimensional generalization of
-  * `LayoutOps.clusteredWrite`'s single-key range clustering. Sorting by
-  * the interleaved code keeps rows that are close in BOTH key
-  * dimensions physically adjacent, so parquet min/max stats prune
-  * files for 2-D range predicates where a lexicographic sort prunes
-  * only the leading key.
+  * interleaving, the multi-dimensional generalization of single-key
+  * range clustering. Sorting by the interleaved code keeps rows that
+  * are close in BOTH key dimensions physically adjacent, so parquet
+  * min/max stats prune files for 2-D range predicates where a
+  * lexicographic sort prunes only the leading key.
   *
   * The bit spread is the standard magic-mask doubling sequence —
   * pure integer & | << steps, so the identical arithmetic replays in

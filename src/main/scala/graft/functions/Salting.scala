@@ -32,9 +32,6 @@ object Salting {
     SaltedAgg(max(c).as(s"__p_$as"), p => max(col(p)).as(as), as)
   def minOf(c: Column, as: String): SaltedAgg =
     SaltedAgg(min(c).as(s"__p_$as"), p => min(col(p)).as(as), as)
-  /** avg = merged sum / merged count (never average averages). */
-  def avgOf(c: Column, as: String): Seq[SaltedAgg] = Seq(
-    sumOf(c, s"${as}__sum"), countOf(s"${as}__cnt"))
 
   /** Two-phase salted groupBy. `salts` controls hot-key fan-out;
     * `spark.sql.shuffle.partitions`-sized values are pointless — use
@@ -53,11 +50,4 @@ object Salting {
         aggs.tail.map(a => a.merge(s"__p_${a.name}")): _*)
     merged
   }
-
-  /** Convenience: salted sum+count+avg per key. */
-  def saltedStats(df: DataFrame, keys: Seq[String], valueCol: String,
-      salts: Int = 16): DataFrame =
-    saltedAggregate(df, keys, salts,
-      Seq(sumOf(col(valueCol), "sum_v"), countOf("n")))
-      .withColumn("avg_v", col("sum_v") / col("n"))
 }

@@ -29,15 +29,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType), // image | audio | video
-    StructField("content", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("source", StringType),
-      StructField("n_bytes", LongType))))
-  ))
-
   val decodedSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
     StructField("kind", StringType),

@@ -298,9 +298,7 @@ object CurationOps {
         size(regexp_extract_all(col("text"), lit(EmailRe), lit(0))).as("n_email"),
         size(regexp_extract_all(col("text"), lit(Ipv4Re), lit(0))).as("n_ip"),
         size(regexp_extract_all(col("text"), lit(PhoneRe), lit(0))).as("n_phone"),
-        length(regexp_replace(regexp_replace(regexp_replace(col("text"),
-          EmailRe, "<EMAIL>"), Ipv4Re, "<IP>"), PhoneRe, "<PHONE>"))
-          .as("redacted_len"))
+        length(redact(col("text"))).as("redacted_len"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_email")).as("n_emails"),
@@ -308,7 +306,7 @@ object CurationOps {
         sum(col("n_phone")).as("n_phones"),
         sum(col("redacted_len")).as("redacted_chars"))
 
-  /** Redacted text itself (not just counts) — the spec's subject. */
+  /** The redacted text: emails, then IPv4, then phone numbers. */
   def redact(text: Column): Column =
     regexp_replace(regexp_replace(regexp_replace(text,
       EmailRe, "<EMAIL>"), Ipv4Re, "<IP>"), PhoneRe, "<PHONE>")

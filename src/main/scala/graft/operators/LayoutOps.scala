@@ -519,75 +519,6 @@ object LayoutOps {
           + 0.5) / 1000000).as("scan_share"))
   }
 
-  /** Range-clustered write: repartitionByRange + sortWithinPartitions
-    * on the cluster key gives every output file a DISJOINT key range,
-    * so parquet row-group/file min-max statistics prune reads for any
-    * range or point predicate on that key — the poor-man's
-    * Z-ordering for the single-key case, at zero read-path cost.
-    * Range boundaries come from Spark's reservoir sample of the key
-    * distribution, so files are near-equal-sized even under skew. */
-  def clusteredWrite(df: DataFrame, dir: String, clusterCol: String,
-      nFiles: Int): Unit =
-    df.repartitionByRange(nFiles, col(clusterCol))
-      .sortWithinPartitions(clusterCol)
-      .write.mode("overwrite").parquet(dir)
-
-  /** Z-order clustered write: range-cluster on the MORTON interleave
-    * of two keys instead of one key, so every file bounds BOTH
-    * dimensions — 2-D range/point predicates prune files where a
-    * lexicographic sort only prunes the leading key (the trailing key
-    * spans its full range in every file).
-    *
-    * Both keys are min-max normalized to 16 bits BEFORE interleaving
-    * (one tiny stats pass): raw interleaving only helps when the two
-    * domains have comparable bit widths — with an 11-bit key against
-    * an 8-bit key, every high interleaved bit belongs to the wide key
-    * and the split degenerates to a 1-D sort. Normalization gives
-    * both dims equal weight at every split granularity (the same move
-    * production Z-order implementations make by interleaving
-    * range-bucket ids). The interleave itself is the native codegen'd
-    * `LayoutExpressions.morton`. */
-  def zorderWrite(df: DataFrame, dir: String, colA: String, colB: String,
-      nFiles: Int): Unit = {
-    // numeric or timestamp keys only — anything else has no defined
-    // min-max normalization here (cast a date to timestamp first)
-    Seq(colA, colB).foreach { c =>
-      val t = df.schema(c).dataType
-      require(t.isInstanceOf[org.apache.spark.sql.types.NumericType] ||
-        t == org.apache.spark.sql.types.TimestampType,
-        s"zorderWrite key '$c' must be numeric or timestamp, got ${t.sql}")
-    }
-    val r = df.agg(min(col(colA).cast("double")), max(col(colA).cast("double")),
-      min(col(colB).cast("double")), max(col(colB).cast("double"))).head()
-    // a key with no non-null values has no min-max domain: degrade
-    // gracefully instead of NPE-ing on getDouble — both keys absent
-    // (or empty input) → plain write; one absent → 1-D clustering on
-    // the surviving key, which is the best layout available
-    (r.isNullAt(0), r.isNullAt(2)) match {
-      case (true, true) =>
-        df.write.mode("overwrite").parquet(dir)
-        return
-      case (true, false) =>
-        clusteredWrite(df, dir, colB, nFiles)
-        return
-      case (false, true) =>
-        clusteredWrite(df, dir, colA, nFiles)
-        return
-      case _ => ()
-    }
-    def lv(i: Int): Double = r.getDouble(i)
-    def norm(c: String, lo: Double, hi: Double) =
-      if (hi > lo)
-        ((col(c).cast("double") - lo) / (hi - lo) * 65535.0).cast("long")
-      else lit(0L)
-    df.withColumn("__z", graft.functions.LayoutExpressions.morton(
-        norm(colA, lv(0), lv(1)), norm(colB, lv(2), lv(3))))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(dir)
-  }
-
   /** Bucketed fact layout — the exchange-elimination lever for
     * REPEATED fact-to-fact joins (q191's header/detail
     * reconciliation, any lineitem⋈orders): both tables are written
@@ -622,8 +553,8 @@ object LayoutOps {
   /** Z-order (Morton) bucketing of the order book on
     * (custkey, orderkey): the interleaved code's high bits partition
     * the 2-D key space into buckets whose rows are bounded in BOTH
-    * dimensions — the layout contract behind [[zorderWrite]]'s 2-D
-    * file skipping. Spark computes the code with the native
+    * dimensions — the layout contract behind Z-order 2-D file
+    * skipping. Spark computes the code with the native
     * `graft_morton` expression; the oracle replays the identical
     * magic-mask spread arithmetic (& | << on int64) step by step, so
     * the hash pins the bit-exact interleave cross-engine. */

@@ -96,12 +96,6 @@ object RankingOps {
     * independent of partial-aggregation merge order AND engine. */
   private val ScoreQuantum = 100000.0
 
-  /** BM25 (k1=1.2, b=0.75) top-20 documents for the query
-    * {spark, window, join}. Per-(doc, query-term) scores use the
-    * Robertson idf ln((N−df+0.5)/(df+0.5)+1); each term score is
-    * quantized to integer 1e-5 units BEFORE the per-document sum, so
-    * the ranking key is an exact integer (order-free across
-    * partitionings) and the tie-break is doc_id. */
   /** BM25-scored documents for a fixed term set: (doc_id, n_match,
     * s_fp) with the fixed-point integer score — q55's aggregation,
     * shared with the hybrid-fusion ranker (q121). See q55 for the
@@ -116,14 +110,17 @@ object RankingOps {
     // a second full-corpus split() for avgdl; this one doesn't. The
     // per-doc frame is one narrow row per document (doc_id is unique,
     // so the group-by collapses map-side and the exchange carries
-    // |docs| rows of 2 + |queryTerms| integers, no strings).
+    // |docs| rows of 2 + |queryTerms| integers, no strings). A NULL
+    // text keeps its row (explode_outer) with a NULL n_tok and no
+    // matches: the oracle's g counts it in n_docs, not in avgdl's sum.
     val tfCols = queryTerms.zipWithIndex.map { case (t, i) =>
       sum(when(col("term") === t, 1L).otherwise(0L)).as(s"tf_$i")
     }
     val perDoc = docs
       .select(col("doc_id"), split(col("text"), " ", -1).as("toks"))
-      .select(col("doc_id"), size(col("toks")).as("n_tok"),
-        explode(col("toks")).as("term"))
+      .select(col("doc_id"),
+        when(col("toks").isNotNull, size(col("toks"))).as("n_tok"),
+        explode_outer(col("toks")).as("term"))
       .groupBy(col("doc_id"), col("n_tok"))
       .agg(tfCols.head, tfCols.tail: _*)
       .cache() // one narrow row per doc, read by tf / df / g below
@@ -159,6 +156,12 @@ object RankingOps {
           .as("s_fp"))
   }
 
+  /** BM25 (k1=1.2, b=0.75) top-20 documents for the query
+    * {spark, window, join}. Per-(doc, query-term) scores use the
+    * Robertson idf ln((N−df+0.5)/(df+0.5)+1); each term score is
+    * quantized to integer 1e-5 units BEFORE the per-document sum, so
+    * the ranking key is an exact integer (order-free across
+    * partitionings) and the tie-break is doc_id. */
   val q55Bm25: QueryDef = QueryDef.withOracle(
     """WITH t AS (
       |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),

@@ -1,7 +1,6 @@
 package graft
 
 import graft.etl._
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** End-to-end golden values (SURVEY §5.2): the deterministic fixture
@@ -45,79 +44,5 @@ class GoldenSpec extends SparkSpec {
       BigDecimal(sumWh / 1000 * 0.12)
         .setScale(2, BigDecimal.RoundingMode.HALF_EVEN).toDouble) < 1e-9)
     assert(math.abs(sumWh - 70.043) < 1e-9, s"sumWh=$sumWh")
-  }
-
-  test("SQL functions registered via GraftFunctions work in spark.sql") {
-    GraftFunctions.register(spark)
-    Tables.embeddings(spark, sf("sf0.001")).limit(10)
-      .createOrReplaceTempView("emb_g")
-    val r = spark.sql(
-      """SELECT vec_id, graft_dot(embedding, embedding) AS d,
-        |       graft_sqnorm(embedding) AS n,
-        |       graft_cosine(embedding, embedding) AS c
-        |FROM emb_g""".stripMargin)
-    assert(r.filter(abs(col("d") - col("n")) > 1e-12).count() == 0)
-    assert(r.filter(abs(col("c") - 1.0) > 1e-9).count() == 0)
-    val sh = spark.sql(
-      "SELECT graft_simhash(array('spark', 'query', 'engine')) AS s").head()
-    assert(sh.getLong(0) == spark.sql(
-      "SELECT graft_simhash(array('spark', 'query', 'engine')) AS s")
-      .head().getLong(0)) // deterministic
-    // rolling fingerprint: order-sensitive (unlike the simhash set hash)
-    val fp = spark.sql(
-      """SELECT graft_rolling_fp(array('a', 'b')) AS x,
-        |       graft_rolling_fp(array('b', 'a')) AS y""".stripMargin).head()
-    assert(fp.getLong(0) != fp.getLong(1))
-    // lsh signature: L buckets, each within [0, 2^k)
-    val sig = spark.sql(
-      "SELECT graft_lsh_sig(embedding, 3, 4) AS s FROM emb_g").collect()
-    sig.foreach { r =>
-      val buckets = r.getSeq[Long](0)
-      assert(buckets.length == 3)
-      assert(buckets.forall(b => b >= 0L && b < 16L))
-    }
-    // non-literal table/bit counts are rejected loudly
-    intercept[Exception] {
-      spark.sql("SELECT graft_lsh_sig(embedding, vec_id, 4) FROM emb_g")
-        .collect()
-    }
-    // non-INTEGER literals get the intended type error (not a silent
-    // string coercion for '4', not a raw NumberFormatException for 4.0)
-    Seq("'4'", "4.0").foreach { bad =>
-      val e = intercept[Exception] {
-        spark.sql(s"SELECT graft_lsh_sig(embedding, $bad, 4) FROM emb_g")
-          .collect()
-      }
-      def msgs(t: Throwable): Seq[String] =
-        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-      assert(msgs(e).exists(_.contains("must be an integer literal")),
-        s"$bad: ${e.getMessage}")
-    }
-    // the sketch AGGREGATES through the SQL surface: the analyzer
-    // must wrap the bare AggregateFunction and plan partial+final
-    val mh = spark.sql(
-      """SELECT graft_minhash_sketch(s, 4) AS sk,
-        |       graft_hll_registers(s, 6) AS regs,
-        |       graft_misra_gries(s, 8) AS hh
-        |FROM VALUES ('a'), ('b'), ('a') AS t(s)""".stripMargin).head()
-    assert(mh.getSeq[Long](0).length == 4)
-    assert(mh.getSeq[Int](1).length == 64)
-    assert(mh.getSeq[String](2).toSet == Set("a", "b"))
-    // the KLL quantile sketch through SQL: 3 values fit level 0, so
-    // the weighted list is exact — (v, 1) per input, sorted by v
-    val kll = spark.sql(
-      """SELECT graft_kll_doubles(x, 8) AS q
-        |FROM VALUES (3.0D), (1.0D), (2.0D) AS t(x)""".stripMargin).head()
-    val items = kll.getSeq[org.apache.spark.sql.Row](0)
-      .map(r => (r.getDouble(0), r.getLong(1)))
-    assert(items == Seq((1.0, 1L), (2.0, 1L), (3.0, 1L)), items)
-    // parameter hygiene matches graft_lsh_sig's discipline
-    val e2 = intercept[Exception] {
-      spark.sql("SELECT graft_hll_registers(s, '6') " +
-        "FROM VALUES ('a') AS t(s)").collect()
-    }
-    def msgs2(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs2(t.getCause)
-    assert(msgs2(e2).exists(_.contains("must be an integer literal")), e2)
   }
 }

@@ -233,26 +233,4 @@ class CompactionSpec extends SparkSpec {
       s"hot partition must not be rewritten: $after")
     assert(spark.read.parquet(dir).count() == 2400)
   }
-
-  test("clustered write: files carry disjoint key ranges for skipping") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cluster")
-      .toString + "/t"
-    val li = graft.Tables.lineitem(spark, sf("sf0.001"))
-    graft.operators.LayoutOps.clusteredWrite(li, dir, "l_orderkey", nFiles = 8)
-
-    val back = spark.read.parquet(dir)
-    assert(back.count() == li.count())
-    // per-file [min,max] of the cluster key must be pairwise disjoint —
-    // that's what lets parquet min/max stats prune whole files
-    val ranges = back
-      .groupBy(input_file_name().as("f"))
-      .agg(min("l_orderkey").as("lo"), max("l_orderkey").as("hi"))
-      .collect().map(r => (r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    assert(ranges.length >= 6, s"expected ~8 files, got ${ranges.length}")
-    ranges.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) => assert(hi1 <= lo2, ranges.toSeq)
-      case _ =>
-    }
-  }
 }

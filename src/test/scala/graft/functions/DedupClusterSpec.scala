@@ -32,22 +32,14 @@ class DedupClusterSpec extends SparkSpec {
     assert((1L to n.toLong).forall(canon(_) == 1L), canon)
   }
 
-  test("dropNearDuplicates keeps exactly one row per cluster") {
-    import spark.implicits._
-    val docs = Seq((1L, "a"), (2L, "a'"), (3L, "b"), (4L, "c"), (5L, "c'"))
-      .toDF("doc_id", "text")
-    val pairs = Seq((1L, 2L), (4L, 5L)).toDF("doc_a", "doc_b")
-    val kept = DedupCluster.dropNearDuplicates(docs, pairs)
-    assert(kept.select("doc_id").as[Long].collect().sorted.toSeq ==
-      Seq(1L, 3L, 4L))
-  }
-
   test("end-to-end: minhash pairs → clusters over the documents table") {
     val docs = graft.Tables.documents(spark, sf("sf0.001"))
     val pairs = graft.operators.DedupOps.q42MinHashLsh.fn(spark, sf("sf0.001"))
       .filter(col("est_jaccard") >= 0.5)
       .select("doc_a", "doc_b")
-    val kept = DedupCluster.dropNearDuplicates(docs, pairs)
+    // one canonical doc kept per cluster
+    val kept = DedupCluster.canonicalize(docs.select("doc_id"), pairs)
+      .filter(col("doc_id") === col("canonical_id"))
     val nPairsDocs = pairs.select(col("doc_a").as("d")).union(
       pairs.select(col("doc_b").as("d"))).distinct().count()
     // kept size = total − (paired docs − their cluster count) ≤ total

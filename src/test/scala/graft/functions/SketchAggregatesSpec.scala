@@ -162,6 +162,17 @@ class SketchAggregatesSpec extends SparkSpec {
     }
   }
 
+  test("KLL under k inputs is the exact weighted list") {
+    import spark.implicits._
+    // 3 values fit level 0: (v, 1) per input, sorted by v
+    val items = Seq(3.0, 1.0, 2.0).toDF("x")
+      .agg(SketchAggregates.kllDoubles(col("x"), 8).as("q"))
+      .select(explode(col("q")).as("e"))
+      .select(col("e.v"), col("e.c")).collect()
+      .map(r => (r.getDouble(0), r.getLong(1))).toSeq
+    assert(items == Seq((1.0, 1L), (2.0, 1L), (3.0, 1L)), items)
+  }
+
   test("KLL serialize/deserialize roundtrips the level structure") {
     val kll = SketchAggregates.KllDoubles(
       org.apache.spark.sql.GraftColumnBridge.expression(lit(0.0)), 64)

@@ -181,11 +181,10 @@ class AnalyticsOps7Spec extends SparkSpec {
     // determinism across evaluations (fresh plan, same values)
     val again = df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(again == m)
-    // null propagates, SQL registration works
-    graft.functions.GraftFunctions.register(spark)
-    val viaSql = spark.sql(
-      s"SELECT graft_deflate_ratio(CAST(NULL AS STRING)) AS a, " +
-        s"graft_deflate_ratio('aaaa aaaa aaaa aaaa') AS b").head()
-    assert(viaSql.isNullAt(0) && viaSql.getDouble(1) > 0.0)
+    // null propagates
+    val edge = spark.range(1).select(
+      deflateRatioCol(lit(null).cast("string")).as("a"),
+      deflateRatioCol(lit("aaaa aaaa aaaa aaaa")).as("b")).head()
+    assert(edge.isNullAt(0) && edge.getDouble(1) > 0.0)
   }
 }

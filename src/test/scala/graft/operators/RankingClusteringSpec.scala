@@ -40,6 +40,28 @@ class RankingClusteringSpec extends SparkSpec {
     }
   }
 
+  test("q55 bm25: a NULL-text document counts in n_docs and avgdl, as in the oracle") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-null").toString
+    Seq((1L, Some("spark join spark")), (2L, Some("window a")), (3L, None),
+      (4L, Some("b c d e")))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    // the oracle's g CTE: count(*) counts doc 3, sum(len(...)) skips it
+    val nDocs = 4.0
+    val avgdl = (3 + 2 + 4).toDouble / 4
+    def termScore(tf: Double, df: Double, dl: Double): Long = {
+      val s = StrictMath.log(((nDocs - df) + 0.5) / (df + 0.5) + 1.0) *
+        (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * (dl / avgdl)))
+      math.floor(s * 100000.0 + 0.5).toLong
+    }
+    val expect = Map(
+      1L -> (2L, termScore(2, 1, 3) + termScore(1, 1, 3)), // spark ×2, join
+      2L -> (1L, termScore(1, 1, 2)))                      // window
+    val got = RankingOps.q55Bm25.fn(spark, dir).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    assert(got == expect.map { case (id, (n, fp)) => id -> (n, fp.toDouble / 100000.0) })
+  }
+
   test("q56 kmeans: clusters partition the corpus; centroids are seeds") {
     val out = ClusteringOps.q56Kmeans.fn(spark, d).cache()
     val corpusN = Tables.embeddings(spark, d).count()

@@ -16,8 +16,13 @@ class SimilarityDedupSpec extends SparkSpec {
     val both = e.select(
       VectorExpressions.sqnorm(col("embedding")).as("native"),
       expr("aggregate(transform(emb, x -> x * x), 0D, (a, v) -> a + v)")
-        .as("hof"))
+        .as("hof"),
+      VectorExpressions.dot(col("embedding"), col("embedding")).as("self_dot"),
+      VectorExpressions.cosine(col("embedding"), col("embedding")).as("self_cos"))
     assert(both.filter(abs(col("native") - col("hof")) > 1e-12).count() == 0)
+    // dot(a, a) = sqnorm(a), and a vector's cosine with itself is 1
+    assert(both.filter(abs(col("self_dot") - col("native")) > 1e-12).count() == 0)
+    assert(both.filter(abs(col("self_cos") - 1.0) > 1e-9).count() == 0)
   }
 
   test("brute-force ANN matches a driver-side recomputation") {
