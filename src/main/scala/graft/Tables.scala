@@ -104,6 +104,41 @@ object Tables {
     normalizeTimestamps(spark, path, spark.read.parquet(path))
   }
 
+  /** DuckDB function names the oracle texts call, each bound to the
+    * Spark builtin that computes the same value. Spark's `split` takes
+    * a regex; the texts split on ' ' and '', which read the same as
+    * regexes. */
+  private val duckDbNames = Seq("epoch_us" -> "unix_micros",
+    "unnest" -> "explode", "string_split" -> "split",
+    "quantile_cont" -> "percentile")
+
+  /** Runs a query's SQL text over `sfDir`: every table the parsed text
+    * names (CTE names aside) is bound as a temp view of [[load]], then
+    * `spark.sql` analyzes the text at once, so the returned frame is
+    * pinned to this call's `sfDir`. Like a DataFrame body calling
+    * `load`, it binds on every call: a memo would serve a stale file
+    * listing once a fixture directory is rewritten in place. */
+  def sql(spark: SparkSession, sfDir: String, text: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
+    val registry = spark.sessionState.functionRegistry
+    duckDbNames.foreach { case (duck, builtin) =>
+      val id = FunctionIdentifier(builtin)
+      registry.registerFunction(FunctionIdentifier(duck),
+        registry.lookupFunction(id).get, registry.lookupFunctionBuilder(id).get)
+    }
+    // every node of the parsed text: subquery plans and CTE bodies too
+    def nodes(p: LogicalPlan): Seq[LogicalPlan] =
+      p +: (p.children ++ p.subqueries ++
+        p.innerChildren.collect { case c: LogicalPlan => c }).flatMap(nodes)
+    val parsed = nodes(spark.sessionState.sqlParser.parsePlan(text))
+    val ctes = parsed.collect { case w: UnresolvedWith => w.cteRelations.map(_._1) }.flatten
+    val named = parsed.collect { case r: UnresolvedRelation => r.multipartIdentifier.mkString(".") }
+    (named.toSet -- ctes).foreach(t => load(spark, sfDir, t).createOrReplaceTempView(t))
+    spark.sql(text)
+  }
+
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = load(s, d, "orders")
   def customer(s: SparkSession, d: String): DataFrame = load(s, d, "customer")

@@ -128,7 +128,7 @@ object BusinessOps {
     * size), so the normalizing join is broadcast-scale by
     * construction. p is a single IEEE division of two exact longs —
     * bit-identical across engines. */
-  val q94Transitions: QueryDef = QueryDef.withOracle(
+  val q94Transitions: QueryDef = QueryDef(
     """WITH o AS (
       |  SELECT user_id, event_type AS src,
       |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -139,19 +139,7 @@ object BusinessOps {
       |s AS (SELECT src, CAST(sum(n) AS BIGINT) AS tot FROM t GROUP BY 1)
       |SELECT t.src, t.dst, t.n,
       |  CAST(t.n AS DOUBLE) / CAST(s.tot AS DOUBLE) AS p
-      |FROM t JOIN s USING (src)""".stripMargin
-  ) { (s, d) =>
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val t = Tables.events(s, d)
-      .select(col("user_id"), col("event_type").as("src"),
-        lead(col("event_type"), 1).over(w).as("dst"))
-      .filter(col("dst").isNotNull)
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n"))
-    val tot = t.groupBy(col("src")).agg(sum(col("n")).as("tot"))
-    t.join(broadcast(tot), Seq("src"))
-      .select(col("src"), col("dst"), col("n"),
-        (col("n").cast("double") / col("tot").cast("double")).as("p"))
-  }
+      |FROM t JOIN s USING (src)""".stripMargin)
 
   /** Two-proportion z-test per experiment metric (the A/B-test
     * readout): users split into control/treatment by id parity, a
@@ -168,7 +156,7 @@ object BusinessOps {
     * engines (the q102 convention), so the doubles are bit-identical.
     * Degenerate cells (pooled rate 0 or 1, i.e. se = 0) yield null z
     * rather than ±inf, pinned by the oracle. */
-  val q104AbTest: QueryDef = QueryDef.withOracle(
+  val q104AbTest: QueryDef = QueryDef(
     """WITH c AS (
       |  SELECT event_type,
       |    count(*) FILTER (WHERE user_id % 2 = 0) AS n_a,
@@ -186,29 +174,7 @@ object BusinessOps {
       |        * (1.0 - CAST(x_a + x_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
       |        * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE)))
       |  END AS z
-      |FROM c""".stripMargin
-  ) { (s, d) =>
-    val ctl = col("user_id") % 2 === 0
-    val conv = col("value") > 100
-    val agg = Tables.events(s, d)
-      .groupBy(col("event_type"))
-      .agg(
-        count(when(ctl, 1)).as("n_a"),
-        count(when(ctl && conv, 1)).as("x_a"),
-        count(when(!ctl, 1)).as("n_b"),
-        count(when(!ctl && conv, 1)).as("x_b"))
-    val dbl = (c: Column) => c.cast("double")
-    val pa = dbl(col("x_a")) / dbl(col("n_a"))
-    val pb = dbl(col("x_b")) / dbl(col("n_b"))
-    val pool = dbl(col("x_a") + col("x_b")) / dbl(col("n_a") + col("n_b"))
-    agg.select(col("event_type"), col("n_a"), col("x_a"),
-      col("n_b"), col("x_b"), pa.as("p_a"), pb.as("p_b"),
-      when(col("x_a") + col("x_b") > 0 &&
-           col("x_a") + col("x_b") < col("n_a") + col("n_b"),
-        (pa - pb) / sqrt(pool * (lit(1.0) - pool) *
-          (lit(1.0) / dbl(col("n_a")) + lit(1.0) / dbl(col("n_b")))))
-        .as("z"))
-  }
+      |FROM c""".stripMargin)
 
   /** Growth accounting (the DAU decomposition): every active
     * (user, day) is classified new / retained / resurrected, and a
@@ -691,7 +657,7 @@ object BusinessOps {
     * distinct over (cohort, age, custkey) — Spark plans the standard
     * two-phase distinct aggregate; at 100 TB the key domain is
     * customers, which is exactly what the shuffle already carries. */
-  val q122CohortLtv: QueryDef = QueryDef.withOracle(
+  val q122CohortLtv: QueryDef = QueryDef(
     """WITH o AS (
       |  SELECT o_custkey, o_orderdate, o_totalprice,
       |    min(o_orderdate) OVER (PARTITION BY o_custkey) AS first_dt
@@ -714,34 +680,7 @@ object BusinessOps {
       |  CAST(sum(rev_cents) OVER (PARTITION BY cohort_month
       |    ORDER BY age_months ROWS UNBOUNDED PRECEDING) AS DOUBLE) / 100
       |    AS cum_revenue
-      |FROM roll""".stripMargin
-  ) { (s, d) =>
-    val byCust = Window.partitionBy(col("o_custkey"))
-    val tagged = Tables.orders(s, d)
-      .select(col("o_custkey"), col("o_orderdate"), col("o_totalprice"))
-      .withColumn("first_dt", min(col("o_orderdate")).over(byCust))
-      .select(
-        date_trunc("month", col("first_dt")).as("cohort_month"),
-        ((year(col("o_orderdate")) * 12 + month(col("o_orderdate"))) -
-          (year(col("first_dt")) * 12 + month(col("first_dt"))))
-          .as("age_months"),
-        col("o_custkey"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-    val roll = tagged
-      .groupBy(col("cohort_month"), col("age_months"))
-      .agg(count(lit(1)).as("n_orders"),
-        countDistinct(col("o_custkey")).as("n_active"),
-        sum(col("cents")).as("rev_cents"))
-    // rollup frame is months² / 2 rows — the running sum's window is
-    // metadata-sized by construction
-    val byCohort = Window.partitionBy(col("cohort_month"))
-      .orderBy(col("age_months")).rowsBetween(Window.unboundedPreceding, 0)
-    roll.select(col("cohort_month"), col("age_months"), col("n_orders"),
-      col("n_active"),
-      (col("rev_cents").cast("double") / 100).as("revenue"),
-      (sum(col("rev_cents")).over(byCohort).cast("double") / 100)
-        .as("cum_revenue"))
-  }
+      |FROM roll""".stripMargin)
 
   /** DAU/MAU stickiness — the engagement ratio every growth dashboard
     * leads with: for each calendar day, distinct active users that
@@ -799,7 +738,7 @@ object BusinessOps {
     * ≤ |types|² = 25-key domain; the margin attach is a broadcast of
     * the ≤5-row from-type frame. The probability is one IEEE division
     * of exact int64 counts. */
-  val q155MarkovTransitions: QueryDef = QueryDef.withOracle(
+  val q155MarkovTransitions: QueryDef = QueryDef(
     """WITH o AS (
       |  SELECT user_id, event_type,
       |    lead(event_type) OVER (PARTITION BY user_id
@@ -814,21 +753,7 @@ object BusinessOps {
       |  FROM t GROUP BY 1)
       |SELECT from_type, to_type, n, n_from,
       |  CAST(n AS DOUBLE) / n_from AS p
-      |FROM t JOIN f USING (from_type)""".stripMargin
-  ) { (s, d) =>
-    val o = Tables.events(s, d).select(col("user_id"), col("event_type"),
-      lead(col("event_type"), 1).over(
-        Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))).as("next_type"))
-    val t = o.filter(col("next_type").isNotNull)
-      .groupBy(col("event_type").as("from_type"),
-        col("next_type").as("to_type"))
-      .agg(count(lit(1)).as("n"))
-    val f = t.groupBy(col("from_type")).agg(sum(col("n")).as("n_from"))
-    t.join(broadcast(f), Seq("from_type"))
-      .select(col("from_type"), col("to_type"), col("n"), col("n_from"),
-        (col("n").cast("double") / col("n_from")).as("p"))
-  }
+      |FROM t JOIN f USING (from_type)""".stripMargin)
 
   /** Cohort retention triangle — users grouped by their FIRST active
     * day, counted as retained in each subsequent week-index: the
@@ -1669,7 +1594,7 @@ object BusinessOps {
     * rollup (keyed shuffles on real keys, never a global window) ->
     * a 4-number aggregate. User cardinality scales the shuffle, not
     * any single partition. */
-  val q298UserTypeEntropy: QueryDef = QueryDef.withOracle(
+  val q298UserTypeEntropy: QueryDef = QueryDef(
     """WITH ut AS (
       |  SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS c
       |  FROM events GROUP BY 1, 2),
@@ -1694,30 +1619,7 @@ object BusinessOps {
       |  floor(CAST(sum(CASE WHEN k = 1 THEN 1 ELSE 0 END) AS DOUBLE)
       |    / count(*) * 1000000 + 0.5) / 1000000 AS frac_single_type,
       |  CAST(max(h6) AS DOUBLE) / 1000000 AS max_entropy
-      |FROM uh""".stripMargin
-  ) { (s, d) =>
-    val ut = Tables.events(s, d)
-      .groupBy(col("user_id"), col("event_type"))
-      .agg(count(lit(1)).as("c"))
-    val un = ut.groupBy(col("user_id"))
-      .agg(sum(col("c")).cast("long").as("n"), count(lit(1)).as("k"))
-    val p = col("c").cast("double") / col("n")
-    // per-(user, type) terms quantize to 1e-9 ints BEFORE the sum —
-    // a 5-term double sum is already order-dependent across engines
-    val uh = ut.join(un, Seq("user_id"))
-      .select(col("user_id"), col("k"),
-        floor(p * log(p) * 1000000000L + 0.5).cast("long").as("t9"))
-      .groupBy(col("user_id"), col("k"))
-      .agg(floor((-sum(col("t9"))).cast("double") / 1000 + 0.5)
-        .cast("long").as("h6"))
-    uh.agg(count(lit(1)).as("n_users"),
-      (floor(sum(col("h6")).cast("double") / count(lit(1)) / 1000000L
-        * 1000000L + 0.5) / 1000000L).as("mean_entropy"),
-      (floor(sum(when(col("k") === 1, 1).otherwise(0)).cast("double")
-        / count(lit(1)) * 1000000L + 0.5) / 1000000L)
-        .as("frac_single_type"),
-      (max(col("h6")).cast("double") / 1000000L).as("max_entropy"))
-  }
+      |FROM uh""".stripMargin)
 
   val all: Map[String, QueryDef] = Map(
     "q92_skyline" -> q92Skyline,

@@ -18,43 +18,11 @@ import org.apache.spark.sql.functions._
   */
 object ChangeOps {
 
-  /** Generic snapshot diff on a composite key: classifies every key
-    * as added / removed / changed / unchanged by comparing the given
-    * integer value columns.
-    *
-    * Output is the public contract, no working columns: the keys,
-    * then for each value column `c` its old (a-side) value as `c` and
-    * new (b-side) value as `c_new`, then `status` — so 'added' rows
-    * carry nulls in `c` and the value in `c_new`, 'removed' rows the
-    * reverse. */
-  def tableDiff(a: DataFrame, b: DataFrame, keys: Seq[String],
-      valueCols: Seq[String]): DataFrame = {
-    val aa = a.select((keys ++ valueCols).map(col): _*)
-      .withColumn("__a", lit(1))
-    val bb = b.select((keys ++ valueCols).map(c => col(c).as(s"b_$c")) ++
-      keys.map(col): _*).withColumn("__b", lit(1))
-    // null-SAFE inequality: NULL→5 and 5→NULL are real changes; the
-    // null-unsafe =!= would evaluate to NULL and fall through to
-    // 'unchanged'
-    val changed = valueCols.map(c => !(col(c) <=> col(s"b_$c")))
-      .reduce(_ || _)
-    aa.join(bb, keys, "full")
-      .withColumn("status",
-        when(col("__a").isNull, "added")
-          .when(col("__b").isNull, "removed")
-          .when(changed, "changed")
-          .otherwise("unchanged"))
-      // presence markers and b_ working names stay internal
-      .select(keys.map(col) ++
-        valueCols.flatMap(c => Seq(col(c), col(s"b_$c").as(s"${c}_new"))) :+
-        col("status"): _*)
-  }
-
   /** Snapshot diff between two lineitem states: the later snapshot
     * adds a quarter of shipments, drops heavy lines, and bumps
     * discounted quantities — exercising all four diff classes. The
     * oracle recomputes the FULL JOIN classification independently. */
-  val q78TableDiff: QueryDef = QueryDef.withOracle(
+  val q78TableDiff: QueryDef = QueryDef(
     """WITH base AS (
       |  SELECT l_orderkey, l_linenumber,
       |    CAST(floor(l_quantity + 0.5) AS BIGINT) AS qty,
@@ -77,26 +45,7 @@ object ChangeOps {
       |  count(*) AS n
       |FROM a FULL JOIN b
       |  ON a.l_orderkey = b.l_orderkey AND a.l_linenumber = b.l_linenumber
-      |GROUP BY 1""".stripMargin
-  ) { (s, d) =>
-    val base = Tables.lineitem(s, d).select(
-      col("l_orderkey"), col("l_linenumber"),
-      floor(col("l_quantity") + 0.5).cast("long").as("qty"),
-      floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("price_c"),
-      col("l_shipdate"), col("l_discount"))
-    val a = base
-      .filter(col("l_shipdate") <= lit("1995-06-30 00:00:00").cast("timestamp"))
-      .select("l_orderkey", "l_linenumber", "qty", "price_c")
-    val b = base
-      .filter(col("l_shipdate") <= lit("1995-09-30 00:00:00").cast("timestamp") &&
-        col("qty") <= 45)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        when(col("l_discount") > 0.08, col("qty") + 1).otherwise(col("qty"))
-          .as("qty"),
-        col("price_c"))
-    tableDiff(a, b, Seq("l_orderkey", "l_linenumber"), Seq("qty", "price_c"))
-      .groupBy(col("status")).agg(count(lit(1)).as("n"))
-  }
+      |GROUP BY 1""".stripMargin)
 
   /** MERGE-style upsert by full-outer-join composition (no Delta/
     * Iceberg in scope — this is the plan such engines execute
@@ -172,7 +121,7 @@ object ChangeOps {
     * the whole build is a single shuffle on user_id; timestamps
     * compare as exact epoch-µs integers (the q2b convention), so
     * interval boundaries are deterministic across engines. */
-  val q87Scd2: QueryDef = QueryDef.withOracle(
+  val q87Scd2: QueryDef = QueryDef(
     """WITH flagged AS (
       |  SELECT user_id, event_type, ts, event_id,
       |    CASE WHEN lag(event_type) OVER w IS DISTINCT FROM event_type
@@ -192,28 +141,7 @@ object ChangeOps {
       |  lead(valid_from_us) OVER (PARTITION BY user_id ORDER BY version)
       |    AS valid_to_us,
       |  n_events
-      |FROM g""".stripMargin
-  ) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val run = w.rowsBetween(Window.unboundedPreceding, 0)
-    val chain = Window.partitionBy(col("user_id")).orderBy(col("version"))
-    Tables.events(s, d)
-      // null-safe <=> is IS DISTINCT FROM: the first row's null lag
-      // must open version 1, and a null attribute must not reopen
-      .withColumn("chg", when(
-        !(lag(col("event_type"), 1).over(w) <=> col("event_type")), 1L)
-        .otherwise(0L))
-      .withColumn("version", sum(col("chg")).over(run))
-      .groupBy(col("user_id"), col("version"))
-      .agg(min(col("event_type")).as("event_type"), // constant per island
-        min(unix_micros(col("ts"))).as("valid_from_us"),
-        count(lit(1)).as("n_events"))
-      .select(col("user_id"), col("version"), col("event_type"),
-        col("valid_from_us"),
-        lead(col("valid_from_us"), 1).over(chain).as("valid_to_us"),
-        col("n_events"))
-  }
+      |FROM g""".stripMargin)
 
   /** Point-in-time (temporal / "AS OF") lookup against a versioned
     * dimension: each purchase is enriched with the user's loyalty

@@ -326,7 +326,7 @@ object CurationOps {
     * distinct, DuckDB ROW distinct), so two (1, NULL) rows are
     * duplicates. Violation counts are exact integers, so the suite
     * sits under the hash gate directly. */
-  val q88Expectations: QueryDef = QueryDef.withOracle(
+  val q88Expectations: QueryDef = QueryDef(
     """WITH a AS (
       |  SELECT count(*) AS n,
       |    CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END)
@@ -348,36 +348,7 @@ object CurationOps {
       |  UNION ALL SELECT 'uniqueness_order_line', CAST(key_dups AS BIGINT) FROM a
       |  UNION ALL SELECT 'referential_orderkey', CAST(orphans AS BIGINT) FROM o)
       |SELECT check_name, violations, violations = 0 AS passed
-      |FROM checks""".stripMargin
-  ) { (s, d) =>
-    expectationReport(Tables.lineitem(s, d), Tables.orders(s, d))
-  }
-
-  /** The q88 suite as a reusable function of its two input frames —
-    * see [[q88Expectations]] for the contract. */
-  def expectationReport(li: DataFrame, orders: DataFrame): DataFrame = {
-    val fused = li.agg(
-      count(lit(1)).as("n"),
-      sum(when(col("l_quantity").isNull, 1L).otherwise(0L)).as("qty_nulls"),
-      sum(when(col("l_discount") < 0 || col("l_discount") > 0.1, 1L)
-        .otherwise(0L)).as("disc_range"),
-      (count(lit(1)) -
-        countDistinct(struct(col("l_orderkey"), col("l_linenumber"))))
-        .as("key_dups"))
-    val orphans = li
-      .join(orders.select(col("o_orderkey")),
-        col("l_orderkey") === col("o_orderkey"), "left_anti")
-      .agg(count(lit(1)).as("orphans"))
-    def row(from: DataFrame, name: String, violations: Column) =
-      from.select(lit(name).as("check_name"),
-        violations.cast("long").as("violations"))
-    row(fused, "nonempty", when(col("n") > 0, 0L).otherwise(1L))
-      .unionAll(row(fused, "completeness_l_quantity", col("qty_nulls")))
-      .unionAll(row(fused, "range_l_discount", col("disc_range")))
-      .unionAll(row(fused, "uniqueness_order_line", col("key_dups")))
-      .unionAll(row(orphans, "referential_orderkey", col("orphans")))
-      .withColumn("passed", col("violations") === 0L)
-  }
+      |FROM checks""".stripMargin)
 
   /** Weighted systematic sampling without replacement: exactly k rows
     * drawn with probability proportional to an integer weight, as one
@@ -794,7 +765,7 @@ object CurationOps {
     * table name, and 100× growth moves tables across it). Counts are
     * partial+final aggregates; the report is 8 one-row frames
     * unioned. */
-  val q181FkIntegrity: QueryDef = QueryDef.withOracle {
+  val q181FkIntegrity: QueryDef = QueryDef {
     def blk(name: String, child: String, ckey: String, parent: String,
         pkey: String) =
       // NOT EXISTS, not NOT IN: a NULL parent key would turn NOT IN
@@ -830,41 +801,6 @@ object CurationOps {
       blk("embeddings.vec_id->documents", "embeddings", "vec_id",
         "documents", "doc_id")
     ).mkString("\nUNION ALL\n")
-  } { (s, d) =>
-    def fk(name: String, child: DataFrame, ckey: String,
-        parent: DataFrame, pkey: String): DataFrame = {
-      val c = child.select(col(ckey).as("k"))
-      val p = parent.select(col(pkey).as("k"))
-      val stats = c.agg(count(lit(1)).as("n_child"),
-        sum(when(col("k").isNull, 1L).otherwise(0L)).as("n_null"))
-      val orph = c.filter(col("k").isNotNull)
-        .join(p, Seq("k"), "leftanti")
-        .agg(count(lit(1)).as("n_orphans"))
-      stats.crossJoin(broadcast(orph))
-        .select(lit(name).as("fk_name"), col("n_child"), col("n_null"),
-          col("n_orphans"),
-          (floor((col("n_orphans").cast("double") / col("n_child"))
-            * 1000000 + 0.5) / 1000000).as("orphan_share"))
-    }
-    def t(n: String) = Tables.load(s, d, n)
-    Seq(
-      fk("lineitem.l_orderkey->orders", t("lineitem"), "l_orderkey",
-        t("orders"), "o_orderkey"),
-      fk("lineitem.l_partkey->part", t("lineitem"), "l_partkey",
-        t("part"), "p_partkey"),
-      fk("lineitem.l_suppkey->supplier", t("lineitem"), "l_suppkey",
-        t("supplier"), "s_suppkey"),
-      fk("orders.o_custkey->customer", t("orders"), "o_custkey",
-        t("customer"), "c_custkey"),
-      fk("customer.c_nationkey->nation", t("customer"), "c_nationkey",
-        t("nation"), "n_nationkey"),
-      fk("supplier.s_nationkey->nation", t("supplier"), "s_nationkey",
-        t("nation"), "n_nationkey"),
-      fk("nation.n_regionkey->region", t("nation"), "n_regionkey",
-        t("region"), "r_regionkey"),
-      fk("embeddings.vec_id->documents", t("embeddings"), "vec_id",
-        t("documents"), "doc_id")
-    ).reduce(_ unionByName _)
   }
 
   /** l-diversity audit — q178's second privacy lens: k-anonymity only

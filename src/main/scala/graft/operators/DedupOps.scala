@@ -46,17 +46,11 @@ object DedupOps {
     * content, with duplicate count and canonical (min) doc_id. The
     * 100 TB pattern: hash is computed map-side, the shuffle is on the
     * 16-byte digest, groups are tiny. */
-  val q40DedupExact: QueryDef = QueryDef.withOracle(
+  val q40DedupExact: QueryDef = QueryDef(
     """SELECT md5(text) AS content_hash,
       |  count(*) AS n_copies,
       |  CAST(min(doc_id) AS BIGINT) AS canonical_doc
-      |FROM documents GROUP BY 1""".stripMargin
-  ) { (s, d) =>
-    Tables.documents(s, d)
-      .groupBy(md5(col("text")).as("content_hash"))
-      .agg(count(lit(1)).as("n_copies"),
-        min(col("doc_id")).cast("long").as("canonical_doc"))
-  }
+      |FROM documents GROUP BY 1""".stripMargin)
 
   /** Default upper document-frequency cap for shingles in the n-gram
     * Jaccard join. A shingle appearing in D docs contributes D² rows

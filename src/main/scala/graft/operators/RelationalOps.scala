@@ -36,7 +36,7 @@ object RelationalOps {
 
   /** A1/A2 rollup shape (silver_to_gold.py:95-122): group keys →
     * {sum,mean,max,count} with round-inside-agg, TPC-H Q1 style. */
-  val q1AggRollup: QueryDef = QueryDef.withOracle(
+  val q1AggRollup: QueryDef = QueryDef(
     """SELECT l_returnflag, l_linestatus,
       |  round(sum(l_quantity), 3) AS sum_qty,
       |  round(sum(l_extendedprice), 3) AS sum_base_price,
@@ -49,22 +49,7 @@ object RelationalOps {
       |  count(*) AS count_order
       |FROM lineitem
       |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-      |GROUP BY l_returnflag, l_linestatus""".stripMargin
-  ) { (s, d) =>
-    Tables.lineitem(s, d)
-      .filter(col("l_shipdate") <= lit("1998-09-02 00:00:00").cast("timestamp"))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        round(sum(col("l_quantity")), 3).as("sum_qty"),
-        round(sum(col("l_extendedprice")), 3).as("sum_base_price"),
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 3).as("sum_disc_price"),
-        round(avg(col("l_quantity")), 3).as("avg_qty"),
-        round(avg(col("l_extendedprice")), 3).as("avg_price"),
-        round(avg(col("l_discount")), 4).as("avg_disc"),
-        round(max(col("l_extendedprice")), 3).as("max_price"),
-        round(min(col("l_extendedprice")), 3).as("min_price"),
-        count(lit(1)).as("count_order"))
-  }
+      |GROUP BY l_returnflag, l_linestatus""".stripMargin)
 
   /** F6/F10 range predicates + manual projection (bronze_to_silver.py:
     * 138-144,186): both reach the parquet scan as PushedFilters +
@@ -104,7 +89,7 @@ object RelationalOps {
 
   /** Inner equi-join chain with broadcast dims: revenue per nation.
     * (SURVEY §2.3: standard inner equi-join surface.) */
-  val q4JoinMulti: QueryDef = QueryDef.withOracle(
+  val q4JoinMulti: QueryDef = QueryDef(
     """SELECT n_name,
       |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
       |  count(*) AS n_lines
@@ -112,22 +97,13 @@ object RelationalOps {
       |JOIN orders ON l_orderkey = o_orderkey
       |JOIN customer ON o_custkey = c_custkey
       |JOIN nation ON c_nationkey = n_nationkey
-      |GROUP BY n_name""".stripMargin
-  ) { (s, d) =>
-    Tables.lineitem(s, d)
-      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(Tables.customer(s, d)), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
-        count(lit(1)).as("n_lines"))
-  }
+      |GROUP BY n_name""".stripMargin)
 
   /** W1/W2/W3 rolling 60-row window per key ordered by time
     * (bronze_to_silver.py:246-268): rolling mean + rolling sum with
     * min_periods=1 ≡ rowsBetween(-59, 0). event_id breaks ts ties so
     * both engines see one deterministic order. */
-  val q5WindowRolling: QueryDef = QueryDef.withOracle(
+  val q5WindowRolling: QueryDef = QueryDef(
     // Exactness contract: window-sliding float sums are NOT
     // order-deterministic across engines (DuckDB aggregates frames via
     // a segment tree; Spark sums sequentially), so any float rounding
@@ -142,20 +118,7 @@ object RelationalOps {
       |  count(*) OVER w AS window_n
       |FROM events
       |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-      |             ROWS BETWEEN 59 PRECEDING AND CURRENT ROW)""".stripMargin
-  ) { (s, d) =>
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id")).rowsBetween(-59, 0)
-    val sumCents = sum(floor(col("value") * 100 + 0.5).cast("long")).over(w)
-    val n = count(lit(1)).over(w)
-    Tables.events(s, d).select(
-      col("event_id"), col("user_id"),
-      (floor((sumCents.cast("double") / (n * 100.0)) * 1000 + 0.5) / 1000)
-        .as("value_60_avg"),
-      sum(when(col("event_type") === "error", 1L).otherwise(0L)).over(w)
-        .as("error_60_sum"),
-      n.as("window_n"))
-  }
+      |             ROWS BETWEEN 59 PRECEDING AND CURRENT ROW)""".stripMargin)
 
   /** W4 latest-row pick (dashboard/app.py:334) via row_number. */
   val q6WindowLatest: QueryDef = QueryDef.withOracle(
@@ -175,17 +138,11 @@ object RelationalOps {
 
   /** O2 top-k (dashboard/app.py:567,618): orderBy desc + limit —
     * Spark plans TakeOrderedAndProject (no global sort). */
-  val q7TopK: QueryDef = QueryDef.withOracle(
+  val q7TopK: QueryDef = QueryDef(
     """SELECT o_orderkey, o_custkey, o_totalprice
       |FROM orders
       |ORDER BY o_totalprice DESC, o_orderkey
-      |LIMIT 100""".stripMargin
-  ) { (s, d) =>
-    Tables.orders(s, d)
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      .select("o_orderkey", "o_custkey", "o_totalprice")
-      .limit(100)
-  }
+      |LIMIT 100""".stripMargin)
 
   /** A5 distinct aggregates (silver_to_gold.py:217-226): per-month
     * countDistinct — exact, like the reference's nunique. */
@@ -207,106 +164,57 @@ object RelationalOps {
 
   /** U1/U2 union all + dedup (dashboard/app.py:236-244): two
     * overlapping extracts, unioned, deduplicated on the key. */
-  val q9UnionDedup: QueryDef = QueryDef.withOracle(
+  val q9UnionDedup: QueryDef = QueryDef(
     """SELECT l_orderkey, l_partkey FROM lineitem WHERE l_quantity > 45
       |UNION
-      |SELECT l_orderkey, l_partkey FROM lineitem WHERE l_extendedprice > 90000""".stripMargin
-  ) { (s, d) =>
-    val li = Tables.lineitem(s, d)
-    val a = li.filter(col("l_quantity") > 45).select("l_orderkey", "l_partkey")
-    val b = li.filter(col("l_extendedprice") > 90000).select("l_orderkey", "l_partkey")
-    a.union(b).dropDuplicates("l_orderkey", "l_partkey")
-  }
+      |SELECT l_orderkey, l_partkey FROM lineitem WHERE l_extendedprice > 90000""".stripMargin)
 
   /** F11 + np.where conditional classification (silver_to_gold.py:
     * 114-118): when/otherwise chain + rollup. */
-  val q10CaseWhen: QueryDef = QueryDef.withOracle(
+  val q10CaseWhen: QueryDef = QueryDef(
     """SELECT CASE WHEN l_quantity < 10 THEN 'low'
       |            WHEN l_quantity < 40 THEN 'mid'
       |            ELSE 'high' END AS qty_class,
       |  count(*) AS n,
       |  round(avg(l_extendedprice), 3) AS avg_price
-      |FROM lineitem GROUP BY 1""".stripMargin
-  ) { (s, d) =>
-    Tables.lineitem(s, d)
-      .groupBy(when(col("l_quantity") < 10, "low")
-        .when(col("l_quantity") < 40, "mid")
-        .otherwise("high").as("qty_class"))
-      .agg(count(lit(1)).as("n"),
-        round(avg(col("l_extendedprice")), 3).as("avg_price"))
-  }
+      |FROM lineitem GROUP BY 1""".stripMargin)
 
   /** J2 scalar broadcast (silver_to_gold.py:244-258): global aggregate
-    * attached to every group row via crossJoin(agg) — a 1-row
-    * broadcast nested-loop join, exactly Spark's plan for it. */
-  val q11ScalarBroadcast: QueryDef = QueryDef.withOracle(
+    * attached to every group row as a scalar subquery, which Spark
+    * evaluates once. */
+  val q11ScalarBroadcast: QueryDef = QueryDef(
     """SELECT l_returnflag,
       |  round(avg(l_extendedprice) - (SELECT avg(l_extendedprice) FROM lineitem), 3)
       |    AS deviation_from_global
-      |FROM lineitem GROUP BY l_returnflag""".stripMargin
-  ) { (s, d) =>
-    val li = Tables.lineitem(s, d)
-    val global = li.agg(avg(col("l_extendedprice")).as("global_avg"))
-    li.groupBy(col("l_returnflag"))
-      .agg(avg(col("l_extendedprice")).as("flag_avg"))
-      .crossJoin(broadcast(global))
-      .select(col("l_returnflag"),
-        round(col("flag_avg") - col("global_avg"), 3).as("deviation_from_global"))
-  }
+      |FROM lineitem GROUP BY l_returnflag""".stripMargin)
 
   /** A8 KPI scalars (dashboard/app.py:277-357): one-row summary —
     * sums + exact distinct counts over a time-filtered fact. */
-  val q12KpiScalars: QueryDef = QueryDef.withOracle(
+  val q12KpiScalars: QueryDef = QueryDef(
     """SELECT CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0
       |    AS total_value,
       |  count(DISTINCT user_id) AS active_users,
       |  count(*) AS n_events
-      |FROM events WHERE ts >= TIMESTAMP '2024-01-08 00:00:00'""".stripMargin
-  ) { (s, d) =>
-    // 2-dp values summed as exact integer cents: order-independent,
-    // identical in both engines at any SF
-    Tables.events(s, d)
-      .filter(col("ts") >= lit("2024-01-08 00:00:00").cast("timestamp"))
-      .agg((sum(floor(col("value") * 100 + 0.5).cast("long")).cast("double")
-        / 100.0).as("total_value"),
-        countDistinct(col("user_id")).as("active_users"),
-        count(lit(1)).as("n_events"))
-  }
+      |FROM events WHERE ts >= TIMESTAMP '2024-01-08 00:00:00'""".stripMargin)
 
   /** §2.8 date/time scalars: extract parts, group rollup
     * (ingest_bronze.py:126-136, silver_to_gold.py:92). */
-  val q13DateScalars: QueryDef = QueryDef.withOracle(
+  val q13DateScalars: QueryDef = QueryDef(
     """SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
       |  CAST(month(o_orderdate) AS BIGINT) AS mo,
       |  count(*) AS n,
       |  CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0
       |    AS total
-      |FROM orders GROUP BY 1, 2""".stripMargin
-  ) { (s, d) =>
-    Tables.orders(s, d)
-      .groupBy(year(col("o_orderdate")).cast("long").as("yr"),
-        month(col("o_orderdate")).cast("long").as("mo"))
-      .agg(count(lit(1)).as("n"),
-        (sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
-          .cast("double") / 100.0).as("total"))
-  }
+      |FROM orders GROUP BY 1, 2""".stripMargin)
 
   /** §2.8 string scalars: upper/length/substring/concat. */
-  val q14StringFuncs: QueryDef = QueryDef.withOracle(
+  val q14StringFuncs: QueryDef = QueryDef(
     """SELECT p_partkey,
       |  upper(p_brand) AS brand_u,
       |  CAST(length(p_name) AS BIGINT) AS name_len,
       |  substr(p_type, 1, 5) AS type5,
       |  p_brand || '/' || p_type AS brand_type
-      |FROM part""".stripMargin
-  ) { (s, d) =>
-    Tables.part(s, d).select(
-      col("p_partkey"),
-      upper(col("p_brand")).as("brand_u"),
-      length(col("p_name")).cast("long").as("name_len"),
-      substring(col("p_type"), 1, 5).as("type5"),
-      concat_ws("/", col("p_brand"), col("p_type")).as("brand_type"))
-  }
+      |FROM part""".stripMargin)
 
   /** §2.8 JSON path extraction (ingest_bronze.py:52 json.loads ≈
     * from_json/get_json_object). */
@@ -343,51 +251,35 @@ object RelationalOps {
 
   /** A4 health-score formula shape (silver_to_gold.py:153-199):
     * weighted means, least/greatest clamps, guarded division. */
-  val q17HealthFormula: QueryDef = QueryDef.withOracle(
+  val q17HealthFormula: QueryDef = QueryDef(
     """SELECT user_id,
       |  count(*) AS n_events,
       |  floor(least(1.0,
-      |    0.4 * (1 - avg(CASE WHEN event_type = 'error' THEN 1.0 ELSE 0.0 END))
-      |    + 0.3 * avg(CASE WHEN event_type = 'purchase' THEN 1.0 ELSE 0.0 END)
+      |    0.4 * (1 - avg(CASE WHEN event_type = 'error'
+      |      THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END))
+      |    + 0.3 * avg(CASE WHEN event_type = 'purchase'
+      |      THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)
       |    + 0.3 * least(count(*) / 1000.0, 1.0)) * 1000 + 0.5) / 1000
       |    AS health_score,
       |  floor(least(1.0,
       |    (1 - least(1.0,
-      |      0.4 * (1 - avg(CASE WHEN event_type = 'error' THEN 1.0 ELSE 0.0 END))
-      |      + 0.3 * avg(CASE WHEN event_type = 'purchase' THEN 1.0 ELSE 0.0 END)
+      |      0.4 * (1 - avg(CASE WHEN event_type = 'error'
+      |        THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END))
+      |      + 0.3 * avg(CASE WHEN event_type = 'purchase'
+      |        THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)
       |      + 0.3 * least(count(*) / 1000.0, 1.0))) * 0.7
-      |    + avg(CASE WHEN event_type = 'error' THEN 1.0 ELSE 0.0 END) * 0.3)
+      |    + avg(CASE WHEN event_type = 'error'
+      |      THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END) * 0.3)
       |    * 1000 + 0.5) / 1000 AS failure_probability
-      |FROM events GROUP BY user_id""".stripMargin
-  ) { (s, d) =>
-    val errRate = avg(when(col("event_type") === "error", 1.0).otherwise(0.0))
-    val purRate = avg(when(col("event_type") === "purchase", 1.0).otherwise(0.0))
-    val health = least(lit(1.0),
-      lit(0.4) * (lit(1) - errRate) + lit(0.3) * purRate +
-        lit(0.3) * least(count(lit(1)) / 1000.0, lit(1.0)))
-    // floor-rounding: the formula inputs are integer ratios, so both
-    // engines hold identical doubles — floor(x*k+0.5)/k can't diverge
-    // at half-boundaries the way round() does
-    Tables.events(s, d).groupBy(col("user_id")).agg(
-      count(lit(1)).as("n_events"),
-      (floor(health * 1000 + 0.5) / 1000).as("health_score"),
-      (floor(least(lit(1.0), (lit(1) - health) * 0.7 + errRate * 0.3) * 1000
-        + 0.5) / 1000).as("failure_probability"))
-  }
+      |FROM events GROUP BY user_id""".stripMargin)
 
   /** Anti join (NOT EXISTS): rich customers with no 1995 orders —
     * filtered on both sides so the result is non-empty at every SF. */
-  val q18AntiJoin: QueryDef = QueryDef.withOracle(
+  val q18AntiJoin: QueryDef = QueryDef(
     """SELECT c_custkey, c_name FROM customer
       |WHERE c_acctbal > 9000 AND NOT EXISTS
       |  (SELECT 1 FROM orders
-      |   WHERE o_custkey = c_custkey AND year(o_orderdate) = 1995)""".stripMargin
-  ) { (s, d) =>
-    val c = Tables.customer(s, d).filter(col("c_acctbal") > 9000)
-    val o = Tables.orders(s, d).filter(year(col("o_orderdate")) === 1995)
-    c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-      .select("c_custkey", "c_name")
-  }
+      |   WHERE o_custkey = c_custkey AND year(o_orderdate) = 1995)""".stripMargin)
 
   /** Semi join: nations having customers with acctbal > 9000 (EXISTS),
     * counted per region via broadcast dim join. */
@@ -408,11 +300,8 @@ object RelationalOps {
 
   /** F3 dedup-on-key (bronze_to_silver.py:125) as DISTINCT over a
     * projection — set semantics, survivor-independent. */
-  val q20Dedup: QueryDef = QueryDef.withOracle(
-    "SELECT DISTINCT user_id, event_type FROM events"
-  ) { (s, d) =>
-    Tables.events(s, d).select("user_id", "event_type").dropDuplicates()
-  }
+  val q20Dedup: QueryDef = QueryDef(
+    "SELECT DISTINCT user_id, event_type FROM events")
 
   /** A1+A2 daily rollup + derived cost columns (silver_to_gold.py:
     * 95-122): date-keyed rollup, cost estimate at 0.12/kUnit, guarded
@@ -422,7 +311,7 @@ object RelationalOps {
     * (order-independent, engine-identical); quantities are integral
     * doubles (exact sums). Derived ratios then floor-round identical
     * doubles in both engines — no half-boundary divergence at any SF. */
-  val q21DailyRollup: QueryDef = QueryDef.withOracle(
+  val q21DailyRollup: QueryDef = QueryDef(
     """SELECT CAST(l_shipdate AS DATE) AS ship_date,
       |  CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS DOUBLE)
       |    / 100.0 AS gross,
@@ -434,62 +323,35 @@ object RelationalOps {
       |       THEN floor((CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS DOUBLE)
       |            / 100.0) / sum(l_quantity) * 1000 + 0.5) / 1000
       |       ELSE 0.0 END AS avg_price_per_unit
-      |FROM lineitem GROUP BY 1""".stripMargin
-  ) { (s, d) =>
-    val cents = sum(floor(col("l_extendedprice") * 100 + 0.5).cast("long"))
-    Tables.lineitem(s, d)
-      .groupBy(to_date(col("l_shipdate")).as("ship_date"))
-      .agg((cents.cast("double") / 100.0).as("gross"),
-        sum(col("l_quantity")).as("qty"),
-        count(lit(1)).as("n_lines"))
-      .withColumn("cost_estimate",
-        floor(col("gross") / 1000 * 0.12 * 100 + 0.5) / 100)
-      .withColumn("avg_price_per_unit",
-        when(col("qty") > 0,
-          floor(col("gross") / col("qty") * 1000 + 0.5) / 1000).otherwise(0.0))
-  }
+      |FROM lineitem GROUP BY 1""".stripMargin)
 
   /** ST5 daily tumbling window ≡ group-by event date + type
     * (silver_to_gold.py:92; window($"ts","1 day") equivalence). */
-  val q22DailyEvents: QueryDef = QueryDef.withOracle(
+  val q22DailyEvents: QueryDef = QueryDef(
     """SELECT CAST(date_trunc('day', ts) AS DATE) AS day, event_type,
       |  count(*) AS n,
       |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0
       |    AS total_value
-      |FROM events GROUP BY 1, 2""".stripMargin
-  ) { (s, d) =>
-    Tables.events(s, d)
-      .groupBy(to_date(date_trunc("day", col("ts"))).as("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        (sum(floor(col("value") * 100 + 0.5).cast("long")).cast("double")
-          / 100.0).as("total_value"))
-  }
+      |FROM events GROUP BY 1, 2""".stripMargin)
 
   /** A7 chart group-by + bool-fraction mean (app.py:365-367; is_valid
     * mean semantics — mean of a boolean = fraction true). */
-  val q23BoolFraction: QueryDef = QueryDef.withOracle(
+  val q23BoolFraction: QueryDef = QueryDef(
     """SELECT l_returnflag,
-      |  floor(avg(CASE WHEN l_discount > 0.05 THEN 1.0 ELSE 0.0 END)
+      |  floor(avg(CASE WHEN l_discount > 0.05
+      |    THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)
       |    * 10000 + 0.5) / 10000 AS frac_discounted,
-      |  floor(avg(CASE WHEN l_tax > 0.04 THEN 1.0 ELSE 0.0 END)
+      |  floor(avg(CASE WHEN l_tax > 0.04
+      |    THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END)
       |    * 10000 + 0.5) / 10000 AS frac_taxed
-      |FROM lineitem GROUP BY l_returnflag""".stripMargin
-  ) { (s, d) =>
-    // integer-ratio means → identical doubles in both engines →
-    // floor-rounding is boundary-safe (round() is not)
-    Tables.lineitem(s, d).groupBy(col("l_returnflag")).agg(
-      (floor(avg(when(col("l_discount") > 0.05, 1.0).otherwise(0.0)) * 10000
-        + 0.5) / 10000).as("frac_discounted"),
-      (floor(avg(when(col("l_tax") > 0.04, 1.0).otherwise(0.0)) * 10000
-        + 0.5) / 10000).as("frac_taxed"))
-  }
+      |FROM lineitem GROUP BY l_returnflag""".stripMargin)
 
   // ---- engine completeness ----
 
-  /** Click→purchase interval-join oracle, shared by q2j (the bucketed
-    * batch composition) and q83 (the stream-stream operator run in
-    * batch mode) — one SQL text so the two gates can never silently
-    * diverge about the join semantics. */
+  /** Click→purchase interval-join oracle, shared by q2j (the SQL
+    * form) and q83 (the stream-stream operator run in batch mode) —
+    * one SQL text so the two gates can never silently diverge about
+    * the join semantics. */
   private val intervalJoinOracleSql: String =
     """WITH c AS (
       |  SELECT user_id, event_id AS click_id, CAST(epoch_us(ts) AS BIGINT) AS a_us
@@ -503,19 +365,12 @@ object RelationalOps {
 
   /** lead/lag offsets per key — inter-event deltas. 2-dp values make
     * the delta exact double arithmetic in both engines. */
-  val q24LagLead: QueryDef = QueryDef.withOracle(
+  val q24LagLead: QueryDef = QueryDef(
     """SELECT event_id, user_id,
       |  value - lag(value) OVER w AS delta_prev,
       |  lead(event_type) OVER w AS next_type
       |FROM events
-      |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin
-  ) { (s, d) =>
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    Tables.events(s, d).select(
-      col("event_id"), col("user_id"),
-      (col("value") - lag(col("value"), 1).over(w)).as("delta_prev"),
-      lead(col("event_type"), 1).over(w).as("next_type"))
-  }
+      |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)""".stripMargin)
 
   /** rank with real ties (no id tiebreak): rank ≤ 3 per month selects
     * the same tied set in both engines by definition. */
@@ -536,29 +391,18 @@ object RelationalOps {
 
   /** INTERSECT (set semantics): suppliers of heavy lines ∩ suppliers
     * with positive balance. */
-  val q26Intersect: QueryDef = QueryDef.withOracle(
+  val q26Intersect: QueryDef = QueryDef(
     """SELECT l_suppkey AS suppkey FROM lineitem WHERE l_quantity > 45
       |INTERSECT
-      |SELECT s_suppkey AS suppkey FROM supplier WHERE s_acctbal > 0""".stripMargin
-  ) { (s, d) =>
-    Tables.lineitem(s, d).filter(col("l_quantity") > 45)
-      .select(col("l_suppkey").as("suppkey"))
-      .intersect(Tables.supplier(s, d).filter(col("s_acctbal") > 0)
-        .select(col("s_suppkey").as("suppkey")))
-  }
+      |SELECT s_suppkey AS suppkey FROM supplier WHERE s_acctbal > 0""".stripMargin)
 
   /** EXCEPT (set semantics): building-segment customers minus those
     * in arrears (non-empty at every SF — the synthetic data covers
     * every natural key domain, so key-level differences are empty). */
-  val q27Except: QueryDef = QueryDef.withOracle(
+  val q27Except: QueryDef = QueryDef(
     """SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
       |EXCEPT
-      |SELECT c_custkey FROM customer WHERE c_acctbal < 0""".stripMargin
-  ) { (s, d) =>
-    val c = Tables.customer(s, d)
-    c.filter(col("c_mktsegment") === "BUILDING").select("c_custkey")
-      .except(c.filter(col("c_acctbal") < 0).select("c_custkey"))
-  }
+      |SELECT c_custkey FROM customer WHERE c_acctbal < 0""".stripMargin)
 
   /** Regexp scalars: extract/replace/match over part names. */
   val q28Regexp: QueryDef = QueryDef.withOracle(
@@ -626,7 +470,7 @@ object RelationalOps {
     * gap flag, running sum for the session index, then a per-session
     * rollup. Timestamps compare as exact epoch integers, so the
     * session boundaries are deterministic across engines. */
-  val q2bSessionize: QueryDef = QueryDef.withOracle(
+  val q2bSessionize: QueryDef = QueryDef(
     """WITH flagged AS (
       |  SELECT user_id, ts, event_id, value,
       |    CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
@@ -642,25 +486,7 @@ object RelationalOps {
       |  CAST(max(epoch_us(ts)) - min(epoch_us(ts)) AS BIGINT) AS duration_us,
       |  CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0
       |    AS session_value
-      |FROM sessions GROUP BY user_id, session_idx""".stripMargin
-  ) { (s, d) =>
-    // epoch MICROSECONDS on both sides: DuckDB's epoch() returns
-    // fractional seconds while Spark's unix_timestamp truncates —
-    // integer µs compare identically
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val run = w.rowsBetween(Window.unboundedPreceding, 0)
-    Tables.events(s, d)
-      .withColumn("new_session",
-        when(unix_micros(col("ts")) - unix_micros(lag(col("ts"), 1).over(w))
-          > 1800000000L || lag(col("ts"), 1).over(w).isNull, 1L).otherwise(0L))
-      .withColumn("session_idx", sum(col("new_session")).over(run))
-      .groupBy(col("user_id"), col("session_idx"))
-      .agg(count(lit(1)).as("n_events"),
-        (max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))))
-          .as("duration_us"),
-        (sum(floor(col("value") * 100 + 0.5).cast("long")).cast("double")
-          / 100.0).as("session_value"))
-  }
+      |FROM sessions GROUP BY user_id, session_idx""".stripMargin)
 
   /** Spark's NATIVE session windows (`session_window`) over the
     * events stream, batch mode: per user, events closer than the
@@ -767,7 +593,7 @@ object RelationalOps {
     * partial+final aggregate for the stats, then the stats table
     * re-joins the scan keyed by user_id — AQE broadcasts it when
     * users ≪ events. */
-  val q2lAnomaly: QueryDef = QueryDef.withOracle(
+  val q2lAnomaly: QueryDef = QueryDef(
     """WITH e AS (
       |  SELECT user_id, event_id, value,
       |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
@@ -785,42 +611,19 @@ object RelationalOps {
       |  WHERE n >= 2 AND n * s2 - s1 * s1 > 0)
       |SELECT user_id, event_id, value,
       |  floor(zval * 10000 + 0.5) / 10000 AS z
-      |FROM z WHERE abs(zval) > 3""".stripMargin
-  ) { (s, d) =>
-    val e = Tables.events(s, d).select(col("user_id"), col("event_id"),
-      col("value"), floor(col("value") * 100 + 0.5).cast("long").as("c"))
-    val st = e.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), sum(col("c")).as("s1"),
-        sum(col("c") * col("c")).as("s2"))
-    val zval = (col("c") * col("n") - col("s1")).cast("double") / col("n") /
-      sqrt((col("n") * col("s2") - col("s1") * col("s1")).cast("double") /
-        (col("n") * (col("n") - 1)).cast("double"))
-    e.join(st, Seq("user_id"))
-      .filter(col("n") >= 2 && col("n") * col("s2") - col("s1") * col("s1") > 0)
-      .withColumn("zval", zval)
-      .filter(abs(col("zval")) > 3)
-      .select(col("user_id"), col("event_id"), col("value"),
-        (floor(col("zval") * 10000 + 0.5) / 10000).as("z"))
-  }
+      |FROM z WHERE abs(zval) > 3""".stripMargin)
 
   /** ROLLUP grouping sets: per (flag, status), per flag subtotals, and
     * the grand total in one pass (absent from the reference; standard
     * engine surface). Cents-exact sums keep subtotal rows
     * engine-identical. */
-  val q2cRollup: QueryDef = QueryDef.withOracle(
+  val q2cRollup: QueryDef = QueryDef(
     """SELECT l_returnflag, l_linestatus,
       |  count(*) AS n,
       |  CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0
       |    AS total_price
       |FROM lineitem
-      |GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin
-  ) { (s, d) =>
-    Tables.lineitem(s, d)
-      .rollup(col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("n"),
-        (sum(floor(col("l_extendedprice") * 100 + 0.5).cast("long"))
-          .cast("double") / 100.0).as("total_price"))
-  }
+      |GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin)
 
   /** Time-RANGE window: sum/count over the preceding hour by event
     * TIME (not row count) — the semantics the reference's "_1h_"
@@ -850,20 +653,13 @@ object RelationalOps {
     * Quartiles of INTEGER quantities interpolate with binary-exact
     * fractions (0.25/0.5/0.75), so results are engine-identical;
     * float-valued quantiles would need the approx variant. */
-  val q2eQuantiles: QueryDef = QueryDef.withOracle(
+  val q2eQuantiles: QueryDef = QueryDef(
     """SELECT l_returnflag,
       |  quantile_cont(l_quantity, 0.25) AS qty_p25,
       |  quantile_cont(l_quantity, 0.5) AS qty_median,
       |  quantile_cont(l_quantity, 0.75) AS qty_p75,
       |  count(*) AS n
-      |FROM lineitem GROUP BY l_returnflag""".stripMargin
-  ) { (s, d) =>
-    Tables.lineitem(s, d).groupBy(col("l_returnflag")).agg(
-      expr("percentile(l_quantity, 0.25)").as("qty_p25"),
-      expr("percentile(l_quantity, 0.5)").as("qty_median"),
-      expr("percentile(l_quantity, 0.75)").as("qty_p75"),
-      count(lit(1)).as("n"))
-  }
+      |FROM lineitem GROUP BY l_returnflag""".stripMargin)
 
   /** PIVOT: long→wide reshape with a fixed value list (Spark's pivot
     * operator; oracle as filtered aggregates). */
@@ -991,20 +787,13 @@ object RelationalOps {
   /** CUBE: all grouping-set combinations of (returnflag, linestatus)
     * in one pass — Spark plans an Expand the same way ROLLUP (q2c)
     * does, with partial aggregation below the single shuffle. */
-  val q2hCube: QueryDef = QueryDef.withOracle(
+  val q2hCube: QueryDef = QueryDef(
     // cents-exact sum (q21/q2c convention): the grand-total row is a
     // multi-partition double sum whose merge order is nondeterministic
     """SELECT l_returnflag, l_linestatus, count(*) AS n,
       |  CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0
       |    AS qty
-      |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin
-  ) { (s, d) =>
-    Tables.lineitem(s, d)
-      .cube(col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("n"),
-        (sum(floor(col("l_quantity") * 100 + 0.5).cast("long")).cast("double")
-          / 100.0).as("qty"))
-  }
+      |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin)
 
   /** Rank-statistics window family: percent_rank, cume_dist, ntile —
     * all exact integer-ratio math (identical doubles cross-engine) on
@@ -1029,33 +818,10 @@ object RelationalOps {
   }
 
   /** Interval (range) join: click → purchase conversions within a
-    * 30-minute window per user. Spark plans a bare range predicate as
-    * a nested-loop/cartesian per key, so the engine buckets time by
-    * the window width Δ and equi-joins on (user, bucket) with the
-    * probe side exploded to its two admissible buckets: any b with
-    * a < b ≤ a+Δ has bucket(b) ∈ {bucket(a), bucket(a)+1}, so every
-    * qualifying pair is produced by EXACTLY one bucket (no dedup
-    * pass) and the whole join is one hash shuffle keyed by
-    * (user, bucket). The exact range filter then prunes the ≤2×
-    * candidate inflation map-side. */
-  val q2jIntervalJoin: QueryDef = QueryDef.withOracle(
-    intervalJoinOracleSql
-  ) { (s, d) =>
-    val du = 1800000000L // 30 min in µs = the bucket width
-    val ev = Tables.events(s, d)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_id"),
-        unix_micros(col("ts")).as("a_us"))
-      .withColumn("bucket",
-        explode(array(expr(s"a_us div $du"), expr(s"a_us div $du + 1"))))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"),
-        unix_micros(col("ts")).as("b_us"), expr(s"b_us div $du").as("bucket"))
-    clicks.join(purchases, Seq("user_id", "bucket"))
-      .filter(col("b_us") > col("a_us") && col("b_us") <= col("a_us") + du)
-      .select(col("click_id"), col("purchase_id"),
-        (col("b_us") - col("a_us")).as("gap_us"))
-  }
+    * 30-minute window per user — an equi-join on user_id with the
+    * range as its join condition. */
+  val q2jIntervalJoin: QueryDef = QueryDef(
+    intervalJoinOracleSql)
 
   // ---- grouping sets, moments, arrays, funnels ----
 
@@ -1066,7 +832,7 @@ object RelationalOps {
     * `grouping()` flags disambiguate a NULL group value from a
     * subtotal row — part of the operator's contract, so the oracle
     * pins them. */
-  val q2nGroupingSets: QueryDef = QueryDef.withOracle(
+  val q2nGroupingSets: QueryDef = QueryDef(
     """SELECT l_returnflag, l_linestatus,
       |  CAST(GROUPING(l_returnflag) AS BIGINT) AS g_flag,
       |  CAST(GROUPING(l_linestatus) AS BIGINT) AS g_status,
@@ -1074,21 +840,7 @@ object RelationalOps {
       |  CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) / 100.0
       |    AS total_price
       |FROM lineitem
-      |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin
-  ) { (s, d) =>
-    Tables.lineitem(s, d)
-      .groupingSets(
-        Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus")), Seq.empty),
-        col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        grouping(col("l_returnflag")).cast("long").as("g_flag"),
-        grouping(col("l_linestatus")).cast("long").as("g_status"),
-        count(lit(1)).as("n"),
-        (sum(floor(col("l_extendedprice") * 100 + 0.5).cast("long"))
-          .cast("double") / 100.0).as("total_price"))
-      .select("l_returnflag", "l_linestatus", "g_flag", "g_status",
-        "n", "total_price")
-  }
+      |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin)
 
   /** Moment statistics (corr / covar_samp / stddev_samp) with a
     * deterministic cross-engine contract. Float moment aggregates are
@@ -1210,44 +962,26 @@ object RelationalOps {
     * one), clamped into the top bucket. Map-side bucketing, one
     * 12-key aggregate: the degenerate-cardinality shuffle histograms
     * want at any scale. */
-  val q2rHistogram: QueryDef = QueryDef.withOracle(
+  val q2rHistogram: QueryDef = QueryDef(
     """SELECT CAST(least(floor(o_totalprice / 50000.0), 11) AS BIGINT) AS bucket,
       |  count(*) AS n,
       |  min(o_totalprice) AS min_price,
       |  max(o_totalprice) AS max_price
-      |FROM orders GROUP BY 1""".stripMargin
-  ) { (s, d) =>
-    Tables.orders(s, d)
-      .groupBy(least(floor(col("o_totalprice") / 50000.0), lit(11))
-        .cast("long").as("bucket"))
-      .agg(count(lit(1)).as("n"),
-        min(col("o_totalprice")).as("min_price"),
-        max(col("o_totalprice")).as("max_price"))
-  }
+      |FROM orders GROUP BY 1""".stripMargin)
 
   /** Window VALUE functions — first_value / last_value / nth_value
     * over the full partition frame (UNBOUNDED..UNBOUNDED), per-user
     * ordered by (ts, event_id): a total order, so the selected rows
     * are engine-identical, and the values are exact 2-dp doubles (no
     * sums). */
-  val q2sFirstLast: QueryDef = QueryDef.withOracle(
+  val q2sFirstLast: QueryDef = QueryDef(
     """SELECT event_id, user_id,
       |  first_value(value) OVER w AS first_val,
       |  last_value(value) OVER w AS last_val,
       |  nth_value(value, 2) OVER w AS second_val
       |FROM events
       |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-      |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin
-  ) { (s, d) =>
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    Tables.events(s, d).select(
-      col("event_id"), col("user_id"),
-      first(col("value")).over(w).as("first_val"),
-      last(col("value")).over(w).as("last_val"),
-      nth_value(col("value"), 2).over(w).as("second_val"))
-  }
+      |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin)
 
   /** Conditional & selective aggregates: count_if, bool_and/bool_or,
     * and max_by/min_by (argmax/argmin). The max_by ordering key is
@@ -1376,16 +1110,11 @@ object RelationalOps {
     * scale this is map-side compute + a tiny-key aggregate; pairwise
     * fuzzy joins would instead go through the q41/q42 candidate-
     * generation paths with levenshtein as the verify step. */
-  val q76EditDistance: QueryDef = QueryDef.withOracle(
+  val q76EditDistance: QueryDef = QueryDef(
     """SELECT levenshtein(p_name, 'midnight amber rose') AS dist,
       |  count(*) AS n,
       |  min(p_partkey) AS first_part
-      |FROM part GROUP BY 1""".stripMargin
-  ) { (s, d) =>
-    Tables.part(s, d)
-      .groupBy(levenshtein(col("p_name"), lit("midnight amber rose")).as("dist"))
-      .agg(count(lit(1)).as("n"), min(col("p_partkey")).as("first_part"))
-  }
+      |FROM part GROUP BY 1""".stripMargin)
 
   /** Conversion funnel: signup → first click AFTER the signup → first
     * purchase AFTER that click, per user, folded to one summary row.
@@ -1396,7 +1125,7 @@ object RelationalOps {
     * keyed by user_id and two user-keyed joins — AQE broadcasts the
     * shrinking stage frames; nothing global until the final 1-row
     * fold. */
-  val q77Funnel: QueryDef = QueryDef.withOracle(
+  val q77Funnel: QueryDef = QueryDef(
     """WITH ev AS (
       |  SELECT user_id, event_type, CAST(epoch_us(ts) AS BIGINT) AS ts_us
       |  FROM events),
@@ -1422,32 +1151,7 @@ object RelationalOps {
       |    AS mean_click_to_purchase_us
       |FROM s1
       |LEFT JOIN c1 ON s1.user_id = c1.user_id
-      |LEFT JOIN p1 ON s1.user_id = p1.user_id""".stripMargin
-  ) { (s, d) =>
-    val ev = Tables.events(s, d).select(col("user_id"), col("event_type"),
-      unix_micros(col("ts")).as("ts_us"))
-    val s1 = ev.filter(col("event_type") === "signup")
-      .groupBy("user_id").agg(min(col("ts_us")).as("t1"))
-    val c1 = ev.filter(col("event_type") === "click")
-      .join(s1, "user_id").filter(col("ts_us") > col("t1"))
-      .groupBy("user_id").agg(min(col("ts_us")).as("t2"), min(col("t1")).as("t1"))
-    val p1 = ev.filter(col("event_type") === "purchase")
-      .join(c1.select(col("user_id"), col("t2")), "user_id")
-      .filter(col("ts_us") > col("t2"))
-      .groupBy("user_id").agg(min(col("ts_us")).as("t3"), min(col("t2")).as("t2"))
-    s1.join(c1.select(col("user_id"), col("t1").as("c_t1"), col("t2")),
-        Seq("user_id"), "left")
-      .join(p1.select(col("user_id"), col("t2").as("p_t2"), col("t3")),
-        Seq("user_id"), "left")
-      .agg(
-        count(col("t1")).as("n_signup"),
-        count(col("t2")).as("n_click"),
-        count(col("t3")).as("n_purchase"),
-        (sum(col("t2") - col("c_t1")).cast("double") / count(col("t2")))
-          .as("mean_signup_to_click_us"),
-        (sum(col("t3") - col("p_t2")).cast("double") / count(col("t3")))
-          .as("mean_click_to_purchase_us"))
-  }
+      |LEFT JOIN p1 ON s1.user_id = p1.user_id""".stripMargin)
 
   /** Time-series resampling with forward fill: each user's irregular
     * events land on a regular 6-hour grid spanning [first, last]

@@ -69,7 +69,7 @@ object SeriesOps {
     * 30-day span, safely under 2⁶³ at any sample count — and TWAP is
     * one IEEE division of the two exact sums. One user-keyed exchange
     * serves the window and the rollup. */
-  val q98Twap: QueryDef = QueryDef.withOracle(
+  val q98Twap: QueryDef = QueryDef(
     """WITH x AS (
       |  SELECT user_id, epoch_us(ts) AS us, event_id,
       |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
@@ -88,33 +88,15 @@ object SeriesOps {
       |SELECT user_id,
       |  CAST(num AS DOUBLE) / CAST(den AS DOUBLE) / 100.0 AS twap,
       |  den AS span_us, n_samples
-      |FROM g""".stripMargin
-  ) { (s, d) =>
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-    Tables.events(s, d)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"),
-        floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-      .withColumn("dur_us", lead(col("us"), 1).over(w) - col("us"))
-      .filter(col("dur_us").isNotNull)
-      .groupBy(col("user_id"))
-      .agg(sum(col("cents") * col("dur_us")).as("num"),
-        sum(col("dur_us")).as("den"),
-        count(lit(1)).as("n_samples"))
-      .select(col("user_id"),
-        (col("num").cast("double") / col("den").cast("double") / 100.0)
-          .as("twap"),
-        col("den").as("span_us"), col("n_samples"))
-  }
+      |FROM g""".stripMargin)
 
   /** OHLC bars: per (event_type, hour), the opening/closing values by
     * event time plus the high/low — the resampled candle every
-    * time-series store exposes. Open/close are argmin/argmax on the
-    * total order (ts, event_id), computed as a STRUCT min/max inside
-    * the same hash aggregate as high/low (the q2t pattern: one
-    * partial+final agg, no window, no second shuffle); the oracle
-    * reaches the same rows with first_value windows. Values are
-    * scan-exact doubles — no arithmetic, so parity is bitwise. */
-  val q99Ohlc: QueryDef = QueryDef.withOracle(
+    * time-series store exposes. Open/close are first_value windows
+    * over the total order (ts, event_id), ascending and descending.
+    * Values are scan-exact doubles — no arithmetic, so parity is
+    * bitwise. */
+  val q99Ohlc: QueryDef = QueryDef(
     """WITH x AS (
       |  SELECT event_type, date_trunc('hour', ts) AS h, epoch_us(ts) AS us,
       |    event_id, value
@@ -130,22 +112,7 @@ object SeriesOps {
       |SELECT event_type, CAST(epoch_us(h) AS BIGINT) AS hour_us,
       |  min(open) AS open, max(value) AS high, min(value) AS low,
       |  min(close) AS close, count(*) AS n
-      |FROM w GROUP BY 1, 2""".stripMargin
-  ) { (s, d) =>
-    Tables.events(s, d)
-      .select(col("event_type"),
-        unix_micros(date_trunc("hour", col("ts"))).as("hour_us"),
-        unix_micros(col("ts")).as("us"), col("event_id"), col("value"))
-      .groupBy(col("event_type"), col("hour_us"))
-      .agg(
-        min(struct(col("us"), col("event_id"), col("value")))
-          .getField("value").as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max(struct(col("us"), col("event_id"), col("value")))
-          .getField("value").as("close"),
-        count(lit(1)).as("n"))
-  }
+      |FROM w GROUP BY 1, 2""".stripMargin)
 
   /** Variable-length interval coalescing (coverage islands): each
     * event opens a lease of floor(value) minutes; per user, the
@@ -163,7 +130,7 @@ object SeriesOps {
     * (floor(value) is IEEE-exact on identical doubles), so the gate
     * is exact. Touching intervals (start == prior end) merge —
     * half-open [s, e) coverage semantics, pinned by the oracle. */
-  val q100IntervalMerge: QueryDef = QueryDef.withOracle(
+  val q100IntervalMerge: QueryDef = QueryDef(
     """WITH iv AS (
       |  SELECT user_id, event_id, epoch_us(ts) AS s,
       |    epoch_us(ts) + CAST(floor(value) AS BIGINT) * 60000000 AS e
@@ -182,24 +149,7 @@ object SeriesOps {
       |  FROM f)
       |SELECT user_id, CAST(island AS BIGINT) AS island_idx,
       |  min(s) AS start_us, max(e) AS end_us, count(*) AS n_events
-      |FROM g GROUP BY 1, 2""".stripMargin
-  ) { (s, d) =>
-    val w = Window.partitionBy(col("user_id")).orderBy(col("s"), col("event_id"))
-    val prev = w.rowsBetween(Window.unboundedPreceding, -1)
-    val run = w.rowsBetween(Window.unboundedPreceding, 0)
-    Tables.events(s, d)
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("s"),
-        (unix_micros(col("ts")) +
-          floor(col("value")).cast("long") * 60000000L).as("e"))
-      .withColumn("pmax", max(col("e")).over(prev))
-      .withColumn("brk",
-        when(col("pmax").isNull || col("s") > col("pmax"), 1L).otherwise(0L))
-      .withColumn("island_idx", sum(col("brk")).over(run))
-      .groupBy(col("user_id"), col("island_idx"))
-      .agg(min(col("s")).as("start_us"), max(col("e")).as("end_us"),
-        count(lit(1)).as("n_events"))
-  }
+      |FROM g GROUP BY 1, 2""".stripMargin)
 
   /** Exponential smoothing (EWMA, α = 0.5, 20-term horizon) of each
     * user's event values — the streaming-adjacent smoother beside
@@ -446,7 +396,7 @@ object SeriesOps {
     * deterministic). The top-20 pick is TakeOrdered on (B desc,
     * user_id) — never a global sort. Users need ≥ 3 events (2 gaps)
     * for a defined σ. */
-  val q175Burstiness: QueryDef = QueryDef.withOracle(
+  val q175Burstiness: QueryDef = QueryDef(
     """WITH e AS (
       |  SELECT user_id, epoch_us(ts) AS t, event_id FROM events),
       |g AS (
@@ -456,7 +406,7 @@ object SeriesOps {
       |  FROM e),
       |m AS (
       |  SELECT user_id, count(*) AS m, sum(gap) AS sg,
-      |    sum(CAST(gap AS HUGEINT) * gap) AS sgg
+      |    sum(CAST(gap AS DECIMAL(38,0)) * gap) AS sgg
       |  FROM g WHERE gap IS NOT NULL GROUP BY 1 HAVING count(*) >= 2),
       |b AS (
       |  SELECT user_id, m AS n_gaps,
@@ -464,44 +414,14 @@ object SeriesOps {
       |      AS mean_gap_us,
       |    CASE WHEN sg = 0 THEN CAST(-1 AS DOUBLE)
       |    ELSE
-      |    floor(((sqrt(CAST(m * sgg - CAST(sg AS HUGEINT) * sg AS DOUBLE))
+      |    floor(((sqrt(CAST(m * sgg - CAST(sg AS DECIMAL(38,0)) * sg AS DOUBLE))
       |        / m - CAST(sg AS DOUBLE) / m)
-      |      / (sqrt(CAST(m * sgg - CAST(sg AS HUGEINT) * sg AS DOUBLE))
+      |      / (sqrt(CAST(m * sgg - CAST(sg AS DECIMAL(38,0)) * sg AS DOUBLE))
       |        / m + CAST(sg AS DOUBLE) / m)) * 1000000 + 0.5) / 1000000
       |    END AS b_index
       |  FROM m)
       |SELECT user_id, n_gaps, mean_gap_us, b_index
-      |FROM b ORDER BY b_index DESC, user_id LIMIT 20""".stripMargin
-  ) { (s, d) =>
-    val gaps = Tables.events(s, d)
-      .select(col("user_id"), unix_micros(col("ts")).as("t"),
-        col("event_id"))
-      .withColumn("gap", col("t") - lag(col("t"), 1).over(
-        Window.partitionBy(col("user_id"))
-          .orderBy(col("t"), col("event_id"))))
-      .filter(col("gap").isNotNull)
-    val m = gaps.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("m"), sum(col("gap")).as("sg"),
-        sum(col("gap").cast("decimal(38,0)") * col("gap")).as("sgg"))
-      .filter(col("m") >= 2)
-    // σ·m = sqrt(m·Σg² − (Σg)²) exactly once; μ = Σg/m — identical
-    // expression trees on both engines, sqrt is IEEE-exact
-    val varNum = (col("m").cast("decimal(38,0)") * col("sgg") -
-      col("sg").cast("decimal(38,0)") * col("sg").cast("decimal(38,0)"))
-      .cast("double")
-    val sigmaOverM = sqrt(varNum) / col("m")
-    val mu = col("sg").cast("double") / col("m")
-    m.select(col("user_id"), col("m").as("n_gaps"),
-        (floor((col("sg").cast("double") / col("m")) * 1000000 + 0.5)
-          / 1000000).as("mean_gap_us"),
-        // all-zero gaps (a burst of events on one timestamp — the
-        // exact bot class this screens for): σ = μ = 0 makes B 0/0;
-        // the metronome limit (σ = 0, μ → 0⁺) is −1, so report that
-        when(col("sg") === 0, lit(-1.0))
-          .otherwise(floor(((sigmaOverM - mu) / (sigmaOverM + mu))
-            * 1000000 + 0.5) / 1000000).as("b_index"))
-      .orderBy(col("b_index").desc, col("user_id")).limit(20)
-  }
+      |FROM b ORDER BY b_index DESC, user_id LIMIT 20""".stripMargin)
 
   /** Autocorrelation of daily event volume at lags 1–7, per type —
     * the seasonality detector that decides whether q123's weekly

@@ -34,7 +34,7 @@ object SketchOps {
     * while groups are many/balanced; for few huge groups the scale
     * path is q74's sketch boundaries + a map-side bucket lookup, and
     * this operator IS the exactness reference for that. */
-  val q96EquidepthBins: QueryDef = QueryDef.withOracle(
+  val q96EquidepthBins: QueryDef = QueryDef(
     """WITH b AS (
       |  SELECT lang, n_chars,
       |    ntile(4) OVER (PARTITION BY lang ORDER BY n_chars, doc_id)
@@ -42,16 +42,7 @@ object SketchOps {
       |  FROM documents)
       |SELECT lang, CAST(bucket AS BIGINT) AS bucket, count(*) AS n,
       |  min(n_chars) AS lo, max(n_chars) AS hi
-      |FROM b GROUP BY 1, 2""".stripMargin
-  ) { (s, d) =>
-    val w = Window.partitionBy(col("lang")).orderBy(col("n_chars"), col("doc_id"))
-    Tables.documents(s, d)
-      .select(col("lang"), col("n_chars"),
-        ntile(4).over(w).cast("long").as("bucket"))
-      .groupBy(col("lang"), col("bucket"))
-      .agg(count(lit(1)).as("n"),
-        min(col("n_chars")).as("lo"), max(col("n_chars")).as("hi"))
-  }
+      |FROM b GROUP BY 1, 2""".stripMargin)
 
   /** Per-source distinct-document estimate from the mergeable
     * HyperLogLog register sketch (`SketchAggregates.HllRegisters`,
@@ -780,29 +771,16 @@ object SketchOps {
     * exact integer algebra on that frame (the total accumulates in
     * decimal(38,0)/int128 — n² terms near 2⁶² must not wrap the
     * sum); top-10 is TakeOrdered. The join itself is never run. */
-  val q180JoinSkewAudit: QueryDef = QueryDef.withOracle(
+  val q180JoinSkewAudit: QueryDef = QueryDef(
     """WITH k AS (
       |  SELECT user_id, count(*) AS n FROM events GROUP BY 1),
       |o AS (SELECT user_id, n, n * n AS out_rows FROM k),
-      |t AS (SELECT sum(CAST(n AS HUGEINT) * n) AS total FROM k)
+      |t AS (SELECT sum(CAST(n AS DECIMAL(38,0)) * n) AS total FROM k)
       |SELECT user_id, n, out_rows,
       |  floor((CAST(out_rows AS DOUBLE) / CAST(total AS DOUBLE)) * 1000000
       |    + 0.5) / 1000000 AS out_share
       |FROM o CROSS JOIN t
-      |ORDER BY out_rows DESC, user_id LIMIT 10""".stripMargin
-  ) { (s, d) =>
-    val k = Tables.events(s, d).groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"))
-    val t = k.agg(sum(col("n").cast("decimal(38,0)") * col("n"))
-      .as("total"))
-    k.select(col("user_id"), col("n"), (col("n") * col("n")).as("out_rows"))
-      .crossJoin(broadcast(t))
-      .select(col("user_id"), col("n"), col("out_rows"),
-        (floor((col("out_rows").cast("double") /
-          col("total").cast("double")) * 1000000 + 0.5) / 1000000)
-          .as("out_share"))
-      .orderBy(col("out_rows").desc, col("user_id")).limit(10)
-  }
+      |ORDER BY out_rows DESC, user_id LIMIT 10""".stripMargin)
 
   /** Efraimidis–Spirakis weighted sampling WITHOUT replacement: the
     * top-5 documents per source drawn with probability proportional
@@ -962,7 +940,7 @@ object SketchOps {
     *
     * Scale shape: one events pass → per-user flag cells (data-sized
     * groupBy on the natural key) → one 4-number aggregate. */
-  val q261CaptureRecapture: QueryDef = QueryDef.withOracle(
+  val q261CaptureRecapture: QueryDef = QueryDef(
     """WITH u AS (
       |  SELECT user_id,
       |    max(CASE WHEN date_part('day', CAST(ts AS DATE)) % 2 = 0
@@ -982,27 +960,7 @@ object SketchOps {
       |      * (n2 - m))
       |    / ((CAST(m + 1 AS DOUBLE) * (m + 1)) * (m + 2)))
       |    * 1000000 + 0.5) / 1000000 AS se
-      |FROM c""".stripMargin
-  ) { (s, d) =>
-    val u = Tables.events(s, d)
-      .select(col("user_id"),
-        (dayofmonth(to_date(col("ts"))) % 2 === 0).cast("long").as("ef"),
-        (dayofmonth(to_date(col("ts"))) % 2 === 1).cast("long").as("of"))
-      .groupBy(col("user_id"))
-      .agg(max(col("ef")).as("e"), max(col("of")).as("o"))
-    val c = u.agg(sum(col("e")).cast("long").as("n1"),
-      sum(col("o")).cast("long").as("n2"),
-      sum(col("e") * col("o")).cast("long").as("m"),
-      count(lit(1)).as("n_true"))
-    c.select(col("n1").as("n_even"), col("n2").as("n_odd"),
-      col("m").as("n_both"), col("n_true"),
-      (floor((((col("n1") + 1).cast("double") * (col("n2") + 1))
-        / (col("m") + 1) - 1) * 1000000L + 0.5) / 1000000L).as("n_hat"),
-      (floor(sqrt(((col("n1") + 1).cast("double") * (col("n2") + 1)
-        * (col("n1") - col("m")) * (col("n2") - col("m")))
-        / (((col("m") + 1).cast("double") * (col("m") + 1))
-          * (col("m") + 2))) * 1000000L + 0.5) / 1000000L).as("se"))
-  }
+      |FROM c""".stripMargin)
 
   /** Kish effective sample size per source under n_chars value
     * weighting — what q91's value-weighted sampling actually COSTS in
@@ -1015,11 +973,11 @@ object SketchOps {
     * decimal mandatory), one division chain per source, floored 1e-6.
     *
     * Scale shape: ONE documents pass → ≤|sources| moment cells. */
-  val q268EssKish: QueryDef = QueryDef.withOracle(
+  val q268EssKish: QueryDef = QueryDef(
     """WITH m AS (
       |  SELECT source, count(*) AS n,
-      |    sum(CAST(n_chars AS HUGEINT)) AS sw,
-      |    sum(CAST(n_chars AS HUGEINT) * n_chars) AS sww
+      |    sum(CAST(n_chars AS DECIMAL(38,0))) AS sw,
+      |    sum(CAST(n_chars AS DECIMAL(38,0)) * n_chars) AS sww
       |  FROM documents GROUP BY 1)
       |SELECT source, n AS n_docs,
       |  CASE WHEN sww = 0 THEN CAST(0 AS DOUBLE)
@@ -1031,25 +989,7 @@ object SketchOps {
       |  CASE WHEN sww = 0 THEN CAST(0 AS DOUBLE)
       |    ELSE floor((CAST(sw AS DOUBLE) / sww * sw / n)
       |      * 1000000 + 0.5) / 1000000 END AS ess_share
-      |FROM m""".stripMargin
-  ) { (s, d) =>
-    val m = Tables.documents(s, d)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n"), sum(dec(col("n_chars"))).as("sw"),
-        sum(dec(col("n_chars")) * col("n_chars")).as("sww"))
-    m.select(col("source"), col("n").as("n_docs"),
-      when(col("sww") === dec(lit(0)), lit(0.0))
-        .otherwise(floor((col("sw").cast("double") / col("sww")
-          * col("sw")) * 1000000L + 0.5) / 1000000L).as("ess"),
-      when(col("sw") === dec(lit(0)), lit(0.0))
-        .otherwise(floor((col("n") * (col("sww").cast("double")
-          / col("sw") / col("sw"))) * 1000000L + 0.5) / 1000000L)
-        .as("deff"),
-      when(col("sww") === dec(lit(0)), lit(0.0))
-        .otherwise(floor((col("sw").cast("double") / col("sww")
-          * col("sw") / col("n")) * 1000000L + 0.5) / 1000000L)
-        .as("ess_share"))
-  }
+      |FROM m""".stripMargin)
 
   /** Optimizer-statistics quality audit — the two estimates a
     * cost-based planner runs on, printed against exact truth from the

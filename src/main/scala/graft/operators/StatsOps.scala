@@ -4,7 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import Exact.{dec, cents, q6, epochDay, ErfA1, ErfA2, ErfA3, ErfA4, ErfA5, ErfT, Sqrt2}
+import Exact.{dec, cents, epochDay, ErfA1, ErfA2, ErfA3, ErfA4, ErfA5, ErfT, Sqrt2}
 import Kernels.PreEnd
 
 /** Statistics over the warehouse and corpus tables: descriptive,
@@ -33,7 +33,7 @@ object StatsOps {
     * One partial+final aggregate; nothing else. Int64 bounds: with
     * cents ≤ 2×10⁷ and x ≤ 50 per row, nΣxy stays < 2⁶³ up to ~10⁹
     * rows per group — document and shard beyond that. */
-  val q97GroupRegression: QueryDef = QueryDef.withOracle(
+  val q97GroupRegression: QueryDef = QueryDef(
     """WITH m AS (
       |  SELECT p_brand, count(*) AS n,
       |    CAST(sum(p_size) AS BIGINT) AS sx,
@@ -48,24 +48,7 @@ object StatsOps {
       |    CAST(n * sxx - sx * sx AS DOUBLE) AS slope_cents,
       |  CAST(sy * sxx - sx * sxy AS DOUBLE) /
       |    CAST(n * sxx - sx * sx AS DOUBLE) AS intercept_cents
-      |FROM m""".stripMargin
-  ) { (s, d) =>
-    val cents = floor(col("p_retailprice") * 100 + 0.5).cast("long")
-    Tables.part(s, d)
-      .groupBy(col("p_brand"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("p_size").cast("long")).as("sx"),
-        sum(cents).as("sy"),
-        sum(col("p_size").cast("long") * col("p_size")).as("sxx"),
-        sum(col("p_size") * cents).as("sxy"))
-      .select(col("p_brand"), col("n"),
-        ((col("n") * col("sxy") - col("sx") * col("sy")).cast("double") /
-          (col("n") * col("sxx") - col("sx") * col("sx")).cast("double"))
-          .as("slope_cents"),
-        ((col("sy") * col("sxx") - col("sx") * col("sxy")).cast("double") /
-          (col("n") * col("sxx") - col("sx") * col("sx")).cast("double"))
-          .as("intercept_cents"))
-  }
+      |FROM m""".stripMargin)
 
   /** Robust outlier report per metric: exact median, exact MAD
     * (median absolute deviation), and the count of points beyond
@@ -690,7 +673,7 @@ object StatsOps {
     *
     * Scale shape: ONE orders pass → day cells → ≤|months| block
     * maxima (metadata); everything after is a 1-row chain. */
-  val q257GumbelMaxima: QueryDef = QueryDef.withOracle(
+  val q257GumbelMaxima: QueryDef = QueryDef(
     s"""WITH daily AS (
       |  SELECT CAST(o_orderdate AS DATE) AS day,
       |    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
@@ -702,8 +685,8 @@ object StatsOps {
       |  FROM daily GROUP BY 1),
       |m AS (
       |  SELECT CAST(count(*) AS BIGINT) AS nb,
-      |    sum(CAST(mx AS HUGEINT)) AS s1,
-      |    sum(CAST(mx AS HUGEINT) * mx) AS s2
+      |    sum(CAST(mx AS DECIMAL(38,0))) AS s1,
+      |    sum(CAST(mx AS DECIMAL(38,0)) * mx) AS s2
       |  FROM mon),
       |fit AS (
       |  SELECT nb, CAST(s1 AS DOUBLE) / nb AS mean,
@@ -719,30 +702,7 @@ object StatsOps {
       |  floor(beta * 100 + 0.5) / 100 AS gumbel_beta,
       |  floor(((mean - $EulerGamma * beta) - beta * $Rl12C) * 100
       |    + 0.5) / 100 AS return_level_12
-      |FROM fit""".stripMargin
-  ) { (s, d) =>
-    val daily = Tables.orders(s, d)
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg(sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
-        .cast("long").as("rev"))
-    val mon = daily.groupBy(date_trunc("month", col("day")).as("month"))
-      .agg(max(col("rev")).cast("long").as("mx"))
-    val m = mon.agg(count(lit(1)).as("nb"),
-      sum(dec(col("mx"))).as("s1"),
-      sum(dec(col("mx")) * col("mx")).as("s2"))
-    val mean = col("s1").cast("double") / col("nb")
-    val beta = when(col("nb") <= 1, lit(0.0))
-      .otherwise(sqrt((col("s2").cast("double")
-        - (col("s1").cast("double") / col("nb")) * col("s1"))
-        / (col("nb") - 1)) * Sqrt6OverPi)
-    val mu = mean - lit(EulerGamma) * beta
-    m.select(col("nb").as("n_blocks"),
-      (floor(mean * 100 + 0.5) / 100).as("mean_max_cents"),
-      (floor(mu * 100 + 0.5) / 100).as("gumbel_mu"),
-      (floor(beta * 100 + 0.5) / 100).as("gumbel_beta"),
-      (floor((mu - beta * Rl12C) * 100 + 0.5) / 100)
-        .as("return_level_12"))
-  }
+      |FROM fit""".stripMargin)
 
   /** Partial correlations of the document shape features — q256's
     * covariance matrix read as structure: r(chars, tokens | chars-
@@ -1191,7 +1151,7 @@ object StatsOps {
     * the corpus (≤|langs|·|sources| cells); margins, totals, and all
     * four entropy sums ride that frame with broadcast joins. The
     * q178/q186 posture. */
-  val q212TheilU: QueryDef = QueryDef.withOracle(
+  val q212TheilU: QueryDef = QueryDef(
     """WITH cell AS (
       |  SELECT lang, source, count(*) AS c FROM documents GROUP BY 1, 2),
       |nl AS (SELECT lang, CAST(sum(c) AS BIGINT) AS nl FROM cell GROUP BY 1),
@@ -1226,47 +1186,7 @@ object StatsOps {
       |  CASE WHEN hs_fp = 0 THEN CAST(0 AS DOUBLE)
       |    ELSE floor((CAST(hs_fp - hsl_fp AS DOUBLE) / hs_fp) * 1000000
       |      + 0.5) / 1000000 END AS u_source_given_lang
-      |FROM tot CROSS JOIN hl CROSS JOIN hs CROSS JOIN hc""".stripMargin
-  ) { (s, d) =>
-    val cell = Tables.documents(s, d)
-      .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("c"))
-      .cache() // one corpus pass feeds margins, totals, both entropies
-    val nl = cell.groupBy(col("lang")).agg(sum(col("c")).as("nl"))
-    val ns = cell.groupBy(col("source")).agg(sum(col("c")).as("ns"))
-    val tot = cell.agg(sum(col("c")).as("n"))
-    def hFp(margin: DataFrame, m: String): DataFrame =
-      margin.crossJoin(broadcast(tot))
-        .select(floor((col(m).cast("double") / col("n")) *
-          log(col("n").cast("double") / col(m)) * 1000000000L + 0.5)
-          .cast("long").as("t"))
-        .agg(sum(col("t")).as(s"h${m}_fp"))
-    val hl = hFp(nl, "nl")
-    val hs = hFp(ns, "ns")
-    val hc = cell.join(broadcast(nl), Seq("lang"))
-      .join(broadcast(ns), Seq("source"))
-      .crossJoin(broadcast(tot))
-      .select(
-        floor((col("c").cast("double") / col("n")) *
-          log(col("ns").cast("double") / col("c")) * 1000000000L + 0.5)
-          .cast("long").as("tls"),
-        floor((col("c").cast("double") / col("n")) *
-          log(col("nl").cast("double") / col("c")) * 1000000000L + 0.5)
-          .cast("long").as("tsl"))
-      .agg(sum(col("tls")).as("hls_fp"), sum(col("tsl")).as("hsl_fp"))
-    tot.crossJoin(broadcast(hl)).crossJoin(broadcast(hs))
-      .crossJoin(broadcast(hc))
-      .select(col("n").as("n_docs"),
-        (col("hnl_fp").cast("double") / 1000000000L).as("h_lang"),
-        (col("hns_fp").cast("double") / 1000000000L).as("h_source"),
-        when(col("hnl_fp") === 0, lit(0.0))
-          .otherwise(floor(((col("hnl_fp") - col("hls_fp")).cast("double")
-            / col("hnl_fp")) * 1000000 + 0.5) / 1000000)
-          .as("u_lang_given_source"),
-        when(col("hns_fp") === 0, lit(0.0))
-          .otherwise(floor(((col("hns_fp") - col("hsl_fp")).cast("double")
-            / col("hns_fp")) * 1000000 + 0.5) / 1000000)
-          .as("u_source_given_lang"))
-  }
+      |FROM tot CROSS JOIN hl CROSS JOIN hs CROSS JOIN hc""".stripMargin)
 
   /** Bias-corrected Cramér's V between lang and source — the
     * NORMALIZED χ² association on a [0,1] scale, closing the
@@ -1361,33 +1281,19 @@ object StatsOps {
     * `frac` is one exact IEEE division; `expected` is a libm log of
     * nine tiny constants, rounded to 6 places to absorb any
     * last-ulp libm disagreement. */
-  val q113Benford: QueryDef = QueryDef.withOracle(
+  val q113Benford: QueryDef = QueryDef(
     """WITH t AS (
       |  SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
       |  FROM orders WHERE o_totalprice > 0),
       |c AS (
-      |  SELECT CAST(substring(CAST(cents AS VARCHAR), 1, 1) AS BIGINT)
+      |  SELECT CAST(substring(CAST(cents AS STRING), 1, 1) AS BIGINT)
       |    AS digit, count(*) AS n
       |  FROM t GROUP BY 1),
       |tot AS (SELECT sum(n) AS tot FROM c)
       |SELECT digit, n, CAST(n AS DOUBLE) / tot AS frac,
       |  floor(log10(1.0 + 1.0 / digit) * 1000000 + 0.5) / 1000000
       |    AS expected
-      |FROM c CROSS JOIN tot""".stripMargin
-  ) { (s, d) =>
-    val c = Tables.orders(s, d)
-      .filter(col("o_totalprice") > 0)
-      .select(floor(col("o_totalprice") * 100 + 0.5).cast("long").as("cents"))
-      .select(substring(col("cents").cast("string"), 1, 1).cast("long")
-        .as("digit"))
-      .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-    val tot = c.agg(sum(col("n")).as("tot"))
-    c.crossJoin(broadcast(tot))
-      .select(col("digit"), col("n"),
-        (col("n").cast("double") / col("tot")).as("frac"),
-        (floor(log10(lit(1.0) + lit(1.0) / col("digit")) * 1000000 + 0.5)
-          / 1000000).as("expected"))
-  }
+      |FROM c CROSS JOIN tot""".stripMargin)
 
   /** Benford CONFORMITY DRIFT of order totals, per order year — the
     * year-level scorecard layer over q113's digit-level screen
@@ -1779,11 +1685,11 @@ object StatsOps {
     *
     * Scale shape: ONE documents pass → |sources| moment rows; the
     * pair frame is a broadcast self-join of that metadata. */
-  val q236CohensD: QueryDef = QueryDef.withOracle(
+  val q236CohensD: QueryDef = QueryDef(
     """WITH m AS (
       |  SELECT source, count(*) AS n,
-      |    sum(CAST(n_chars AS HUGEINT)) AS s,
-      |    sum(CAST(n_chars AS HUGEINT) * n_chars) AS q
+      |    sum(CAST(n_chars AS DECIMAL(38,0))) AS s,
+      |    sum(CAST(n_chars AS DECIMAL(38,0)) * n_chars) AS q
       |  FROM documents GROUP BY 1),
       |p AS (
       |  SELECT a.source AS source_a, b.source AS source_b,
@@ -1801,34 +1707,7 @@ object StatsOps {
       |    ELSE floor(((ma - mb) / sqrt((ssa + ssb) / (na + nb - 2)))
       |      * (1 - CAST(3 AS DOUBLE) / (4 * (na + nb) - 9))
       |      * 1000000 + 0.5) / 1000000 END AS hedges_g
-      |FROM p""".stripMargin
-  ) { (s, d) =>
-    val m = Tables.documents(s, d)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n"), sum(dec(col("n_chars"))).as("s"),
-        sum(dec(col("n_chars")) * col("n_chars")).as("q"))
-    val a = m.toDF("source_a", "na", "sa", "qa")
-    val b = m.toDF("source_b", "nb", "sb", "qb")
-    val p = a.join(broadcast(b), col("source_a") < col("source_b"))
-      .select(col("source_a"), col("source_b"), col("na"), col("nb"),
-        (col("sa").cast("double") / col("na")).as("ma"),
-        (col("sb").cast("double") / col("nb")).as("mb"),
-        (col("qa").cast("double")
-          - (col("sa").cast("double") / col("na")) * col("sa")).as("ssa"),
-        (col("qb").cast("double")
-          - (col("sb").cast("double") / col("nb")) * col("sb")).as("ssb"))
-    val dpool = (col("ma") - col("mb")) /
-      sqrt((col("ssa") + col("ssb")) / (col("na") + col("nb") - 2))
-    val j = lit(1) - lit(3).cast("double") /
-      (lit(4) * (col("na") + col("nb")) - 9)
-    p.select(col("source_a"), col("source_b"),
-      col("na").cast("long").as("n_a"), col("nb").cast("long").as("n_b"),
-      when(col("ssa") + col("ssb") <= 0, lit(0.0))
-        .otherwise(floor(dpool * 1000000L + 0.5) / 1000000L).as("cohens_d"),
-      when(col("ssa") + col("ssb") <= 0, lit(0.0))
-        .otherwise(floor(dpool * j * 1000000L + 0.5) / 1000000L)
-        .as("hedges_g"))
-  }
+      |FROM p""".stripMargin)
 
   /** Brown-Forsythe variance-homogeneity test across sources — the
     * robust Levene variant (deviations from the MEDIAN, not the mean)
@@ -2138,7 +2017,7 @@ object StatsOps {
     * |months|×|grid| frame (value-range-bounded — the q248 argument)
     * carries month-partitioned cumulative counts; the ordered-pair
     * sweep joins cells to cumulative cells ON the value. */
-  val q259Jonckheere: QueryDef = QueryDef.withOracle(
+  val q259Jonckheere: QueryDef = QueryDef(
     """WITH o AS (
       |  SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS mon,
       |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS v
@@ -2157,25 +2036,25 @@ object StatsOps {
       |      AS cum
       |  FROM f),
       |j AS (
-      |  SELECT sum(CAST(b.cnt AS HUGEINT)
+      |  SELECT sum(CAST(b.cnt AS DECIMAL(38,0))
       |      * (2 * (w.cum - w.cnt) + w.cnt)) AS j2
       |  FROM c b JOIN w ON b.v = w.v AND w.mon < b.mon),
       |tv AS (SELECT v, CAST(sum(cnt) AS BIGINT) AS tc
       |       FROM c GROUP BY 1),
       |tt AS (
-      |  SELECT sum(CAST(tc AS HUGEINT) * (tc - 1) * (2 * tc + 5)) AS t25,
-      |    sum(CAST(tc AS HUGEINT) * (tc - 1) * (tc - 2)) AS t3,
-      |    sum(CAST(tc AS HUGEINT) * (tc - 1)) AS t2
+      |  SELECT sum(CAST(tc AS DECIMAL(38,0)) * (tc - 1) * (2 * tc + 5)) AS t25,
+      |    sum(CAST(tc AS DECIMAL(38,0)) * (tc - 1) * (tc - 2)) AS t3,
+      |    sum(CAST(tc AS DECIMAL(38,0)) * (tc - 1)) AS t2
       |  FROM tv),
       |tot AS (
       |  SELECT CAST(sum(n) AS BIGINT) AS nn,
-      |    sum(CAST(n AS HUGEINT) * n) AS sn2,
-      |    sum(CAST(n AS HUGEINT) * (n - 1) * (2 * n + 5)) AS n25,
-      |    sum(CAST(n AS HUGEINT) * (n - 1) * (n - 2)) AS n3,
-      |    sum(CAST(n AS HUGEINT) * (n - 1)) AS n2
+      |    sum(CAST(n AS DECIMAL(38,0)) * n) AS sn2,
+      |    sum(CAST(n AS DECIMAL(38,0)) * (n - 1) * (2 * n + 5)) AS n25,
+      |    sum(CAST(n AS DECIMAL(38,0)) * (n - 1) * (n - 2)) AS n3,
+      |    sum(CAST(n AS DECIMAL(38,0)) * (n - 1)) AS n2
       |  FROM mn),
       |vv AS (
-      |  SELECT CAST(CAST(nn AS HUGEINT) * (nn - 1) * (2 * nn + 5)
+      |  SELECT CAST(CAST(nn AS DECIMAL(38,0)) * (nn - 1) * (2 * nn + 5)
       |        - n25 - t25 AS DOUBLE) / 72
       |    + CAST(n3 AS DOUBLE) * CAST(t3 AS DOUBLE)
       |      / (36 * CAST(nn AS DOUBLE) * (nn - 1) * (nn - 2))
@@ -2185,78 +2064,13 @@ object StatsOps {
       |SELECT nn AS n_orders,
       |  (SELECT CAST(count(*) AS BIGINT) FROM mn) AS n_months,
       |  CAST(j2 AS DOUBLE) / 2 AS j_stat,
-      |  CAST(CAST(nn AS HUGEINT) * nn - sn2 AS DOUBLE) / 4 AS j_null,
+      |  CAST(CAST(nn AS DECIMAL(38,0)) * nn - sn2 AS DOUBLE) / 4 AS j_null,
       |  CASE WHEN nn < 3 OR var_j <= 0 THEN CAST(0 AS DOUBLE)
       |    ELSE floor(((CAST(j2 AS DOUBLE) / 2
-      |        - CAST(CAST(nn AS HUGEINT) * nn - sn2 AS DOUBLE) / 4)
+      |        - CAST(CAST(nn AS DECIMAL(38,0)) * nn - sn2 AS DOUBLE) / 4)
       |      / sqrt(var_j))
       |      * 1000000 + 0.5) / 1000000 END AS z
-      |FROM j CROSS JOIN tot CROSS JOIN vv""".stripMargin
-  ) { (s, d) =>
-    val o = Tables.orders(s, d)
-      .select(date_trunc("month", to_date(col("o_orderdate"))).as("mon"),
-        floor(col("o_totalprice") * 100 + 0.5).cast("long").as("v"))
-    val c = o.groupBy(col("mon"), col("v"))
-      .agg(count(lit(1)).as("cnt"))
-      .cache() // one orders pass; grid, margins, both join sides
-    val g = c.select(col("v")).distinct()
-    val mn = c.groupBy(col("mon")).agg(sum(col("cnt")).cast("long").as("n"))
-    val f = g.crossJoin(broadcast(mn.select(col("mon"))))
-      .join(c, Seq("mon", "v"), "left")
-      .select(col("mon"), col("v"), coalesce(col("cnt"), lit(0L)).as("cnt"))
-    val w = f.withColumn("cum", sum(col("cnt")).over(
-      Window.partitionBy(col("mon")).orderBy(col("v"))).cast("long"))
-    // earlier-months term as a SECOND window over the dense frame
-    // (partition v, order mon, rows < current) instead of re-joining
-    // the 150k-cell frame against the |months|×|grid| frame on v —
-    // the join probed and re-emitted the full dense frame (guide
-    // §2.4); distributivity over exact decimal ints keeps j2
-    // bit-identical: Σ_b cb·Σ_{m<m_b}(2(cum−cnt)+cnt) term for term.
-    val wp = Window.partitionBy(col("v")).orderBy(col("mon"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val j = w
-      .withColumn("presum",
-        sum(dec(lit(2) * (col("cum") - col("cnt")) + col("cnt"))).over(wp))
-      .filter(col("cnt") > 0) // the b-cells: rows where a real cell sits
-      // a cell with no earlier month has a NULL presum, a skipped term
-      // as in the oracle's join: one month in all gives a NULL j2
-      .agg(sum(dec(col("cnt")) * col("presum")).as("j2"))
-    // pooled tie counts t_j per value cell (value-range-bounded —
-    // the same grid the dense frame rides)
-    val tv = c.groupBy(col("v")).agg(sum(col("cnt")).cast("long").as("tc"))
-    val tt = tv.agg(
-      sum(dec(col("tc")) * (col("tc") - 1) * (lit(2) * col("tc") + 5))
-        .as("t25"),
-      sum(dec(col("tc")) * (col("tc") - 1) * (col("tc") - 2)).as("t3"),
-      sum(dec(col("tc")) * (col("tc") - 1)).as("t2"))
-    val tot = mn.agg(sum(col("n")).cast("long").as("nn"),
-      sum(dec(col("n")) * col("n")).as("sn2"),
-      sum(dec(col("n")) * (col("n") - 1) * (lit(2) * col("n") + 5))
-        .as("n25"),
-      sum(dec(col("n")) * (col("n") - 1) * (col("n") - 2)).as("n3"),
-      sum(dec(col("n")) * (col("n") - 1)).as("n2"))
-    val months = mn.agg(count(lit(1)).as("n_months"))
-    // Hollander-Wolfe tie-corrected variance; the two Σ-products can
-    // reach N^6 so they multiply in DOUBLE (mirrored token order)
-    val varJ = (dec(col("nn")) * (col("nn") - 1)
-        * (lit(2) * col("nn") + 5) - col("n25") - col("t25"))
-        .cast("double") / 72 +
-      col("n3").cast("double") * col("t3").cast("double") /
-        (lit(36) * col("nn").cast("double") * (col("nn") - 1)
-          * (col("nn") - 2)) +
-      col("n2").cast("double") * col("t2").cast("double") /
-        (lit(8) * col("nn").cast("double") * (col("nn") - 1))
-    val jNull = (dec(col("nn")) * col("nn") - col("sn2")).cast("double") / 4
-    j.crossJoin(broadcast(tot)).crossJoin(broadcast(tt))
-      .crossJoin(broadcast(months))
-      .select(col("nn").as("n_orders"), col("n_months"),
-        (col("j2").cast("double") / 2).as("j_stat"),
-        jNull.as("j_null"),
-        when(col("nn") < 3 || varJ <= 0, lit(0.0))
-          .otherwise(floor(((col("j2").cast("double") / 2 - jNull)
-            / sqrt(varJ)) * 1000000L + 0.5)
-            / 1000000L).as("z"))
-  }
+      |FROM j CROSS JOIN tot CROSS JOIN vv""".stripMargin)
 
   /** Kendall's W — do the sources AGREE on how the corpus-head
     * vocabulary ranks? Each source ranks the corpus top-20 words by
@@ -2573,7 +2387,7 @@ object StatsOps {
     * Scale shape: ONE events pass -> cents cells -> 5 power sums per
     * type; everything downstream is |types| rows. No window, no
     * join. */
-  val q276JarqueBera: QueryDef = QueryDef.withOracle(
+  val q276JarqueBera: QueryDef = QueryDef(
     """WITH ev AS (
       |  SELECT event_type AS t,
       |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
@@ -2581,10 +2395,10 @@ object StatsOps {
       |c AS (SELECT t, v, count(*) AS cnt FROM ev GROUP BY 1, 2),
       |m AS (
       |  SELECT t, CAST(sum(cnt) AS BIGINT) AS n,
-      |    sum(CAST(cnt AS HUGEINT) * v) AS s1,
-      |    sum(CAST(cnt AS HUGEINT) * v * v) AS s2,
-      |    sum(CAST(cnt AS HUGEINT) * v * v * v) AS s3,
-      |    sum(CAST(cnt AS HUGEINT) * v * v * v * v) AS s4
+      |    sum(CAST(cnt AS DECIMAL(38,0)) * v) AS s1,
+      |    sum(CAST(cnt AS DECIMAL(38,0)) * v * v) AS s2,
+      |    sum(CAST(cnt AS DECIMAL(38,0)) * v * v * v) AS s3,
+      |    sum(CAST(cnt AS DECIMAL(38,0)) * v * v * v * v) AS s4
       |  FROM c GROUP BY 1),
       |f AS (
       |  SELECT t, n,
@@ -2612,39 +2426,7 @@ object StatsOps {
       |      * (m3 / (m2 * sqrt(m2)) * (m3 / (m2 * sqrt(m2)))
       |        + (m4 / (m2 * m2) - 3) * (m4 / (m2 * m2) - 3) / 4)
       |      * 1000000 + 0.5) / 1000000 END AS jarque_bera
-      |FROM g""".stripMargin
-  ) { (s, d) =>
-    val ev = Tables.events(s, d).select(col("event_type").as("t"), cents)
-    val c = ev.groupBy(col("t"), col("v")).agg(count(lit(1)).as("cnt"))
-    val m = c.groupBy(col("t")).agg(
-      sum(col("cnt")).cast("long").as("n"),
-      sum(dec(col("cnt")) * col("v")).as("s1"),
-      sum(dec(col("cnt")) * col("v") * col("v")).as("s2"),
-      sum(dec(col("cnt")) * col("v") * col("v") * col("v")).as("s3"),
-      sum(dec(col("cnt")) * col("v") * col("v") * col("v") * col("v"))
-        .as("s4"))
-    val nD = col("n").cast("double")
-    val f = m.select(col("t"), col("n"),
-      (col("s1").cast("double") / nD).as("mu"),
-      (col("s2").cast("double") / nD).as("a2"),
-      (col("s3").cast("double") / nD).as("a3"),
-      (col("s4").cast("double") / nD).as("a4"))
-    val g = f.select(col("t"), col("n"), col("mu"),
-      (col("a2") - col("mu") * col("mu")).as("m2"),
-      (col("a3") - lit(3) * col("mu") * col("a2")
-        + lit(2) * col("mu") * col("mu") * col("mu")).as("m3"),
-      (col("a4") - lit(4) * col("mu") * col("a3")
-        + lit(6) * col("mu") * col("mu") * col("a2")
-        - lit(3) * col("mu") * col("mu") * col("mu") * col("mu")).as("m4"))
-    val sk = col("m3") / (col("m2") * sqrt(col("m2")))
-    val ek = col("m4") / (col("m2") * col("m2")) - 3
-    g.select(col("t").as("event_type"), col("n"),
-      when(col("m2") <= 0, lit(0.0)).otherwise(q6(sk)).as("skewness"),
-      when(col("m2") <= 0, lit(0.0)).otherwise(q6(ek)).as("ex_kurtosis"),
-      when(col("m2") <= 0, lit(0.0))
-        .otherwise(q6(col("n").cast("double") / lit(6)
-          * (sk * sk + ek * ek / lit(4)))).as("jarque_bera"))
-  }
+      |FROM g""".stripMargin)
 
   /** Acklam inverse-normal coefficients, tail branch only (q287's
     * quantile chain; |rel err| < 1.15e-9, valid for p < 0.02425 —
@@ -2922,7 +2704,7 @@ object StatsOps {
     * Scale shape: one partial+final count aggregate over the scan;
     * the total attaches as a broadcast 1-row frame; everything after
     * is a ≤|types|-row projection. */
-  val q137WilsonCi: QueryDef = QueryDef.withOracle(
+  val q137WilsonCi: QueryDef = QueryDef(
     """WITH c AS (
       |  SELECT event_type, count(*) AS k FROM events GROUP BY 1),
       |t AS (SELECT CAST(sum(k) AS BIGINT) AS n FROM c)
@@ -2940,23 +2722,7 @@ object StatsOps {
       |        * (1 - CAST(k AS DOUBLE) / n) / n
       |        + 1.96 * 1.96 / (4.0 * n * n))
       |      / (1 + 1.96 * 1.96 / n) AS wilson_hi
-      |FROM c CROSS JOIN t""".stripMargin
-  ) { (s, d) =>
-    val c = Tables.events(s, d)
-      .groupBy(col("event_type")).agg(count(lit(1)).as("k"))
-    val t = c.agg(sum(col("k")).as("n"))
-    val p = col("k").cast("double") / col("n")
-    val z2n = lit(1.96) * lit(1.96) / col("n")
-    val denom = lit(1) + z2n
-    val center = (p + lit(1.96) * lit(1.96) / (lit(2) * col("n"))) / denom
-    val half = lit(1.96) * sqrt(p * (lit(1) - p) / col("n") +
-      lit(1.96) * lit(1.96) / (lit(4.0) * col("n") * col("n"))) / denom
-    c.crossJoin(broadcast(t))
-      .select(col("event_type"), col("k"), col("n"),
-        p.as("p_hat"),
-        (center - half).as("wilson_lo"),
-        (center + half).as("wilson_hi"))
-  }
+      |FROM c CROSS JOIN t""".stripMargin)
 
   /** Split-conformal prediction intervals on event value per type —
     * the distribution-free uncertainty layer a model-scoring pipeline
@@ -3192,7 +2958,7 @@ object StatsOps {
     * Scale shape: one events pass → user cells (data-sized groupBy on
     * the natural key) → one 6-number moment aggregate; everything
     * after is a 1-row frame. */
-  val q252RatioDeltaCi: QueryDef = QueryDef.withOracle(
+  val q252RatioDeltaCi: QueryDef = QueryDef(
     """WITH u AS (
       |  SELECT user_id,
       |    CAST(sum(CASE WHEN event_type = 'purchase'
@@ -3202,10 +2968,10 @@ object StatsOps {
       |  FROM events GROUP BY 1),
       |m AS (
       |  SELECT CAST(count(*) AS BIGINT) AS n,
-      |    sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
-      |    sum(CAST(x AS HUGEINT) * x) AS sxx,
-      |    sum(CAST(y AS HUGEINT) * y) AS syy,
-      |    sum(CAST(x AS HUGEINT) * y) AS sxy
+      |    sum(CAST(x AS DECIMAL(38,0))) AS sx, sum(CAST(y AS DECIMAL(38,0))) AS sy,
+      |    sum(CAST(x AS DECIMAL(38,0)) * x) AS sxx,
+      |    sum(CAST(y AS DECIMAL(38,0)) * y) AS syy,
+      |    sum(CAST(x AS DECIMAL(38,0)) * y) AS sxy
       |  FROM u),
       |c AS (
       |  SELECT n, sx, sy,
@@ -3231,45 +2997,7 @@ object StatsOps {
       |    / 1000000 AS ci_lo,
       |  floor((r + 1.959963984540054 * sed) * 1000000 + 0.5)
       |    / 1000000 AS ci_hi
-      |FROM se""".stripMargin
-  ) { (s, d) =>
-    val u = Tables.events(s, d)
-      .select(col("user_id"),
-        when(col("event_type") === "purchase",
-          floor(col("value") * 100 + 0.5).cast("long")).otherwise(0L)
-          .as("xv"))
-      .groupBy(col("user_id"))
-      .agg(sum(col("xv")).cast("long").as("x"),
-        count(lit(1)).as("y"))
-    val m = u.agg(count(lit(1)).as("n"),
-      sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
-      sum(dec(col("x")) * col("x")).as("sxx"),
-      sum(dec(col("y")) * col("y")).as("syy"),
-      sum(dec(col("x")) * col("y")).as("sxy"))
-    val r = col("sx").cast("double") / col("sy")
-    val cxx = (col("sxx").cast("double")
-      - (col("sx").cast("double") / col("n")) * col("sx")) / (col("n") - 1)
-    val cyy = (col("syy").cast("double")
-      - (col("sy").cast("double") / col("n")) * col("sy")) / (col("n") - 1)
-    val cxy = (col("sxy").cast("double")
-      - (col("sx").cast("double") / col("n")) * col("sy")) / (col("n") - 1)
-    val yb = col("sy").cast("double") / col("n")
-    val c = m.filter(col("n") > 0)
-      .select(col("n"), col("sy"), r.as("r"), cxx.as("cxx"),
-        cyy.as("cyy"), cxy.as("cxy"), yb.as("yb"))
-    val sed = when(col("n") <= 1 || col("sy") === dec(lit(0)), lit(0.0))
-      .otherwise(sqrt((col("cxx") - lit(2) * col("r") * col("cxy")
-        + col("r") * col("r") * col("cyy"))
-        / (col("n") * (col("yb") * col("yb")))))
-    c.select(col("n").as("n_users"),
-      (floor(col("r") * 1000000L + 0.5) / 1000000L)
-        .as("ratio_cents_per_event"),
-      (floor(sed * 1000000L + 0.5) / 1000000L).as("se"),
-      (floor((col("r") - lit(Z95) * sed) * 1000000L + 0.5) / 1000000L)
-        .as("ci_lo"),
-      (floor((col("r") + lit(Z95) * sed) * 1000000L + 0.5) / 1000000L)
-        .as("ci_hi"))
-  }
+      |FROM se""".stripMargin)
 
   /** Benjamini-Hochberg FDR over per-day purchase-rate drift tests —
     * each day's two-proportion z against the pooled rest, p-values via

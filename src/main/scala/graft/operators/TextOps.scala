@@ -80,18 +80,11 @@ object TextOps {
 
   /** Corpus rollup per language: volume, length stats, source spread.
     * (A7 chart group-by shape over the documents table.) */
-  val q32LangStats: QueryDef = QueryDef.withOracle(
+  val q32LangStats: QueryDef = QueryDef(
     """SELECT lang, count(*) AS n_docs,
       |  floor(avg(CAST(n_chars AS DOUBLE)) * 1000 + 0.5) / 1000 AS avg_chars,
       |  count(DISTINCT source) AS n_sources
-      |FROM documents GROUP BY lang""".stripMargin
-  ) { (s, d) =>
-    Tables.documents(s, d).groupBy(col("lang")).agg(
-      count(lit(1)).as("n_docs"),
-      (floor(avg(col("n_chars").cast("double")) * 1000 + 0.5) / 1000)
-        .as("avg_chars"),
-      countDistinct(col("source")).as("n_sources"))
-  }
+      |FROM documents GROUP BY lang""".stripMargin)
 
   /** Document fingerprinting: md5 over the sorted distinct token set —
     * an order-insensitive content fingerprint usable as an exact-dedup
@@ -448,21 +441,11 @@ object TextOps {
     * for the retained prefix property a reservoir lacks), take the
     * first 5. WindowGroupLimit keeps per-partition shipping at k rows
     * per stratum. */
-  val q48StratifiedSample: QueryDef = QueryDef.withOracle(
+  val q48StratifiedSample: QueryDef = QueryDef(
     """SELECT lang, rank, doc_id FROM (
       |  SELECT lang, doc_id, row_number() OVER (PARTITION BY lang
-      |    ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rank
-      |  FROM documents) WHERE rank <= 5""".stripMargin
-  ) { (s, d) =>
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("lang"))
-      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-    Tables.documents(s, d)
-      .select(col("lang"), col("doc_id"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select("lang", "rank", "doc_id")
-  }
+      |    ORDER BY md5(CAST(doc_id AS STRING)), doc_id) AS rank
+      |  FROM documents) WHERE rank <= 5""".stripMargin)
 
   /** Collocation mining: corpus-level PMI-style association of
     * adjacent token pairs — lift(a,b) = p(ab)/(p(a)p(b)) — the

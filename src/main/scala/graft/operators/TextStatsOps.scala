@@ -4,7 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import Exact.{dec, q6}
+import Exact.dec
 
 /** Text and language-model statistics a training-data pipeline
   * reports per source: held-out LM quality (unigram perplexity,
@@ -1121,7 +1121,7 @@ object TextStatsOps {
     *
     * Scale shape: ONE tokenization pass → (source, word) cells →
     * per-source aggregate; nothing after the cells is data-sized. */
-  val q240SimpsonDiversity: QueryDef = QueryDef.withOracle(
+  val q240SimpsonDiversity: QueryDef = QueryDef(
     """WITH tok AS (
       |  SELECT source, unnest(string_split(text, ' ')) AS word
       |  FROM documents),
@@ -1130,7 +1130,7 @@ object TextStatsOps {
       |         count(*) AS vocab FROM c GROUP BY 1),
       |agg AS (
       |  SELECT c.source,
-      |    sum(CAST(c.a AS HUGEINT) * (c.a - 1)) AS pairsum,
+      |    sum(CAST(c.a AS DECIMAL(38,0)) * (c.a - 1)) AS pairsum,
       |    CAST(sum(CAST(floor(-(CAST(c.a AS DOUBLE) / ns.n)
       |      * ln(CAST(c.a AS DOUBLE) / ns.n) * 1000000000 + 0.5)
       |      AS BIGINT)) AS BIGINT) AS h9
@@ -1147,41 +1147,7 @@ object TextStatsOps {
       |    / 1000000 AS shannon,
       |  floor(exp(floor((CAST(h9 AS DOUBLE) / 1000000000) * 1000000
       |    + 0.5) / 1000000) * 1000000 + 0.5) / 1000000 AS eff_vocab
-      |FROM agg JOIN ns USING (source)""".stripMargin
-  ) { (s, d) =>
-    val c = Tables.documents(s, d)
-      .select(col("source"),
-        explode(split(col("text"), " ", -1)).as("word"))
-      .groupBy(col("source"), col("word"))
-      .agg(count(lit(1)).as("a"))
-      .cache() // one tokenization pass; margins and terms reuse it
-    val ns = c.groupBy(col("source"))
-      .agg(sum(col("a")).cast("long").as("n"),
-        count(lit(1)).as("vocab"))
-    val agg = c.join(broadcast(ns), Seq("source"))
-      .groupBy(col("source"))
-      .agg(sum(dec(col("a")) * (col("a") - 1)).as("pairsum"),
-        sum(floor(-(col("a").cast("double") / col("n"))
-          * log(col("a").cast("double") / col("n")) * 1000000000L + 0.5)
-          .cast("long")).cast("long").as("h9"))
-    val shannon = floor((col("h9").cast("double") / 1000000000L)
-      * 1000000L + 0.5) / 1000000L
-    agg.join(broadcast(ns), Seq("source"))
-      .select(col("source"), col("n").as("n_tokens"),
-        col("vocab").cast("long").as("vocab"),
-        // n ≤ 1 → 0/0: degrade to 0, never NaN (the inv_simpson
-        // convention — r11 ADVICE)
-        when(col("n") <= 1, lit(0.0))
-          .otherwise(floor((col("pairsum").cast("double")
-            / (col("n").cast("double") * (col("n") - 1))) * 1000000L + 0.5)
-            / 1000000L).as("simpson"),
-        when(col("pairsum") === dec(lit(0)), lit(0.0))
-          .otherwise(floor((col("n").cast("double") * (col("n") - 1)
-            / col("pairsum").cast("double")) * 1000000L + 0.5) / 1000000L)
-          .as("inv_simpson"),
-        shannon.as("shannon"),
-        (floor(exp(shannon) * 1000000L + 0.5) / 1000000L).as("eff_vocab"))
-  }
+      |FROM agg JOIN ns USING (source)""".stripMargin)
 
   /** Cross-source unigram cross-entropy matrix: train an add-1-
     * smoothed unigram LM on source A (over the corpus vocabulary),
@@ -1201,7 +1167,7 @@ object TextStatsOps {
     * pair sweep is a word-keyed cell join (vocab × |sources|² upper-
     * bounded, vocab-sized shuffle — the q233 argument), never a
     * token-level join; margins ride a broadcast ≤|sources| frame. */
-  val q265CrossEntropyMatrix: QueryDef = QueryDef.withOracle(
+  val q265CrossEntropyMatrix: QueryDef = QueryDef(
     """WITH tok AS (
       |  SELECT source, unnest(string_split(text, ' ')) AS word
       |  FROM documents),
@@ -1221,14 +1187,14 @@ object TextStatsOps {
       |  FROM ns CROSS JOIN vv),
       |pairm AS (
       |  SELECT lp.source AS train, b.source AS eval,
-      |    sum(CAST(b.a AS HUGEINT) * lp.l9) AS m9,
+      |    sum(CAST(b.a AS DECIMAL(38,0)) * lp.l9) AS m9,
       |    CAST(sum(b.a) AS BIGINT) AS matched
       |  FROM c b JOIN lp ON lp.word = b.word
       |  WHERE lp.source <> b.source
       |  GROUP BY 1, 2),
       |h AS (
       |  SELECT train, eval, nb.n AS n_eval,
-      |    -(CAST(m9 + CAST(nb.n - matched AS HUGEINT) * l0.l09
+      |    -(CAST(m9 + CAST(nb.n - matched AS DECIMAL(38,0)) * l0.l09
       |        AS DOUBLE) / 1000000000) / nb.n AS hce
       |  FROM pairm
       |  JOIN ns nb ON nb.source = pairm.eval
@@ -1236,41 +1202,7 @@ object TextStatsOps {
       |SELECT train AS source_train, eval AS source_eval, n_eval,
       |  floor(hce * 1000000 + 0.5) / 1000000 AS cross_entropy,
       |  floor(exp(hce) * 1000000 + 0.5) / 1000000 AS perplexity
-      |FROM h""".stripMargin
-  ) { (s, d) =>
-    val c = Tables.documents(s, d)
-      .select(col("source"),
-        explode(split(col("text"), " ", -1)).as("word"))
-      .groupBy(col("source"), col("word"))
-      .agg(count(lit(1)).as("a"))
-      .cache() // one tokenization pass; margins, LMs, eval side
-    val ns = c.groupBy(col("source")).agg(sum(col("a")).cast("long").as("n"))
-    val vv = c.agg(countDistinct(col("word")).as("v"))
-    val lp = c.join(broadcast(ns), Seq("source")).crossJoin(broadcast(vv))
-      .select(col("source"), col("word"),
-        floor(log((col("a").cast("double") + 1) / (col("n") + col("v")))
-          * 1000000000L + 0.5).cast("long").as("l9"))
-    val l0 = ns.crossJoin(broadcast(vv))
-      .select(col("source"),
-        floor(log(lit(1).cast("double") / (col("n") + col("v")))
-          * 1000000000L + 0.5).cast("long").as("l09"))
-    val b = c.toDF("eval", "word", "ba")
-    val pairm = b.join(lp.toDF("train", "word", "l9"), Seq("word"))
-      .filter(col("train") =!= col("eval"))
-      .groupBy(col("train"), col("eval"))
-      .agg(sum(dec(col("ba")) * col("l9")).as("m9"),
-        sum(col("ba")).cast("long").as("matched"))
-    val nb = ns.toDF("eval", "n_eval")
-    val hce = -((col("m9")
-      + dec(col("n_eval") - col("matched")) * col("l09")).cast("double")
-      / 1000000000L) / col("n_eval")
-    pairm.join(broadcast(nb), Seq("eval"))
-      .join(broadcast(l0.toDF("train", "l09")), Seq("train"))
-      .select(col("train").as("source_train"),
-        col("eval").as("source_eval"), col("n_eval"),
-        (floor(hce * 1000000L + 0.5) / 1000000L).as("cross_entropy"),
-        (floor(exp(hce) * 1000000L + 0.5) / 1000000L).as("perplexity"))
-  }
+      |FROM h""".stripMargin)
 
   /** Leave-one-out 4-gram precision per source — self-BLEU-style
     * templatedness: for each document, the share of its word 4-grams
@@ -1568,33 +1500,19 @@ object TextStatsOps {
     * (the q39/q234 frame); the spectrum collapse is a second agg over
     * cells. No window, no join. At 100 TB the cell frame is
     * Heaps-bounded vocabulary, not tokens. */
-  val q275YuleK: QueryDef = QueryDef.withOracle(
+  val q275YuleK: QueryDef = QueryDef(
     """WITH t AS (
       |  SELECT source, unnest(string_split(text, ' ')) AS w
       |  FROM documents),
       |wc AS (SELECT source, w, count(*) AS f FROM t GROUP BY 1, 2),
       |m AS (
       |  SELECT source, CAST(sum(f) AS BIGINT) AS n,
-      |    count(*) AS v, sum(CAST(f AS HUGEINT) * f) AS s2
+      |    count(*) AS v, sum(CAST(f AS DECIMAL(38,0)) * f) AS s2
       |  FROM wc GROUP BY 1)
       |SELECT source, n AS n_tokens, CAST(v AS BIGINT) AS n_types,
       |  floor(10000.0 * (CAST(s2 AS DOUBLE) - n)
       |    / (CAST(n AS DOUBLE) * n) * 1000000 + 0.5) / 1000000 AS yule_k
-      |FROM m""".stripMargin
-  ) { (s, d) =>
-    val t = Tables.documents(s, d)
-      .select(col("source"), explode(split(col("text"), " ", -1)).as("w"))
-    val wc = t.groupBy(col("source"), col("w"))
-      .agg(count(lit(1)).as("f"))
-    wc.groupBy(col("source"))
-      .agg(sum(col("f")).cast("long").as("n_tokens"),
-        count(lit(1)).as("n_types"),
-        sum(dec(col("f")) * col("f")).as("s2"))
-      .select(col("source"), col("n_tokens"), col("n_types"),
-        q6(lit(10000.0) * (col("s2").cast("double") - col("n_tokens"))
-          / (col("n_tokens").cast("double") * col("n_tokens")))
-          .as("yule_k"))
-  }
+      |FROM m""".stripMargin)
 
   /** Interpolated Kneser-Ney bigram cross-entropy per source — a real
     * smoothed LM scored on the held-out 20% split (q209's bucket

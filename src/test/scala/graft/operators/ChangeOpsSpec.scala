@@ -4,24 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Null-semantics contracts for the change-data helpers — the cases
-  * the q78/q79 oracles can't reach because their value columns are
-  * never null. */
+  * the q79 oracle can't reach because its value columns are never
+  * null. */
 class ChangeOpsSpec extends SparkSpec {
-
-  test("tableDiff: NULL→value and value→NULL both classify as changed") {
-    import spark.implicits._
-    val a = Seq((1L, Option.empty[Long]), (2L, Some(5L)), (3L, Some(7L)),
-      (4L, Option.empty[Long])).toDF("k", "v")
-    val b = Seq((1L, Some(5L)), (2L, Option.empty[Long]), (3L, Some(7L)),
-      (4L, Option.empty[Long])).toDF("k", "v")
-    val status = ChangeOps.tableDiff(a, b, Seq("k"), Seq("v"))
-      .select("k", "status").collect().map(r => r.getLong(0) -> r.getString(1))
-      .toMap
-    assert(status(1L) == "changed") // NULL → 5
-    assert(status(2L) == "changed") // 5 → NULL
-    assert(status(3L) == "unchanged")
-    assert(status(4L) == "unchanged") // NULL → NULL
-  }
 
   test("q87 scd2: intervals chain gaplessly and partition the event count") {
     val d = sf("sf0.001")

@@ -28,29 +28,6 @@ class ChangePropertySpec extends SparkSpec {
     rows.map(r => (r.k, r.v)).toDF("k", "v")
   }
 
-  test("tableDiff: statuses partition the key universe and match set algebra") {
-    for (seed <- 1L to 5L) {
-      val a = draw(40, seed)
-      val b = draw(40, seed + 100)
-      val out = ChangeOps.tableDiff(toDf(a), toDf(b), Seq("k"), Seq("v"))
-        .select(col("k"), col("status")).collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      val aKeys = a.map(_.k).toSet
-      val bKeys = b.map(_.k).toSet
-      assert(out.keySet == (aKeys ++ bKeys), "one row per key in either side")
-      val aMap = a.map(r => r.k -> r.v).toMap
-      val bMap = b.map(r => r.k -> r.v).toMap
-      out.foreach { case (k, status) =>
-        val expected =
-          if (!aKeys(k)) "added"
-          else if (!bKeys(k)) "removed"
-          else if (aMap(k) != bMap(k)) "changed"
-          else "unchanged"
-        assert(status == expected, s"seed=$seed k=$k: $status != $expected")
-      }
-    }
-  }
-
   test("mergeInto: output keys = target ∪ source; values follow MERGE semantics") {
     for (seed <- 11L to 15L) {
       val t = draw(40, seed)

@@ -169,6 +169,16 @@ class CurationOpsSpec extends SparkSpec {
     assert(rollup("s2") == ((0L, 1L, 0L)), s"s2 counts: ${rollup("s2")}")
   }
 
+  /** q88 over `li` and `orders` written as the fixture directory's
+    * only two tables. */
+  private def expectations(li: org.apache.spark.sql.DataFrame,
+      orders: org.apache.spark.sql.DataFrame) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-expect").toString
+    li.write.parquet(s"$dir/lineitem.parquet")
+    orders.write.parquet(s"$dir/orders.parquet")
+    CurationOps.q88Expectations.fn(spark, dir)
+  }
+
   test("q88 expectations: each injected defect is counted by its check") {
     import spark.implicits._
     val li = Seq(
@@ -181,7 +191,7 @@ class CurationOpsSpec extends SparkSpec {
       (9L, 1, Some(1.0), 0.05) // orphan orderkey
     ).toDF("l_orderkey", "l_linenumber", "l_quantity", "l_discount")
     val orders = Seq(1L, 2L, 3L).toDF("o_orderkey")
-    val rep = CurationOps.expectationReport(li, orders)
+    val rep = expectations(li, orders)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getBoolean(2)))
       .toMap
     assert(rep("nonempty") == ((0L, true)))
@@ -190,8 +200,7 @@ class CurationOpsSpec extends SparkSpec {
     assert(rep("uniqueness_order_line") == ((1L, false)))
     assert(rep("referential_orderkey") == ((1L, false)))
     // a clean frame passes everything
-    val clean = CurationOps.expectationReport(
-      li.filter(col("l_orderkey") === 1L), orders)
+    val clean = expectations(li.filter(col("l_orderkey") === 1L), orders)
     assert(clean.filter(!col("passed")).count() == 0)
   }
 
@@ -206,7 +215,7 @@ class CurationOpsSpec extends SparkSpec {
       (None, 2, Some(1.0), 0.05) //  } same NULL-bearing tuple: 1 dup
     ).toDF("l_orderkey", "l_linenumber", "l_quantity", "l_discount")
     val orders = Seq(1L, 2L).toDF("o_orderkey")
-    val rep = CurationOps.expectationReport(li, orders)
+    val rep = expectations(li, orders)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(rep("referential_orderkey") == 3L) // the three NULL-keyed rows
     assert(rep("uniqueness_order_line") == 2L)
